@@ -2818,7 +2818,7 @@ def _q_streaming_lsh_candidates(spark, sf_dir):
         "spark.sql.shuffle.partitions", str(_stream_state_partitions(spark))
     )
     # the NoTimeout stateful detector emits nothing from an empty batch —
-    # skip it and save one RocksDB commit wave across all 8 state partitions
+    # skip it and save one RocksDB commit wave across all state partitions
     spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
     # RocksDB state store: beat the default HDFS-backed provider in every
     # paired same-window A/B at this width (r7: 7.35/7.73, 5.75/6.97,

@@ -106,23 +106,6 @@ class PipelineConfig:
     # ~10^8 input files.
     cc_driver_max_edges: int = 2_000_000
 
-    # --- confirm execution strategy ---
-    # True: store each row's sorted-distinct shingle-hash array in the
-    # signatures frame so the pairwise confirm computes exact Jaccard
-    # JVM-side (array_intersect) with no per-pair Python re-tokenization —
-    # at the price of ~8B × n_shingles per signature row of storage,
-    # cache, and join-shuffle payload. False (default): the lean
-    # ~300B/row signature profile with the fused Arrow confirm that
-    # re-derives shingles from canon per candidate pair (per-batch dedup).
-    # Results are IDENTICAL either way (excluded from config_hash); the
-    # choice is bytes-vs-CPU. Measured on this memory-bandwidth-starved
-    # sandbox the LEAN path wins outright (interleaved same-JVM A/B at
-    # sf0.1: T4 16.4 s vs 23.6 s, T1 47.1 s vs 58.7 s, scaling eff 0.72
-    # vs 0.62) because the extra array bytes cost more than the Python
-    # CPU they save; on a CPU-rich, bandwidth-generous cluster the stored
-    # JVM form is the better trade — flip it per deployment.
-    store_shingles: bool = False
-
     # --- misc ---
     checkpoint_partitions: int = 32   # per-partition lineage granularity
     seed: int = 42
@@ -149,7 +132,6 @@ class PipelineConfig:
         d.pop("checkpoint_dir")          # location is not semantics
         d.pop("shuffle_partitions")      # parallelism must not change results
         d.pop("cc_driver_max_edges")     # CC routing must not change results
-        d.pop("store_shingles")          # confirm strategy, not semantics
         d.pop("checkpoint_partitions")   # lineage layout is not semantics
         blob = json.dumps(d, sort_keys=True).encode()
         return hashlib.sha256(blob).hexdigest()[:16]

@@ -707,8 +707,10 @@ def phrase_match_count_matrix(
     Arrow fast path: each pattern's count/replace is one pyarrow C++
     whole-column kernel call (literal, non-overlapping — byte-exact vs the
     pandas path for any unicode content); rows that cannot cross into
-    Arrow fall back to the original pandas loop.
+    Arrow fall back to the original pandas loop. A null row counts as ''
+    (zero matches) on both paths.
     """
+    joined = joined.fillna("")
     a = _doubled_stream_arrow(joined)
     out = np.empty((len(joined), len(ordered)), dtype=np.int64)
     if a is not None:

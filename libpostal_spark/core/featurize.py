@@ -157,60 +157,27 @@ def featurize_bands(
     return H.band_hashes(sig, n_bands, cfg.rows_per_band)
 
 
-# cap on the per-TASK canon→shingle-set cache (entries). A candidate-pair
-# partition references each representative many times across Arrow batches;
-# the cache bounds re-featurization to once per distinct canon per task.
-# ~2.5 KB/entry at the e2e shape → the cap bounds worst-case memory at
-# ~0.5 GB per worker while keeping every realistic partition fully cached.
-_PAIR_SET_CACHE_MAX = 200_000
-
-
 def pair_jaccard_batch(
-    c1: pd.Series,
-    c2: pd.Series,
-    cfg: PipelineConfig,
-    cache: dict | None = None,
+    c1: pd.Series, c2: pd.Series, cfg: PipelineConfig
 ) -> pd.Series:
     """Exact shingle-set Jaccard for aligned canon-string pairs.
 
     Batch-dedups the union of both columns (a representative appearing in
     many candidate pairs is shingled once), then intersects per pair.
     Semantics identical to jaccard(shingle_sets(c1), shingle_sets(c2)).
-
-    ``cache`` (optional, per-TASK dict owned by the calling UDF iterator)
-    extends the dedup ACROSS batches: a representative seen in an earlier
-    batch of the same task is never re-tokenized/re-shingled (measured:
-    the per-batch dedup alone re-featurized the same reps in every 2048-row
-    batch — ~5x the distinct-canon work at the e2e pair shape). Entries are
-    keyed by the exact canon string; values depend only on (canon, cfg),
-    which is fixed per UDF instance, so a hit is always exact.
     """
-    from . import hashing as H
-
     n = len(c1)
     if n == 0:
         return pd.Series([], dtype="float64")
     all_canon = pd.concat([c1, c2], ignore_index=True).fillna("")
     uniq, inv = np.unique(all_canon.to_numpy(dtype=object), return_inverse=True)
-    if cache is None:
-        miss_idx = np.arange(len(uniq))
-        sets: list = [None] * len(uniq)
-    else:
-        sets = [cache.get(u) for u in uniq]
-        miss_idx = np.flatnonzero([s is None for s in sets])
-    if len(miss_idx):
-        miss = uniq[miss_idx]
-        flat, lengths = tokenize_flat(
-            pd.Series(miss, dtype=object), cfg.seed, cfg.hash_mode
-        )
-        vals, off = H.shingle_sets(
-            flat, lengths, cfg.k_shingle, cfg.max_shingles_per_doc
-        )
-        for j, ui in enumerate(miss_idx):
-            s = vals[off[j] : off[j + 1]]
-            sets[ui] = s
-            if cache is not None and len(cache) < _PAIR_SET_CACHE_MAX:
-                cache[uniq[ui]] = s
+    flat, lengths = tokenize_flat(
+        pd.Series(uniq, dtype=object), cfg.seed, cfg.hash_mode
+    )
+    vals, off = H.shingle_sets(
+        flat, lengths, cfg.k_shingle, cfg.max_shingles_per_doc
+    )
+    sets = [vals[off[j] : off[j + 1]] for j in range(len(uniq))]
     out = np.empty(n, dtype=np.float64)
     i1, i2 = inv[:n], inv[n:]
     for i in range(n):

@@ -164,6 +164,11 @@ def lang_id_trigram(
     end-to-end, which is what lets the DuckDB oracle replay it
     value-for-value.
 
+    Contract: ``id_col`` is a unique, non-null key. Prediction is per row,
+    while the DuckDB twin groups votes by id (rows sharing an id merge,
+    a null id predicts 'und'), so duplicate or null ids make the two
+    disagree.
+
     At scale: the model is a small (tri → lang) table bounded by the fit
     sample's text volume — the sample itself (first ``fit_max_docs`` rows,
     the same bound the count table already carried) is collected to the

@@ -5,24 +5,15 @@ else is JVM-side DataFrame expressions. This mirrors how the reference is
 "one big UDF library" consumed from a MapReduce driver (SURVEY.md §2.9), but
 batched over Arrow instead of row-at-a-time C calls.
 
-Design note (scale): the featurize UDF always emits the FIXED-WIDTH
+Design note (scale): the featurize UDF emits only the FIXED-WIDTH
 features — band hashes, simhash, simhash table keys, winnow fingerprints,
-counts. Whether the full sorted shingle-hash array is ALSO emitted is the
-``PipelineConfig.store_shingles`` trade:
-
-* store_shingles=False (default): the lean ~300 B/row signature profile;
-  the verify stage re-derives shingle sets from canon strings for just the
-  candidate pairs (make_pair_confirm_udf, per-batch dedup) — pay CPU per
-  pair, not bytes per row. Wins outright on this bandwidth-starved sandbox
-  (measured A/B in config.py) and is the only sane profile for 10^12-row
-  signature tables.
-* store_shingles=True: signatures carry ~8B × n_shingles extra per row,
-  and the pairwise confirm is pure JVM (array_intersect Jaccard) — no
-  Python touch for jaccard-decided pairs. The better trade on CPU-bound,
-  bandwidth-generous clusters.
-
-Results are identical either way. The raw 128-perm MinHash signature can be
-emitted for debugging/parity with FIXTURES.md §4 via emit_minhash=True.
+counts — plus the canon string, a lean ~300 B/row signature profile. The
+verify stage re-derives shingle sets from canon strings for just the
+candidate pairs (make_pair_confirm_udf, per-batch dedup): pay CPU per pair,
+not bytes per row — storing per-row shingle arrays costs more in cache and
+join-shuffle bytes than the Python work it saves. The raw 128-perm MinHash
+signature can be emitted for debugging/parity with FIXTURES.md §4 via
+emit_minhash=True.
 """
 
 from __future__ import annotations
@@ -39,9 +30,7 @@ from ..core.canonicalize import canonicalize_batch
 from ..core.featurize import featurize, pair_jaccard_batch, pair_lcs_batch
 
 
-def feature_schema(
-    emit_minhash: bool = False, emit_shingles: bool = False
-) -> T.StructType:
+def feature_schema(emit_minhash: bool = False) -> T.StructType:
     fields = [
         T.StructField("canon", T.StringType()),
         T.StructField("n_tokens", T.IntegerType()),
@@ -51,8 +40,6 @@ def feature_schema(
         T.StructField("simhash_keys", T.ArrayType(T.LongType())),
         T.StructField("winnow", T.ArrayType(T.LongType())),
     ]
-    if emit_shingles:
-        fields.append(T.StructField("shingles", T.ArrayType(T.LongType())))
     if emit_minhash:
         fields.append(T.StructField("minhash", T.ArrayType(T.LongType())))
     return T.StructType(fields)
@@ -146,22 +133,12 @@ def make_featurize_udf(cfg: PipelineConfig, emit_minhash: bool = False):
     Canonicalization and featurization run in ONE Arrow pass — the raw
     content crosses into Python once and only the (smaller) canon string
     plus fixed-width features cross back.
-
-    Set LIBPOSTAL_SPARK_UDF_LOG=/path to append per-batch worker timings
-    (pid, rows, seconds) — the diagnostic for cold-worker page-fault storms.
     """
 
-    emit_shingles = cfg.store_shingles
-
-    @F.pandas_udf(feature_schema(emit_minhash, emit_shingles))
+    @F.pandas_udf(feature_schema(emit_minhash))
     def featurize_udf(it: Iterator[pd.Series]) -> Iterator[pd.DataFrame]:
-        import os as _os
-        import time as _time
-
-        log_path = _os.environ.get("LIBPOSTAL_SPARK_UDF_LOG")
         expansions = dict(cfg.token_expansions) if cfg.token_expansions else None
         for content in it:
-            _t0 = _time.time()
             canon = canonicalize_batch(
                 content,
                 expansions=expansions,
@@ -183,15 +160,8 @@ def make_featurize_udf(cfg: PipelineConfig, emit_minhash: bool = False):
                 "simhash_keys": list(f.simhash_keys),
                 "winnow": f.winnow,
             }
-            if emit_shingles:
-                out["shingles"] = f.shingles
             if emit_minhash:
                 out["minhash"] = list(f.minhash.view(np.int64))
-            if log_path:
-                with open(log_path, "a") as _lg:
-                    _lg.write(
-                        f"{_os.getpid()} featurize n={len(canon)} dt={_time.time() - _t0:.2f}\n"
-                    )
             yield pd.DataFrame(out)
 
     return featurize_udf
@@ -222,23 +192,6 @@ def make_band_keys_udf(cfg: PipelineConfig, n_bands: int):
             yield pd.Series(list(featurize_bands(canon, cfg, n_bands)))
 
     return band_keys_udf
-
-
-def make_pair_jaccard_udf(cfg: PipelineConfig):
-    """(canon1, canon2) -> exact shingle-set Jaccard per candidate pair.
-
-    The pairwise-confirm operator (analog of /root/reference/src/jaccard.c +
-    the expansion-intersection of src/dedupe.c:13-100). Shingle sets are
-    re-derived per batch with per-batch dedup of repeated canon strings, so
-    a representative occurring in many pairs is featurized once.
-    """
-
-    @F.pandas_udf(T.DoubleType())
-    def pair_jaccard_udf(it: Iterator[tuple[pd.Series, pd.Series]]) -> Iterator[pd.Series]:
-        for c1, c2 in it:
-            yield pair_jaccard_batch(c1, c2, cfg)
-
-    return pair_jaccard_udf
 
 
 def make_strsim_udf(max_len: int = 32):
@@ -393,16 +346,6 @@ def make_pair_confirm_udf(cfg: PipelineConfig):
     def pair_confirm_udf(
         it: Iterator[tuple[pd.Series, pd.Series, pd.Series]]
     ) -> Iterator[pd.DataFrame]:
-        # NOTE: pair_jaccard_batch supports a per-task cross-batch
-        # shingle-set cache (cache={}); it is deliberately NOT enabled
-        # here. Measured on the 2x scaling corpus (235k pairs, same
-        # session, interleaved): it cuts the confirm stage 15.3->8.3 s at
-        # parallelism 1 but only 4.9->3.9 s at 4 (the serial config sees
-        # global rep repetition, a 4-way split sees 1/4 of it), taking the
-        # stage's N->4N efficiency from 0.78 to 0.53 and the pipeline's
-        # headline scaling ratio below the >=0.8 contract. A width-gated
-        # enable would be sandbagging the serial leg; leaving it off keeps
-        # the computation identical at every width.
         for c1, c2, hit in it:
             jac = pair_jaccard_batch(c1, c2, cfg)
             lcs = pd.Series(np.full(len(c1), -1, dtype=np.int32))
@@ -420,46 +363,6 @@ def make_pair_confirm_udf(cfg: PipelineConfig):
             )
 
     return pair_confirm_udf
-
-
-def make_pair_lcs_udf(cfg: PipelineConfig):
-    """(canon1, canon2) -> struct(lcs_tokens, lcs_exhausted) for the rows
-    where both canons are non-null; (-1, false) otherwise.
-
-    The JVM-confirm path's Python remnant: jaccard and the winnow-overlap
-    gate are computed JVM-side from stored shingle/winnow arrays, and canon
-    strings are NULLED OUT (F.when) for every pair the gate doesn't select —
-    so the Arrow transfer and the run verification (pair_lcs_batch) touch
-    only the rare winnow-hit, sub-threshold pairs.
-    """
-    schema = T.StructType(
-        [
-            T.StructField("lcs_tokens", T.IntegerType()),
-            T.StructField("lcs_exhausted", T.BooleanType()),
-        ]
-    )
-
-    @F.pandas_udf(schema)
-    def pair_lcs_udf(
-        it: Iterator[tuple[pd.Series, pd.Series]]
-    ) -> Iterator[pd.DataFrame]:
-        for c1, c2 in it:
-            n = len(c1)
-            lcs = np.full(n, -1, dtype=np.int32)
-            exh = np.zeros(n, dtype=bool)
-            need = c1.notna().to_numpy() & c2.notna().to_numpy()
-            if need.any():
-                res = pair_lcs_batch(c1[need], c2[need], cfg, with_flags=True)
-                lcs[need] = res["run"].to_numpy()
-                exh[need] = res["exhausted"].to_numpy()
-            yield pd.DataFrame(
-                {
-                    "lcs_tokens": pd.Series(lcs),
-                    "lcs_exhausted": pd.Series(exh),
-                }
-            )
-
-    return pair_lcs_udf
 
 
 def make_expand_udf(

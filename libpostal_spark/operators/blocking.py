@@ -3,14 +3,17 @@
 Scale design (the part the reference delegates to "a MapReduce setting",
 /root/reference/README.md:641-656, made explicit here):
 
-* **Exact pass first.** All rows are grouped by raw-content sha256 and only
-  one representative per distinct content enters LSH. This kills the
-  boilerplate skew adversary at the root: a license header replicated across
-  10^6 repos is ONE node in the candidate graph, connected to its copies by
-  star edges from a single groupBy — no O(n²) bucket ever forms. At 10^12
-  files this is the difference between a runnable job and a dead one.
+* **Exact pass first.** Rows are grouped by raw-content sha256 before any
+  expensive work: the pipeline derives each row's representative (min fid
+  per sha256) from the cheap (sha256, fid) columns, the featurize UDF sees
+  only representatives' content, and only one representative per distinct
+  content enters LSH. This kills the boilerplate skew adversary at the
+  root: a license header replicated across 10^6 repos is featurized ONCE
+  and is ONE node in the candidate graph, connected to its copies by star
+  edges — no O(n²) bucket ever forms. At 10^12 files this is the
+  difference between a runnable job and a dead one.
 * **Key families.** MinHash band keys ∪ SimHash table keys ∪ winnow
-  substring fingerprints, unioned into one (kind, kid, khash) key stream —
+  substring fingerprints, emitted as one (kind, kid, khash) key stream —
   the principled version of the reference's redundant overlapping key
   families (4-level fallback hierarchy, /root/reference/src/near_dupe.c:853-1151).
 * **Bucket discipline.** Per-key counts are computed before any pairing.
@@ -69,45 +72,43 @@ def signatures(
 ) -> DataFrame:
     """files → one row per fid: canon text + fixed-width signature features.
 
-    With cfg.store_shingles (opt-in) the sorted-distinct shingle-hash
-    array is materialized per row so the confirm stage runs JVM-side; by
-    default verify re-derives shingle sets per candidate pair from `canon`
-    (the lean-signature trade — see the functions/udfs.py design note).
-    emit_minhash=True adds the raw 128-perm signature column for
-    debugging/FIXTURES §4 parity.
+    When ``files`` carries ``rep_fid`` (an ``exact_rep_frame`` over the
+    with_ids rows), only representatives (fid = rep_fid) are featurized:
+    members keep their id and metadata columns and ``rep_fid``, and their
+    feature columns are null — identical content has identical features,
+    so the UDF never sees a copy. emit_minhash=True adds the raw 128-perm
+    signature column for debugging/FIXTURES §4 parity.
     """
     feat_udf = make_featurize_udf(cfg, emit_minhash)
     df = files if ids_added else with_ids(files)
-    df = df.withColumn("f", feat_udf(F.col("content")))
-    cols = [
-        "fid",
-        "sha256",
-        "repo",
-        "path",
-        "lang",
-        F.col("f.canon").alias("canon"),
-        F.col("f.n_tokens").alias("n_tokens"),
-        F.col("f.n_shingles").alias("n_shingles"),
-        F.col("f.simhash").alias("simhash"),
-        F.col("f.bands").alias("bands"),
-        F.col("f.simhash_keys").alias("simhash_keys"),
-        F.col("f.winnow").alias("winnow"),
-    ]
-    if cfg.store_shingles:
-        cols.append(F.col("f.shingles").alias("shingles"))
-    if emit_minhash:
-        cols.append(F.col("f.minhash").alias("minhash"))
-    return df.select(*cols).withColumn("config_hash", F.lit(cfg.config_hash))
+    gated = "rep_fid" in df.columns
+    is_rep = F.col("fid") == F.col("rep_fid")
+    # gate the UDF's INPUT: a Python UDF under a CASE branch is still
+    # evaluated on every row, so members send null content instead
+    content = F.when(is_rep, F.col("content")) if gated else F.col("content")
+    feat = feat_udf(content)
+    df = df.withColumn("f", F.when(is_rep, feat) if gated else feat)
+    names = ["canon", "n_tokens", "n_shingles", "simhash", "bands",
+             "simhash_keys", "winnow"] + (["minhash"] if emit_minhash else [])
+    return df.select(
+        "fid", "sha256", "repo", "path", "lang",
+        *[F.col(f"f.{c}").alias(c) for c in names],
+        *(["rep_fid"] if gated else []),
+    ).withColumn("config_hash", F.lit(cfg.config_hash))
 
 
 def exact_rep_frame(sigs: DataFrame, ided: DataFrame | None = None) -> DataFrame:
     """sigs + rep_fid (min fid per sha256 class) — the ONE frame the whole
     downstream pipeline fans out from.
 
-    The caller persists+counts THIS frame (featurize UDF + the sha256
-    contraction materialize together in one job); rep_sigs, exact_edges,
-    and the label universe are all cheap filters over the warm cache, so no
-    later stage ever recomputes the UDF chain or re-shuffles on sha256.
+    ``DedupPipeline.run`` applies it to the with_ids rows themselves
+    (``exact_rep_frame(ided, ided)``) BEFORE featurization, so
+    ``signatures`` featurizes representatives only; the caller then
+    persists+counts the signatures frame (featurize UDF + the sha256
+    contraction materialize together in one job), and rep_sigs,
+    exact_edges and the label universe are all cheap filters over the warm
+    cache, so no later stage ever recomputes the UDF chain or re-shuffles
+    on sha256.
 
     Pass ``ided`` (the with_ids frame the signatures were built from) to
     derive the (sha256 → min fid) rep map from the CHEAP JVM sha2 pass
@@ -166,23 +167,36 @@ def exact_groups(
 
 
 def blocking_keys(rep_sigs: DataFrame, cfg: PipelineConfig) -> DataFrame:
-    """Explode every key family into one (fid, kind, kid, khash) stream.
+    """Emit every key family as one (fid, kid, khash, kind) stream.
 
-    The posexplode over band structs is the Spark-native form of the
-    reference's flat key emission (``near_dupe_hashes`` returning a
-    cstring_array of prefixed keys, /root/reference/src/near_dupe.c:627-640).
+    One ``inline`` over the concatenated per-family (kind, kid, khash)
+    struct arrays: a single scan of the representatives, no union. Each
+    family is coalesced to an empty array first, so a null family drops
+    only its own keys. This is the Spark-native form of the reference's
+    flat key emission (``near_dupe_hashes`` returning a cstring_array of
+    prefixed keys, reference src/near_dupe.c:627-640).
     """
-    bands = rep_sigs.select(
-        "fid", F.posexplode("bands").alias("kid", "khash")
-    ).withColumn("kind", F.lit(KIND_BAND))
-    sim = rep_sigs.select(
-        "fid", F.posexplode("simhash_keys").alias("kid", "khash")
-    ).withColumn("kind", F.lit(KIND_SIMHASH))
-    win = rep_sigs.select(
-        "fid", F.explode("winnow").alias("khash")
-    ).withColumn("kid", F.lit(0)).withColumn("kind", F.lit(KIND_WINNOW))
-    return bands.unionByName(sim.select(*bands.columns)).unionByName(
-        win.select(*bands.columns)
+
+    def family(col: str, kind: int, positional: bool = True):
+        arr = F.coalesce(F.col(col), F.array().cast("array<bigint>"))
+        return F.transform(
+            arr,
+            lambda h, i: F.struct(
+                (i if positional else F.lit(0)).alias("kid"),
+                h.alias("khash"),
+                F.lit(kind).alias("kind"),
+            ),
+        )
+
+    return rep_sigs.select(
+        "fid",
+        F.inline(
+            F.concat(
+                family("bands", KIND_BAND),
+                family("simhash_keys", KIND_SIMHASH),
+                family("winnow", KIND_WINNOW, positional=False),
+            )
+        ),
     )
 
 

@@ -45,17 +45,13 @@ def verified_pairs(
     scale, rep_sigs is bucketed by fid so both probes co-locate; AQE
     handles residual skew.
 
-    Two execution strategies, identical results (cfg.store_shingles):
-
-    * rep_sigs carries ``shingles`` → **JVM confirm**: exact Jaccard is
-      ``size(array_intersect)`` over the stored sorted-distinct arrays —
-      whole-stage-codegen, zero Python, zero Arrow transfer for
-      jaccard-decided pairs. Canon strings are nulled (``F.when``) for
-      every pair except winnow-hit sub-threshold ones, so the run-verify
-      UDF's Arrow input is almost entirely nulls.
-    * no ``shingles`` column → **fused Python confirm**: one Arrow pass
-      re-derives shingle sets from canon per pair (per-batch dedup) and
-      runs the substring verifier inline (make_pair_confirm_udf).
+    The winnow overlap is checked JVM-side on the stored fingerprints; ONE
+    fused Arrow pass (make_pair_confirm_udf) then computes exact Jaccard
+    for every pair plus the exact substring verification for winnow-only
+    rows. A winnow hit is ACCEPTED only when the verified common run really
+    reaches the guarantee bar — the measured (not w.h.p.) form of the
+    long-clone rule. lcs_tokens = -1 marks rows where the run check was
+    skipped (jaccard already decided).
 
     ``with_graded=True`` additionally returns the PRE-filter graded frame
     ``(confirmed, graded)``: an adversarial pair whose alignment budget was
@@ -64,74 +60,35 @@ def verified_pairs(
     ``graded.filter("lcs_exhausted AND lcs_tokens < bar")``, which makes
     the one theoretically-silent truncation in the confirm rule queryable.
     """
-    from ..functions.udfs import make_pair_confirm_udf, make_pair_lcs_udf
+    from ..functions.udfs import make_pair_confirm_udf
 
-    jvm_confirm = "shingles" in rep_sigs.columns
-    side_cols = ["canon", "winnow"] + (["shingles"] if jvm_confirm else [])
-    s1 = rep_sigs.select(
-        F.col("fid").alias("fid1"),
-        *[F.col(c).alias(f"{c}1") for c in side_cols],
-    )
-    s2 = rep_sigs.select(
-        F.col("fid").alias("fid2"),
-        *[F.col(c).alias(f"{c}2") for c in side_cols],
-    )
-    joined = pairs.join(s1, "fid1").join(s2, "fid2")
-    if jvm_confirm:
-        # Exact Jaccard fully JVM-side: the arrays are sorted-distinct, so
-        # |A∪B| = |A|+|B|-|A∩B|; both-empty pairs are 1.0 by convention
-        # (matches core/featurize.jaccard). The run verification (rolling
-        # window match + token verify + extension) still needs token
-        # sequences, so ONLY winnow-hit pairs below the jaccard bar get
-        # their canons shipped to Python — everything else sends nulls.
-        inter = F.size(F.array_intersect("shingles1", "shingles2"))
-        denom = F.size("shingles1") + F.size("shingles2") - inter
-        jac = F.when(denom == 0, F.lit(1.0)).otherwise(
-            inter.cast("double") / denom.cast("double")
+    def side(i: int) -> DataFrame:
+        return rep_sigs.select(
+            *[F.col(c).alias(f"{c}{i}") for c in ("fid", "canon", "winnow")]
         )
-        base = joined.withColumn("jaccard", jac).withColumn(
-            "substring_hit", F.arrays_overlap("winnow1", "winnow2")
-        )
-        need = F.col("substring_hit") & (
-            F.col("jaccard") < F.lit(cfg.jaccard_threshold)
-        )
-        lcs_udf = make_pair_lcs_udf(cfg)
-        graded = base.withColumn(
+
+    # nondeterministic only to the optimizer: the UDF is a pure function of
+    # its inputs, but a deterministic UDF's output struct fields may be
+    # inlined into the confirm filter below and pushed down past the
+    # projection, which evaluates the UDF a second time per pair (two
+    # ArrowEvalPython nodes, every canon pair shipped to Python twice).
+    # Catalyst never inlines or duplicates a nondeterministic expression.
+    confirm_udf = make_pair_confirm_udf(cfg).asNondeterministic()
+    graded = (
+        pairs.join(side(1), "fid1")
+        .join(side(2), "fid2")
+        .withColumn("substring_hit", F.arrays_overlap("winnow1", "winnow2"))
+        .withColumn(
             "c",
-            lcs_udf(
-                F.when(need, F.col("canon1")), F.when(need, F.col("canon2"))
-            ),
-        ).select(
-            "fid1", "fid2", "source", "sources", "jaccard",
+            confirm_udf(F.col("canon1"), F.col("canon2"), F.col("substring_hit")),
+        )
+        .select(
+            "fid1", "fid2", "source", "sources",
+            F.col("c.jaccard").alias("jaccard"),
             F.col("c.lcs_tokens").alias("lcs_tokens"),
             F.col("c.lcs_exhausted").alias("lcs_exhausted"),
         )
-    else:
-        # winnow overlap is checked JVM-side on the stored fingerprints; ONE
-        # fused Arrow pass then computes exact Jaccard for every pair plus
-        # the exact substring verification for winnow-only rows. A winnow
-        # hit is ACCEPTED only when the verified common run really reaches
-        # the guarantee bar — the measured (not w.h.p.) form of the
-        # long-clone rule. lcs_tokens = -1 marks rows where the run check
-        # was skipped (jaccard already decided).
-        confirm_udf = make_pair_confirm_udf(cfg)
-        graded = (
-            joined.withColumn(
-                "substring_hit", F.arrays_overlap("winnow1", "winnow2")
-            )
-            .withColumn(
-                "c",
-                confirm_udf(
-                    F.col("canon1"), F.col("canon2"), F.col("substring_hit")
-                ),
-            )
-            .select(
-                "fid1", "fid2", "source", "sources",
-                F.col("c.jaccard").alias("jaccard"),
-                F.col("c.lcs_tokens").alias("lcs_tokens"),
-                F.col("c.lcs_exhausted").alias("lcs_exhausted"),
-            )
-        )
+    )
     confirmed = graded.filter(
         (F.col("jaccard") >= F.lit(cfg.jaccard_threshold))
         | (F.col("lcs_tokens") >= F.lit(cfg.winnow_guarantee))

@@ -1,11 +1,14 @@
 """End-to-end near-duplicate pipeline orchestration.
 
 files(repo, path, commit, lang, content)
-  → S1 signatures   (canonicalize + featurize pandas UDFs; checkpointed)
-  → S2 exact groups (sha256 window; star edges for identical content)
-  → S3 band_buckets (key-family explosion; checkpointed)
+  → S1 signatures   (canonicalize + featurize pandas UDF over one
+                     representative per distinct content; checkpointed)
+  → S2 exact groups (min-fid representative per sha256 from a 2-column
+                     aggregate, derived before S1; star edges for copies)
+  → S3 band_buckets (one-pass key-family explosion; checkpointed)
   → S4 pairs        (bucket-disciplined candidate pairing)
-  → S5 confirmed    (JVM-native Jaccard + winnow substring confirm; checkpointed)
+  → S5 confirmed    (one fused Arrow Jaccard + verified-run confirm per
+                     pair; checkpointed)
   → S6 components   (large-star/small-star CC; checkpointed)
   → S7 clusters     (labels over the full universe + canonical flags)
 
@@ -28,6 +31,9 @@ from .operators import blocking, cluster, verify
 
 @dataclass
 class PipelineResult:
+    # one row per input file; feature columns are null for members of an
+    # exact-copy class (only its min-fid representative is featurized),
+    # except when the caller passed precomputed ``signatures``
     signatures: DataFrame
     exact_edges: DataFrame
     pairs: DataFrame
@@ -91,7 +97,6 @@ class DedupPipeline:
             # precomputed-signatures path, or downstream stages would match
             # manifests written for a different dataset
             fp = input_fingerprint(files)
-        ided = None
         if signatures is not None:
             sigs = signatures
             lvl = sigs.storageLevel
@@ -100,32 +105,44 @@ class DedupPipeline:
                 # cheap (sha256, fid) rep aggregation itself — a 2-column
                 # scan of the warm cache + AQE-broadcast join back, instead
                 # of the window form's full-signature-payload shuffle on
-                # sha256 (exact_rep_frame's ided path; same rep map from
-                # the same rows). An UNPERSISTED signatures frame keeps the
-                # window form: feeding it to the agg would run the
-                # featurize UDF twice.
-                ided = sigs
-        elif resumable:
-            # the fingerprint keys every stage to THIS input — a re-run
-            # against a different table invalidates the cache instead of
-            # silently serving the previous dataset's state. The expensive
-            # featurize stage resumes at PARTITION granularity (pt =
-            # xxhash64(fid) % n): only partitions missing from the manifest
-            # recompute after a mid-stage kill.
-            ided = blocking.with_ids(files)
-            sigs = self.store.partitioned_stage(
-                "signatures",
-                ided,
-                lambda sub: blocking.signatures(sub, cfg, ids_added=True),
-                fp,
-                n_pt=cfg.checkpoint_partitions,
-            )
+                # sha256 (same rep map from the same rows). An UNPERSISTED
+                # signatures frame keeps the window form: feeding it to the
+                # agg would run the featurize UDF twice.
+                with_rep = blocking.exact_rep_frame(sigs, sigs)
+            else:
+                with_rep = blocking.exact_rep_frame(sigs)
         else:
+            # the rep map (min fid per sha256) comes from the cheap JVM
+            # sha2 columns BEFORE featurization, so the featurize UDF sees
+            # only representatives' content; members' feature columns are
+            # null (signatures' rep_fid gate)
             ided = blocking.with_ids(files)
-            sigs = self.store.stage(
-                "signatures",
-                lambda: blocking.signatures(ided, cfg, ids_added=True),
-            )
+            gated = blocking.exact_rep_frame(ided, ided)
+            if resumable:
+                # the fingerprint keys every stage to THIS input — a re-run
+                # against a different table invalidates the cache instead
+                # of silently serving the previous dataset's state. The
+                # expensive featurize stage resumes at PARTITION granularity
+                # (pt = xxhash64(fid) % n): only partitions missing from the
+                # manifest recompute after a mid-stage kill. rep_fid is not
+                # stored: the rep map is re-derived from the same cheap
+                # columns below, so partitions written by any version agree.
+                sigs = self.store.partitioned_stage(
+                    "signatures",
+                    gated,
+                    lambda sub: blocking.signatures(
+                        sub, cfg, ids_added=True
+                    ).drop("rep_fid"),
+                    fp,
+                    n_pt=cfg.checkpoint_partitions,
+                )
+                with_rep = blocking.exact_rep_frame(sigs, ided)
+            else:
+                with_rep = self.store.stage(
+                    "signatures",
+                    lambda: blocking.signatures(gated, cfg, ids_added=True),
+                )
+                sigs = with_rep.drop("rep_fid")
 
         if in_memory:
             # ONE persist+count materializes the featurize UDF AND the sha256
@@ -138,17 +155,10 @@ class DedupPipeline:
             # actions = fewer driver planning waves = lower serial floor.
             # The rep map rides the cheap sha2-only branch (see
             # exact_rep_frame), so the signature payload is never exchanged.
-            with_rep = blocking.exact_rep_frame(sigs, ided).persist()
+            with_rep = with_rep.persist()
             persisted.append(with_rep)
             with_rep.count()
             sigs = with_rep.drop("rep_fid")
-        else:
-            # same cheap-rep-map form as the in-memory path (the sha2-only
-            # agg + AQE-broadcast join), shared by exact_groups AND the
-            # label universe — the checkpointed path previously windowed the
-            # full signature payload on sha256 twice (here and at the
-            # universe select)
-            with_rep = blocking.exact_rep_frame(sigs, ided)
         rep_sigs, exact_edges = blocking.exact_groups(with_rep)
         keys = self.store.stage(
             "band_buckets", lambda: blocking.blocking_keys(rep_sigs, cfg), fp

@@ -42,6 +42,35 @@ def test_key_family_counts(spark, cfg):
     assert by_kind.get(blocking.KIND_WINNOW, 0) >= 1  # 300 tokens > window
 
 
+def test_key_stream_equals_family_listing(spark, cfg):
+    """blocking_keys emits exactly the keys listed from the signature
+    arrays; a null or empty family drops only its own keys."""
+    rows = [
+        ("a", [1, 2], [3], [4, 5]),
+        ("b", None, [7, 8], []),
+        ("c", [], None, [9]),
+        ("d", [10], [11], None),
+    ]
+    rep = spark.createDataFrame(
+        rows,
+        "fid string, bands array<bigint>, simhash_keys array<bigint>, "
+        "winnow array<bigint>",
+    )
+    keys = blocking.blocking_keys(rep, cfg)
+    assert keys.dtypes == [
+        ("fid", "string"), ("kid", "int"), ("khash", "bigint"), ("kind", "int")
+    ]
+    want = []
+    for fid, bands, sim, win in rows:
+        want += [(fid, blocking.KIND_BAND, i, h) for i, h in enumerate(bands or [])]
+        want += [(fid, blocking.KIND_SIMHASH, i, h) for i, h in enumerate(sim or [])]
+        want += [(fid, blocking.KIND_WINNOW, 0, h) for h in win or []]
+    got = [
+        (r["fid"], r["kind"], r["kid"], r["khash"]) for r in keys.collect()
+    ]
+    assert sorted(got) == sorted(want)
+
+
 def _components(edges, nodes):
     """Driver-side union-find over (fid1, fid2) tuples, for assertions."""
     parent = {n: n for n in nodes}

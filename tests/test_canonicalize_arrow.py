@@ -273,6 +273,22 @@ def test_phrase_match_count_matrix_arrow_equals_pandas():
     assert (got == ref).all()
 
 
+def test_phrase_match_count_matrix_null_row_counts_zero():
+    """A null row counts as '' on both paths — never a NaN cast to
+    INT64_MIN by the pandas fallback."""
+    s = pd.Series(["data base", None, "the a"], dtype=object)
+    want = phrase_match_count_matrix(s.fillna(""), _PHRASE_ORDERED)
+    assert (want[1] == 0).all()
+    got = phrase_match_count_matrix(s, _PHRASE_ORDERED)
+    orig = C._pa
+    try:
+        C._pa = None
+        ref = phrase_match_count_matrix(s, _PHRASE_ORDERED)
+    finally:
+        C._pa = orig
+    assert (got == want).all() and (ref == want).all()
+
+
 def test_rewrite_joined_batch_arrow_equals_pandas():
     rng = random.Random(29)
     rows = _phrase_rows(rng, 300) + ["", "a", "the the the", "1.5 2 x 007"]

@@ -115,42 +115,6 @@ def test_max_run_reported_not_first(spark):
     assert got[0]["lcs_tokens"] >= 200
 
 
-def test_jvm_and_python_confirm_identical(spark):
-    """store_shingles=True (JVM array_intersect jaccard + null-gated LCS
-    UDF) and store_shingles=False (fused Python confirm) must produce
-    IDENTICAL confirmed pairs — same rows, bit-equal jaccard doubles."""
-    from dataclasses import replace
-
-    cfg = replace(PipelineConfig(), store_shingles=True)
-    lean = PipelineConfig()
-    assert not lean.store_shingles               # lean is the default
-    assert lean.config_hash == cfg.config_hash   # strategy, not semantics
-
-    block = " ".join(f"shared{i}" for i in range(250))
-    base = " ".join(f"tok{i} fill{i}" for i in range(120))
-    rows = [
-        ("r1", "a", "c", "python", base),
-        ("r2", "b", "c", "python", base + " tiny change"),
-        ("r3", "c", "c", "python", base + " another small edit here"),
-        ("r4", "d", "c", "python",
-         " ".join(f"alpha{i}" for i in range(400)) + " " + block),
-        ("r5", "e", "c", "python",
-         block + " " + " ".join(f"beta{i}" for i in range(400))),
-    ]
-
-    def key(r):
-        return (r["fid1"], r["fid2"])
-
-    got_jvm = {key(r): r for r in _run_confirm(spark, rows, cfg)}
-    got_py = {key(r): r for r in _run_confirm(spark, rows, lean)}
-    assert set(got_jvm) == set(got_py) and got_jvm
-    for k in got_jvm:
-        a, b = got_jvm[k], got_py[k]
-        assert a["jaccard"] == b["jaccard"]          # bit-equal doubles
-        assert a["lcs_tokens"] == b["lcs_tokens"]
-        assert a["status"] == b["status"]
-
-
 def test_max_run_across_alignments_of_repeated_block(spark):
     """Code-review r3 repro: when a shared block X repeats on one side, the
     maximal run may pair the SECOND occurrence of X with the other side's

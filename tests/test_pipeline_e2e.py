@@ -106,3 +106,67 @@ def test_no_oversized_allpairs_blowup(result):
     n_pairs = result.pairs.count()
     n_files = result.signatures.count()
     assert n_pairs < n_files * 10
+
+
+@pytest.fixture(scope="module")
+def fork_files(spark, corpus_pdf):
+    """Exact copies: 40 distinct files, each copied into 3 repos."""
+    base = corpus_pdf.drop_duplicates("content").head(40)
+    forks = []
+    for k in range(3):
+        f = base[["repo", "path", "commit", "lang", "content"]].copy()
+        f["repo"] = f["repo"] + f"_fork{k}"
+        forks.append(f)
+    import pandas as pd
+
+    return spark.createDataFrame(pd.concat(forks, ignore_index=True))
+
+
+_FEATURES = ["canon", "n_tokens", "n_shingles", "simhash", "bands",
+             "simhash_keys", "winnow"]
+
+
+def _check_rep_gate(res, full, fork_files):
+    """Members' features are null; representatives' features equal the
+    ungated signatures of the same rows."""
+    sigs = {r["fid"]: r for r in res.signatures.collect()}
+    assert len(sigs) == fork_files.count()
+    reps = {}
+    for r in sigs.values():
+        reps[r["sha256"]] = min(reps.get(r["sha256"], r["fid"]), r["fid"])
+    want = {r["fid"]: r for r in full.collect()}
+    n_members = 0
+    for fid, r in sigs.items():
+        if fid == reps[r["sha256"]]:
+            assert [r[c] for c in _FEATURES] == [want[fid][c] for c in _FEATURES]
+        else:
+            n_members += 1
+            assert all(r[c] is None for c in _FEATURES), fid
+    assert n_members == 2 * len(reps)
+
+
+def test_exact_copies_featurized_once(spark, cfg, fork_files, tmp_path):
+    """Only one representative per distinct content is featurized, on the
+    in-memory and the checkpointed path, and the labels equal the ungated
+    layer composition the benchmark traces."""
+    import contextlib
+    import types
+
+    from libpostal_spark.operators import blocking
+    from perfbench.layers import traced_layers
+
+    full = blocking.signatures(fork_files, cfg)
+    tracer = types.SimpleNamespace(span=lambda name: contextlib.nullcontext())
+    want, _, cached = traced_layers(spark, fork_files, cfg, tracer)
+    try:
+        for root in (None, str(tmp_path / "ckpt")):
+            res = DedupPipeline(spark, cfg, checkpoint_root=root).run(fork_files)
+            try:
+                _check_rep_gate(res, full, fork_files)
+                got = {r["fid"]: r["component"] for r in res.clusters.collect()}
+                assert got == want
+            finally:
+                res.release()
+    finally:
+        for df in cached:
+            df.unpersist()

@@ -119,25 +119,38 @@ def test_verify_winnow_check_is_jvm_side(spark, cfg):
     out = verify.verified_pairs(pairs, rep, cfg)
     plan = _plan(out)
     assert "arrays_overlap" in plan          # JVM-side, no Python round-trip
-    # lean default (store_shingles=False): ONE fused Arrow pair UDF, no
-    # second chained Python pass, no stored-shingle join payload
+    # ONE fused Arrow pair UDF, no second chained Python pass
     assert "pair_confirm_udf" in plan
-    assert "pair_jaccard_udf" not in plan
-    assert "array_intersect" not in plan
 
-    # opt-in JVM confirm (store_shingles=True): jaccard is array_intersect
-    # in the JVM plan; the only Python node is the null-gated run verifier
-    from dataclasses import replace
 
-    jvm_cfg = replace(cfg, store_shingles=True)
-    sigs_j = blocking.signatures(dedup.docs_as_files(docs), jvm_cfg)
-    rep_j, _ = blocking.exact_groups(sigs_j)
-    keys_j = blocking.blocking_keys(rep_j, jvm_cfg)
-    pairs_j, _, _ = blocking.candidate_pairs(keys_j, jvm_cfg)
-    plan_j = _plan(verify.verified_pairs(pairs_j, rep_j, jvm_cfg))
-    assert "array_intersect" in plan_j
-    assert "pair_lcs_udf" in plan_j          # the ONE null-gated Arrow UDF
-    assert "pair_confirm_udf" not in plan_j  # no Python jaccard pass
+def test_verify_confirm_udf_evaluated_once(spark, cfg):
+    """The confirm filter reads the UDF's output struct: Catalyst must not
+    copy pair_confirm_udf into the pushed-down filter, which would evaluate
+    it (and ship both canons to Python) twice per candidate pair."""
+    from libpostal_spark.operators import verify
+
+    rep = spark.createDataFrame(
+        [("a", "x y z", [1, 2]), ("b", "x y w", [2, 3]), ("c", "q", [9])],
+        "fid string, canon string, winnow array<bigint>",
+    )
+    pairs = spark.createDataFrame(
+        [("a", "b", 0, [0]), ("a", "c", 1, [1])],
+        "fid1 string, fid2 string, source int, sources array<int>",
+    )
+    plan = _plan(verify.verified_pairs(pairs, rep, cfg))
+    assert len(set(re.findall(r"ArrowEvalPython \((\d+)\)", plan))) == 1, plan
+
+
+def test_blocking_keys_one_generate(spark, cfg):
+    """All three key families come from ONE scan + Generate (no Union)."""
+    rep = spark.createDataFrame(
+        [("a", [1, 2], [3], [4, 5])],
+        "fid string, bands array<bigint>, simhash_keys array<bigint>, "
+        "winnow array<bigint>",
+    )
+    plan = _plan(blocking.blocking_keys(rep, cfg))
+    assert len(set(re.findall(r"Generate \((\d+)\)", plan))) == 1, plan
+    assert "Union" not in plan, plan
 
 
 def test_cosine_pairs_scale_route_plan(spark):

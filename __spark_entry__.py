@@ -12,6 +12,8 @@ oracle_sql() — exact ANSI-SQL twins runnable by DuckDB on the same parquet.
 
 from __future__ import annotations
 
+import atexit
+import functools
 import os
 import sys
 from collections.abc import Callable
@@ -32,89 +34,63 @@ from libpostal_spark.pipeline import DedupPipeline  # noqa: E402
 
 _CFG = PipelineConfig()
 
-# per-session signature cache: the featurize pass over one sf_dir's documents
-# is identical across the four pipeline-backed queries (signatures, candidate
-# pairs, clusters, status pairs) — compute it once per harness session, reuse
-# the persisted frame. Keyed by (JVM session id, sf_dir).
-_SIG_CACHE: dict = {}
-
-# bounded cache lifecycle: a long harness session sweeping several sf_dirs
-# must not accumulate one persisted frame per (cache, sf_dir) forever. Each
-# cache keeps at most _CACHE_LIMIT live entries; inserting beyond that
-# unpersists and evicts the oldest entry of the SAME session (insertion
-# order), and entries from dead sessions (stale applicationId) are dropped
-# outright — their JVM, and with it every cached block, is already gone.
+# per-session reuse: one featurize pass, one pipeline run and one ANN index
+# each serve several queries of a harness session. Every shared build goes
+# through _memo, keyed by (applicationId, sf_dir, name) — applicationId is
+# unique per SparkContext lifetime, so it cannot collide after a restart.
+# Entries of a dead session are dropped without a release (their JVM, and
+# with it every cached block, is already gone). Each name keeps at most
+# _CACHE_LIMIT sf_dirs per session and releases the oldest (insertion
+# order), so a long session sweeping several sf_dirs does not pin one
+# persisted frame per sf_dir forever.
+_MEMO: dict = {}
 _CACHE_LIMIT = 2
 
 
-def _cache_put(
-    cache: dict, key: tuple, value, release=None, on_evict=None
-) -> None:
-    """Insert with dead-session sweep + bounded same-session LRU eviction.
-
-    ``on_evict(key)`` (if given) runs for EVERY key this call removes —
-    both dead-session sweeps and LRU evictions — so a cache with a
-    side table keyed the same way (e.g. _SIG_CACHE's gating values in
-    _MAX_CLASS_CACHE) keeps it in sync without this generic helper
-    hard-coding any caller's tables."""
-    app = key[0]
-    for k in [k for k in cache if k[0] != app]:
-        cache.pop(k, None)
-        if on_evict is not None:
-            on_evict(k)
-    cache[key] = value
-    keys = [k for k in cache if k[0] == app]
-    while len(keys) > _CACHE_LIMIT:
-        old = keys.pop(0)
-        v = cache.pop(old)
-        if on_evict is not None:
-            on_evict(old)
-        try:
-            if release is not None:
-                release(v)
-            else:
-                v.unpersist()
-        except Exception:
-            pass
+def _unpersist(value) -> None:
+    value.unpersist()
 
 
-def _session_key(spark: SparkSession) -> str:
-    # applicationId is unique per SparkContext lifetime — unlike id() of a
-    # py4j wrapper, it cannot collide after a session restart
-    return spark.sparkContext.applicationId
+def _release(value, release) -> None:
+    try:
+        release(value)
+    except Exception:
+        pass  # JVM may already be gone at interpreter exit
 
 
-_MAX_CLASS_CACHE: dict = {}
+def _memo(
+    spark: SparkSession, sf_dir: str, name: str, build, release=_unpersist
+):
+    """``build()`` once per (session, sf_dir, name); ``release(value)`` frees
+    it on eviction or at session end."""
+    app = spark.sparkContext.applicationId
+    key = (app, sf_dir, name)
+    if key not in _MEMO:
+        for k in [k for k in _MEMO if k[0] != app]:
+            del _MEMO[k]
+        _MEMO[key] = (build(), release)
+        same = [k for k in _MEMO if k[0] == app and k[2] == name]
+        for old in same[:-_CACHE_LIMIT]:
+            _release(*_MEMO.pop(old))
+    return _MEMO[key][0]
+
+
+def _persisted(df: DataFrame) -> DataFrame:
+    df = df.persist()
+    df.count()
+    return df
 
 
 def release_caches() -> None:
-    """Unpersist and drop every cached frame this module holds.
+    """Release every memoized build and drop it.
 
-    The bounded per-cache LRU (``_cache_put``) handles steady-state churn;
-    this hook is the session-END sweep — registered via atexit so a
-    one-sweep harness run exits with zero persisted frames still pinned in
-    the executor block manager, and callable directly by long-lived hosts
-    between sweeps."""
-    _QVEC_CACHE.clear()
-    for cache, release in (
-        (_SIG_CACHE, None),
-        (_SIG_SHA_CACHE, None),
-        (_ANN_SIG_CACHE, None),
-        (_COS_PAIRS_CACHE, None),
-        (_PIPE_RES_CACHE, lambda r: r.release()),
-        (_PAIRS_CACHE, lambda v: v[2] is not None and v[2].unpersist()),
-    ):
-        for key in list(cache):
-            v = cache.pop(key, None)
-            try:
-                if release is not None:
-                    release(v)
-                elif v is not None:
-                    v.unpersist()
-            except Exception:
-                pass  # JVM may already be gone at interpreter exit
-    _MAX_CLASS_CACHE.clear()
-    _IVF_CENTROID_CACHE.clear()
+    ``_memo``'s per-name bound handles steady-state churn; this hook is the
+    session-END sweep — registered via atexit so a one-sweep harness run
+    exits with zero persisted frames still pinned in the executor block
+    manager, and callable directly by long-lived hosts between sweeps."""
+    for key in list(_MEMO):
+        _release(*_MEMO.pop(key))
+    _ivf_centroids.cache_clear()
     try:
         from libpostal_spark.operators.similarity import (
             release_exact_broadcasts,
@@ -125,79 +101,63 @@ def release_caches() -> None:
         pass  # JVM may already be gone at interpreter exit
 
 
-import atexit  # noqa: E402
-
 atexit.register(release_caches)
 
 
-def _sigs(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _sigs(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, int]:
+    """Persisted signatures of one sf_dir's documents, plus the largest
+    sha256 class — the adaptive-plan gate dup_status_pairs needs. The
+    featurize pass is identical across the pipeline-backed queries, so it
+    runs once per session."""
     from libpostal_spark.operators import blocking
 
-    key = (_session_key(spark), sf_dir)
-    if key not in _SIG_CACHE:
+    def build():
         files = _spread(dedup.docs_as_files(_docs(spark, sf_dir)))
         sigs = blocking.signatures(files, _CFG).persist()
-        # ONE action both materializes the cache and computes the largest
-        # sha256 class — the adaptive-plan gate dup_status_pairs needs —
-        # so no downstream query ever runs a separate gating agg
+        # ONE action both materializes the cache and computes the gate, so
+        # no downstream query ever runs a separate gating agg
         row = (
             sigs.groupBy("sha256")
             .agg(F.count("*").alias("n"))
             .agg(F.max("n").alias("m"))
             .collect()
         )
-        _MAX_CLASS_CACHE[key] = int(row[0]["m"] or 0)
-        # the gate side table is keyed like _SIG_CACHE: evicting a
-        # signatures entry (dead session OR LRU) drops its gate with it
-        _cache_put(
-            _SIG_CACHE, key, sigs,
-            on_evict=lambda k: _MAX_CLASS_CACHE.pop(k, None),
-        )
-    return _SIG_CACHE[key]
+        return sigs, int(row[0]["m"] or 0)
+
+    return _memo(
+        spark, sf_dir, "sigs", build, release=lambda v: v[0].unpersist()
+    )
 
 
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
 
 
-_PIPE_RES_CACHE: dict = {}
-
-
 def _pipe_res(spark: SparkSession, sf_dir: str):
     """Per-session pipeline result over one sf_dir's documents — the
-    _SIG_CACHE pattern one level up: doc_near_dup_clusters and
+    ``_sigs`` reuse one level up: doc_near_dup_clusters and
     dup_status_pairs consume the SAME DedupPipeline run (same config, same
     cached signatures), so the second query reuses the first's persisted
     confirm/cluster frames instead of re-running three driver actions."""
-    key = (_session_key(spark), sf_dir)
-    if key not in _PIPE_RES_CACHE:
-        res = DedupPipeline(spark, _CFG).run(
+    return _memo(
+        spark, sf_dir, "pipe_res",
+        lambda: DedupPipeline(spark, _CFG).run(
             dedup.docs_as_files(_docs(spark, sf_dir)),
-            signatures=_sigs(spark, sf_dir),
-        )
-        _cache_put(
-            _PIPE_RES_CACHE, key, res, release=lambda r: r.release()
-        )
-    return _PIPE_RES_CACHE[key]
-
-
-_QVEC_CACHE: dict = {}
+            signatures=_sigs(spark, sf_dir)[0],
+        ),
+        release=lambda res: res.release(),
+    )
 
 
 def _ann_qvec(spark: SparkSession, sf_dir: str) -> list:
     """The ANN probe vector (vec_id = 0), fetched once per session per
     sf_dir — three ANN queries each collected it with their own filter job."""
-    key = (_session_key(spark), sf_dir)
-    if key not in _QVEC_CACHE:
-        row = (
-            _embs(spark, sf_dir).filter(F.col("vec_id") == 0).collect()[0]
-        )
-        _cache_put(
-            _QVEC_CACHE, key,
-            [float(x) for x in row["embedding"]],
-            release=lambda v: None,
-        )
-    return _QVEC_CACHE[key]
+
+    def build():
+        row = _embs(spark, sf_dir).filter(F.col("vec_id") == 0).collect()[0]
+        return [float(x) for x in row["embedding"]]
+
+    return _memo(spark, sf_dir, "qvec", build, release=lambda v: None)
 
 
 def _spread(df: DataFrame) -> DataFrame:
@@ -1051,21 +1011,16 @@ def _q_token_counts(spark, sf_dir):
     )
 
 
-_COS_PAIRS_CACHE: dict = {}
-
-
 def _cos_pairs(spark, sf_dir):
     """Per-session cosine near-dup pair frame (threshold 0.4): the pairs
     query and the clusters query score the same corpus — one persisted
-    scoring pass serves both (the _SIG_CACHE pattern)."""
-    key = (_session_key(spark), sf_dir)
-    if key not in _COS_PAIRS_CACHE:
-        pairs = similarity.cosine_pairs(
-            _spread(_embs(spark, sf_dir)), threshold=0.4
-        ).persist()
-        pairs.count()
-        _cache_put(_COS_PAIRS_CACHE, key, pairs)
-    return _COS_PAIRS_CACHE[key]
+    scoring pass serves both."""
+    return _memo(
+        spark, sf_dir, "cos_pairs",
+        lambda: _persisted(
+            similarity.cosine_pairs(_spread(_embs(spark, sf_dir)), threshold=0.4)
+        ),
+    )
 
 
 def _q_embedding_near_dup(spark, sf_dir):
@@ -2357,22 +2312,19 @@ def _q_ann_topk(spark, sf_dir):
 
 
 _ANN = dict(n_tables=8, n_bits=4, multiprobe=1, seed=42)
-_ANN_SIG_CACHE: dict = {}
 
 
 def _ann_sigs(spark, sf_dir, dim: int):
     """Persisted ANN signature index, computed once per session per sf_dir —
     the scale contract: probes are key lookups against a stored index, never
     per-query signature recomputation."""
-    key = (_session_key(spark), sf_dir)
-    if key not in _ANN_SIG_CACHE:
-        sigs = similarity.ann_signatures(
+    return _memo(
+        spark, sf_dir, "ann_sigs",
+        lambda: _persisted(similarity.ann_signatures(
             _spread(_embs(spark, sf_dir)), dim,
             n_tables=_ANN["n_tables"], n_bits=_ANN["n_bits"], seed=_ANN["seed"],
-        ).persist()
-        sigs.count()
-        _cache_put(_ANN_SIG_CACHE, key, sigs)
-    return _ANN_SIG_CACHE[key]
+        )),
+    )
 
 
 def _q_ann_lsh_topk(spark, sf_dir):
@@ -2384,12 +2336,10 @@ def _q_ann_lsh_topk(spark, sf_dir):
 
 
 _IVF = dict(k_lists=8, iters=5, nprobe=2, seed=42)
-_IVF_CENTROID_CACHE: dict = {}
-
-
 _IVF_FIT_MAX_ROWS = 20_000
 
 
+@functools.lru_cache(maxsize=_CACHE_LIMIT)
 def _ivf_centroids(sf_dir: str):
     """Deterministic IVF centroids fitted on a BOUNDED driver-side sample
     of the embedding table: row groups are consumed in file order only
@@ -2399,40 +2349,39 @@ def _ivf_centroids(sf_dir: str):
     vectors. Assignment stays distributed. The query vector (vec_id = 0)
     is fetched with a pushed-down parquet filter, so it costs the row
     groups whose statistics admit vec_id 0, not a full scan. Cached per
-    sf_dir; the oracle twin embeds the identical fitted centroids as
-    literals, so query and oracle agree by construction."""
-    if sf_dir not in _IVF_CENTROID_CACHE:
-        import numpy as np
-        import pyarrow.parquet as pq
+    sf_dir without a session (`_ann_ivf_sql` calls it with none);
+    the oracle twin embeds the identical fitted centroids as literals, so
+    query and oracle agree by construction."""
+    import numpy as np
+    import pyarrow.parquet as pq
 
-        path = os.path.join(sf_dir, "embeddings.parquet")
-        pf = pq.ParquetFile(path)
-        chunks, have = [], 0
-        for rg in range(pf.num_row_groups):
-            chunks.append(
-                pf.read_row_group(rg, columns=["vec_id", "embedding"])
-                .to_pandas()
-            )
-            have += len(chunks[-1])
-            if have >= _IVF_FIT_MAX_ROWS:
-                break
-        tb = (
-            pd.concat(chunks, ignore_index=True)
-            .sort_values("vec_id")
-            .head(_IVF_FIT_MAX_ROWS)
+    path = os.path.join(sf_dir, "embeddings.parquet")
+    pf = pq.ParquetFile(path)
+    chunks, have = [], 0
+    for rg in range(pf.num_row_groups):
+        chunks.append(
+            pf.read_row_group(rg, columns=["vec_id", "embedding"])
+            .to_pandas()
         )
-        mat = np.vstack(tb["embedding"].to_numpy())
-        q = pq.read_table(
-            path, columns=["vec_id", "embedding"],
-            filters=[("vec_id", "==", 0)],
-        ).to_pandas()
-        _IVF_CENTROID_CACHE[sf_dir] = (
-            similarity.kmeans_centroids(
-                mat, _IVF["k_lists"], _IVF["iters"], _IVF["seed"]
-            ),
-            np.asarray(q["embedding"].iloc[0], dtype=float),
-        )
-    return _IVF_CENTROID_CACHE[sf_dir]
+        have += len(chunks[-1])
+        if have >= _IVF_FIT_MAX_ROWS:
+            break
+    tb = (
+        pd.concat(chunks, ignore_index=True)
+        .sort_values("vec_id")
+        .head(_IVF_FIT_MAX_ROWS)
+    )
+    mat = np.vstack(tb["embedding"].to_numpy())
+    q = pq.read_table(
+        path, columns=["vec_id", "embedding"],
+        filters=[("vec_id", "==", 0)],
+    ).to_pandas()
+    return (
+        similarity.kmeans_centroids(
+            mat, _IVF["k_lists"], _IVF["iters"], _IVF["seed"]
+        ),
+        np.asarray(q["embedding"].iloc[0], dtype=float),
+    )
 
 
 def _q_ann_ivf_topk(spark, sf_dir):
@@ -2490,9 +2439,6 @@ def _ann_ivf_sql() -> str:
     """
 
 
-_SIG_SHA_CACHE: dict = {}
-
-
 def _cfg_sha():
     import dataclasses
 
@@ -2506,13 +2452,13 @@ def _sigs_sha(spark, sf_dir):
     DuckDB rebuild every value (libpostal_spark.sqltwin)."""
     from libpostal_spark.operators import blocking
 
-    key = (_session_key(spark), sf_dir)
-    if key not in _SIG_SHA_CACHE:
-        files = _spread(dedup.docs_as_files(_docs(spark, sf_dir)))
-        sigs = blocking.signatures(files, _cfg_sha(), emit_minhash=True).persist()
-        sigs.count()
-        _cache_put(_SIG_SHA_CACHE, key, sigs)
-    return _SIG_SHA_CACHE[key]
+    return _memo(
+        spark, sf_dir, "sigs_sha",
+        lambda: _persisted(blocking.signatures(
+            _spread(dedup.docs_as_files(_docs(spark, sf_dir))),
+            _cfg_sha(), emit_minhash=True,
+        )),
+    )
 
 
 def _q_signatures(spark, sf_dir):
@@ -2551,15 +2497,12 @@ def _q_shingle_stats(spark, sf_dir):
     """SQL-verifiable slice of the signature table: token + distinct-shingle
     counts per doc (the simhash/band columns stay in minhash_signatures,
     whose hashes SQL cannot replay)."""
-    sigs = _sigs(spark, sf_dir)
+    sigs, _ = _sigs(spark, sf_dir)
     return sigs.select(
         F.col("path").cast("long").alias("doc_id"),
         F.col("n_tokens").cast("long").alias("n_tokens"),
         F.col("n_shingles").cast("long").alias("n_shingles"),
     )
-
-
-_PAIRS_CACHE: dict = {}
 
 
 def _cfg_pairs():
@@ -2578,8 +2521,7 @@ def _cfg_pairs():
 def _q_lsh_candidates(spark, sf_dir):
     from libpostal_spark.operators import blocking
 
-    key = (_session_key(spark), sf_dir)
-    if key not in _PAIRS_CACHE:
+    def build():
         cfg = _cfg_pairs()
         sigs = _sigs_sha(spark, sf_dir)
         # the persisted sha-sigs cache serves its own (sha256, fid) rep
@@ -2588,15 +2530,14 @@ def _q_lsh_candidates(spark, sf_dir):
         # through a sha256 shuffle
         rep_sigs, _ = blocking.exact_groups(sigs, ided=sigs)
         keys = blocking.blocking_keys(rep_sigs, cfg)
-        # keep the cache handle referenced so repeated invocations reuse ONE
-        # materialized bucket window instead of leaking a new one per call
-        _cache_put(
-            _PAIRS_CACHE,
-            key,
-            blocking.candidate_pairs(keys, cfg),
-            release=lambda v: v[2] is not None and v[2].unpersist(),
-        )
-    pairs, _, _ = _PAIRS_CACHE[key]
+        pairs, _, bucket_cache = blocking.candidate_pairs(keys, cfg)
+        return pairs, bucket_cache
+
+    # memoized so repeated invocations reuse ONE materialized bucket window
+    # instead of leaking a new one per call
+    pairs, _ = _memo(
+        spark, sf_dir, "pairs", build, release=lambda v: v[1].unpersist()
+    )
     return pairs.select("fid1", "fid2", "source")
 
 
@@ -2612,7 +2553,7 @@ def _q_dup_status(spark, sf_dir):
         _docs(spark, sf_dir),
         _CFG,
         result=_pipe_res(spark, sf_dir),
-        max_class_size=_MAX_CLASS_CACHE[(_session_key(spark), sf_dir)],
+        max_class_size=_sigs(spark, sf_dir)[1],
     )
 
 

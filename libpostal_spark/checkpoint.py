@@ -390,22 +390,12 @@ class CheckpointStore:
 
 
 class NullStore(CheckpointStore):
-    """No-persistence store (tests / bench): every stage recomputes."""
+    """No-persistence store: every stage runs in place, nothing is recorded."""
 
     def __init__(self, spark: SparkSession, config_hash: str):
         super().__init__(spark, root="", config_hash=config_hash)
 
     def stage(self, name, fn, input_fingerprint=None):
-        t0 = time.time()
-        df = fn()
-        self.metrics.append(
-            dict(stage=name, config_hash=self.config_hash, resumed=False,
-                 rows=None, wall_ms=int((time.time() - t0) * 1000))
-        )
-        return df
-
-    def partitioned_stage(
-        self, name, input_df, fn, input_fingerprint=None, n_pt=32, pt_expr="",
-        pts_per_commit=8,
-    ):
-        return self.stage(name, lambda: fn(input_df))
+        # no metrics row: fn() only builds a lazy frame, so a wall time here
+        # would time plan construction, not execution
+        return fn()

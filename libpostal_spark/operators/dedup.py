@@ -95,15 +95,13 @@ def dup_status_pairs(
     spark,
     documents: DataFrame,
     cfg: PipelineConfig | None = None,
-    signatures: DataFrame | None = None,
     max_pairs_per_class: int = 10_000,
     max_class_size: int | None = None,
     result=None,
 ) -> DataFrame:
     """Graded duplicate pairs — see ``dup_status_pairs_with_ledger``."""
     pairs, _ = dup_status_pairs_with_ledger(
-        spark, documents, cfg, signatures, max_pairs_per_class,
-        max_class_size, result,
+        spark, documents, cfg, max_pairs_per_class, max_class_size, result,
     )
     return pairs
 
@@ -112,7 +110,6 @@ def dup_status_pairs_with_ledger(
     spark,
     documents: DataFrame,
     cfg: PipelineConfig | None = None,
-    signatures: DataFrame | None = None,
     max_pairs_per_class: int = 10_000,
     max_class_size: int | None = None,
     result=None,
@@ -149,7 +146,7 @@ def dup_status_pairs_with_ledger(
         res = result
     else:
         files = docs_as_files(documents)
-        res = DedupPipeline(spark, cfg).run(files, signatures=signatures)
+        res = DedupPipeline(spark, cfg).run(files)
     sigs = res.signatures
     ids = sigs.select("fid", F.col("path").cast("long").alias("doc_id"))
     w = Window.partitionBy("sha256")
@@ -577,7 +574,6 @@ def minhash_clusters(
     spark,
     documents: DataFrame,
     cfg: PipelineConfig | None = None,
-    signatures: DataFrame | None = None,
     result=None,
 ) -> DataFrame:
     """Full MinHash-LSH near-dup clustering of a documents table.
@@ -591,7 +587,7 @@ def minhash_clusters(
         res = result
     else:
         files = docs_as_files(documents)
-        res = DedupPipeline(spark, cfg).run(files, signatures=signatures)
+        res = DedupPipeline(spark, cfg).run(files)
     sig = res.signatures.select("fid", F.col("path").alias("doc_id"))
     # deliberately NOT sorted: a global orderBy here would be a full sort of
     # the production output; callers that need display order sort themselves

@@ -79,18 +79,23 @@ class DedupPipeline:
     def run(
         self,
         files: DataFrame,
-        persist_intermediate: bool = True,
         collect_bucket_stats: bool = False,
         signatures: DataFrame | None = None,
     ) -> PipelineResult:
-        """Pass `signatures` (an already-persisted blocking.signatures frame
+        """Pass `signatures` (an already-PERSISTED blocking.signatures frame
         for the same files+config) to reuse the featurize pass across
-        multiple pipeline invocations in one session."""
+        multiple pipeline invocations in one session. The frame serves the
+        cheap (sha256, fid) rep aggregation itself — a 2-column scan of the
+        warm cache + AQE-broadcast join back — so an unpersisted frame would
+        run the featurize UDF twice and raises ValueError instead."""
+        if signatures is not None:
+            lvl = signatures.storageLevel
+            if not (lvl.useMemory or lvl.useDisk):
+                raise ValueError("run(signatures=...) needs a persisted frame")
         cfg = self.cfg
         persisted: list[DataFrame] = []
         m0 = len(self.store.metrics)   # result carries THIS run's rows only
         resumable = not isinstance(self.store, NullStore)
-        in_memory = persist_intermediate and not resumable
         fp = None
         if resumable:
             # ALWAYS fingerprint the input when resuming — including the
@@ -99,18 +104,7 @@ class DedupPipeline:
             fp = input_fingerprint(files)
         if signatures is not None:
             sigs = signatures
-            lvl = sigs.storageLevel
-            if lvl.useMemory or lvl.useDisk:
-                # a PERSISTED precomputed-signatures frame can serve the
-                # cheap (sha256, fid) rep aggregation itself — a 2-column
-                # scan of the warm cache + AQE-broadcast join back, instead
-                # of the window form's full-signature-payload shuffle on
-                # sha256 (same rep map from the same rows). An UNPERSISTED
-                # signatures frame keeps the window form: feeding it to the
-                # agg would run the featurize UDF twice.
-                with_rep = blocking.exact_rep_frame(sigs, sigs)
-            else:
-                with_rep = blocking.exact_rep_frame(sigs)
+            with_rep = blocking.exact_rep_frame(sigs, sigs)
         else:
             # the rep map (min fid per sha256) comes from the cheap JVM
             # sha2 columns BEFORE featurization, so the featurize UDF sees
@@ -144,7 +138,7 @@ class DedupPipeline:
                 )
                 sigs = with_rep.drop("rep_fid")
 
-        if in_memory:
+        if not resumable:
             # ONE persist+count materializes the featurize UDF AND the sha256
             # contraction together (the whole serial prefix) in a single job.
             # Downstream consumers — 3 key families, verify ×2, exact edges,
@@ -174,7 +168,7 @@ class DedupPipeline:
         )
         n_confirmed = None
         edge_rows = None
-        if in_memory:
+        if not resumable:
             confirmed = confirmed.persist()
             persisted.append(confirmed)
             # ONE action materializes the confirm cache AND fetches the edge

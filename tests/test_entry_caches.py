@@ -1,7 +1,8 @@
-"""Entry-point cache lifecycle (_cache_put): LRU bounds, dead-session
-sweeps, and the gating-value side table's independence from sibling caches
-(regression: an ANN-cache eviction must not strand _SIG_CACHE without its
-_MAX_CLASS_CACHE gate)."""
+"""Entry-point session memo (_memo): per-name LRU bound, dead-session
+sweep, hits never rebuild, and the session-end release — including the
+signatures entry, whose max-class gate lives and dies with its frame."""
+
+from types import SimpleNamespace
 
 
 class _FakeDF:
@@ -12,12 +13,15 @@ class _FakeDF:
         self.unpersisted = True
 
 
+def _spark(app: str):
+    return SimpleNamespace(sparkContext=SimpleNamespace(applicationId=app))
+
+
 def _entry():
     import __spark_entry__ as E
 
-    E._SIG_CACHE.clear()
-    E._ANN_SIG_CACHE.clear()
-    E._MAX_CLASS_CACHE.clear()
+    E._MEMO.clear()
+    E._ivf_centroids.cache_clear()
     return E
 
 
@@ -25,105 +29,141 @@ def test_lru_eviction_unpersists_oldest():
     E = _entry()
     dfs = [_FakeDF() for _ in range(3)]
     for i, df in enumerate(dfs):
-        E._cache_put(E._SIG_CACHE, ("app1", f"sf{i}"), df)
-    assert len(E._SIG_CACHE) == E._CACHE_LIMIT
+        E._memo(_spark("app1"), f"sf{i}", "sigs", lambda df=df: df)
+    assert len(E._MEMO) == E._CACHE_LIMIT
     assert dfs[0].unpersisted and not dfs[2].unpersisted
-    assert ("app1", "sf0") not in E._SIG_CACHE
+    assert ("app1", "sf0", "sigs") not in E._MEMO
 
 
 def test_dead_session_entries_dropped_without_unpersist():
     E = _entry()
     old = _FakeDF()
-    E._cache_put(E._SIG_CACHE, ("app1", "sfA"), old)
-    E._cache_put(E._SIG_CACHE, ("app2", "sfA"), _FakeDF())
+    E._memo(_spark("app1"), "sfA", "sigs", lambda: old)
+    E._memo(_spark("app2"), "sfA", "sigs", _FakeDF)
     # the dead session's frame is dropped, not unpersisted (its JVM is gone)
-    assert ("app1", "sfA") not in E._SIG_CACHE and not old.unpersisted
+    assert ("app1", "sfA", "sigs") not in E._MEMO and not old.unpersisted
 
 
 def test_sibling_cache_eviction_keeps_sig_gate():
     E = _entry()
-    # _sigs-style fill: sig cache + its gating value
-    E._MAX_CLASS_CACHE[("app1", "sfB")] = 7
-    E._cache_put(E._SIG_CACHE, ("app1", "sfB"), _FakeDF())
-    # ANN cache churns through other sf dirs and evicts its OWN (app1, sfB)
+    sigs = _FakeDF()
+    E._memo(_spark("app1"), "sfB", "sigs", lambda: (sigs, 7))
+    # another name churns through other sf dirs and evicts its OWN sfB
     for sf in ("sfB", "sfC", "sfD"):
-        E._cache_put(E._ANN_SIG_CACHE, ("app1", sf), _FakeDF())
-    # the sig cache still holds sfB — its gate must still be present
-    assert ("app1", "sfB") in E._SIG_CACHE
-    assert E._MAX_CLASS_CACHE[("app1", "sfB")] == 7
+        E._memo(_spark("app1"), sf, "ann_sigs", _FakeDF)
+    assert ("app1", "sfB", "ann_sigs") not in E._MEMO
+    # the signatures entry, gate included, is untouched
+    assert E._memo(_spark("app1"), "sfB", "sigs", None) == (sigs, 7)
+    assert not sigs.unpersisted
 
 
-def test_sig_eviction_cleans_its_gate():
-    # the gate side table rides the on_evict callback exactly as the
-    # production _sigs() insertion wires it
+def test_memo_hit_does_not_rebuild():
     E = _entry()
-    gate = lambda k: E._MAX_CLASS_CACHE.pop(k, None)  # noqa: E731
-    for i in range(3):
-        E._MAX_CLASS_CACHE[("app1", f"sf{i}")] = i
-        E._cache_put(
-            E._SIG_CACHE, ("app1", f"sf{i}"), _FakeDF(), on_evict=gate
-        )
-    assert ("app1", "sf0") not in E._MAX_CLASS_CACHE
-    assert ("app1", "sf2") in E._MAX_CLASS_CACHE
-    # dead-session sweep fires the callback too
-    E._MAX_CLASS_CACHE[("app2", "sfX")] = 9
-    E._SIG_CACHE[("app2", "sfX")] = _FakeDF()
-    E._cache_put(E._SIG_CACHE, ("app3", "sfY"), _FakeDF(), on_evict=gate)
-    assert ("app2", "sfX") not in E._MAX_CLASS_CACHE
+    calls = []
+
+    def build():
+        calls.append(1)
+        return _FakeDF()
+
+    first = E._memo(_spark("app1"), "sfA", "sigs", build)
+    assert E._memo(_spark("app1"), "sfA", "sigs", build) is first
+    assert calls == [1]
 
 
 def test_release_callback_used():
     E = _entry()
     released = []
     for i in range(3):
-        E._cache_put(
-            E._ANN_SIG_CACHE, ("app1", f"sf{i}"), i,
-            release=lambda v: released.append(v),
+        E._memo(
+            _spark("app1"), f"sf{i}", "qvec", lambda i=i: i,
+            release=released.append,
         )
     assert released == [0]
 
 
-def test_release_caches_sweeps_everything():
-    """The session-end hook (atexit-registered) must unpersist every cached
-    frame across ALL entry caches and clear the value side-tables."""
+def _write_docs(root, n_dirs: int) -> list[str]:
+    import pandas as pd
+
+    dirs = []
+    for i in range(n_dirs):
+        d = root / f"sf{i}"
+        d.mkdir()
+        text = [f"alpha beta gamma delta {i}"] * 3 + ["epsilon zeta eta"]
+        pd.DataFrame({
+            "doc_id": list(range(len(text))),
+            "text": text,
+            "lang": "en",
+            "source": "s",
+        }).to_parquet(d / "documents.parquet")
+        dirs.append(str(d))
+    return dirs
+
+
+def test_sig_eviction_cleans_its_gate(spark, tmp_path):
+    """The production _sigs entry carries (frame, max sha256 class): the
+    per-name bound that evicts the frame drops its gate with it."""
     E = _entry()
-    E._SIG_SHA_CACHE.clear()
-    E._PAIRS_CACHE.clear()
+    dirs = _write_docs(tmp_path, 3)
+    first, gate = E._sigs(spark, dirs[0])
+    assert gate == 3 and first.storageLevel.useMemory
+    for d in dirs[1:]:
+        E._sigs(spark, d)
+    app = spark.sparkContext.applicationId
+    assert (app, dirs[0], "sigs") not in E._MEMO
+    assert not first.storageLevel.useMemory
+    assert [k[1] for k in E._MEMO] == dirs[1:]
+    E.release_caches()
+
+
+def test_release_caches_sweeps_everything(tmp_path):
+    """The session-end hook (atexit-registered) must release every memoized
+    build under every name and clear the IVF centroid lru_cache."""
+    import numpy as np
+    import pandas as pd
+
+    E = _entry()
     dfs = [_FakeDF() for _ in range(3)]
-    E._cache_put(E._SIG_CACHE, ("app1", "sfA"), dfs[0])
-    E._cache_put(E._SIG_SHA_CACHE, ("app1", "sfA"), dfs[1])
-    E._MAX_CLASS_CACHE[("app1", "sfA")] = 7
+    E._memo(_spark("app1"), "sfA", "sigs", lambda: (dfs[0], 7),
+            release=lambda v: v[0].unpersist())
+    E._memo(_spark("app1"), "sfA", "sigs_sha", lambda: dfs[1])
+    E._memo(_spark("app1"), "sfA", "ann_sigs", lambda: dfs[2])
     pairs_cached = _FakeDF()
-    E._PAIRS_CACHE[("app1", "sfA")] = (None, None, pairs_cached)
-    E._ANN_SIG_CACHE[("app1", "sfA")] = dfs[2]
-    E._IVF_CENTROID_CACHE["sfA"] = (None, None)
+    E._memo(_spark("app1"), "sfA", "pairs", lambda: (None, pairs_cached),
+            release=lambda v: v[1].unpersist())
+    rng = np.random.default_rng(0)
+    pd.DataFrame({
+        "vec_id": range(16),
+        "embedding": [rng.normal(size=4).tolist() for _ in range(16)],
+    }).to_parquet(tmp_path / "embeddings.parquet")
+    E._ivf_centroids(str(tmp_path))
+    assert E._ivf_centroids.cache_info().currsize == 1
 
     E.release_caches()
     assert all(df.unpersisted for df in dfs)
     assert pairs_cached.unpersisted
-    for cache in (
-        E._SIG_CACHE, E._SIG_SHA_CACHE, E._ANN_SIG_CACHE, E._PAIRS_CACHE,
-        E._MAX_CLASS_CACHE, E._IVF_CENTROID_CACHE,
-    ):
-        assert not cache
+    assert not E._MEMO
+    assert E._ivf_centroids.cache_info().currsize == 0
 
 
 def test_release_caches_runs_at_interpreter_exit():
     """The REAL atexit property, observed end-to-end: a fresh interpreter
-    that imports the entry module and plants a fake cached frame must
-    unpersist it during interpreter shutdown (this build's
-    atexit._ncallbacks does not decrement on unregister, so handler
-    bookkeeping cannot be asserted directly)."""
+    that imports the entry module and memoizes a fake frame must unpersist
+    it during interpreter shutdown (this build's atexit._ncallbacks does not
+    decrement on unregister, so handler bookkeeping cannot be asserted
+    directly)."""
+    import os
     import subprocess
     import sys
 
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     code = (
-        "import sys; sys.path.insert(0, '/root/repo')\n"
+        f"import sys; sys.path.insert(0, {repo!r})\n"
+        "from types import SimpleNamespace as NS\n"
         "import __spark_entry__ as E\n"
         "class F:\n"
         "    def unpersist(self):\n"
         "        print('SWEPT-AT-EXIT')\n"
-        "E._SIG_CACHE[('app', 'sf')] = F()\n"
+        "E._memo(NS(sparkContext=NS(applicationId='app')), 'sf', 'sigs', F)\n"
     )
     out = subprocess.run(
         [sys.executable, "-c", code], capture_output=True, text=True,

@@ -100,6 +100,25 @@ def test_partition_count_invariance(spark, cfg, corpus_pdf, result):
     assert a == b
 
 
+def test_precomputed_signatures_must_be_persisted(spark, cfg, corpus_pdf, result):
+    """run(signatures=) scans the frame for the rep map, so it only accepts
+    a persisted one; a persisted frame yields the same labels."""
+    from libpostal_spark.operators import blocking
+
+    files = corpus_to_spark(spark, corpus_pdf, 8)
+    sigs = blocking.signatures(files, cfg)
+    with pytest.raises(ValueError, match="persisted"):
+        DedupPipeline(spark, cfg).run(files, signatures=sigs)
+    sigs = sigs.persist()
+    try:
+        res = DedupPipeline(spark, cfg).run(files, signatures=sigs)
+        got = {r["fid"]: r["component"] for r in res.clusters.collect()}
+        res.release()
+    finally:
+        sigs.unpersist()
+    assert got == {r["fid"]: r["component"] for r in result.clusters.collect()}
+
+
 def test_no_oversized_allpairs_blowup(result):
     """Boilerplate adversary: identical tiny files never create pair blowup —
     the exact pass collapses them, so candidate pairs stay near-linear."""

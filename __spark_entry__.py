@@ -2528,7 +2528,7 @@ def _q_lsh_candidates(spark, sf_dir):
         # aggregation — a 2-column scan + AQE-broadcast join instead of
         # windowing the full signature payload (minhash array included)
         # through a sha256 shuffle
-        rep_sigs, _ = blocking.exact_groups(sigs, ided=sigs)
+        rep_sigs, _ = blocking.exact_groups(blocking.exact_rep_frame(sigs, sigs))
         keys = blocking.blocking_keys(rep_sigs, cfg)
         pairs, _, bucket_cache = blocking.candidate_pairs(keys, cfg)
         return pairs, bucket_cache

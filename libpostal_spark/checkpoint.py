@@ -269,18 +269,18 @@ class CheckpointStore:
         fn: Callable[[DataFrame], DataFrame],
         input_fingerprint: str | None,
         n_pt: int = 32,
-        pt_expr: str = "pmod(xxhash64(fid), {n})",
         pts_per_commit: int = 8,
     ) -> DataFrame:
         """Per-partition resumable stage (north rule: per-partition lineage).
 
-        input_df must already carry the columns pt_expr needs; fn maps an
-        input SUBSET to its output rows (pt column preserved). Completed
-        partitions are skipped via an anti-join against the manifest; only
-        missing partitions are computed and written (dynamic partition
-        overwrite → re-running a half-written partition replaces it).
+        Rows are assigned to ``pt = pmod(xxhash64(fid), n_pt)``, so input_df
+        must carry ``fid``; fn maps an input SUBSET to its output rows (pt
+        column preserved). Completed partitions are skipped via an anti-join
+        against the manifest; only missing partitions are computed and
+        written (dynamic partition overwrite → re-running a half-written
+        partition replaces it).
         """
-        expr = pt_expr.format(n=n_pt)
+        expr = f"pmod(xxhash64(fid), {n_pt})"
         keyed = input_df.withColumn("pt", F.expr(expr))
         # read-backs pass the output schema explicitly, so a commit group
         # (or a whole stage) that wrote ZERO rows still reads back as an

@@ -363,20 +363,6 @@ _HAN_FOLD = {
 }
 
 
-def han_fold_coverage(text: str) -> tuple[int, int]:
-    """(folded, total) Han-script characters of ``text`` covered by
-    _HAN_FOLD — the measured-coverage companion to the curated head (the
-    tail passes through honestly). Han detection by Unicode block
-    (CJK Unified Ideographs, U+4E00-U+9FFF, + Extension A)."""
-    total = folded = 0
-    for ch in text:
-        cp = ord(ch)
-        if 0x3400 <= cp <= 0x9FFF:
-            total += 1
-            if ch in _HAN_FOLD:
-                folded += 1
-    return folded, total
-
 # Devanagari → Latin (simplified Hunterian-style, context-free per char:
 # consonants carry their inherent 'a', matras/vowel signs map to plain
 # vowels — long/short merged — and the virama/nukta drop, so क्रम folds
@@ -623,7 +609,7 @@ def rewrite_joined_batch(
 
     Returns (rewritten, match_counts); match_counts (non-overlapping match
     count per row, summed over patterns on the evolving string — the
-    ``expand_alternatives`` segment count) is None unless count_matches.
+    ``expand_alternatives_tokens`` segment count) is None unless count_matches.
     """
     exp = expansions or {}
     ordered = phrase_priority_order(exp)
@@ -672,37 +658,22 @@ def rewrite_joined_batch(
     return s, m
 
 
-def phrase_match_count_batch(
+def phrase_match_count_matrix(
     joined: pd.Series, ordered: list[tuple[str, str]]
-) -> list:
+) -> "np.ndarray":
     """Per-PATTERN non-overlapping match counts over the evolving doubled
-    stream — the classed-gazetteer analog of ``search_address_dictionaries_tokens``
-    returning one phrase hit per dictionary entry
-    (/root/reference/src/address_dictionary.c:286-311: the phrase array
-    carries each match's dictionary ids).
+    stream, as one (n_rows × n_patterns) int64 matrix — the classed-gazetteer
+    analog of ``search_address_dictionaries_tokens`` returning one phrase hit
+    per dictionary entry (/root/reference/src/address_dictionary.c:286-311:
+    the phrase array carries each match's dictionary ids). The gazetteer UDF
+    consumes this directly.
 
     ``ordered`` is the ALREADY priority-ordered (pattern, replacement) list
     (``phrase_priority_order`` output): each pattern counts its matches on
     the string as rewritten by every earlier pattern, then applies its own
     replacement — identical evolving-sequence semantics to
-    ``rewrite_joined_batch`` and to the chained-CTE SQL twin.
-
-    Returns a list of per-pattern count Series (one int64 Series per entry,
-    aligned with ``ordered``).
-    """
-    mat = phrase_match_count_matrix(joined, ordered)
-    return [
-        pd.Series(mat[:, j], index=joined.index, dtype="int64")
-        for j in range(mat.shape[1])
-    ]
-
-
-def phrase_match_count_matrix(
-    joined: pd.Series, ordered: list[tuple[str, str]]
-) -> "np.ndarray":
-    """(n_rows × n_patterns) int64 matrix form of
-    ``phrase_match_count_batch`` — the gazetteer UDF consumes this directly
-    (one contiguous array instead of n_patterns Series + a concat).
+    ``rewrite_joined_batch`` and to the chained-CTE SQL twin. Column j
+    counts ``ordered[j]``.
 
     Arrow fast path: each pattern's count/replace is one pyarrow C++
     whole-column kernel call (literal, non-overlapping — byte-exact vs the
@@ -753,11 +724,6 @@ def phrase_priority_order(exp: dict[str, str]) -> list[tuple[str, str]]:
     return sorted(exp.items(), key=lambda kv: (-len(kv[0].split(" ")), kv[0]))
 
 
-def canonicalize_one(text: str, **kw) -> str:
-    """Single-string convenience wrapper (tests, goldens)."""
-    return canonicalize_batch(pd.Series([text]), **kw).iloc[0]
-
-
 class _Segment:
     __slots__ = ("orig", "alts")
 
@@ -766,14 +732,16 @@ class _Segment:
         self.alts = alts      # replacement alternatives (each a token list)
 
 
-def expand_alternatives(
-    text: str,
+def expand_alternatives_tokens(
+    toks: list[str],
     expansions: dict[str, str] | None,
     max_expansions: int = 64,
 ) -> tuple[list[str], int]:
-    """Full ``expand_address``-style alternation: every dictionary match
-    contributes {replacement(s), original} alternatives and the result is
-    the capped cross product of canonical forms.
+    """Full ``expand_address``-style alternation over canonical tokens:
+    every dictionary match contributes {replacement(s), original}
+    alternatives and the result is the capped cross product of canonical
+    forms. Callers canonicalize once with ``canonicalize_batch`` and split
+    each row on " ".
 
     Reference analog: the alternatives tree + cartesian expansion of
     ``expand_address`` (/root/reference/src/expand.c:724-1424,1452-1536),
@@ -792,19 +760,6 @@ def expand_alternatives(
     over segments (replacement-first), truncated at max_expansions but
     always retaining the all-original form as the last element.
     """
-    base = canonicalize_one(text)
-    return expand_alternatives_tokens(
-        base.split(" ") if base else [], expansions, max_expansions
-    )
-
-
-def expand_alternatives_tokens(
-    toks: list[str],
-    expansions: dict[str, str] | None,
-    max_expansions: int = 64,
-) -> tuple[list[str], int]:
-    """Token-level core of ``expand_alternatives`` (batch callers
-    canonicalize once with ``canonicalize_batch`` and segment per row)."""
     seq: list = list(toks)
     exp = expansions or {}
     for k, v in phrase_priority_order(exp):

@@ -190,62 +190,6 @@ def pair_jaccard_batch(
     return pd.Series(out)
 
 
-def _lcs_tokens(a: list, b: list) -> int:
-    """Longest common token RUN (contiguous substring) via a suffix automaton
-    over `a`, walked with `b` — O(|a|+|b|) per pair. The exact form of the
-    reference-design "per-partition suffix-array substring check": winnow
-    fingerprints only say a long shared run exists w.h.p.; this measures it
-    exactly, so winnow-only confirms are verified, never hash-trusted."""
-    if not a or not b:
-        return 0
-    # suffix automaton (Blumer et al.) over token sequence a
-    last, size = 0, 1
-    link = [-1]
-    length = [0]
-    trans: list[dict] = [{}]
-    for ch in a:
-        cur = size
-        size += 1
-        length.append(length[last] + 1)
-        link.append(-1)
-        trans.append({})
-        p = last
-        while p != -1 and ch not in trans[p]:
-            trans[p][ch] = cur
-            p = link[p]
-        if p == -1:
-            link[cur] = 0
-        else:
-            q = trans[p][ch]
-            if length[p] + 1 == length[q]:
-                link[cur] = q
-            else:
-                clone = size
-                size += 1
-                length.append(length[p] + 1)
-                link.append(link[q])
-                trans.append(dict(trans[q]))
-                while p != -1 and trans[p].get(ch) == q:
-                    trans[p][ch] = clone
-                    p = link[p]
-                link[q] = clone
-                link[cur] = clone
-        last = cur
-    # walk b through the automaton tracking current match length
-    v, ln, best = 0, 0, 0
-    for ch in b:
-        while v and ch not in trans[v]:
-            v = link[v]
-            ln = length[v]
-        if ch in trans[v]:
-            v = trans[v][ch]
-            ln += 1
-            best = max(best, ln)
-        else:
-            v, ln = 0, 0
-    return best
-
-
 def pair_lcs_batch(
     c1: pd.Series, c2: pd.Series, cfg: PipelineConfig, with_flags: bool = False
 ):
@@ -258,11 +202,14 @@ def pair_lcs_batch(
     ONCE per unique canon for the whole batch), then verify matched
     windows token-for-token (hash collisions rejected) and extend each run
     outward to its full length. ALL (pa, pb) alignments of equal window
-    hashes are candidates (per-diagonal span pruning + early exit at the
-    accept bar keep this bounded), so the reported length is the MAXIMUM
-    verified run — the property verify's confirm rule consumes. The pure-Python
-    suffix-automaton ``_lcs_tokens`` (exact global LCS) cross-checks this in
-    tests; it is ~10ms/pair and was the confirm-stage bottleneck.
+    hashes are candidates (per-diagonal span pruning keeps this bounded),
+    so below the accept bar (``winnow_guarantee``) the reported length is
+    the MAXIMUM verified run. The search stops at the first verified run
+    that reaches the bar, so a pair with several runs at or above it
+    reports one of them, not necessarily the longest; verify's accept
+    decision is the same either way. tests/test_lcs_verify.py checks this
+    contract against an exact suffix-automaton LCS (~10ms/pair in pure
+    Python, once the confirm-stage bottleneck).
 
     ``with_flags=True`` returns a DataFrame (run, exhausted) instead of the
     bare run series: ``exhausted`` marks pairs whose alignment budget ran

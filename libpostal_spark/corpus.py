@@ -235,12 +235,6 @@ def generate_corpus(
     return pdf
 
 
-def corpus_to_spark(spark, pdf: pd.DataFrame, n_partitions: int = 0):
-    """files DataFrame (truth columns dropped) — the pipeline's input table."""
-    df = spark.createDataFrame(pdf[["repo", "path", "commit", "lang", "content"]])
-    return df.repartition(n_partitions) if n_partitions else df
-
-
 def cached_corpus_parquet(
     n_base: int = 1000,
     dup_fraction: float = 0.5,

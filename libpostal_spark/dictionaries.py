@@ -127,8 +127,8 @@ DEFAULT_CODE_EXPANSIONS: tuple[tuple[str, str], ...] = (
 #   ambiguous_expansion
 #                  — one abbreviation, several expansions ('|'-separated like
 #                    the "st"→street|saint ambiguity class; the root form
-#                    takes the FIRST alternative, expand_alternatives emits
-#                    them all)
+#                    takes the FIRST alternative, expand_alternatives_tokens
+#                    emits them all)
 #
 # DEFAULT_COMPONENTS reproduces the historical DEFAULT_CODE_EXPANSIONS
 # behavior exactly (qualifier + concatenated only), so enabling the new
@@ -299,7 +299,7 @@ def entries_for_components(components=None, root: bool = True) -> dict[str, str]
     ambiguous values collapse to their FIRST alternative and stopwords map
     to "" (token deletion — libpostal's removable-only-in-root rule).
     ``root=False`` keeps the '|'-joined alternative lists for
-    ``expand_alternatives`` and DROPS stopword deletions (the reference does
+    ``expand_alternatives_tokens`` and DROPS stopword deletions (the reference does
     not delete stopwords in full expansions).
     """
     out: dict[str, str] = {}

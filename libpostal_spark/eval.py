@@ -13,12 +13,13 @@ pair as duplicate when its expansion/shingle sets intersect enough
 Reference clusters = connected components of that relation, computed here by
 brute force (driver-side, small corpora only). LSH recall is then measured
 against these clusters: the planted corpus makes the truth non-trivial, and
-the exhaustive rule makes it exact.
+the exhaustive rule makes it exact. perfbench checks every run's labels
+against this rule; the pair recall/precision arithmetic lives with its one
+user, tests/test_pipeline_e2e.py.
 """
 
 from __future__ import annotations
 
-import numpy as np
 import pandas as pd
 
 from .config import PipelineConfig
@@ -80,29 +81,3 @@ def closure(pairs: set[tuple[str, str]], universe: list[str]) -> dict[str, str]:
     return {f: find(f) for f in universe}
 
 
-def pair_metrics(
-    predicted: set[tuple[str, str]], truth: set[tuple[str, str]]
-) -> dict[str, float]:
-    tp = len(predicted & truth)
-    recall = tp / len(truth) if truth else 1.0
-    precision = tp / len(predicted) if predicted else 1.0
-    return dict(
-        recall=recall, precision=precision,
-        tp=tp, truth=len(truth), predicted=len(predicted),
-    )
-
-
-def component_pairs(labels: dict[str, str]) -> set[tuple[str, str]]:
-    """All intra-component (lo, hi) pairs from a fid→component mapping."""
-    from collections import defaultdict
-
-    groups = defaultdict(list)
-    for f, c in labels.items():
-        groups[c].append(f)
-    out: set[tuple[str, str]] = set()
-    for members in groups.values():
-        members.sort()
-        for i in range(len(members)):
-            for j in range(i + 1, len(members)):
-                out.add((members[i], members[j]))
-    return out

@@ -373,7 +373,7 @@ def make_expand_udf(
     The expand_address alternation surface: full (unexpanded) + root (all
     dictionary matches replaced) forms plus the capped cross-product size.
     The alternatives LIST itself is available via
-    core.canonicalize.expand_alternatives; this UDF projects the
+    core.canonicalize.expand_alternatives_tokens; this UDF projects the
     SQL-twinnable summary for the harness.
 
     Fully vectorized for single-alternative dictionaries (every shipped

@@ -104,31 +104,6 @@ def decode_png(payload: bytes) -> np.ndarray:
     return out.astype(np.uint8).reshape(height, width, ch)
 
 
-def encode_png(img: np.ndarray) -> bytes:
-    """Minimal PNG writer (filter 0 rows) — test fixture generator."""
-    if img.ndim == 2:
-        img = img[:, :, None]
-    h, w, ch = img.shape
-    color_type = {1: 0, 2: 4, 3: 2, 4: 6}[ch]
-
-    def chunk(ctype: bytes, data: bytes) -> bytes:
-        return (
-            struct.pack(">I", len(data))
-            + ctype
-            + data
-            + struct.pack(">I", zlib.crc32(ctype + data) & 0xFFFFFFFF)
-        )
-
-    ihdr = struct.pack(">IIBBBBB", w, h, 8, color_type, 0, 0, 0)
-    scan = b"".join(b"\x00" + img[y].tobytes() for y in range(h))
-    return (
-        PNG_MAGIC
-        + chunk(b"IHDR", ihdr)
-        + chunk(b"IDAT", zlib.compress(scan))
-        + chunk(b"IEND", b"")
-    )
-
-
 def decode_bmp(payload: bytes) -> np.ndarray:
     """BMP (uncompressed 24/32 bpp) → (h, w, 3|4) uint8 array (RGB order)."""
     if payload[:2] != BMP_MAGIC:

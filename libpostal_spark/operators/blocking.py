@@ -97,7 +97,7 @@ def signatures(
     ).withColumn("config_hash", F.lit(cfg.config_hash))
 
 
-def exact_rep_frame(sigs: DataFrame, ided: DataFrame | None = None) -> DataFrame:
+def exact_rep_frame(sigs: DataFrame, ided: DataFrame) -> DataFrame:
     """sigs + rep_fid (min fid per sha256 class) — the ONE frame the whole
     downstream pipeline fans out from.
 
@@ -110,49 +110,37 @@ def exact_rep_frame(sigs: DataFrame, ided: DataFrame | None = None) -> DataFrame
     cache, so no later stage ever recomputes the UDF chain or re-shuffles
     on sha256.
 
-    Pass ``ided`` (the with_ids frame the signatures were built from) to
-    derive the (sha256 → min fid) rep map from the CHEAP JVM sha2 pass
-    instead of windowing over the full signature rows: the agg shuffles
-    ~128 B/row instead of the multi-KB signature payload, and AQE turns the
-    join back onto sigs into a broadcast when the rep map fits (one pass,
-    ZERO full-row exchange) — falling back to a sort-merge join at
-    10^12-row scale, which is exactly what the window cost anyway. Without
-    ``ided`` the single-input window form is used (correct for any sigs
-    frame, at full-payload shuffle cost).
+    ``ided`` is any cheap frame carrying the same (sha256, fid) rows — the
+    with_ids frame the signatures were built from, or a PERSISTED sigs
+    frame itself. The (sha256 → min fid) rep map is derived from those two
+    columns instead of windowing over the full signature rows: the agg
+    shuffles ~128 B/row instead of the multi-KB signature payload, and AQE
+    turns the join back onto sigs into a broadcast when the rep map fits
+    (one pass, ZERO full-row exchange) — falling back to a sort-merge join
+    at 10^12-row scale, which is what a window over sigs would cost anyway.
     """
-    if ided is None:
-        w = Window.partitionBy("sha256")
-        return sigs.withColumn("rep_fid", F.min("fid").over(w))
     rep = (
         ided.select(F.col("sha256").alias("rep_sha"), "fid")
         .groupBy("rep_sha")
         .agg(F.min("fid").alias("rep_fid"))
     )
     # null-safe equality: a (theoretical) null-content row must stay in the
-    # frame exactly as the window form keeps it, not drop out of the join
+    # frame (as its own null-sha class), not drop out of the join
     return sigs.join(
         rep, F.col("sha256").eqNullSafe(F.col("rep_sha"))
     ).drop("rep_sha")
 
 
-def exact_groups(
-    sigs: DataFrame, ided: DataFrame | None = None
-) -> tuple[DataFrame, DataFrame]:
-    """Group identical raw content.
+def exact_groups(with_rep: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """Group identical raw content of an ``exact_rep_frame`` output.
 
     Returns (rep_sigs, exact_edges):
       rep_sigs    — one signature row per distinct sha256 (the LSH universe)
       exact_edges — (fid1=rep, fid2=member) star edges for the copies
-    One window shuffle on sha256; no pairing explosion regardless of skew.
-    Pass a persisted ``exact_rep_frame`` output to share that shuffle across
-    every consumer, or ``ided`` (any cheap frame carrying the same
-    (sha256, fid) rows — a PERSISTED sigs frame qualifies) to derive the
-    rep map from a 2-column pass instead of windowing the full signature
-    payload (see exact_rep_frame).
+    Both are filters over ``with_rep`` (no shuffle of their own; no pairing
+    explosion regardless of skew): pass a persisted frame to share the rep
+    map across every consumer.
     """
-    with_rep = (
-        sigs if "rep_fid" in sigs.columns else exact_rep_frame(sigs, ided)
-    )
     rep_sigs = with_rep.filter(F.col("fid") == F.col("rep_fid")).drop("rep_fid")
     exact_edges = (
         with_rep.filter(F.col("fid") != F.col("rep_fid"))
@@ -201,8 +189,8 @@ def blocking_keys(rep_sigs: DataFrame, cfg: PipelineConfig) -> DataFrame:
 
 
 def candidate_pairs(
-    keys: DataFrame, cfg: PipelineConfig, persist: bool = True
-) -> tuple[DataFrame, DataFrame, DataFrame | None]:
+    keys: DataFrame, cfg: PipelineConfig
+) -> tuple[DataFrame, DataFrame, DataFrame]:
     """Key stream → distinct candidate pairs (fid1 < fid2, sources agg'd).
 
     Partition-aligned design: the explicit repartition by bucket key (the
@@ -228,9 +216,10 @@ def candidate_pairs(
         max_salted_bucket fall back to star+rep-clique only (O(n)), counted
         in bucket_stats — never silently.
 
-    Returns (pairs, bucket_stats). bucket_stats (lazily derived from the
-    same window output) is the no-silent-caps ledger: kind, n_buckets,
-    n_oversized, max_size.
+    Returns (pairs, bucket_stats, keyed). bucket_stats (lazily derived
+    from the same window output) is the no-silent-caps ledger: kind,
+    n_buckets, n_oversized, max_size. keyed is the persisted bucket-window
+    frame both derive from; the caller unpersists it when done.
     """
     # no explicit partition count: a RepartitionByExpression without a fixed
     # N lets AQE size the exchange from observed shuffle bytes — 381 keys
@@ -245,12 +234,16 @@ def candidate_pairs(
     # hot window on the full key stream does one count aggregate instead
     # of count + string-min (same filter, same downstream results: a
     # bucket's rows all carry the same cnt, so the post-filter min over
-    # the big subset equals the pre-filter min over the bucket)
+    # the big subset equals the pre-filter min over the bucket).
+    #
+    # keyed fans out to 5+ consumer branches (small l/r, star, salt l/r,
+    # reps, stats); without a materialized cache each branch replays the
+    # full-stream shuffle + window (observed: 7 identical exchanges in the
+    # physical plan). The cache retains the hash partitioning so the
+    # small-bucket self-join still needs no exchange of its own.
     keyed = keys.withColumn("cnt", F.count("*").over(w)).filter(
         F.col("cnt") > 1
-    )
-    cached = None
-    has_big = True
+    ).persist()
     if cfg.max_bucket_size >= (1 << 30):
         # effectively-unbounded small-bucket cap (the oracle-twin pairing
         # config): no realistic bucket can exceed it, so the salted/star
@@ -258,34 +251,35 @@ def candidate_pairs(
         # built WITHOUT the gating agg ACTION. (A >2^30-member bucket
         # would already diverge from the plain all-pairs SQL twin this
         # config exists to match, so the gate adds nothing there either.)
-        # The persist stays: only the exchange is reused between the
-        # self-join's two sides — the bucket-count window above it is
-        # computed per side, and the cache keeps that to one computation
-        # (A/B: dropping the persist cost ~0.2 s on the harness query).
+        # The persist still pays: the bucket-count window is otherwise
+        # computed per self-join side (A/B: dropping it cost ~0.2 s on the
+        # harness query).
         has_big = False
-        if persist:
-            keyed = keyed.persist()
-            cached = keyed
-        persist = False
-    if persist:
-        # keyed fans out to 5+ consumer branches (small l/r, star, salt l/r,
-        # reps, stats); without a materialized cache each branch replays the
-        # full-stream shuffle + window (observed: 7 identical exchanges in
-        # the physical plan). One persist+agg = one shuffle, and the cache
-        # retains the hash partitioning so the small-bucket self-join still
-        # needs no exchange of its own. The SAME materializing action also
+    else:
+        # One persist+agg = one shuffle, and the SAME materializing action
         # returns the max bucket size: when no bucket exceeds
         # max_bucket_size (the common case outside adversarial skew), the
         # salt/star/rep-clique branches are pruned from the plan entirely —
         # Catalyst plans one self-join instead of a 4-way union, which is a
         # measurable driver-time win on every run (AQE-style runtime
         # adaptation, decided from data already in hand).
-        keyed = keyed.persist()
         row = keyed.agg(
             F.count("*").alias("n"), F.max("cnt").alias("mx")
         ).collect()[0]
         has_big = (row["mx"] or 0) > cfg.max_bucket_size
-        cached = keyed
+
+    bucket_stats = (
+        keyed.groupBy("kind", "kid", "khash")
+        .agg(F.first("cnt").alias("cnt"))
+        .groupBy("kind")
+        .agg(
+            F.count("*").alias("n_buckets"),
+            F.sum((F.col("cnt") > cfg.max_bucket_size).cast("long")).alias(
+                "n_oversized"
+            ),
+            F.max("cnt").alias("max_size"),
+        )
+    )
 
     # small buckets: co-partitioned self-join on the bucket key — both sides
     # share the repartition exchange (ReusedExchange) and are already hash-
@@ -307,19 +301,7 @@ def candidate_pairs(
             F.min("kind").alias("source"),
             F.collect_set("kind").alias("sources"),
         )
-        bucket_stats = (
-            keyed.groupBy("kind", "kid", "khash")
-            .agg(F.first("cnt").alias("cnt"))
-            .groupBy("kind")
-            .agg(
-                F.count("*").alias("n_buckets"),
-                F.sum((F.col("cnt") > cfg.max_bucket_size).cast("long")).alias(
-                    "n_oversized"
-                ),
-                F.max("cnt").alias("max_size"),
-            )
-        )
-        return pairs, bucket_stats, cached
+        return pairs, bucket_stats, keyed
 
     big = keyed.filter(F.col("cnt") > cfg.max_bucket_size).withColumn(
         "rep", F.min("fid").over(w)
@@ -373,15 +355,4 @@ def candidate_pairs(
         .groupBy("fid1", "fid2")
         .agg(F.min("kind").alias("source"), F.collect_set("kind").alias("sources"))
     )
-
-    bucket_stats = (
-        keyed.groupBy("kind", "kid", "khash")
-        .agg(F.first("cnt").alias("cnt"))
-        .groupBy("kind")
-        .agg(
-            F.count("*").alias("n_buckets"),
-            F.sum((F.col("cnt") > cfg.max_bucket_size).cast("long")).alias("n_oversized"),
-            F.max("cnt").alias("max_size"),
-        )
-    )
-    return pairs, bucket_stats, cached
+    return pairs, bucket_stats, keyed

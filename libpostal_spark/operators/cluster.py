@@ -8,15 +8,14 @@ SoCC'14): O(log n) rounds of pure DataFrame groupBy/join, each round followed
 by ``localCheckpoint`` to cut lineage (an unbounded iterative plan otherwise
 blows up the optimizer and re-executes the whole chain on failure).
 
-The iterative loop runs over DICTIONARY-ENCODED long node ids (default):
-the 64-char fid strings would otherwise be shuffled every round — at 10^12
+The iterative loop runs over DICTIONARY-ENCODED long node ids: the
+64-char fid strings would otherwise be shuffled every round — at 10^12
 nodes that is ~8× the bytes of an 8-byte id. Encoding is one distinct +
 monotonically_increasing_id pass (pinned with an eager localCheckpoint so
 the non-deterministic ids are assigned exactly once), decoding is one join;
 the component label is then re-derived as the lexicographic MIN FID within
-each component, so the output contract is identical to the string path
-(which remains available via encode_ids=False and is cross-checked in
-tests).
+each component, so the labels equal driver union-find's
+(``connected_components_driver``; cross-checked in tests).
 """
 
 from __future__ import annotations
@@ -69,12 +68,7 @@ def _fingerprint(edges: DataFrame) -> tuple[int, int]:
     return int(row["c"]), int(row["h"])
 
 
-def connected_components(
-    pairs: DataFrame,
-    max_iter: int = 30,
-    checkpoint: bool = True,
-    encode_ids: bool = True,
-) -> DataFrame:
+def connected_components(pairs: DataFrame, max_iter: int = 30) -> DataFrame:
     """(fid1, fid2) confirmed pairs → (fid, component) labels.
 
     component = lexicographic min fid of the component. Only nodes appearing
@@ -85,38 +79,32 @@ def connected_components(
     materializes it (one job per round) and cuts lineage so the iterative
     plan never grows. Edge partitioning is re-derived from the live edge
     count so late rounds (few edges) don't pay early-round task overhead.
-    With encode_ids (default) the loop shuffles 8-byte longs, not fid
-    strings (see module docstring).
+    The loop shuffles 8-byte longs, not fid strings (see module docstring).
     """
     str_edges = _normalize(
         pairs.select(F.col("fid1").alias("a"), F.col("fid2").alias("b"))
     )
-    if encode_ids:
-        nodes = (
-            str_edges.select(F.col("a").alias("fid"))
-            .unionAll(str_edges.select(F.col("b").alias("fid")))
-            .distinct()
+    nodes = (
+        str_edges.select(F.col("a").alias("fid"))
+        .unionAll(str_edges.select(F.col("b").alias("fid")))
+        .distinct()
+    )
+    # monotonically_increasing_id is assignment-nondeterministic: pin it
+    # ONCE with an eager localCheckpoint before anything consumes it
+    mapping = nodes.withColumn(
+        "nid", F.monotonically_increasing_id()
+    ).localCheckpoint(eager=True)
+    ma = mapping.select(F.col("fid").alias("a"), F.col("nid").alias("na"))
+    mb = mapping.select(F.col("fid").alias("b"), F.col("nid").alias("nb"))
+    edges = (
+        str_edges.join(ma, "a")
+        .join(mb, "b")
+        .select(
+            F.greatest("na", "nb").alias("a"), F.least("na", "nb").alias("b")
         )
-        # monotonically_increasing_id is assignment-nondeterministic: pin it
-        # ONCE with an eager localCheckpoint before anything consumes it
-        mapping = nodes.withColumn(
-            "nid", F.monotonically_increasing_id()
-        ).localCheckpoint(eager=True)
-        ma = mapping.select(F.col("fid").alias("a"), F.col("nid").alias("na"))
-        mb = mapping.select(F.col("fid").alias("b"), F.col("nid").alias("nb"))
-        edges = (
-            str_edges.join(ma, "a")
-            .join(mb, "b")
-            .select(
-                F.greatest("na", "nb").alias("a"), F.least("na", "nb").alias("b")
-            )
-        )
-    else:
-        edges = str_edges
+    )
 
     def _materialize(df: DataFrame, n_edges: int | None) -> DataFrame:
-        if not checkpoint:
-            return df
         if n_edges is not None:
             # ~500k edges per partition keeps tasks coarse; floor of 2
             p = max(2, min(df.sparkSession.sparkContext.defaultParallelism,
@@ -140,8 +128,6 @@ def connected_components(
         "component", F.col("fid")
     )
     labels = children.unionByName(roots).distinct()
-    if not encode_ids:
-        return labels
     # decode: nid -> fid, then re-derive the component label as the MIN FID
     # of each long-component (nid order is arbitrary, fid order is the
     # contract)

@@ -391,49 +391,6 @@ def acronym_pairs(docs: DataFrame, text_col: str = "text",
     )
 
 
-def phonetic_keys(
-    docs: DataFrame, text_col: str = "text", id_col: str = "doc_id",
-    max_tokens: int = 12,
-) -> DataFrame:
-    """Double-Metaphone blocking keys for name-like text — the reference
-    emits these per name word as an extra near-dupe key family
-    (src/near_dupe.c:389, codes from src/double_metaphone.c).
-
-    One row per (id, token position, code variant): kind='dm', kid = token
-    index, khash = xxhash64 of the primary or secondary code (distinct
-    variants only). Union this stream into a blocking key set to make
-    "Schmidt" collide with "Smith" (both emit XMT) the way the reference's
-    fuzzy name dedup does; downstream confirm still decides. Token stream
-    bounded to ``max_tokens`` per row.
-    """
-    from ..functions.udfs import make_double_metaphone_udf
-
-    udf = make_double_metaphone_udf()
-    toks = docs.select(
-        F.col(id_col).cast("long").alias("id"),
-        F.posexplode(
-            F.expr(
-                f"slice(filter(split(lower(trim({text_col})), '\\\\s+'),"
-                f" t -> length(t) > 0), 1, {max_tokens})"
-            )
-        ).alias("kid", "tok"),
-    )
-    coded = toks.withColumn("m", udf(F.col("tok")))
-    return (
-        coded.select(
-            "id", "kid",
-            F.explode(
-                F.array_distinct(F.array("m.primary", "m.secondary"))
-            ).alias("code"),
-        )
-        .filter(F.length("code") > 0)
-        .select(
-            "id", F.lit("dm").alias("kind"), "kid",
-            F.xxhash64("code").alias("khash"),
-        )
-    )
-
-
 _MW_MAX_TOKENS = 16
 
 
@@ -535,39 +492,6 @@ def multiword_alignments(
         )
     )
     return out.drop("mw_short", "mw_long")
-
-
-def multiword_pairs(docs: DataFrame, text_col: str = "text",
-                    id_col: str = "doc_id") -> DataFrame:
-    """Multi-word alignments between adjacent doc pairs (the Soft-TFIDF
-    match rung the reference wires through soft_tfidf.c:466-588).
-
-    Token streams are the first ``_MW_MAX_TOKENS`` whitespace tokens
-    (bounded work per pair). Output: doc_id1, doc_id2, n_alignments,
-    alignments ("start:len:idx" comma-joined, scan order).
-    """
-    a = docs.select(
-        F.col(id_col).cast("long").alias("doc_id1"),
-        F.expr(_mw_tokens_expr(text_col)).alias("ta"),
-    )
-    b = docs.select(
-        (F.col(id_col).cast("long") - 1).alias("doc_id1"),
-        F.col(id_col).cast("long").alias("doc_id2"),
-        F.expr(_mw_tokens_expr(text_col)).alias("tb"),
-    )
-    joined = multiword_alignments(a.join(b, "doc_id1"), "ta", "tb")
-    return joined.select(
-        "doc_id1",
-        "doc_id2",
-        F.size("mw_alignments").cast("long").alias("n_alignments"),
-        F.array_join(
-            F.expr(
-                "transform(mw_alignments, o -> concat(o.long_start, ':',"
-                " o.long_len, ':', o.short_idx))"
-            ),
-            ",",
-        ).alias("alignments"),
-    )
 
 
 def minhash_clusters(

@@ -125,7 +125,7 @@ def phrase_class_matches(
     (id, dict_class, pattern, n_matches), n_matches > 0.
 
     The count semantics are the evolving-sequence ones shared with
-    ``expand_alternatives`` / the chained-CTE twin: each pattern, in priority
+    ``expand_alternatives_tokens`` / the chained-CTE twin: each pattern, in priority
     order, counts its non-overlapping matches on the stream as rewritten by
     every earlier pattern, then applies its own root replacement.
 

@@ -1,8 +1,8 @@
 """Multimodal column plumbing: opaque binary payloads + typed metadata.
 
 Image/audio/video payloads are carried as ``binary`` columns with a typed
-metadata struct; decode / feature-extract / resize / frame-sample run as
-Arrow-batched ``mapInPandas`` operators.
+metadata struct; decode / feature-extract run as Arrow-batched
+``mapInPandas`` operators.
 
 Decode is REAL for stdlib-decodable formats — PNG (zlib inflate + scanline
 unfilter), BMP, WAV PCM (``decode_media_features`` →
@@ -21,7 +21,6 @@ from collections.abc import Iterator
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 MEDIA_SCHEMA = (
     "media_id long, kind string, payload binary, width int, height int, "
@@ -138,15 +137,3 @@ def decode_media_features(
     return media.mapInPandas(op, schema=schema)
 
 
-def frame_sample(media: DataFrame, every_ms: int = 1000) -> DataFrame:
-    """video rows → one row per sampled frame timestamp (explode, JVM-side)."""
-    frames = F.sequence(
-        F.lit(0).cast("long"),
-        F.greatest(F.col("duration_ms") - 1, F.lit(0)).cast("long"),
-        F.lit(every_ms).cast("long"),
-    )
-    return (
-        media.filter(F.col("kind") == "video")
-        .withColumn("frame_ts_ms", F.explode(frames))
-        .select("media_id", "frame_ts_ms", "payload")
-    )

@@ -475,7 +475,6 @@ def ivf_topk(
     nprobe: int = 2,
     k: int = 10,
     id_col: str = "vec_id",
-    signatures: DataFrame | None = None,
 ) -> DataFrame:
     """IVF approximate top-k: probe the nprobe closest inverted lists, exact
     cosine re-rank on their members — the classic alternative to sign-LSH
@@ -486,9 +485,7 @@ def ivf_topk(
     scores = C @ q
     order = np.argsort(-scores, kind="stable")
     probes = [int(x) for x in order[:nprobe]]
-    sigs = signatures
-    if sigs is None:
-        sigs = ivf_signatures(embeddings, centroids, id_col)
+    sigs = ivf_signatures(embeddings, centroids, id_col)
     cands = sigs.filter(F.col("list_id").isin(probes)).select(id_col)
     return brute_force_topk(embeddings.join(cands, id_col), qvec, k, id_col)
 

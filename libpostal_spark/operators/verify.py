@@ -35,9 +35,8 @@ from ..config import PipelineConfig
 
 
 def verified_pairs(
-    pairs: DataFrame, rep_sigs: DataFrame, cfg: PipelineConfig,
-    with_graded: bool = False,
-):
+    pairs: DataFrame, rep_sigs: DataFrame, cfg: PipelineConfig
+) -> DataFrame:
     """Join signature columns onto each side and confirm.
 
     Output: fid1, fid2, jaccard, source, sources (kind provenance),
@@ -51,14 +50,9 @@ def verified_pairs(
     rows. A winnow hit is ACCEPTED only when the verified common run really
     reaches the guarantee bar — the measured (not w.h.p.) form of the
     long-clone rule. lcs_tokens = -1 marks rows where the run check was
-    skipped (jaccard already decided).
-
-    ``with_graded=True`` additionally returns the PRE-filter graded frame
-    ``(confirmed, graded)``: an adversarial pair whose alignment budget was
-    exhausted AND whose under-reported run fell below the confirm bar is
-    absent from ``confirmed`` by construction — auditing for that case is
-    ``graded.filter("lcs_exhausted AND lcs_tokens < bar")``, which makes
-    the one theoretically-silent truncation in the confirm rule queryable.
+    skipped (jaccard already decided). A pair whose alignment budget was
+    exhausted carries ``lcs_exhausted``; one whose under-reported run fell
+    below the confirm bar is absent by construction.
     """
     from ..functions.udfs import make_pair_confirm_udf
 
@@ -97,14 +91,11 @@ def verified_pairs(
     # verification hit the alignment budget (and may therefore under-report
     # lcs_tokens) is visible to consumers/metrics rather than silently
     # graded — the per-pair analog of the bucket_stats ledger
-    confirmed = confirmed.select(
+    return confirmed.select(
         "fid1", "fid2", "jaccard", "source", "sources", "lcs_tokens",
         "lcs_exhausted",
         status_expr(F.col("jaccard"), cfg).alias("status"),
     )
-    if with_graded:
-        return confirmed, graded
-    return confirmed
 
 
 _TOPO_FIELDS = ("city", "city_district", "suburb", "state_district", "state", "country")

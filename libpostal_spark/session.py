@@ -31,6 +31,22 @@ def _export_pythonpath() -> None:
         )
 
 
+def _default_driver_mem(meminfo: str = "/proc/meminfo") -> str:
+    """``spark.driver.memory`` when SPARK_DRIVER_MEM is unset: 16g, capped
+    at half of physical memory in whole GiB (at least 1g), so a machine
+    smaller than 32 GiB does not hand the JVM a heap the kernel will
+    OOM-kill it for. Falls back to 16g if ``meminfo`` cannot be read."""
+    try:
+        with open(meminfo) as fh:
+            for line in fh:
+                if line.startswith("MemTotal:"):
+                    kib = int(line.split()[1])
+                    return f"{max(1, min(16, kib // 2 // (1 << 20)))}g"
+    except (OSError, ValueError, IndexError):
+        pass
+    return "16g"
+
+
 def get_spark(
     app_name: str = "libpostal_spark",
     master: str | None = None,
@@ -66,8 +82,12 @@ def get_spark(
         # fresh regions (measured: an -Xms48g pin drove RSS to ~35 GB and
         # slowed the same workload ~2×); a compact heap forces region
         # reuse over hot, already-resident pages. 16g comfortably fits the
-        # bench corpora and caches; override with SPARK_DRIVER_MEM.
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "16g"))
+        # bench corpora and caches (capped at half of physical memory, see
+        # _default_driver_mem); override with SPARK_DRIVER_MEM.
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEM") or _default_driver_mem(),
+        )
         .config("spark.ui.enabled", "false")
         .config("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
         # constraint propagation is O(plan²) driver work and this engine's

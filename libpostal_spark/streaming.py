@@ -1,176 +1,22 @@
-"""Structured-Streaming front door: incremental signature ingestion.
+"""Structured-Streaming operators: windowed event stats and cross-batch
+near-dup candidate alerts.
 
 The reference is batch-only ("designed to run in a MapReduce setting",
 /root/reference/README.md:641-642) — streaming is OUR extension for the
-continuously-arriving-repos case. The design keeps the batch pipeline as
-the single source of truth:
-
-  stream of files → foreachBatch:
-      S1 featurize the micro-batch (same UDF as batch)
-      append to the signatures checkpoint table
-      emit exact-dup matches against the already-seen sha256 set
-
-Full LSH re-blocking per micro-batch would re-pair the world every few
-seconds; the honest streaming contract is *signature ingestion + exact-dup
-short-circuit now, periodic batch re-cluster later* — exactly how the
-reference expects its host system to schedule dedup passes.
+continuously-arriving-repos case. The batch pipeline stays the single
+source of truth: a stream gets *LSH candidate alerts now, periodic batch
+confirm + re-cluster later* — exactly how the reference expects its host
+system to schedule dedup passes. Both operators back declared queries
+(``__spark_entry__``'s streaming leaves).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .config import PipelineConfig
 from .operators import blocking
-
-
-def signature_sink(
-    stream: DataFrame,
-    cfg: PipelineConfig,
-    out_dir: str,
-    checkpoint_dir: str,
-    trigger_once: bool = True,
-):
-    """files stream → per-micro-batch featurize → append parquet signatures.
-
-    Returns the StreamingQuery. The sink table has the batch signatures
-    schema plus a `batch_id` lineage PARTITION column (resume =
-    max(batch_id)). foreachBatch is at-least-once: a batch replayed after a
-    crash between the data write and the checkpoint commit re-delivers with
-    the SAME batch_id, so the write is a dynamic overwrite of that batch's
-    own partition — the replay replaces its rows instead of appending them
-    twice.
-    """
-
-    def handle(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        sigs = blocking.signatures(batch_df, cfg).withColumn(
-            "batch_id", F.lit(batch_id)
-        )
-        (
-            sigs.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(out_dir)
-        )
-
-    writer = (
-        stream.writeStream.foreachBatch(handle)
-        .option("checkpointLocation", checkpoint_dir)
-    )
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
-def stateful_exact_dup_stream(stream: DataFrame, cfg: PipelineConfig) -> DataFrame:
-    """Streaming exact-dup detector with CROSS-BATCH state.
-
-    files stream → groupBy(sha256) → ``applyInPandasWithState``: per content
-    hash the state stores the first fid ever seen; every later arrival (same
-    micro-batch or any future one) emits an alert row referencing it. This is
-    the Spark-native custom stateful operator the batch pipeline's exact pass
-    corresponds to — state is one 64-byte fid per distinct content, so state
-    size tracks distinct-content count, not stream length.
-
-    Returns the alert DataFrame (append mode):
-        sha256, fid (the duplicate arrival), first_fid (the canonical copy).
-    """
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    ided = blocking.with_ids(stream).select("fid", "sha256")
-
-    def track(key, pdfs, state: GroupState):
-        sha = key[0]
-        # drain ALL Arrow chunks before choosing the canonical copy — a
-        # per-chunk pick would make first_fid depend on chunk boundaries
-        fids: list[str] = []
-        for pdf in pdfs:
-            fids.extend(pdf["fid"])
-        # unique + sorted: a duplicated input row (at-least-once source
-        # replay inside one batch) is one arrival, not two alert rows
-        fids = sorted(set(fids))
-        if state.exists:
-            first = state.get[0]
-            # the canonical copy re-arriving (source replay) is not a
-            # duplicate of itself
-            dups = [f for f in fids if f != first]
-        else:
-            first = fids[0]               # canonical copy: min fid of batch 1
-            dups = fids[1:]
-        state.update((first,))
-        if dups:
-            yield pd.DataFrame({"sha256": sha, "fid": dups, "first_fid": first})
-
-    return ided.groupBy("sha256").applyInPandasWithState(
-        track,
-        outputStructType="sha256 string, fid string, first_fid string",
-        stateStructType="first_fid string",
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-def exact_dup_alerts(
-    spark: SparkSession, new_sigs_dir: str, seen_sigs_dir: str
-) -> DataFrame:
-    """Batch helper: which just-ingested rows exactly duplicate prior content
-    (sha256 equality — the streaming-time short-circuit; near-dup linking
-    happens in the periodic batch re-cluster)."""
-    new = spark.read.parquet(new_sigs_dir).select("fid", "sha256")
-    seen = spark.read.parquet(seen_sigs_dir).select(
-        F.col("fid").alias("seen_fid"), "sha256"
-    )
-    return new.join(seen, "sha256").filter(F.col("fid") != F.col("seen_fid"))
-
-
-def windowed_ingest_stats(
-    stream: DataFrame,
-    window: str = "1 minute",
-    watermark: str = "2 minutes",
-    ts_col: str = "event_time",
-) -> DataFrame:
-    """Event-time windowed ingestion metrics with late-data handling —
-    the streaming monitoring view of the batch ``dedup_rate`` query.
-
-    files stream (+ event-time column) → watermark → per-window:
-      n_files, n_distinct (approx_count_distinct over content sha256 —
-      exact distinct isn't incrementally maintainable in append mode),
-      dup_rate_est = 1 - distinct/files.
-
-    Append output mode: a window finalizes once the watermark passes its
-    end, so downstream sinks see each window exactly once; late rows
-    beyond the watermark are dropped by contract (counted by Spark's
-    stateOperators metrics).
-    """
-    ided = blocking.with_ids(stream).withWatermark(ts_col, watermark)
-    return (
-        ided.groupBy(F.window(F.col(ts_col), window))
-        .agg(
-            F.count("*").alias("n_files"),
-            F.approx_count_distinct("sha256").alias("n_distinct"),
-        )
-        .select(
-            F.col("window.start").alias("window_start"),
-            F.col("window.end").alias("window_end"),
-            "n_files",
-            "n_distinct",
-            # clamp at 0: approx_count_distinct may overestimate above
-            # n_files on an all-distinct window, which would read as a
-            # (nonsensical) negative duplication rate
-            F.round(
-                F.greatest(
-                    F.lit(0.0),
-                    1.0
-                    - F.col("n_distinct").cast("double") / F.col("n_files"),
-                ),
-                4,
-            ).alias("dup_rate_est"),
-        )
-    )
 
 
 def windowed_event_stats(
@@ -181,9 +27,8 @@ def windowed_event_stats(
     user_col: str = "user_id",
     value_col: str = "value",
 ) -> DataFrame:
-    """Generic event-stream windowed aggregation (the events-table analog
-    of ``windowed_ingest_stats``): per event-time window — event count,
-    EXACT distinct users (size(collect_set): streaming forbids
+    """Generic event-stream windowed aggregation: per event-time window —
+    event count, EXACT distinct users (size(collect_set): streaming forbids
     count(DISTINCT); the set state is bounded by users-per-window — swap in
     approx_count_distinct at hyperscale), and an exact decimal value sum
     (decimal, not double: float partial-agg order would make the result
@@ -193,8 +38,8 @@ def windowed_event_stats(
 
     Run with outputMode="complete" + availableNow for the deterministic
     full-table contract (the oracle-checked path); append + watermark gives
-    the finalize-once incremental contract (pytest-covered for
-    windowed_ingest_stats, same mechanics).
+    the finalize-once incremental contract (a window is emitted once the
+    watermark passes its end; later rows are dropped).
     """
     src = stream.withWatermark(ts_col, watermark) if watermark else stream
     return (

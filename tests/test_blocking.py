@@ -25,7 +25,7 @@ def test_exact_groups_star(spark, cfg):
     rows = [(f"r{i}", "p", "c", "python", "same content here") for i in range(5)]
     rows.append(("rx", "p", "c", "python", "different content"))
     sigs = blocking.signatures(_files(spark, rows), cfg)
-    rep_sigs, exact_edges = blocking.exact_groups(sigs)
+    rep_sigs, exact_edges = blocking.exact_groups(blocking.exact_rep_frame(sigs, sigs))
     assert rep_sigs.count() == 2          # two distinct contents
     edges = exact_edges.collect()
     assert len(edges) == 4                # 5 copies → 4 star edges

@@ -3,7 +3,8 @@ containment assertions (/root/reference/test/test_expand.c:126-196)."""
 
 import pandas as pd
 
-from libpostal_spark.core.canonicalize import canonicalize_batch, canonicalize_one
+from libpostal_spark.core.canonicalize import canonicalize_batch
+from tests.helpers import canonicalize_one
 
 
 def test_whitespace_folding():

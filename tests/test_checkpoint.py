@@ -4,8 +4,9 @@ import pandas as pd
 import pytest
 
 from libpostal_spark.config import PipelineConfig
-from libpostal_spark.corpus import corpus_to_spark, generate_corpus
+from libpostal_spark.corpus import generate_corpus
 from libpostal_spark.pipeline import DedupPipeline
+from tests.helpers import corpus_to_spark
 
 
 @pytest.fixture()

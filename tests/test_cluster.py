@@ -4,7 +4,11 @@
 import pytest
 from pyspark.sql import functions as F
 
-from libpostal_spark.operators.cluster import connected_components, label_universe
+from libpostal_spark.operators.cluster import (
+    connected_components,
+    connected_components_driver,
+    label_universe,
+)
 
 
 def _cc(spark, edges):
@@ -57,8 +61,9 @@ def test_bridge_merges(spark):
 
 
 def test_encoded_and_string_paths_agree(spark):
-    """The long-id loop (scale path) and the raw-string loop must produce
-    identical labels — min-fid component contract included."""
+    """The distributed long-id loop (scale path) and driver union-find on
+    the raw fid strings must produce identical labels — min-fid component
+    contract included."""
     import random
 
     rng = random.Random(3)
@@ -66,9 +71,9 @@ def test_encoded_and_string_paths_agree(spark):
     edges = [tuple(rng.sample(nodes, 2)) for _ in range(90)]
     df = spark.createDataFrame(edges, ["fid1", "fid2"])
     enc = {r["fid"]: r["component"]
-           for r in connected_components(df, encode_ids=True).collect()}
+           for r in connected_components(df).collect()}
     raw = {r["fid"]: r["component"]
-           for r in connected_components(df, encode_ids=False).collect()}
+           for r in connected_components_driver(df).collect()}
     assert enc == raw
     # labels are real min-fids
     for f, c in enc.items():

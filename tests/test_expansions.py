@@ -5,8 +5,9 @@ code dictionary is applied."""
 
 import pytest
 
-from libpostal_spark.core.canonicalize import canonicalize_one, phrase_priority_order
+from libpostal_spark.core.canonicalize import phrase_priority_order
 from libpostal_spark.dictionaries import DEFAULT_CODE_EXPANSIONS
+from tests.helpers import canonicalize_one, expand_alternatives
 
 EXP = dict(DEFAULT_CODE_EXPANSIONS)
 
@@ -93,8 +94,6 @@ def test_fold_numbers_composes_with_expansions():
 
 
 def test_expand_alternatives_goldens():
-    from libpostal_spark.core.canonicalize import expand_alternatives
-
     forms, m = expand_alternatives("initCfg", EXP)
     assert m == 2
     assert forms[0] == "initialize configuration"      # root first

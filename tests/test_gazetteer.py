@@ -7,8 +7,7 @@ import pytest
 
 from libpostal_spark.core.canonicalize import (
     canonicalize_batch,
-    expand_alternatives,
-    phrase_match_count_batch,
+    phrase_match_count_matrix,
     phrase_priority_order,
     rewrite_joined_batch,
 )
@@ -22,6 +21,7 @@ from libpostal_spark.dictionaries import (
     classed_entries_for,
     entries_for_components,
 )
+from tests.helpers import expand_alternatives
 
 
 def test_default_mask_reproduces_legacy_dictionary():
@@ -99,7 +99,7 @@ def test_per_pattern_counts_match_total():
     s = canonicalize_batch(
         pd.Series(["the sec sec a dataBase setUp", "folder the folder"])
     )
-    counts = phrase_match_count_batch(s, ordered)
+    counts = phrase_match_count_matrix(s, ordered).T
     byname = {k: c.tolist() for (k, _), c in zip(ordered, counts)}
     assert byname["sec"] == [2, 0]
     assert byname["the"] == [1, 1]
@@ -116,7 +116,7 @@ def test_evolving_order_phrase_shadows_tokens():
     full = entries_for_components(ALL_COMPONENTS, root=True)
     ordered = phrase_priority_order(full)
     s = canonicalize_batch(pd.Series(["no op a"]))
-    counts = phrase_match_count_batch(s, ordered)
+    counts = phrase_match_count_matrix(s, ordered).T
     byname = {k: c.tolist() for (k, _), c in zip(ordered, counts)}
     assert byname["no op"] == [1]
     assert byname["a"] == [1]
@@ -212,7 +212,7 @@ def test_rewrite_fixpoint_fuzz():
         assert (n2 == 0).all(), lv
         # per-pattern counts decompose the total exactly
         ordered = phrase_priority_order(exp)
-        counts = phrase_match_count_batch(docs, ordered)
+        counts = phrase_match_count_matrix(docs, ordered).T
         assert (sum(counts) == n1).all(), lv
 
 

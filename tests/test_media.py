@@ -12,17 +12,42 @@ import pytest
 from libpostal_spark import media as M
 
 
+def encode_png(img: np.ndarray) -> bytes:
+    """Minimal PNG writer (filter 0 rows) — test fixture generator."""
+    if img.ndim == 2:
+        img = img[:, :, None]
+    h, w, ch = img.shape
+    color_type = {1: 0, 2: 4, 3: 2, 4: 6}[ch]
+
+    def chunk(ctype: bytes, data: bytes) -> bytes:
+        return (
+            struct.pack(">I", len(data))
+            + ctype
+            + data
+            + struct.pack(">I", zlib.crc32(ctype + data) & 0xFFFFFFFF)
+        )
+
+    ihdr = struct.pack(">IIBBBBB", w, h, 8, color_type, 0, 0, 0)
+    scan = b"".join(b"\x00" + img[y].tobytes() for y in range(h))
+    return (
+        M.PNG_MAGIC
+        + chunk(b"IHDR", ihdr)
+        + chunk(b"IDAT", zlib.compress(scan))
+        + chunk(b"IEND", b"")
+    )
+
+
 def _rand_img(h, w, ch, seed=0):
     return np.random.default_rng(seed).integers(0, 256, (h, w, ch), dtype=np.uint8)
 
 
 def test_png_roundtrip_filter0():
     img = _rand_img(13, 7, 3)
-    assert np.array_equal(M.decode_png(M.encode_png(img)), img)
+    assert np.array_equal(M.decode_png(encode_png(img)), img)
     gray = _rand_img(5, 9, 1, seed=1)
-    assert np.array_equal(M.decode_png(M.encode_png(gray)), gray)
+    assert np.array_equal(M.decode_png(encode_png(gray)), gray)
     rgba = _rand_img(6, 6, 4, seed=2)
-    assert np.array_equal(M.decode_png(M.encode_png(rgba)), rgba)
+    assert np.array_equal(M.decode_png(encode_png(rgba)), rgba)
 
 
 def _png_with_filters(img, filters):
@@ -113,7 +138,7 @@ def test_block_mean_matches_naive():
 
 def test_decode_payload_features_and_boundary():
     img = np.full((8, 8, 3), 255, dtype=np.uint8)
-    fmt, vec = M.decode_payload(M.encode_png(img), dim=16)
+    fmt, vec = M.decode_payload(encode_png(img), dim=16)
     assert fmt == "png" and len(vec) == 16
     assert np.allclose(vec, 1.0)              # white image → luma grid = +1
     with pytest.raises(NotImplementedError):
@@ -138,7 +163,7 @@ def test_decode_media_features_spark(spark):
         {
             "media_id": [0, 1, 2],
             "kind": ["image", "audio", "video"],
-            "payload": [M.encode_png(img), buf.getvalue(), b"\x00\x01notaformat"],
+            "payload": [encode_png(img), buf.getvalue(), b"\x00\x01notaformat"],
             "width": [8, 0, 0],
             "height": [8, 0, 0],
             "duration_ms": [0, 0, 1000],
@@ -169,7 +194,7 @@ def test_gray_alpha_luma_excludes_alpha():
     as -1 (black), not as mid-gray (alpha averaged into luma)."""
     ga = np.zeros((8, 8, 2), dtype=np.uint8)
     ga[:, :, 1] = 255                         # opaque alpha
-    fmt, vec = M.decode_payload(M.encode_png(ga), dim=16)
+    fmt, vec = M.decode_payload(encode_png(ga), dim=16)
     assert fmt == "png"
     assert np.allclose(vec, -1.0), vec
 
@@ -186,7 +211,7 @@ def test_corrupt_payload_falls_back_not_crashes(spark):
         {
             "media_id": [0, 1],
             "kind": ["image", "image"],
-            "payload": [corrupt_png, M.encode_png(_rand_img(4, 4, 3))],
+            "payload": [corrupt_png, encode_png(_rand_img(4, 4, 3))],
             "width": [4, 4],
             "height": [4, 4],
             "duration_ms": [0, 0],

@@ -88,21 +88,3 @@ def test_cross_matching_pairs_share_a_code(a, b):
     assert {pa, sa} & {pb, sb}
 
 
-def test_phonetic_keys_blocking_family(spark):
-    """dm key stream: cross-matching names share a (kid, khash) key, so a
-    key-join blocks them together (the reference's near_dupe usage)."""
-    from libpostal_spark.operators import dedup
-
-    docs = spark.createDataFrame(
-        [(0, "john smith"), (1, "jon schmidt"), (2, "mary jones")],
-        ["doc_id", "text"],
-    )
-    keys = dedup.phonetic_keys(docs)
-    rows = keys.collect()
-    assert all(r["kind"] == "dm" for r in rows)
-    by_doc = {}
-    for r in rows:
-        by_doc.setdefault(r["id"], set()).add((r["kid"], r["khash"]))
-    # smith: SM0/XMT at kid=1; schmidt: XMT/SMT at kid=1 → share XMT key
-    assert by_doc[0] & by_doc[1]
-    assert not (by_doc[0] & by_doc[2]) or not (by_doc[1] & by_doc[2])

@@ -101,14 +101,3 @@ def test_spark_expr_matches_mirror_fuzz(spark):
         assert got[i] == mw_pair(a, b), (a, b, got[i], mw_pair(a, b))
 
 
-def test_multiword_pairs_adjacent(spark):
-    docs = spark.createDataFrame(
-        [(0, "seaworld park"), (1, "sea world park"), (2, "sea world park")],
-        ["doc_id", "text"],
-    )
-    out = {
-        (r["doc_id1"], r["doc_id2"]): (r["n_alignments"], r["alignments"])
-        for r in dedup.multiword_pairs(docs).collect()
-    }
-    assert out[(0, 1)] == (1, "0:2:0")     # seaworld ~ sea+world
-    assert out[(1, 2)] == (0, "")          # equal token counts -> none

@@ -4,12 +4,12 @@ spelled-number composition, ordinals, Roman numerals, ambiguity gating."""
 import pandas as pd
 import pytest
 
-from libpostal_spark.core.canonicalize import canonicalize_one
 from libpostal_spark.core.numex import (
     fold_spelled_numbers,
     fold_spelled_numbers_batch,
     roman_value,
 )
+from tests.helpers import canonicalize_one
 
 
 @pytest.mark.parametrize(

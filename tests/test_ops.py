@@ -174,16 +174,6 @@ def test_media_decode_real_path_raises(spark):
         multimodal.decode_image_features(media, dim=4, fake=False).collect()
 
 
-def test_frame_sample(spark):
-    pdf = pd.DataFrame(
-        {"media_id": [1], "kind": ["video"], "payload": [b"v"],
-         "width": [0], "height": [0], "duration_ms": [3500]}
-    )
-    media = spark.createDataFrame(pdf)
-    rows = multimodal.frame_sample(media, every_ms=1000).collect()
-    assert [r["frame_ts_ms"] for r in rows] == [0, 1000, 2000, 3000]
-
-
 def test_cosine_pairs_threshold(spark, embs):
     df, vecs = embs
     out = similarity.cosine_pairs(df, threshold=0.99).collect()
@@ -410,15 +400,20 @@ def test_ngram_jaccard_null_text_not_perfect_dup(spark):
 
 
 def test_acronym_multiword_null_text_zero_counts(spark):
-    from libpostal_spark.operators.dedup import acronym_pairs, multiword_pairs
+    from libpostal_spark.operators.dedup import (
+        _mw_tokens_expr, acronym_pairs, multiword_alignments)
 
     rows = [(0, "fbi agency"), (1, None), (2, "sea world")]
     df = spark.createDataFrame(rows, "doc_id long, text string")
     acr = {r["doc_id1"]: r["n_acronyms"] for r in acronym_pairs(df).collect()}
-    mw = {r["doc_id1"]: r["n_alignments"]
-          for r in multiword_pairs(df).collect()}
+    # the multiword_alignments query's token arrays, NULL text on each side
+    toks = df.select("doc_id", F.expr(_mw_tokens_expr("text")).alias("t"))
+    pairs = toks.alias("a").crossJoin(toks.alias("b")).select(
+        F.col("a.t").alias("ta"), F.col("b.t").alias("tb"))
+    mw = [r["n"] for r in multiword_alignments(pairs).select(
+        F.size("mw_alignments").alias("n")).collect()]
     assert all(v >= 0 for v in acr.values()), acr
-    assert all(v >= 0 for v in mw.values()), mw
+    assert len(mw) == 9 and all(v >= 0 for v in mw), mw
 
 
 def test_multiword_fragment_empty_long_side(spark):

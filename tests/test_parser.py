@@ -15,6 +15,138 @@ from libpostal_spark.core.perceptron import decode, fit  # noqa: E402
 from libpostal_spark.operators import parser as P  # noqa: E402
 
 
+def parse_tokens(tokens: list[str]) -> list[str]:
+    """Greedy-decode one token sequence with the production model."""
+    m = P.get_address_model()
+    return decode(list(tokens), m.weights, m.tags, P.address_features)
+
+
+# ------------------------------------------------- noisy-corpus evaluation
+#
+# The clean grid is separable (both models reach accuracy 1.000), which
+# proves the decode, not the model. This block injects the reference
+# tagger's actual failure modes (round-7 VERDICT item 5) so held-out
+# accuracy becomes a greedy-vs-CRF signal — the reference's own model-type
+# comparison (src/address_parser.c model-type switch; its README reports
+# 99.45% on held-out OSM):
+#   * abbreviated road kinds via the gazetteer convention (street→st,
+#     avenue→ave — the address-dictionary variants expand_address exists
+#     to fold, src/address_dictionary.c);
+#   * dropped components (no postcode / no country — OSM's most common
+#     incompleteness);
+#   * city typos at Damerau-Levenshtein distance 1 (transpose / delete /
+#     substitute / insert — the edit class is_dupe tolerates,
+#     src/dedupe.c).
+# All injection is deterministic modular arithmetic on the example index
+# (no RNG anywhere, same as the grid itself); the held-out split uses a
+# different modulus so no failure mode correlates with the split.
+
+_ALPHA = "abcdefghijklmnopqrstuvwxyz"
+
+
+def _typo_d1(word: str, k: int) -> str:
+    """Deterministic Damerau-distance-1 edit of ``word`` keyed by k."""
+    if len(word) < 4:
+        return word
+    op = k % 4
+    pos = 1 + (k // 4) % (len(word) - 2)
+    if op == 0:                                    # transpose
+        return word[:pos] + word[pos + 1] + word[pos] + word[pos + 2:]
+    if op == 1:                                    # delete
+        return word[:pos] + word[pos + 1:]
+    if op == 2:                                    # substitute
+        c = _ALPHA[(k + ord(word[pos])) % 26]
+        return word[:pos] + c + word[pos + 1:]
+    return word[:pos] + _ALPHA[(k + 7) % 26] + word[pos:]   # insert
+
+
+def noisy_examples() -> list[tuple[list[str], list[str]]]:
+    """The grid with the three failure modes injected (deterministically,
+    by example index): every 2nd example abbreviates its road kind, every
+    3rd drops its postcode (or trailing country), every 5th typos its
+    city at Damerau distance 1."""
+    out = []
+    for k, (toks, tags) in enumerate(P.training_examples()):
+        toks, tags = list(toks), list(tags)
+        if k % 2 == 0:
+            for i, g in enumerate(tags):
+                if g == "road" and toks[i] in P.ROAD_KIND_ABBREV:
+                    toks[i] = P.ROAD_KIND_ABBREV[toks[i]]
+        if k % 3 == 0 and len(toks) > 4:
+            if "postcode" in tags:
+                i = tags.index("postcode")
+                del toks[i], tags[i]
+            else:
+                while tags and tags[-1] == "country":
+                    toks.pop()
+                    tags.pop()
+        if k % 5 == 0:
+            for i, g in enumerate(tags):
+                if g == "city":
+                    toks[i] = _typo_d1(toks[i], k)
+        if k % 7 == 0:
+            # missing street type ("main st" → "main"): the road name and
+            # the city become ADJACENT unknown-alpha tokens — position and
+            # tag history are the only separators
+            i = next(
+                (i for i, g in enumerate(tags)
+                 if g == "road" and toks[i] in
+                 (*P.ROAD_KIND_ABBREV, *P.ROAD_KIND_ABBREV.values())),
+                None,
+            )
+            if i is not None:
+                del toks[i], tags[i]
+        if k % 11 == 0 and "apt" in toks:
+            # dropped unit marker: a bare digit lands between road and
+            # city — ambiguous with dialect-1's trailing house number;
+            # exactly the digit-role ambiguity the history features exist
+            # to resolve
+            i = toks.index("apt")
+            del toks[i], tags[i]
+        out.append((toks, tags))
+    return out
+
+
+def noisy_heldout_split() -> tuple[list, list]:
+    """(train, held-out) — 80/20 by a modulus (13·k mod 10) coprime to
+    every injection modulus, so each failure mode appears on both sides
+    but every held-out TYPO'D city form is unseen in training (the typo
+    position/op is keyed by k)."""
+    ex = noisy_examples()
+    train = [e for k, e in enumerate(ex) if (k * 13) % 10 >= 2]
+    held = [e for k, e in enumerate(ex) if (k * 13) % 10 < 2]
+    return train, held
+
+
+def noisy_eval() -> dict:
+    """Held-out token + full-sequence accuracy of BOTH model types trained
+    on the noisy train split — the BASELINE.md accuracy table's source.
+    Deterministic end-to-end (grid, injection, split, integer fits)."""
+    train, held = noisy_heldout_split()
+    greedy = fit(train, P.TAGS, P.address_features, iters=P.FIT_ITERS)
+    crf_m = crf.fit(train, P.TAGS, P.obs_features, iters=P.FIT_ITERS)
+
+    def _acc(decode_one) -> tuple[float, float]:
+        tok_ok = tok_all = seq_ok = 0
+        for toks, gold in held:
+            pred = decode_one(toks)
+            tok_ok += sum(p == g for p, g in zip(pred, gold))
+            tok_all += len(gold)
+            seq_ok += pred == gold
+        return tok_ok / tok_all, seq_ok / len(held)
+
+    g_tok, g_seq = _acc(
+        lambda t: decode(t, greedy.weights, greedy.tags, P.address_features)
+    )
+    c_tok, c_seq = _acc(lambda t: crf.decode(t, crf_m, P.obs_features))
+    return {
+        "n_train": len(train),
+        "n_heldout": len(held),
+        "greedy": {"token_acc": round(g_tok, 4), "seq_acc": round(g_seq, 4)},
+        "crf": {"token_acc": round(c_tok, 4), "seq_acc": round(c_seq, 4)},
+    }
+
+
 def _holdout():
     for k in range(0, 5000, 7):
         yield P.render_address(
@@ -57,7 +189,7 @@ def test_holdout_accuracy_exact():
     city/road/country combinations) decodes 100% — digit normalization
     plus the tag-history features generalize past the training grid."""
     for toks, gold in _holdout():
-        assert P.parse_tokens(toks) == gold, toks
+        assert parse_tokens(toks) == gold, toks
 
 
 def test_crf_fit_deterministic_and_converges():
@@ -103,10 +235,10 @@ def test_history_features_matter():
     dialect-2 unit (digit after 'apt') are the SAME word shape — only
     the predicted-tag history separates them (the reference's reason
     for prev/prev2 conditioning, averaged_perceptron_tagger.c:16-68)."""
-    assert P.parse_tokens(["oak", "road", "17", "fairview", "asia"]) == [
+    assert parse_tokens(["oak", "road", "17", "fairview", "asia"]) == [
         "road", "road", "house_number", "city", "country",
     ]
-    assert P.parse_tokens(
+    assert parse_tokens(
         ["17", "oak", "road", "apt", "4", "fairview", "90210", "asia"]
     ) == [
         "house_number", "road", "road", "unit", "unit", "city",
@@ -121,7 +253,7 @@ def test_distributed_matches_local(spark):
     pdf = P.parse_addresses(P.synth_addresses(spark, sf_dir)).toPandas()
     assert len(pdf) == 150
     for _, r in pdf.iterrows():
-        assert r["tags_pred"] == " ".join(P.parse_tokens(r["address"].split(" ")))
+        assert r["tags_pred"] == " ".join(parse_tokens(r["address"].split(" ")))
         assert r["tags_pred"] == r["tags_gold"]
 
 
@@ -145,7 +277,7 @@ def test_twin_scale_free(sf_dir, model):
         con.close()
     assert df["is_correct"].all()
     if model == "greedy":
-        dec = lambda a: P.parse_tokens(a.split(" "))  # noqa: E731
+        dec = lambda a: parse_tokens(a.split(" "))  # noqa: E731
     else:
         m = P.get_address_crf()
         dec = lambda a: crf.decode(a.split(" "), m, P.obs_features)  # noqa: E731
@@ -179,7 +311,7 @@ def test_noisy_heldout_accuracy_is_a_signal():
     address_parser.c:1020, pre/suf 3-grams :1425) close the noise gap to
     0.9967 full-parse for BOTH model types — the reference's own reported
     regime (99.45%, README.md:685)."""
-    ev = P.noisy_eval()
+    ev = noisy_eval()
     assert ev["n_train"] == 1200 and ev["n_heldout"] == 300
     assert ev["greedy"] == {"token_acc": 0.9995, "seq_acc": 0.9967}
     assert ev["crf"] == {"token_acc": 0.9995, "seq_acc": 0.9967}
@@ -191,12 +323,12 @@ def test_noisy_heldout_accuracy_is_a_signal():
 def test_noisy_corpus_properties():
     """Injection invariants: tokens/tags stay aligned, every failure mode
     is present, and held-out typo'd city forms are unseen in training."""
-    ex = P.noisy_examples()
+    ex = noisy_examples()
     assert all(len(t) == len(g) for t, g in ex)
     all_toks = [t for toks, _ in ex for t in toks]
     assert "st" in all_toks and "ave" in all_toks      # abbreviations
     assert any("postcode" not in g for _, g in ex)     # dropped components
-    train, held = P.noisy_heldout_split()
+    train, held = noisy_heldout_split()
     train_vocab = {t for toks, _ in train for t in toks}
     held_city_typos = {
         toks[i]

@@ -9,13 +9,40 @@
 """
 
 import hashlib
+from collections import defaultdict
 
 import pytest
 from pyspark.sql import functions as F
 
 from libpostal_spark import eval as EV
-from libpostal_spark.corpus import corpus_to_spark
 from libpostal_spark.pipeline import DedupPipeline
+from tests.helpers import corpus_to_spark
+
+
+def pair_metrics(
+    predicted: set[tuple[str, str]], truth: set[tuple[str, str]]
+) -> dict[str, float]:
+    tp = len(predicted & truth)
+    recall = tp / len(truth) if truth else 1.0
+    precision = tp / len(predicted) if predicted else 1.0
+    return dict(
+        recall=recall, precision=precision,
+        tp=tp, truth=len(truth), predicted=len(predicted),
+    )
+
+
+def component_pairs(labels: dict[str, str]) -> set[tuple[str, str]]:
+    """All intra-component (lo, hi) pairs from a fid→component mapping."""
+    groups = defaultdict(list)
+    for f, c in labels.items():
+        groups[c].append(f)
+    out: set[tuple[str, str]] = set()
+    for members in groups.values():
+        members.sort()
+        for i in range(len(members)):
+            for j in range(i + 1, len(members)):
+                out.add((members[i], members[j]))
+    return out
 
 
 @pytest.fixture(scope="module")
@@ -28,7 +55,7 @@ def result(spark, cfg, corpus_pdf):
 def truth(cfg, corpus_pdf):
     pairs = EV.reference_pairs(corpus_pdf, cfg)
     labels = EV.closure(pairs, sorted(corpus_pdf.fid))
-    return pairs, EV.component_pairs(labels)
+    return pairs, component_pairs(labels)
 
 
 def test_recall_precision(result, truth):
@@ -36,7 +63,7 @@ def test_recall_precision(result, truth):
     predicted = {
         (r["fid1"], r["fid2"]) for r in result.predicted_dup_pairs().collect()
     }
-    m = EV.pair_metrics(predicted, truth_pairs)
+    m = pair_metrics(predicted, truth_pairs)
     assert m["recall"] >= 0.99, m
     assert m["precision"] >= 0.995, m
 

@@ -113,7 +113,7 @@ def test_verify_winnow_check_is_jvm_side(spark, cfg):
 
     docs = spark.read.parquet(f"{SF}/documents.parquet").limit(20)
     sigs = blocking.signatures(dedup.docs_as_files(docs), cfg)
-    rep, _ = blocking.exact_groups(sigs)
+    rep, _ = blocking.exact_groups(blocking.exact_rep_frame(sigs, sigs))
     keys = blocking.blocking_keys(rep, cfg)
     pairs, _, _ = blocking.candidate_pairs(keys, cfg)
     out = verify.verified_pairs(pairs, rep, cfg)

@@ -1,163 +1,11 @@
-"""Streaming ingestion test: file-source stream → signature sink → resume."""
-
-import os
+"""Streaming near-dup detector: cross-batch LSH candidate alerts."""
 
 import pandas as pd
-import pytest
-
-from libpostal_spark import streaming
-from libpostal_spark.corpus import generate_corpus
-
-
-def test_stream_signature_ingestion(spark, cfg, tmp_path):
-    src = str(tmp_path / "incoming")
-    out = str(tmp_path / "sigs")
-    ckpt = str(tmp_path / "ckpt")
-    os.makedirs(src)
-
-    pdf = generate_corpus(n_base=30, seed=42)[
-        ["repo", "path", "commit", "lang", "content"]
-    ]
-    spark.createDataFrame(pdf.iloc[:20]).write.mode("append").parquet(src)
-
-    schema = "repo string, path string, commit string, lang string, content string"
-    stream = spark.readStream.schema(schema).parquet(src)
-    q = streaming.signature_sink(stream, cfg, out, ckpt)
-    q.awaitTermination(120)
-
-    got = spark.read.parquet(out)
-    assert got.count() == 20
-    assert {"fid", "sha256", "simhash", "bands", "batch_id"} <= set(got.columns)
-
-    # late arrivals: second availableNow pass picks up ONLY the new files
-    spark.createDataFrame(pdf.iloc[20:]).write.mode("append").parquet(src)
-    stream2 = spark.readStream.schema(schema).parquet(src)
-    q2 = streaming.signature_sink(stream2, cfg, out, ckpt)
-    q2.awaitTermination(120)
-    assert spark.read.parquet(out).count() == len(pdf)
-
-
-def test_exact_dup_alerts(spark, cfg, tmp_path):
-    seen_dir = str(tmp_path / "seen")
-    new_dir = str(tmp_path / "new")
-    pdf = generate_corpus(n_base=10, seed=42)[
-        ["repo", "path", "commit", "lang", "content"]
-    ]
-    from libpostal_spark.operators import blocking
-
-    base = blocking.signatures(spark.createDataFrame(pdf), cfg)
-    base.write.parquet(seen_dir)
-    # re-ingest one identical content under a new identity
-    dup = pdf.iloc[[0]].copy()
-    dup["repo"] = "neworg/newrepo"
-    blocking.signatures(spark.createDataFrame(dup), cfg).write.parquet(new_dir)
-
-    alerts = streaming.exact_dup_alerts(spark, new_dir, seen_dir)
-    assert alerts.count() == 1
-
-
-def test_stateful_exact_dup_stream_cross_batch(spark, cfg, tmp_path):
-    """applyInPandasWithState keeps per-sha state ACROSS micro-batches: a
-    duplicate arriving in a later batch must alert against the first batch's
-    canonical fid."""
-    src = str(tmp_path / "in")
-    sink = str(tmp_path / "alerts")
-    ckpt = str(tmp_path / "sckpt")
-    os.makedirs(src)
-    schema = "repo string, path string, commit string, lang string, content string"
-
-    rows1 = pd.DataFrame(
-        [("r1", "a.py", "c", "py", "shared content"),
-         ("r2", "b.py", "c", "py", "shared content"),      # in-batch dup
-         ("r3", "c.py", "c", "py", "unique one")],
-        columns=["repo", "path", "commit", "lang", "content"],
-    )
-    spark.createDataFrame(rows1).write.mode("append").parquet(src)
-
-    def run_pass():
-        stream = spark.readStream.schema(schema).parquet(src)
-        alerts = streaming.stateful_exact_dup_stream(stream, cfg)
-        q = (
-            alerts.writeStream.format("parquet")
-            .option("path", sink)
-            .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-
-    run_pass()
-    got1 = spark.read.parquet(sink).collect()
-    assert len(got1) == 1                      # the in-batch dup
-    first_fid = got1[0]["first_fid"]
-    assert got1[0]["fid"] != first_fid
-
-    # batch 2: another copy of the same content, much later
-    rows2 = pd.DataFrame(
-        [("r9", "z.py", "c", "py", "shared content")],
-        columns=["repo", "path", "commit", "lang", "content"],
-    )
-    spark.createDataFrame(rows2).write.mode("append").parquet(src)
-    run_pass()
-    got2 = spark.read.parquet(sink).collect()
-    assert len(got2) == 2
-    # the new alert references the ORIGINAL canonical fid (cross-batch state)
-    new = [r for r in got2 if r["fid"] not in {g["fid"] for g in got1}][0]
-    assert new["first_fid"] == first_fid
-
-
-def test_windowed_ingest_stats(spark, tmp_path):
-    """Watermarked event-time windows: one finalized row per window with
-    file counts and the estimated dup rate."""
-    import datetime as dt
-
-    import pandas as pd
-    from pyspark.sql import functions as F
-
-    from libpostal_spark.streaming import windowed_ingest_stats
-
-    t0 = dt.datetime(2026, 1, 1, 12, 0, 0)
-    rows = []
-    for i in range(10):                       # window 1: 6 dups of one file
-        rows.append(("r", f"p{i}", "c", "py", "same content" if i < 6 else f"u{i}", t0))
-    for i in range(4):                        # window 2: all distinct
-        rows.append(("r", f"q{i}", "c", "py", f"w2-{i}", t0 + dt.timedelta(minutes=1)))
-    pdf = pd.DataFrame(rows, columns=["repo", "path", "commit", "lang", "content", "event_time"])
-
-    src = str(tmp_path / "in")
-    spark.createDataFrame(pdf).write.parquet(src)
-    schema = spark.read.parquet(src).schema
-    stream = spark.readStream.schema(schema).parquet(src)
-
-    q = (
-        windowed_ingest_stats(stream, window="1 minute", watermark="0 seconds")
-        .writeStream.format("memory")
-        .queryName("win_stats")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    got = {
-        r["window_start"].minute: r
-        for r in spark.sql("select * from win_stats").collect()
-    }
-    # append mode emits only windows the watermark has passed — window 1
-    # (12:00) finalizes once the 12:01 data arrives
-    assert 0 in got
-    w1 = got[0]
-    assert w1["n_files"] == 10
-    assert 4 <= w1["n_distinct"] <= 6          # approx distinct of 5
-    assert w1["dup_rate_est"] > 0.3
-    spark.sql("drop view if exists win_stats")
 
 
 def test_stateful_near_dup_candidates(spark, tmp_path):
     """Cross-batch LSH candidate alerts: a near-identical file arriving in a
     LATER micro-batch must alert against the first batch's stored member."""
-    import pandas as pd
-
     from libpostal_spark.config import PipelineConfig
     from libpostal_spark.operators import blocking
     from libpostal_spark.streaming import stateful_near_dup_candidates
@@ -207,88 +55,6 @@ def test_stateful_near_dup_candidates(spark, tmp_path):
     assert not any(
         fids["z.py"] in p for p in pairs if p != (fids["z.py"], fids["z.py"])
     )
-
-
-def test_signature_sink_full_redelivery_idempotent(spark, cfg, tmp_path):
-    """foreachBatch is at-least-once: a re-delivered batch (same batch_id)
-    must REPLACE its own rows, not append them twice. Simulated by running a
-    fresh query (fresh checkpoint -> batch_id 0 again) against the same
-    sink directory."""
-    src = str(tmp_path / "in")
-    out = str(tmp_path / "sigs")
-    os.makedirs(src)
-    pdf = generate_corpus(n_base=12, seed=42)[
-        ["repo", "path", "commit", "lang", "content"]
-    ]
-    spark.createDataFrame(pdf).write.mode("append").parquet(src)
-    schema = "repo string, path string, commit string, lang string, content string"
-
-    for attempt in range(2):                      # second pass = replay
-        stream = spark.readStream.schema(schema).parquet(src)
-        q = streaming.signature_sink(
-            stream, cfg, out, str(tmp_path / f"ckpt{attempt}")
-        )
-        q.awaitTermination(120)
-    got = spark.read.parquet(out)
-    assert got.count() == len(pdf)                # not doubled
-    assert got.select("fid").distinct().count() == len(pdf)
-
-
-def test_stateful_exact_dup_no_self_alert_on_replay(spark, cfg, tmp_path):
-    """The canonical copy re-delivered in a later batch must not be flagged
-    as a duplicate of itself, and a duplicated row within one batch is one
-    arrival (one alert), not two."""
-    src = str(tmp_path / "in")
-    sink = str(tmp_path / "alerts")
-    ckpt = str(tmp_path / "sckpt")
-    os.makedirs(src)
-    schema = "repo string, path string, commit string, lang string, content string"
-    cols = ["repo", "path", "commit", "lang", "content"]
-
-    row = ("r1", "a.py", "c", "py", "the content")
-    dup = ("r2", "b.py", "c", "py", "the content")
-    # batch 1: canonical + an exact dup delivered TWICE (in-batch replay)
-    spark.createDataFrame(
-        pd.DataFrame([row, dup, dup], columns=cols)
-    ).write.mode("append").parquet(src)
-
-    def run_pass():
-        stream = spark.readStream.schema(schema).parquet(src)
-        q = (
-            streaming.stateful_exact_dup_stream(stream, cfg)
-            .writeStream.format("parquet")
-            .option("path", sink)
-            .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-
-    run_pass()
-    got1 = spark.read.parquet(sink).collect()
-    assert len(got1) == 1                         # one alert, not two
-    assert got1[0]["fid"] != got1[0]["first_fid"]
-
-    # batch 2: the CANONICAL row re-delivered (same repo/path/commit -> same
-    # fid) -> no self-alert. The canonical is the MIN fid of batch 1, which
-    # can be either input row — pick it by its stored first_fid.
-    from libpostal_spark.operators import blocking
-
-    fid_by_row = {
-        r["fid"]: (r["repo"], r["path"], r["commit"], r["lang"], r["content"])
-        for r in blocking.with_ids(
-            spark.createDataFrame(pd.DataFrame([row, dup], columns=cols))
-        ).collect()
-    }
-    canonical_row = fid_by_row[got1[0]["first_fid"]]
-    spark.createDataFrame(
-        pd.DataFrame([canonical_row], columns=cols)
-    ).write.mode("append").parquet(src)
-    run_pass()
-    got2 = spark.read.parquet(sink).collect()
-    assert len(got2) == 1                         # nothing new
-    assert all(r["fid"] != r["first_fid"] for r in got2)
 
 
 def test_stateful_near_dup_no_realert_on_replay(spark, tmp_path):

@@ -8,9 +8,23 @@ import pandas as pd
 from libpostal_spark.core.canonicalize import (
     _HAN_FOLD,
     canonicalize_batch,
-    han_fold_coverage,
     latin_ascii_fold_one,
 )
+
+
+def han_fold_coverage(text: str) -> tuple[int, int]:
+    """(folded, total) Han-script characters of ``text`` covered by
+    _HAN_FOLD — the measured-coverage companion to the curated head (the
+    tail passes through honestly). Han detection by Unicode block
+    (CJK Unified Ideographs, U+4E00-U+9FFF, + Extension A)."""
+    total = folded = 0
+    for ch in text:
+        cp = ord(ch)
+        if 0x3400 <= cp <= 0x9FFF:
+            total += 1
+            if ch in _HAN_FOLD:
+                folded += 1
+    return folded, total
 
 
 def test_de_context_beats_generic_fold():

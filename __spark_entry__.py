@@ -1031,8 +1031,7 @@ def _q_embedding_clusters(spark, sf_dir):
     """Embedding-cosine near-dup clustering (CC over the exact pair graph
     at sf scale) — the embedding analog of doc_near_dup_clusters."""
     return similarity.embedding_clusters(
-        _spread(_embs(spark, sf_dir)), threshold=0.4,
-        pairs=_cos_pairs(spark, sf_dir),
+        _spread(_embs(spark, sf_dir)), _cos_pairs(spark, sf_dir)
     )
 
 
@@ -1174,20 +1173,21 @@ def _langid_decorated(spark, sf_dir):
 
 
 def _q_langid_logreg(spark, sf_dir):
-    """TRAINED language classifier: deterministic distributed multinomial
-    logistic regression over normalized trigram-count features (the
-    reference's model family — logistic regression over sparse text
+    """TRAINED language classifier: deterministic multinomial logistic
+    regression over normalized trigram-count features (the reference's
+    model family — logistic regression over sparse text
     features, /root/reference/src/language_classifier.c, src/ftrl.c —
-    re-expressed as an integer-exact Spark fit + one JVM prediction pass;
+    re-expressed as an integer-exact fit over one collected, ordered
+    1000-row sample + one distributed JVM prediction pass;
     functions/logreg.py), over the marker-decorated corpus (see
     _LANGID_SUFFIXES: the native labels are text-unlearnable). Measured
     accuracy on the injected labels at sf0.01: logreg 1.00 vs trigram
     voter — see BASELINE.md."""
     from libpostal_spark.functions import logreg as LGR
 
-    # spread: the fit's explode/featurize jobs otherwise run single-task
-    # over the one-row-group scan; integer gradient sums are
-    # partitioning-independent, so the weights are unchanged
+    # spread: the prediction pass's trigram explode otherwise runs
+    # single-task over the one-row-group scan; the fit sample is ordered
+    # by doc_id, so the weights do not depend on partitioning
     docs = _spread(_langid_decorated(spark, sf_dir))
     model = LGR.fit_spark(docs)
     return LGR.predict_spark(docs, model).select(
@@ -1197,9 +1197,8 @@ def _q_langid_logreg(spark, sf_dir):
 
 def _langid_logreg_sql() -> str:
     """DuckDB twin: the twin builder re-runs the fit with the SAME shared
-    kernel (logreg.fit_local — bit-identical weights to the distributed
-    fit: integer gradient sums are partitioning-independent, the per-doc
-    float kernel is the same function) against the compare-scale table
+    kernel (logreg.fit_local — the function the query's fit_spark runs on
+    its collected sample, so the weights are bit-identical) against the compare-scale table
     (SPARK_GRAFT_ORACLE_SF_DIR, default the driver's sf0.01), then embeds
     the integer weight/bias tables as VALUES; scoring replays in pure
     integer SQL (capped counts → fixed-point L1 normalize via `//` →
@@ -1275,7 +1274,7 @@ def _langid_logreg_sql() -> str:
 
 
 def _q_token_jaccard(spark, sf_dir):
-    return dedup.ngram_jaccard_pairs(_docs(spark, sf_dir), adjacent_only=True)
+    return dedup.ngram_jaccard_pairs(_docs(spark, sf_dir))
 
 
 _STRSIM_MAXLEN = 32

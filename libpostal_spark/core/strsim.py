@@ -138,10 +138,13 @@ def damerau_levenshtein_batch(
     return d[rows, la + 1, lb + 1].astype(np.int64)
 
 
+# affine-gap costs: a mismatch costs AG_MISMATCH, a gap of length k costs
+# AG_GAP_OPEN + k·AG_GAP_EXTEND
+AG_MISMATCH, AG_GAP_OPEN, AG_GAP_EXTEND = 2, 2, 1
+
+
 def affine_gap_batch(
-    s1: pd.Series, s2: pd.Series, max_len: int = 32,
-    mismatch: int = 2, gap_open: int = 2, gap_extend: int = 1,
-    codes=None,
+    s1: pd.Series, s2: pd.Series, max_len: int = 32
 ) -> np.ndarray:
     """Affine-gap alignment DISTANCE (Gotoh) per pair, batch-vectorized.
 
@@ -152,22 +155,20 @@ def affine_gap_batch(
     instead of per-character edits, so they score far closer than plain
     Levenshtein reports.
 
-    Costs: match 0, mismatch, and a gap of length k costs
-    gap_open + k·gap_extend. Three-state Gotoh dp (M = ends in
+    Costs: match 0, mismatch AG_MISMATCH, and a gap of length k costs
+    AG_GAP_OPEN + k·AG_GAP_EXTEND. Three-state Gotoh dp (M = ends in
     match/mismatch, X = gap consuming s2, Y = gap consuming s1) with
     rolling rows; the combined matrix is kept in full so per-row answers
     read at each pair's true lengths.
     """
-    a, la, b, lb = (
-        codes if codes is not None else encode_pair(s1, s2, max_len)
-    )
+    a, la, b, lb = encode_pair(s1, s2, max_len)
     B, m, n = len(la), a.shape[1], b.shape[1]
     if B == 0:
         return np.zeros(0, dtype=np.int64)
     rows = np.arange(B)
     INF = np.int32(10 ** 7)
     D = np.zeros((B, m + 1, n + 1), dtype=np.int32)
-    gaps = gap_open + gap_extend * np.arange(max(m, n) + 1, dtype=np.int32)
+    gaps = AG_GAP_OPEN + AG_GAP_EXTEND * np.arange(max(m, n) + 1, dtype=np.int32)
     D[:, 0, 1:] = gaps[1 : n + 1][None, :]
     D[:, 1:, 0] = gaps[1 : m + 1][None, :]
     Mp = np.full((B, n + 1), INF, dtype=np.int32)
@@ -182,15 +183,15 @@ def affine_gap_batch(
         Yc[:, 0] = gaps[i]
         best_p = np.minimum(np.minimum(Mp, Xp), Yp)
         Yc[:, 1:] = np.minimum(
-            np.minimum(Mp[:, 1:], Xp[:, 1:]) + gap_open + gap_extend,
-            Yp[:, 1:] + gap_extend,
+            np.minimum(Mp[:, 1:], Xp[:, 1:]) + AG_GAP_OPEN + AG_GAP_EXTEND,
+            Yp[:, 1:] + AG_GAP_EXTEND,
         )
-        cost = (a[:, i - 1][:, None] != b).astype(np.int32) * mismatch
+        cost = (a[:, i - 1][:, None] != b).astype(np.int32) * AG_MISMATCH
         for j in range(1, n + 1):
             Mc[:, j] = best_p[:, j - 1] + cost[:, j - 1]
             Xc[:, j] = np.minimum(
-                np.minimum(Mc[:, j - 1], Yc[:, j - 1]) + gap_open + gap_extend,
-                Xc[:, j - 1] + gap_extend,
+                np.minimum(Mc[:, j - 1], Yc[:, j - 1]) + AG_GAP_OPEN + AG_GAP_EXTEND,
+                Xc[:, j - 1] + AG_GAP_EXTEND,
             )
             D[:, i, j] = np.minimum(np.minimum(Mc[:, j], Xc[:, j]), Yc[:, j])
         Mp, Xp, Yp = Mc, Xc, Yc
@@ -212,16 +213,14 @@ def _subseq_first(a, la, b, lb) -> np.ndarray:
 
 
 def is_abbreviation_batch(
-    s1: pd.Series, s2: pd.Series, max_len: int = 32, codes=None
+    s1: pd.Series, s2: pd.Series, max_len: int = 32
 ) -> np.ndarray:
     """Abbreviation-candidate check per pair: s1 (len ≥ 2, strictly shorter)
     shares s2's first character and is a subsequence of s2 — the
     deterministic core of the reference's possible-abbreviation rung
     ("intl" → "international"). Vectorized pointer advance over s2's
     columns."""
-    a, la, b, lb = (
-        codes if codes is not None else encode_pair(s1, s2, max_len)
-    )
+    a, la, b, lb = encode_pair(s1, s2, max_len)
     return _subseq_first(a, la, b, lb) & (la >= 2)
 
 
@@ -270,14 +269,13 @@ def abbrev_flags_batch(
 
 
 def jaro_winkler_batch(
-    s1: pd.Series, s2: pd.Series, max_len: int = 32,
-    prefix_scale: float = 0.1, boost_threshold: float = 0.7,
-    codes=None,
+    s1: pd.Series, s2: pd.Series, max_len: int = 32, codes=None
 ) -> np.ndarray:
     """Jaro-Winkler similarity per pair, batch-vectorized: the greedy
     leftmost match scan runs as m argmax passes over a masked (B, n)
     window, transposition counting compacts each side's matches with one
-    stable argsort gather."""
+    stable argsort gather. The Winkler boost (prefix scale 0.1 over up to
+    4 shared leading chars) applies above a Jaro score of 0.7."""
     a, la, b, lb = (
         codes if codes is not None else encode_pair(s1, s2, max_len)
     )
@@ -319,8 +317,8 @@ def jaro_winkler_batch(
     prefix = ((a[:, :4] == b[:, :4]) & (a[:, :4] != _SENT_A)).cumprod(axis=1).sum(axis=1)
     prefix = np.minimum(prefix, np.minimum(la, lb))
     jw = np.where(
-        jaro > boost_threshold,
-        jaro + prefix * prefix_scale * (1.0 - jaro),
+        jaro > 0.7,
+        jaro + prefix * 0.1 * (1.0 - jaro),
         jaro,
     )
     return np.where((la == 0) | (lb == 0), 0.0, jw)

@@ -237,7 +237,6 @@ def generate_corpus(
 
 def cached_corpus_parquet(
     n_base: int = 1000,
-    dup_fraction: float = 0.5,
     n_boilerplate_copies: int = 50,
     n_clone_embed: int = 10,
     seed: int = 42,
@@ -248,6 +247,7 @@ def cached_corpus_parquet(
     queries must READ a table, not generate one inside the timed region."""
     import os
 
+    dup_fraction = 0.5   # still in the key, so cached files keep their names
     key = f"corpus_{n_base}_{dup_fraction}_{n_boilerplate_copies}_{n_clone_embed}_{seed}"
     path = os.path.join(cache_dir, f"{key}.parquet")
     if not os.path.exists(path):

@@ -18,14 +18,18 @@ value-for-value:
   both are fixed-length, fixed-order operations, bit-deterministic for a
   given (W_int, x) on any host;
 * gradient accumulation over docs is an INTEGER sum of
-  ``x_f · e_int[c]`` terms — associative + commutative, so the distributed
-  Spark fit and the single-process twin fit produce IDENTICAL weights no
-  matter how the sample is partitioned;
+  ``x_f · e_int[c]`` terms — associative + commutative, so the result does
+  not depend on the order the sample rows arrive in;
 * the weight update is an integer floor-division step.
 
-Fit sample rule (shared with lang_id_trigram): the first ``fit_max_docs``
+The fit runs on the driver: the sample is bounded (``FIT_MAX_DOCS`` rows,
+a ``FIT_MAX_DOCS`` × ``DEFAULT_K`` feature matrix of ~2 MB), so
+``fit_spark`` collects it in one ordered action and runs ``fit_local``, the
+same function the DuckDB twin builder runs on the parquet table.
+
+Fit sample rule (shared with lang_id_trigram): the first ``FIT_MAX_DOCS``
 doc ids in sort order; rows with NULL labels never enter the fit. Features:
-counts (capped at X_CAP) of the top-``vocab_k`` trigrams by
+counts (capped at X_CAP) of the top-``DEFAULT_K`` trigrams by
 (count desc, tri asc) over the fit sample. Prediction: argmax of z_int,
 ties to the lexicographically smaller language; a doc with no vocab
 trigram scores bias-only.
@@ -47,16 +51,10 @@ XNORM_BITS = 12                  # xn = (x << XNORM_BITS) // sum(x): fixed-
 #                                  unnormalized counts measured 0.146 label
 #                                  accuracy vs 0.436 normalized at sf0.01)
 X_CAP = 15                       # per-doc trigram count cap (LEAST in SQL)
-GD_DRIVER_MAX_ELEMS = 2_000_000  # feature-matrix elements (~16 MB int64)
-#   below which the GD loop runs on ONE driver collect of the featurized
-#   sample instead of per-iteration distributed partial jobs — identical
-#   integer math, 7 fewer job waves
+FIT_MAX_DOCS = 1000              # fit sample: first doc ids in sort order
 DEFAULT_K = 256                  # vocab size (top-K trigrams)
-DEFAULT_T = 6                    # GD iterations (each is one tiny Spark job
-#                                  in the distributed fit; T=4 already
-#                                  saturates the decorated task at 1.00,
-#                                  6 keeps headroom at half the job count
-#                                  of the initial 12)
+DEFAULT_T = 6                    # GD iterations (T=4 already saturates the
+#                                  decorated task at 1.00; 6 keeps headroom)
 LR_NUM, LR_DEN = 2, 1            # learning rate 2.0 (rational, exact;
 #                                  lr 8 measured divergent, 2-4 plateau)
 
@@ -130,7 +128,7 @@ def doc_error_int(
     z_int is an exact integer dot product over NORMALIZED features (x is
     the xn fixed-point vector, scale 2^XNORM_BITS; the bias shifts up to
     match); the softmax runs over C values in class order; the result is
-    rounded to int64 at 2^QUANT_BITS. Identical bits on the Spark executor
+    rounded to int64 at 2^QUANT_BITS. Identical bits in the query's fit
     and in the twin-builder process by construction (same function, same
     inputs, fixed-order float ops).
     """
@@ -146,7 +144,7 @@ def doc_error_int(
 def grad_partial(
     X: np.ndarray, y_idx: np.ndarray, W_int: np.ndarray, b_int: np.ndarray
 ) -> tuple[np.ndarray, np.ndarray]:
-    """Integer gradient partial over a chunk of docs: returns
+    """Integer gradient over the fit sample's docs: returns
     (GW (K,C), Gb (C,)) int64 sums of x_f·e_int[c] / e_int[c]."""
     k, c = W_int.shape
     GW = np.zeros((k, c), dtype=np.int64)
@@ -175,17 +173,12 @@ def apply_update(
     b_int -= (LR_NUM * Gb) // den
 
 
-def fit_local(
-    pdf: pd.DataFrame,
-    vocab_k: int = DEFAULT_K,
-    iters: int = DEFAULT_T,
-    fit_max_docs: int = 1000,
-) -> LogRegModel:
-    """Single-process reference fit (the twin builder and tests): the same
-    kernel + integer sums the distributed fit performs, so the weights are
-    bit-identical to ``fit_spark``'s on the same table."""
-    sample = fit_sample(pdf, fit_max_docs)
-    vocab = build_vocab(sample, vocab_k)
+def fit_local(pdf: pd.DataFrame) -> LogRegModel:
+    """Single-process fit over a (doc_id, text, lang) pandas table: the
+    kernel ``fit_spark`` runs on its collected sample and the twin builder
+    runs on the parquet table, so both get the same weights."""
+    sample = fit_sample(pdf, FIT_MAX_DOCS)
+    vocab = build_vocab(sample, DEFAULT_K)
     vidx = {t: i for i, t in enumerate(vocab)}
     classes = sorted(sample["lang"].unique())
     cidx = {c: i for i, c in enumerate(classes)}
@@ -196,189 +189,34 @@ def fit_local(
     y = sample["lang"].map(cidx).to_numpy(dtype=np.int64)
     W_int = np.zeros((k, c), dtype=np.int64)
     b_int = np.zeros(c, dtype=np.int64)
-    for _ in range(iters):
+    for _ in range(DEFAULT_T):
         GW, Gb = grad_partial(X, y, W_int, b_int)
         apply_update(W_int, b_int, GW, Gb, len(y))
     return LogRegModel(vocab, classes, W_int, b_int)
 
 
-def fit_spark(
-    docs,
-    vocab_k: int = DEFAULT_K,
-    iters: int = DEFAULT_T,
-    fit_max_docs: int = 1000,
-    text_col: str = "text",
-    lang_col: str = "lang",
-    id_col: str = "doc_id",
-) -> LogRegModel:
-    """Distributed fit: per-iteration, executors compute integer gradient
-    PARTIALS per partition (mapInPandas over the cached featurized sample —
-    one short Arrow row per partition: the flattened (K·C + C) int64
-    partial), the driver sums them (integer — partitioning-independent) and
-    applies the update. Scales in sample size with no driver blow-up: the
-    collect per iteration is n_partitions × (K·C+C) ints.
-
-    The vocab/class selection runs on ONE bounded collect of the sample's
-    (lang, tri) counts — the same fan-out-bounded fit job lang_id_trigram
-    uses (sample join pushed below the explode).
-    """
-    from pyspark.sql import functions as F
-
-    spark = docs.sparkSession
-    if fit_max_docs * vocab_k <= GD_DRIVER_MAX_ELEMS:
-        # the fit sample fits the driver-GD budget: collect the bounded raw
-        # sample in ONE TakeOrdered action (fit_max_docs rows — the same
-        # row bound every fit path already carries; lang_id_trigram's fit
-        # collects the identical sample) and run the single-process kernel,
-        # which is bit-identical to the distributed loop (pinned in tests).
-        # The former shape spent three driver actions (vocab counts, class
-        # distinct, featurized-matrix collect) plus a broadcast sub-job
-        # each on the same 1000 rows.
-        rows = (
-            docs.select(
-                F.col(id_col).alias("doc_id"),
-                F.col(text_col).alias("text"),
-                F.col(lang_col).alias("lang"),
-            )
-            .orderBy("doc_id")
-            .limit(fit_max_docs)
-            .collect()
-        )
-        pdf = pd.DataFrame(
-            {
-                "doc_id": [r["doc_id"] for r in rows],
-                "text": [r["text"] for r in rows],
-                "lang": [r["lang"] for r in rows],
-            }
-        )
-        return fit_local(pdf, vocab_k, iters, fit_max_docs)
-    sample_ids = docs.select(id_col).orderBy(id_col).limit(fit_max_docs)
-    fit_docs = (
-        docs.join(F.broadcast(sample_ids), id_col)
-        .filter(F.col(lang_col).isNotNull())
-        .select(
-            F.col(id_col).alias("doc_id"),
-            F.col(text_col).alias("text"),
-            F.col(lang_col).alias("lang"),
-        )
-    )
-    # ONE fit-metadata job instead of the former two (trigram top-k +
-    # class distinct): collect the sample's (lang, tri) count table —
-    # bounded by the sample's text volume, the same bound lang_id_trigram's
-    # fit already carries — and derive BOTH the vocab (top-k by
-    # (-cnt, tri) summed over langs) and the class list on the driver.
-    # explode_outer + the length guard keeps langs whose every sampled text
-    # is shorter than 3 chars in the class list (they arrive as one
-    # tri=NULL row), exactly matching the former select-distinct job.
-    # (A bare sequence(1, len-2) would be DESCENDING for short texts and
-    # fabricate junk trigrams — hence the when() guard.)
-    tri_arr = F.when(
-        F.length(F.lower("text")) >= 3,
-        F.expr(
-            "transform(sequence(1, length(lower(text)) - 2),"
-            " p -> substring(lower(text), p, 3))"
-        ),
-    ).otherwise(F.array().cast("array<string>"))
-    lang_tri = (
-        fit_docs.select("lang", F.explode_outer(tri_arr).alias("tri"))
-        .groupBy("lang", "tri")
-        .agg(F.count("*").alias("cnt"))
+def fit_spark(docs) -> LogRegModel:
+    """Fit over a (doc_id, text, lang) Spark frame: collect the bounded raw
+    sample (the first ``FIT_MAX_DOCS`` doc ids) in ONE TakeOrdered action —
+    the sample lang_id_trigram's fit collects too — and run ``fit_local``
+    on it."""
+    rows = (
+        docs.select("doc_id", "text", "lang")
+        .orderBy("doc_id")
+        .limit(FIT_MAX_DOCS)
         .collect()
     )
-    classes = sorted({r["lang"] for r in lang_tri})
-    tri_tot: dict[str, int] = {}
-    for r in lang_tri:
-        if r["tri"] is not None:
-            tri_tot[r["tri"]] = tri_tot.get(r["tri"], 0) + int(r["cnt"])
-    vocab = [
-        t
-        for t, _ in sorted(tri_tot.items(), key=lambda kv: (-kv[1], kv[0]))[
-            :vocab_k
-        ]
-    ]
-    vidx = {t: i for i, t in enumerate(vocab)}
-    cidx = {c: i for i, c in enumerate(classes)}
-    k, c = len(vocab), len(classes)
-
-    # featurize the sample ONCE (x vectors + class index), cache it; each
-    # GD iteration is then one tiny mapInPandas over the cached features
-    feat_schema = "x array<long>, y long"
-
-    def featurize(it):
-        for pdf in it:
-            rows_x = [
-                normalize_features(doc_features(t, vidx, k)).tolist()
-                for t in pdf["text"]
-            ]
-            yield pd.DataFrame(
-                {"x": rows_x, "y": pdf["lang"].map(cidx).astype("int64")}
-            )
-
-    feats = fit_docs.mapInPandas(featurize, feat_schema)
-    if fit_max_docs * k <= GD_DRIVER_MAX_ELEMS:
-        # bounded sample ⇒ ONE collect of the featurized matrix (≤ 16 MB at
-        # the cap) and the GD loop runs in-process: integer gradient sums
-        # commute, so the weights are bit-identical to the distributed
-        # loop's (pinned in tests) while 6 per-iteration job waves + a
-        # persist/count collapse into one job. The distributed loop below
-        # remains the path for a sample too big to collect — GD cost stays
-        # corpus-size-independent either way.
-        rows = feats.collect()
-        X = (
-            np.stack([np.asarray(r["x"], dtype=np.int64) for r in rows])
-            if rows else np.zeros((0, k), dtype=np.int64)
-        )
-        y = np.array([r["y"] for r in rows], dtype=np.int64)
-        W_int = np.zeros((k, c), dtype=np.int64)
-        b_int = np.zeros(c, dtype=np.int64)
-        for _ in range(iters):
-            GW, Gb = grad_partial(X, y, W_int, b_int)
-            apply_update(W_int, b_int, GW, Gb, len(y))
-        return LogRegModel(vocab, classes, W_int, b_int)
-    feats = feats.persist()
-    n_fit = feats.count()
-
-    W_int = np.zeros((k, c), dtype=np.int64)
-    b_int = np.zeros(c, dtype=np.int64)
-    part_schema = "gw array<long>, gb array<long>"
-    for _ in range(iters):
-        Wl, bl = W_int.tolist(), b_int.tolist()
-
-        def partials(it, _Wl=Wl, _bl=bl):
-            Wi = np.array(_Wl, dtype=np.int64).reshape(k, c)
-            bi = np.array(_bl, dtype=np.int64)
-            GW = np.zeros((k, c), dtype=np.int64)
-            Gb = np.zeros(c, dtype=np.int64)
-            seen = False
-            for pdf in it:
-                if not len(pdf):
-                    continue
-                seen = True
-                X = np.stack([np.asarray(v, dtype=np.int64) for v in pdf["x"]])
-                gw, gb = grad_partial(
-                    X, pdf["y"].to_numpy(dtype=np.int64), Wi, bi
-                )
-                GW += gw
-                Gb += gb
-            if seen:
-                yield pd.DataFrame(
-                    {"gw": [GW.ravel().tolist()], "gb": [Gb.tolist()]}
-                )
-
-        GW = np.zeros((k, c), dtype=np.int64)
-        Gb = np.zeros(c, dtype=np.int64)
-        for r in feats.mapInPandas(partials, part_schema).collect():
-            GW += np.array(r["gw"], dtype=np.int64).reshape(k, c)
-            Gb += np.array(r["gb"], dtype=np.int64)
-        apply_update(W_int, b_int, GW, Gb, n_fit)
-    feats.unpersist()
-    return LogRegModel(vocab, classes, W_int, b_int)
+    pdf = pd.DataFrame(
+        {
+            "doc_id": [r["doc_id"] for r in rows],
+            "text": [r["text"] for r in rows],
+            "lang": [r["lang"] for r in rows],
+        }
+    )
+    return fit_local(pdf)
 
 
-def predict_spark(
-    docs, model: LogRegModel, id_col: str = "doc_id",
-    text_col: str = "text",
-):
+def predict_spark(docs, model: LogRegModel):
     """One distributed JVM-side prediction pass: explode trigrams, cap the
     per-(doc, vocab-trigram) counts, fixed-point-normalize per doc
     (``(xf * 2^XNORM_BITS) DIV s``), broadcast-join the (tri, lang, w)
@@ -388,10 +226,6 @@ def predict_spark(
     is whole-stage-codegen column arithmetic — no Python in prediction."""
     from pyspark.sql import functions as F
 
-    # normalize the text column name once (fit_spark parameterizes
-    # text_col too; a hardcoded 'text' below would break that pairing)
-    if text_col != "text":
-        docs = docs.select(F.col(id_col), F.col(text_col).alias("text"))
     spark = docs.sparkSession
     k, c = model.W_int.shape
     w_rows = [
@@ -416,7 +250,7 @@ def predict_spark(
     )
 
     tris = docs.filter(F.length(F.lower("text")) >= 3).select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.explode(
             F.expr(
                 "transform(sequence(1, length(lower(text)) - 2),"
@@ -429,29 +263,29 @@ def predict_spark(
     )
     xf = (
         tris.join(F.broadcast(vocab_df), "tri")
-        .groupBy(id_col, "tri")
+        .groupBy("doc_id", "tri")
         .agg(F.least(F.count("*"), F.lit(X_CAP)).cast("long").alias("xf"))
     )
-    s = xf.groupBy(id_col).agg(F.sum("xf").alias("s"))
-    xn = xf.join(s, id_col).withColumn(
+    s = xf.groupBy("doc_id").agg(F.sum("xf").alias("s"))
+    xn = xf.join(s, "doc_id").withColumn(
         "xn", F.expr(f"(xf * {1 << XNORM_BITS}) DIV s")
     )
     scores = (
         xn.join(F.broadcast(wdf), "tri")
-        .groupBy(id_col, "lang")
+        .groupBy("doc_id", "lang")
         .agg(F.sum(F.col("xn") * F.col("w")).alias("zw"))
         .withColumn("z", F.col("zw") + bias_expr[F.col("lang")])
     )
-    top = scores.groupBy(id_col).agg(
+    top = scores.groupBy("doc_id").agg(
         F.min_by(
             "lang", F.struct((-F.col("z")).alias("nz"), F.col("lang"))
         ).alias("lang_pred")
     )
     return (
-        docs.select(F.col(id_col))
-        .join(top, id_col, "left")
+        docs.select(F.col("doc_id"))
+        .join(top, "doc_id", "left")
         .select(
-            id_col,
+            "doc_id",
             F.coalesce("lang_pred", F.lit(model.bias_pred)).alias("lang_pred"),
         )
     )

@@ -33,6 +33,8 @@ LANG_MARKERS = {
 
 STOPWORDS = ["the", "a", "and", "of", "to", "in", "is", "on", "for", "it"]
 
+FIT_MAX_DOCS = 1000   # lang_id_trigram's fit sample: first doc ids in order
+
 
 def token_count(text: Column) -> Column:
     t = F.trim(text)
@@ -142,17 +144,12 @@ def norm_fingerprint(text: Column) -> Column:
     return F.sha2(norm.cast("binary"), 256)
 
 
-def lang_id_trigram(
-    docs,
-    text_col: str = "text",
-    lang_col: str = "lang",
-    id_col: str = "doc_id",
-    fit_max_docs: int = 1000,
-):
+def lang_id_trigram(docs):
     """STATISTICAL language ID: character-trigram profile classifier
     (Cavnar–Trenkle-family; the distributed analog of the reference's
     trained classifier, /root/reference/src/language_classifier.c), fit AND
-    applied as pure DataFrame ops in one pass over a labeled table.
+    applied as pure DataFrame ops in one pass over a labeled
+    (doc_id, text, lang) table.
 
     Train: per-language trigram counts + totals; each trigram's profile
     language is the argmax of cnt_L / total_L, compared EXACTLY via
@@ -164,13 +161,13 @@ def lang_id_trigram(
     end-to-end, which is what lets the DuckDB oracle replay it
     value-for-value.
 
-    Contract: ``id_col`` is a unique, non-null key. Prediction is per row,
+    Contract: ``doc_id`` is a unique, non-null key. Prediction is per row,
     while the DuckDB twin groups votes by id (rows sharing an id merge,
     a null id predicts 'und'), so duplicate or null ids make the two
     disagree.
 
     At scale: the model is a small (tri → lang) table bounded by the fit
-    sample's text volume — the sample itself (first ``fit_max_docs`` rows,
+    sample's text volume — the sample itself (first ``FIT_MAX_DOCS`` rows,
     the same bound the count table already carried) is collected to the
     driver, counted, and argmaxed there (exact Python-int
     cross-multiplication, no width ceiling), then shipped back as an
@@ -178,7 +175,7 @@ def lang_id_trigram(
     distributed pass.
 
     Driver actions: exactly one — the bounded sample collect (a
-    TakeOrdered of ``fit_max_docs`` rows, no shuffle, no explode job: the
+    TakeOrdered of ``FIT_MAX_DOCS`` rows, no shuffle, no explode job: the
     former distributed count job spent its wall on job waves, not on the
     ~10^5-trigram tally a driver loop does in milliseconds; both transfers
     are bounded by the sample's text volume). The caller's action then
@@ -187,21 +184,21 @@ def lang_id_trigram(
     """
     spark = docs.sparkSession  # noqa: F841 (kept: API parity, debugging)
 
-    # fit on a bounded, DETERMINISTIC document sample (first fit_max_docs
+    # fit on a bounded, DETERMINISTIC document sample (first FIT_MAX_DOCS
     # ids in sort order — reproducible, oracle-replayable). When the corpus
-    # has <= fit_max_docs documents the sample IS the corpus, so at the
+    # has <= FIT_MAX_DOCS documents the sample IS the corpus, so at the
     # sf0.01 compare scale fit == full and the SQL twin's totals match
     # exactly. NULL labels and sub-trigram texts never enter the tally —
     # the same filters the former distributed fit job applied (a None key
     # would TypeError the tie-break; the twin filters identically).
     sample = (
         docs.select(
-            F.col(id_col).alias("_id"),
-            F.col(lang_col).alias("lang_label"),
-            F.lower(F.col(text_col)).alias("t"),
+            F.col("doc_id").alias("_id"),
+            F.col("lang").alias("lang_label"),
+            F.lower(F.col("text")).alias("t"),
         )
         .orderBy("_id")
-        .limit(fit_max_docs)
+        .limit(FIT_MAX_DOCS)
         .collect()
     )
     counts: dict[tuple[str, str], int] = {}
@@ -270,5 +267,5 @@ def lang_id_trigram(
             yield pd.Series(out, dtype=object)
 
     return docs.select(
-        F.col(id_col), vote_udf(F.lower(F.col(text_col))).alias("lang_pred")
+        F.col("doc_id"), vote_udf(F.lower(F.col("text"))).alias("lang_pred")
     )

@@ -47,7 +47,6 @@ def feature_schema(emit_minhash: bool = False) -> T.StructType:
 
 def make_canonicalize_udf(
     expansions: dict[str, str] | None = None,
-    fold_numbers: bool = False,
     transliterate: bool = False,
     fold_spelled_numbers: bool = False,
     fold_roman: bool = False,
@@ -68,7 +67,6 @@ def make_canonicalize_udf(
             yield canonicalize_batch(
                 content,
                 expansions=expansions,
-                fold_numbers=fold_numbers,
                 transliterate=transliterate,
                 fold_spelled_numbers=fold_spelled_numbers,
                 fold_roman=fold_roman,
@@ -79,11 +77,7 @@ def make_canonicalize_udf(
     return canonicalize_udf
 
 
-def make_canonicalize_routed_numex_udf(
-    expansions: dict[str, str] | None = None,
-    fold_numbers: bool = False,
-    fold_roman: bool = True,
-):
+def make_canonicalize_routed_numex_udf():
     """(content, lang) -> canon with per-ROW numex-language routing in ONE
     Arrow UDF — the production analog of the reference applying the numex
     table of the language IN EFFECT per record (the language classifier's
@@ -94,8 +88,8 @@ def make_canonicalize_routed_numex_udf(
     evaluate EVERY branch's UDF on every batch (Spark does not
     short-circuit UDF branches).
 
-    Per-language stage settings mirror the per-arm harness configs:
-    non-Latin-numeral languages (zh/ja) skip the transliterate stage (the
+    Per-language stage settings mirror the per-arm harness configs: every
+    language folds spelled and roman numerals; non-Latin-numeral languages (zh/ja) skip the transliterate stage (the
     Han-pinyin fold would consume the numerals before numex), English
     needs no transliteration, every other language runs it.  Unknown lang
     values fall back to the English table.
@@ -105,10 +99,8 @@ def make_canonicalize_routed_numex_udf(
     def _cfg(lv: str) -> dict:
         lang = lv if lv in KNOWN_NUMEX_LANGS else "en"
         return dict(
-            expansions=expansions,
-            fold_numbers=fold_numbers,
             fold_spelled_numbers=True,
-            fold_roman=fold_roman,
+            fold_roman=True,
             transliterate=lang not in ("en", "zh", "ja"),
             numex_lang=lang,
         )
@@ -265,10 +257,11 @@ def make_ladder_udf(max_len: int = 32):
     return ladder_udf
 
 
-def make_affine_gap_udf(max_len: int = 32):
+def make_affine_gap_udf():
     """(s1, s2) -> struct(gap_cost, is_abbrev): Gotoh affine-gap alignment
-    distance + the abbreviation-candidate check (core/strsim.py; reference
-    analogs src/affine_gap.c and soft_tfidf.c's abbreviation rung)."""
+    distance + the abbreviation-candidate check over each string's first
+    32 chars (core/strsim.py; reference analogs src/affine_gap.c and
+    soft_tfidf.c's abbreviation rung)."""
     from ..core import strsim
 
     schema = T.StructType(
@@ -285,8 +278,9 @@ def make_affine_gap_udf(max_len: int = 32):
         for s1, s2 in it:
             yield pd.DataFrame(
                 {
-                    "gap_cost": strsim.affine_gap_batch(s1, s2, max_len),
-                    "is_abbrev": strsim.is_abbreviation_batch(s1, s2, max_len),
+                    "gap_cost": strsim.affine_gap_batch(s1, s2, max_len=32),
+                    "is_abbrev": strsim.is_abbreviation_batch(
+                        s1, s2, max_len=32),
                 }
             )
 
@@ -328,7 +322,10 @@ def make_pair_confirm_udf(cfg: PipelineConfig):
     for every row (pair_jaccard_batch, per-batch canon dedup) plus the
     substring verifier (pair_lcs_batch: rolling-window hash intersect +
     exact token verify + extension) for the rows that need it — winnow hits
-    whose jaccard is below the confirm threshold. lcs_tokens = -1 marks rows
+    whose jaccard is below the confirm threshold. lcs_tokens is a verified
+    shared run, not necessarily the longest: the verifier stops at the
+    first run that reaches ``winnow_guarantee``, so a pair accepted on it
+    reports at least that bar. lcs_tokens = -1 marks rows
     where the run check was skipped; lcs_exhausted marks rows whose
     alignment budget ran out (truncated verification is visible data — the
     no-silent-caps contract). Fused because two chained pandas UDFs

@@ -263,10 +263,8 @@ def candidate_pairs(
         # Catalyst plans one self-join instead of a 4-way union, which is a
         # measurable driver-time win on every run (AQE-style runtime
         # adaptation, decided from data already in hand).
-        row = keyed.agg(
-            F.count("*").alias("n"), F.max("cnt").alias("mx")
-        ).collect()[0]
-        has_big = (row["mx"] or 0) > cfg.max_bucket_size
+        mx = keyed.agg(F.max("cnt").alias("mx")).collect()[0]["mx"]
+        has_big = (mx or 0) > cfg.max_bucket_size
 
     bucket_stats = (
         keyed.groupBy("kind", "kid", "khash")

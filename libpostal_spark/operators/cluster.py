@@ -15,13 +15,20 @@ monotonically_increasing_id pass (pinned with an eager localCheckpoint so
 the non-deterministic ids are assigned exactly once), decoding is one join;
 the component label is then re-derived as the lexicographic MIN FID within
 each component, so the labels equal driver union-find's
-(``connected_components_driver``; cross-checked in tests).
+(``union_find_rows``; cross-checked in tests).
+
+``components`` is the one place that picks between the two: it routes by
+the edge count it observes, and no caller picks the strategy.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from ..config import DEFAULT_CONFIG
+
+MAX_ITER = 30   # large/small-star rounds before the loop gives up
 
 
 def _normalize(edges: DataFrame) -> DataFrame:
@@ -68,7 +75,7 @@ def _fingerprint(edges: DataFrame) -> tuple[int, int]:
     return int(row["c"]), int(row["h"])
 
 
-def connected_components(pairs: DataFrame, max_iter: int = 30) -> DataFrame:
+def connected_components(pairs: DataFrame) -> DataFrame:
     """(fid1, fid2) confirmed pairs → (fid, component) labels.
 
     component = lexicographic min fid of the component. Only nodes appearing
@@ -114,14 +121,14 @@ def connected_components(pairs: DataFrame, max_iter: int = 30) -> DataFrame:
 
     edges = _materialize(edges, None)
     prev = _fingerprint(edges)
-    for _ in range(max_iter):
+    for _ in range(MAX_ITER):
         edges = _materialize(_normalize(_small_star(_large_star(edges))), prev[0])
         cur = _fingerprint(edges)
         if cur == prev:
             break
         prev = cur
     else:
-        raise RuntimeError(f"connected_components did not converge in {max_iter} rounds")
+        raise RuntimeError(f"connected_components did not converge in {MAX_ITER} rounds")
 
     children = edges.select(F.col("a").alias("fid"), F.col("b").alias("component"))
     roots = edges.select(F.col("b").alias("fid")).distinct().withColumn(
@@ -140,32 +147,18 @@ def connected_components(pairs: DataFrame, max_iter: int = 30) -> DataFrame:
     return decoded.join(comp_min, "cnid").select("fid", "component")
 
 
-def connected_components_driver(pairs: DataFrame) -> DataFrame:
-    """Union-find on the driver for SMALL confirmed-pair sets.
-
-    The confirmed-pair graph after the exact-dedup contraction is orders of
-    magnitude smaller than the input (only near-dup representative links);
-    below ``PipelineConfig.cc_driver_max_edges`` it fits trivially on the
-    driver and a single collect + union-find beats ~10 distributed rounds of
-    shuffle jobs. Same output contract as ``connected_components``.
-    """
-    id_type = pairs.schema["fid1"].dataType.simpleString()
-    return union_find_rows(
-        pairs.select("fid1", "fid2").collect(), pairs.sparkSession,
-        id_type=id_type if id_type in ("string", "long", "bigint") else None,
-    )
-
-
 def union_find_rows(rows, spark, id_type: str | None = None) -> DataFrame:
-    """Driver union-find over already-collected (fid1, fid2) rows — the
-    core of ``connected_components_driver``, split out so callers that
-    already hold the edge rows (the pipeline's merged materialize+collect
-    action) skip the second collect job.
+    """Driver union-find over already-collected (fid1, fid2) rows, for
+    SMALL edge sets: after the exact-dedup contraction the confirmed-pair
+    graph is orders of magnitude smaller than the input, and one collect +
+    union-find beats ~10 distributed rounds of shuffle jobs. Same output
+    contract as ``connected_components``.
 
-    ``id_type`` fixes the output schema explicitly ("string"/"long");
+    ``id_type`` fixes the output schema explicitly ("string"/"bigint");
     without it the type is inferred from the first node, which on an EMPTY
-    edge list can only guess string — long-id callers (place dedupe) pass
-    it so the zero-edge frame still joins against a bigint universe."""
+    edge list can only guess string — ``components`` passes the edge
+    schema's type so a zero-edge long-id frame still joins against a
+    bigint universe."""
     parent: dict[str, str] = {}
 
     def find(x: str) -> str:
@@ -202,15 +195,24 @@ def union_find_rows(rows, spark, id_type: str | None = None) -> DataFrame:
     return spark.createDataFrame(out, schema=f"fid {idt}, component {idt}")
 
 
-def connected_components_auto(
-    pairs: DataFrame, n_edges: int | None, driver_max_edges: int
+def components(
+    edges: DataFrame, driver_max_edges: int = DEFAULT_CONFIG.cc_driver_max_edges
 ) -> DataFrame:
-    """Route to driver union-find or distributed large/small-star by size."""
-    if n_edges is None:
-        n_edges = pairs.count()
-    if n_edges <= driver_max_edges:
-        return connected_components_driver(pairs)
-    return connected_components(pairs)
+    """(fid1, fid2) edges → (fid, component) labels, routed by edge count.
+
+    ONE action, ``limit(max+1).collect()``, both counts the edges and
+    fetches them when they fit the driver budget (a count + collect pair
+    would run the edge plan twice); those go to ``union_find_rows``, with
+    the id type taken from the edge schema. An oversized edge set goes to
+    the distributed large/small-star loop. Both routes label a component
+    by its min id, so the route never changes the result."""
+    rows = edges.select("fid1", "fid2").limit(driver_max_edges + 1).collect()
+    if len(rows) <= driver_max_edges:
+        return union_find_rows(
+            rows, edges.sparkSession,
+            id_type=edges.schema["fid1"].dataType.simpleString(),
+        )
+    return connected_components(edges)
 
 
 def label_universe(labels: DataFrame, universe: DataFrame) -> DataFrame:

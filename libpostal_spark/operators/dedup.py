@@ -30,13 +30,13 @@ def docs_as_files(documents: DataFrame) -> DataFrame:
     )
 
 
-def exact_dup_groups(documents: DataFrame, text_col: str = "text") -> DataFrame:
+def exact_dup_groups(documents: DataFrame) -> DataFrame:
     """Exact dedup: group by raw sha256; groups with >1 member are dup sets.
 
     Output: group_sha, dup_count, canonical_doc_id (min id — the keeper).
     """
     return (
-        documents.withColumn("group_sha", F.sha2(F.col(text_col).cast("binary"), 256))
+        documents.withColumn("group_sha", F.sha2(F.col("text").cast("binary"), 256))
         .groupBy("group_sha")
         .agg(
             F.count("*").alias("dup_count"),
@@ -60,14 +60,12 @@ def token_set(text: F.Column) -> F.Column:
     return F.array_sort(F.array_distinct(arr))
 
 
-def ngram_jaccard_pairs(
-    documents: DataFrame, threshold: float = 0.0, adjacent_only: bool = True
-) -> DataFrame:
-    """Exact token-set Jaccard between document pairs.
+def ngram_jaccard_pairs(documents: DataFrame) -> DataFrame:
+    """Exact token-set Jaccard between adjacent document pairs.
 
-    adjacent_only pairs doc_id with doc_id+1 (a cheap deterministic slice used
-    by the oracle harness); full pairing should go through the LSH pipeline —
-    an all-pairs Jaccard is exactly the O(n²) the blocking stage exists to
+    Pairs doc_id with doc_id+1 (a cheap deterministic slice used by the
+    oracle harness); full pairing goes through the LSH pipeline — an
+    all-pairs Jaccard is exactly the O(n²) the blocking stage exists to
     avoid.
     """
     toks = documents.select(
@@ -75,10 +73,7 @@ def ngram_jaccard_pairs(
     )
     a = toks.select(F.col("doc_id").alias("doc_id1"), F.col("toks").alias("t1"))
     b = toks.select(F.col("doc_id").alias("doc_id2"), F.col("toks").alias("t2"))
-    if adjacent_only:
-        pairs = a.join(b, F.col("doc_id2") == F.col("doc_id1") + 1)
-    else:
-        pairs = a.join(b, F.col("doc_id1") < F.col("doc_id2"))
+    pairs = a.join(b, F.col("doc_id2") == F.col("doc_id1") + 1)
     inter = F.size(F.array_intersect("t1", "t2"))
     union = F.size(F.array_union("t1", "t2"))
     jac = F.when(union > 0, inter.cast("double") / union.cast("double")).otherwise(
@@ -86,22 +81,25 @@ def ngram_jaccard_pairs(
     )
     return (
         pairs.withColumn("jaccard", F.round(jac, 4))
-        .filter(F.col("jaccard") >= threshold)
         .select("doc_id1", "doc_id2", "jaccard")
     )
+
+
+# pairs one duplicate class (or near-dup class product) may list before
+# the listing falls back to star pairs through its representative(s)
+MAX_PAIRS_PER_CLASS = 10_000
 
 
 def dup_status_pairs(
     spark,
     documents: DataFrame,
     cfg: PipelineConfig | None = None,
-    max_pairs_per_class: int = 10_000,
     max_class_size: int | None = None,
     result=None,
 ) -> DataFrame:
     """Graded duplicate pairs — see ``dup_status_pairs_with_ledger``."""
     pairs, _ = dup_status_pairs_with_ledger(
-        spark, documents, cfg, max_pairs_per_class, max_class_size, result,
+        spark, documents, cfg, max_class_size, result,
     )
     return pairs
 
@@ -110,7 +108,6 @@ def dup_status_pairs_with_ledger(
     spark,
     documents: DataFrame,
     cfg: PipelineConfig | None = None,
-    max_pairs_per_class: int = 10_000,
     max_class_size: int | None = None,
     result=None,
 ) -> tuple[DataFrame, DataFrame]:
@@ -127,7 +124,7 @@ def dup_status_pairs_with_ledger(
     This is the pairs-LISTING api — its output is by definition quadratic in
     duplicate-class size (an exact class of n docs yields n(n-1)/2 exact
     pairs), so the listing re-expands the pipeline's O(n) star/rep
-    representation. ``max_pairs_per_class`` bounds that re-expansion: a
+    representation. ``MAX_PAIRS_PER_CLASS`` bounds that re-expansion: a
     class (or near-dup class product) whose full listing would exceed the
     cap emits STAR pairs through its representative(s) instead — O(n) rows,
     still covering every member — and books the suppressed count in the
@@ -155,7 +152,7 @@ def dup_status_pairs_with_ledger(
         .withColumn("rep", F.min("fid").over(w))
         .withColumn("csize", F.count("*").over(w))
     )
-    cap = F.lit(max_pairs_per_class)
+    cap = F.lit(MAX_PAIRS_PER_CLASS)
 
     # near-dup pairs: rep<->rep confirms expanded to every member pair
     # (identical content => identical jaccard to any third file) — unless
@@ -177,8 +174,8 @@ def dup_status_pairs_with_ledger(
     else:
         mx = members.agg(F.max("csize").alias("m")).collect()[0]["m"] or 0
     cap_possible = (
-        mx * (mx - 1) // 2 > max_pairs_per_class
-        or mx * mx > max_pairs_per_class
+        mx * (mx - 1) // 2 > MAX_PAIRS_PER_CLASS
+        or mx * mx > MAX_PAIRS_PER_CLASS
     )
     if not cap_possible:
         m1 = members.select(F.col("rep").alias("fid1"), F.col("fid").alias("u"))
@@ -343,8 +340,7 @@ def _acr_tokens_expr(text_col: str) -> str:
     )
 
 
-def acronym_pairs(docs: DataFrame, text_col: str = "text",
-                  id_col: str = "doc_id") -> DataFrame:
+def acronym_pairs(docs: DataFrame) -> DataFrame:
     """Acronym-phrase alignment between adjacent doc pairs (reference:
     ``existing_acronym_phrase_alignments``, /root/reference/src/acronyms.c —
     the soft_tfidf match rung that lets "nyu" align with
@@ -374,13 +370,13 @@ def acronym_pairs(docs: DataFrame, text_col: str = "text",
                                   t -> substring(t, 1, 1)), '') = a)))
     """
     a = docs.select(
-        F.col(id_col).cast("long").alias("doc_id1"),
-        F.expr(_acr_tokens_expr(text_col)).alias("ats"),
+        F.col("doc_id").cast("long").alias("doc_id1"),
+        F.expr(_acr_tokens_expr("text")).alias("ats"),
     )
     b = docs.select(
-        (F.col(id_col).cast("long") - 1).alias("doc_id1"),
-        F.col(id_col).cast("long").alias("doc_id2"),
-        F.expr(_acr_tokens_expr(text_col)).alias("bt"),
+        (F.col("doc_id").cast("long") - 1).alias("doc_id1"),
+        F.col("doc_id").cast("long").alias("doc_id2"),
+        F.expr(_acr_tokens_expr("text")).alias("bt"),
     )
     joined = a.join(b, "doc_id1").withColumn("matched", F.expr(matched))
     return joined.select(

@@ -47,12 +47,7 @@ def _ordered_classed(components) -> list[tuple[str, str, str]]:
     return [(k, v, cls_of[k]) for k, v in phrase_priority_order(rewr)]
 
 
-def canonicalize_classed(
-    df: DataFrame,
-    components=None,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def canonicalize_classed(df: DataFrame, components=None) -> DataFrame:
     """Root canonical form under the selected dictionary classes — the
     ``expand_address_root`` analog with the options' component mask applied
     (stopwords deleted, ambiguous folded to the first alternative)."""
@@ -62,17 +57,13 @@ def canonicalize_classed(
         expansions=entries_for_components(components, root=True)
     )
     return df.select(
-        F.col(id_col).cast("long").alias(id_col),
-        udf(F.col(text_col)).alias("canon"),
+        F.col("doc_id").cast("long").alias("doc_id"),
+        udf(F.col("text")).alias("canon"),
     )
 
 
 def canonicalize_by_language(
-    df: DataFrame,
-    components=None,
-    text_col: str = "text",
-    lang_col: str = "lang",
-    id_col: str = "doc_id",
+    df: DataFrame, components=None, lang_col: str = "lang"
 ) -> DataFrame:
     """Language-routed root canonicalization: each row is expanded with ITS
     language's merged gazetteer (shared layer + per-language entries, the
@@ -109,18 +100,13 @@ def canonicalize_by_language(
             yield out
 
     return df.select(
-        F.col(id_col).cast("long").alias(id_col),
+        F.col("doc_id").cast("long").alias("doc_id"),
         F.col(lang_col).alias("lang"),
-        routed_udf(F.col(text_col), F.col(lang_col)).alias("canon"),
+        routed_udf(F.col("text"), F.col(lang_col)).alias("canon"),
     )
 
 
-def phrase_class_matches(
-    df: DataFrame,
-    components=None,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def phrase_class_matches(df: DataFrame, components=None) -> DataFrame:
     """Per-document dictionary matches tagged with their class:
     (id, dict_class, pattern, n_matches), n_matches > 0.
 
@@ -153,8 +139,8 @@ def phrase_class_matches(
     pat_arr = F.array(*[F.lit(k) for k, _, _ in ordered])
     cls_arr = F.array(*[F.lit(c) for _, _, c in ordered])
     counted = df.select(
-        F.col(id_col).cast("long").alias(id_col),
-        count_udf(F.col(text_col)).alias("counts"),
+        F.col("doc_id").cast("long").alias("doc_id"),
+        count_udf(F.col("text")).alias("counts"),
     )
     # posexplode_OUTER: the non-outer form triggers InferFiltersFromGenerate
     # (an inferred size(counts) > 0 filter), whose extracted Python UDF gets
@@ -163,11 +149,11 @@ def phrase_class_matches(
     # n_matches > 0 predicate anyway (plan-pinned in tests/test_plans.py).
     return (
         counted.select(
-            id_col, F.posexplode_outer("counts").alias("pos", "n_matches")
+            "doc_id", F.posexplode_outer("counts").alias("pos", "n_matches")
         )
         .where(F.col("n_matches") > 0)
         .select(
-            id_col,
+            "doc_id",
             F.element_at(cls_arr, F.col("pos") + 1).alias("dict_class"),
             F.element_at(pat_arr, F.col("pos") + 1).alias("pattern"),
             F.col("n_matches").cast("int").alias("n_matches"),

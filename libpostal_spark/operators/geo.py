@@ -77,20 +77,21 @@ def synth_points(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def cell_cols(lat_col: str = "lat_u", lon_col: str = "lon_u"):
+def cell_cols():
     """Quantized (x, y) cell columns of the precision-6 geohash lattice
-    from microdegree columns — nonnegative integer floor division,
-    identical in Spark (`div`), DuckDB (`//`), and Python."""
+    from the ``lat_u``/``lon_u`` microdegree columns — nonnegative
+    integer floor division, identical in Spark (`div`), DuckDB (`//`),
+    and Python."""
     # domain edges: lon = +180° is the same meridian as -180° (wrap to
     # cell 0); lat = +90° is the last row (clamp to CELLS-1) — without
     # these, the exact edge values index one past the 15-bit lattice
     return (
         F.expr(
-            f"pmod((({lon_col} + {LON_SPAN // 2}) * {CELLS})"
+            f"pmod(((lon_u + {LON_SPAN // 2}) * {CELLS})"
             f" div {LON_SPAN}, {CELLS})"
         ),
         F.expr(
-            f"least((({lat_col} + {LAT_SPAN // 2}) * {CELLS})"
+            f"least(((lat_u + {LAT_SPAN // 2}) * {CELLS})"
             f" div {LAT_SPAN}, {CELLS - 1})"
         ),
     )
@@ -133,9 +134,9 @@ def geo_candidate_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return candidate_pairs_from_points(synth_points(spark, sf_dir))
 
 
-def candidate_pairs_from_points(points: DataFrame, r2: int = R2) -> DataFrame:
+def candidate_pairs_from_points(points: DataFrame) -> DataFrame:
     """Geohash-neighbor blocking + integer distance confirm over any
-    (id, lat_u, lon_u) table; ``r2`` is the squared microdegree radius.
+    (id, lat_u, lon_u) table; ``R2`` is the squared microdegree radius.
 
     Pair contract (the reference's near-dupe geo semantic): (a, b) is
     emitted iff their cells are neighbors on each axis (longitude
@@ -182,7 +183,7 @@ def candidate_pairs_from_points(points: DataFrame, r2: int = R2) -> DataFrame:
             "id2",
             d2.alias("d2"),
         )
-        .where(F.col("d2") <= F.lit(r2))
+        .where(F.col("d2") <= F.lit(R2))
     )
 
 
@@ -256,16 +257,14 @@ def _name_set_col(name_col):
     )
 
 
-def place_dedup_clusters(
-    spark: SparkSession, sf_dir: str, driver_max_edges: int = 100_000
-) -> DataFrame:
+def place_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The reference's place-dedupe flow end-to-end
     (/root/reference/src/dedupe.c `is_dupe` with lat/lon +
     /root/reference/src/place.c): geohash-neighbor blocking generates
     candidates, an expand-and-intersect name rule confirms
     (2·|∩| ≥ |∪| over normalized token sets — the 0.5-Jaccard gate as
     pure integer arithmetic), connected components assign one canonical
-    id per venue.  Reuses operators/cluster.py's CC (driver union-find
+    id per venue.  Reuses ``cluster.components`` (driver union-find
     below the edge bound, large/small-star above) and the geo cell join
     — at scale this is the same one-shuffle blocking + tiny-edge-set
     clustering shape as the flagship text pipeline.
@@ -317,15 +316,7 @@ def place_dedup_clusters(
         )
         .select(F.col("id").alias("fid1"), F.col("id2").alias("fid2"))
     )
-    # route with ONE action: limit(max+1).collect() both counts and
-    # fetches the edge list when it fits the driver budget (the
-    # pipeline.py merged-collect pattern) — no separate count() job,
-    # no double edge computation
-    edge_rows = edges.limit(driver_max_edges + 1).collect()
-    if len(edge_rows) <= driver_max_edges:
-        labels = C.union_find_rows(edge_rows, spark, id_type="long")
-    else:
-        labels = C.connected_components(edges)
+    labels = C.components(edges)
     out = C.label_universe(
         labels, places.select(F.col("id").alias("fid"))
     )

@@ -65,7 +65,7 @@ def brute_force_topk(
 
 # broadcasts created by cosine_pairs' exact path, so a long session issuing
 # many calls can release executor/driver blocks once the returned frames are
-# consumed (each pair pins up to max_exact_bytes on every executor)
+# consumed (each pair pins up to MAX_EXACT_BYTES on every executor)
 _EXACT_BROADCASTS: list = []
 
 
@@ -83,37 +83,25 @@ def release_exact_broadcasts() -> int:
     return n
 
 
-def cosine_pairs(
-    embeddings: DataFrame,
-    threshold: float,
-    id_col: str = "vec_id",
-    max_exact_rows: int = 200_000,
-    n_rows: int | None = None,
-    dim: int | None = None,
-    n_tables: int = 8,
-    n_bits: int = 4,
-    seed: int = 42,
-    method: str = "auto",
-    max_exact_bytes: int = 256 << 20,
-) -> DataFrame:
+# exact-path caps: above either one, cosine_pairs routes to the bucketed
+# path. The broadcast matrix (rows × dim × 8 bytes on every executor) is
+# the exact path's real cost, so bytes are capped beside rows.
+MAX_EXACT_ROWS = 200_000
+MAX_EXACT_BYTES = 256 << 20
+
+
+def cosine_pairs(embeddings: DataFrame, threshold: float) -> DataFrame:
     """Embedding-cosine near-duplicate pairs: (id1 < id2, cos_sim) with
     cos >= threshold.
 
-    ``method`` makes the exact/approximate contract explicit:
-
-    * ``"exact"`` — always the exact path; raises ValueError above the
-      exact-path caps instead of degrading recall behind the caller's back.
-    * ``"lsh"`` — always the bucketed approximate path.
-    * ``"auto"`` (default) — route by corpus size as below, emitting a
-      ``UserWarning`` when a cap flips the result from exact to
-      approximate (pairs sharing no LSH table key are dropped), so the
-      switch is never silent.
-
-    The exact path's real cost is the broadcast matrix — rows × dim × 8
-    bytes shipped to every executor — so routing gates on BOTH the row cap
-    and ``max_exact_bytes`` (256 MB default): 200k rows of dim-64 vectors
-    broadcast ~100 MB, but the same rows at dim 1536 would be ~2.4 GB and
-    route to the bucketed path.
+    The strategy follows the corpus size, read by ONE agg (row count + max
+    dim) and checked against two caps: ``MAX_EXACT_ROWS`` and
+    ``MAX_EXACT_BYTES`` on the broadcast estimate rows × dim × 8 (200k
+    rows of dim-64 vectors broadcast ~100 MB, but the same rows at dim
+    1536 would be ~2.4 GB and route to the bucketed path). Crossing a cap
+    emits a ``UserWarning``, because the result turns from exact to
+    approximate (pairs sharing no LSH table key are dropped), so the
+    switch is never silent.
 
     Two physical strategies:
 
@@ -122,65 +110,38 @@ def cosine_pairs(
       with one BLAS matmul inside mapInPandas (O(n²) flops at
       memory-bandwidth speed; a JVM zip_with/aggregate fold computes the
       same thing ~1000× slower). This is the oracle-checkable baseline.
-    * n > max_exact_rows — BUCKETED (the 100 TB path, zero driver-side
+    * above a cap — BUCKETED (the 100 TB path, zero driver-side
       data): candidates are pairs sharing >= 1 ``ann_signatures``
       hyperplane-LSH table key (a distributed self-join on the key column),
       exact-cosine re-ranked by a vectorized pair UDF. Approximate by
       construction — recall is the multi-table sign-LSH bound documented in
       the module docstring — and never collects, broadcasts, or buckets
       more than one LSH bucket's pairs per task.
-
-    Pass n_rows to skip the routing count (the byte gate then only engages
-    if dim is also passed — no hidden action is ever run for a caller that
-    supplied n_rows); dim is otherwise discovered by the same single agg,
-    and the LSH path needs it for the plane shapes before any action.
     """
-    if method not in ("auto", "exact", "lsh"):
-        raise ValueError(f"cosine_pairs: unknown method {method!r}")
-    if method == "lsh":
-        return cosine_pairs_bucketed(
-            embeddings, threshold, id_col=id_col, dim=dim,
-            n_tables=n_tables, n_bits=n_bits, seed=seed,
-        )
-    if n_rows is None:
-        # one action covers both routing inputs (count + max dim)
-        r = embeddings.agg(
-            F.count("*").alias("n"), F.max(F.size("embedding")).alias("d")
-        ).collect()[0]
-        n_rows = int(r["n"])
-        if dim is None:
-            dim = int(r["d"] or 0)
-    # callers that pass n_rows do so to SKIP the routing action — honor
-    # that: without a known dim the byte gate simply doesn't engage (the
-    # row cap still does); pass dim to arm it action-free
-    est_bytes = n_rows * (dim or 0) * 8
-    if n_rows > max_exact_rows or est_bytes > max_exact_bytes:
+    r = embeddings.agg(
+        F.count("*").alias("n"), F.max(F.size("embedding")).alias("d")
+    ).collect()[0]
+    n_rows, dim = int(r["n"]), int(r["d"] or 0)
+    est_bytes = n_rows * dim * 8
+    if n_rows > MAX_EXACT_ROWS or est_bytes > MAX_EXACT_BYTES:
         reason = (
-            f"{n_rows} rows > max_exact_rows={max_exact_rows}"
-            if n_rows > max_exact_rows
+            f"{n_rows} rows > MAX_EXACT_ROWS={MAX_EXACT_ROWS}"
+            if n_rows > MAX_EXACT_ROWS
             else f"broadcast estimate {est_bytes >> 20} MB (rows×dim×8) > "
-            f"max_exact_bytes={max_exact_bytes >> 20} MB"
+            f"MAX_EXACT_BYTES={MAX_EXACT_BYTES >> 20} MB"
         )
-        if method == "exact":
-            raise ValueError(
-                f"cosine_pairs(method='exact'): {reason}; use method='lsh' "
-                "(or raise the cap) — refusing to silently degrade recall"
-            )
         import warnings
 
         warnings.warn(
             f"cosine_pairs: {reason}; routing to the APPROXIMATE "
             "LSH-bucketed path (pairs sharing no LSH table key are "
-            "dropped). Pass method='exact'/'lsh' to pin the strategy.",
+            "dropped).",
             UserWarning,
             stacklevel=2,
         )
-        return cosine_pairs_bucketed(
-            embeddings, threshold, id_col=id_col, dim=dim,
-            n_tables=n_tables, n_bits=n_bits, seed=seed,
-        )
+        return cosine_pairs_bucketed(embeddings, threshold, dim=dim)
 
-    rows = embeddings.select(F.col(id_col).cast("long"), "embedding").collect()
+    rows = embeddings.select(F.col("vec_id").cast("long"), "embedding").collect()
     rows.sort(key=lambda r: r[0])
     ids = np.array([r[0] for r in rows], dtype=np.int64)
     mat = np.array([r[1] for r in rows], dtype=np.float64)
@@ -196,7 +157,7 @@ def cosine_pairs(
         all_ids, all_mat = b_ids.value, b_mat.value
         for pdf in batches:
             out_1, out_2, out_c = [], [], []
-            for vid, emb in zip(pdf[id_col], pdf["embedding"]):
+            for vid, emb in zip(pdf["vec_id"], pdf["embedding"]):
                 v = np.array(emb, dtype=np.float64)   # copy: Arrow buffers are read-only
                 nv = np.linalg.norm(v)
                 v /= nv if nv else 1.0
@@ -210,7 +171,7 @@ def cosine_pairs(
                 {"vec_id1": out_1, "vec_id2": out_2, "cos_sim": out_c}
             )
 
-    return embeddings.select(F.col(id_col).cast("long").alias(id_col), "embedding").mapInPandas(
+    return embeddings.select(F.col("vec_id").cast("long").alias("vec_id"), "embedding").mapInPandas(
         score, schema="vec_id1 long, vec_id2 long, cos_sim double"
     )
 
@@ -233,16 +194,11 @@ def make_pair_cosine_udf():
 
 
 def cosine_pairs_bucketed(
-    embeddings: DataFrame,
-    threshold: float,
-    id_col: str = "vec_id",
-    dim: int | None = None,
-    n_tables: int = 8,
-    n_bits: int = 4,
-    seed: int = 42,
+    embeddings: DataFrame, threshold: float, dim: int | None = None
 ) -> DataFrame:
-    """Distributed near-dup pair mining: shared-LSH-key candidate self-join +
-    exact cosine re-rank. No driver-side collect anywhere in the plan — the
+    """Distributed near-dup pair mining: shared-LSH-key candidate self-join
+    (8 tables of 4 sign bits, seed 42 — the ``lsh_topk`` defaults) + exact
+    cosine re-rank. No driver-side collect anywhere in the plan — the
     candidate stream shuffles on the 16-byte key, the re-rank joins shuffle
     on the id. At 10^9 rows you persist ``ann_signatures`` bucketed by key
     and both joins co-locate."""
@@ -256,19 +212,19 @@ def cosine_pairs_bucketed(
             )
         dim = len(row["embedding"])
     emb = embeddings.select(
-        F.col(id_col).cast("long").alias(id_col), "embedding"
+        F.col("vec_id").cast("long").alias("vec_id"), "embedding"
     )
-    sigs = ann_signatures(emb, dim, n_tables, n_bits, seed, id_col)
-    a = sigs.select(F.col(id_col).alias("vec_id1"), "key")
-    b = sigs.select(F.col(id_col).alias("vec_id2"), "key")
+    sigs = ann_signatures(emb, dim, n_tables=8, n_bits=4, seed=42)
+    a = sigs.select(F.col("vec_id").alias("vec_id1"), "key")
+    b = sigs.select(F.col("vec_id").alias("vec_id2"), "key")
     cands = (
         a.join(b, "key")
         .filter(F.col("vec_id1") < F.col("vec_id2"))
         .select("vec_id1", "vec_id2")
         .distinct()
     )
-    e1 = emb.select(F.col(id_col).alias("vec_id1"), F.col("embedding").alias("e1"))
-    e2 = emb.select(F.col(id_col).alias("vec_id2"), F.col("embedding").alias("e2"))
+    e1 = emb.select(F.col("vec_id").alias("vec_id1"), F.col("embedding").alias("e1"))
+    e2 = emb.select(F.col("vec_id").alias("vec_id2"), F.col("embedding").alias("e2"))
     pair_cos = make_pair_cosine_udf()
     return (
         cands.join(e1, "vec_id1")
@@ -348,69 +304,25 @@ def probe_keys(
     return sorted(probes)
 
 
-def embedding_clusters(
-    embeddings: DataFrame,
-    threshold: float,
-    id_col: str = "vec_id",
-    max_exact_rows: int = 200_000,
-    cc_driver_max_edges: int = 2_000_000,
-    n_rows: int | None = None,
-    dim: int | None = None,
-    method: str = "auto",
-    pairs: DataFrame | None = None,
-) -> DataFrame:
-    """Embedding-cosine near-duplicate CLUSTERING: cosine_pairs edges →
+def embedding_clusters(embeddings: DataFrame, pairs: DataFrame) -> DataFrame:
+    """Embedding-cosine near-duplicate CLUSTERING: ``pairs`` (a
+    ``cosine_pairs`` frame over ``embeddings``, ideally persisted) →
     connected components → (vec_id, component, is_canonical), the embedding
-    analog of the MinHash pipeline's cluster output (component = min vec_id
-    of the component; singletons label themselves).
-
-    Pairs route exact/bucketed by corpus size exactly like cosine_pairs;
-    CC routes driver/distributed by edge count like the main pipeline.
-    Pass ``pairs`` (an already-computed — ideally persisted — cosine_pairs
-    frame for the same embeddings/threshold) to reuse it instead of
-    re-scoring the corpus."""
+    analog of the MinHash pipeline's cluster output (component = numeric
+    min vec_id of the component; singletons label themselves). CC routes
+    driver/distributed by edge count in ``cluster.components``."""
     from . import cluster
 
-    if pairs is None:
-        pairs = cosine_pairs(
-            embeddings, threshold, id_col=id_col,
-            max_exact_rows=max_exact_rows,
-            n_rows=n_rows, dim=dim, method=method,
-        )
-    pairs = pairs.select(
-        F.col("vec_id1").cast("string").alias("fid1"),
-        F.col("vec_id2").cast("string").alias("fid2"),
+    labels = cluster.components(pairs.select(
+        F.col("vec_id1").alias("fid1"), F.col("vec_id2").alias("fid2")
+    ))
+    out = cluster.label_universe(
+        labels, embeddings.select(F.col("vec_id").cast("long").alias("fid"))
     )
-    # route with ONE action (the pipeline.py / geo.py pattern):
-    # limit(max+1).collect() both counts and fetches the edges — the former
-    # count-then-collect pair executed the unpersisted pair-scoring plan
-    # TWICE. Oversized edge sets (rare: the near-dup graph is sparse) fall
-    # back to the distributed loop, which re-executes once — exactly what
-    # the old count path did.
-    edge_rows = pairs.limit(cc_driver_max_edges + 1).collect()
-    if len(edge_rows) <= cc_driver_max_edges:
-        labels = cluster.union_find_rows(edge_rows, embeddings.sparkSession,
-                                         id_type="string")
-    else:
-        labels = cluster.connected_components(pairs)
-    # string CC labels order lexicographically; re-derive the numeric min
-    # per component so the contract is numeric-min vec_id
-    lab = labels.select(
-        F.col("fid").cast("long").alias(id_col),
-        F.col("component").alias("comp_str"),
-    )
-    comp_min = lab.groupBy("comp_str").agg(
-        F.min(id_col).alias("component")
-    )
-    labeled = lab.join(comp_min, "comp_str").select(id_col, "component")
-    return (
-        embeddings.select(F.col(id_col).cast("long").alias(id_col))
-        .join(labeled, id_col, "left")
-        .select(
-            id_col,
-            F.coalesce("component", F.col(id_col)).alias("component"),
-        )
-        .withColumn("is_canonical", F.col(id_col) == F.col("component"))
+    return out.select(
+        F.col("fid").alias("vec_id"),
+        "component",
+        (F.col("fid") == F.col("component")).alias("is_canonical"),
     )
 
 
@@ -457,14 +369,12 @@ def make_ivf_assign_udf(centroids: np.ndarray):
     return assign_udf
 
 
-def ivf_signatures(
-    embeddings: DataFrame, centroids: np.ndarray, id_col: str = "vec_id"
-) -> DataFrame:
+def ivf_signatures(embeddings: DataFrame, centroids: np.ndarray) -> DataFrame:
     """(id, list_id) — the IVF inverted index. At scale: write once,
     partitioned/bucketed BY list_id, so a probe prunes to nprobe lists."""
     assign_udf = make_ivf_assign_udf(centroids)
     return embeddings.select(
-        F.col(id_col), assign_udf(F.col("embedding")).alias("list_id")
+        F.col("vec_id"), assign_udf(F.col("embedding")).alias("list_id")
     )
 
 
@@ -474,7 +384,6 @@ def ivf_topk(
     centroids: np.ndarray,
     nprobe: int = 2,
     k: int = 10,
-    id_col: str = "vec_id",
 ) -> DataFrame:
     """IVF approximate top-k: probe the nprobe closest inverted lists, exact
     cosine re-rank on their members — the classic alternative to sign-LSH
@@ -485,9 +394,9 @@ def ivf_topk(
     scores = C @ q
     order = np.argsort(-scores, kind="stable")
     probes = [int(x) for x in order[:nprobe]]
-    sigs = ivf_signatures(embeddings, centroids, id_col)
-    cands = sigs.filter(F.col("list_id").isin(probes)).select(id_col)
-    return brute_force_topk(embeddings.join(cands, id_col), qvec, k, id_col)
+    sigs = ivf_signatures(embeddings, centroids)
+    cands = sigs.filter(F.col("list_id").isin(probes)).select("vec_id")
+    return brute_force_topk(embeddings.join(cands, "vec_id"), qvec, k)
 
 
 def lsh_topk(

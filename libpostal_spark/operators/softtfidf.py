@@ -26,9 +26,9 @@ by floor (deterministic on bit-identical doubles, immune to the engines'
 differing round() tie conventions); the displayed similarity is
 soft_e4 / 10^4, again exact.
 
-Scale shape: token sets are CAPPED at ``max_tokens`` per record (sorted
+Scale shape: token sets are CAPPED at ``MAX_TOKENS`` per record (sorted
 distinct prefix — deterministic), so the per-pair candidate product is
-O(max_tokens²) flat; df/weights form a small broadcastable table; the JW
+O(MAX_TOKENS²) flat; df/weights form a small broadcastable table; the JW
 kernel runs one Arrow batch pass over the exploded candidate pairs. At
 10^12 rows every stage is a bounded explode + hash agg — no quadratic
 blowup in record length.
@@ -45,25 +45,27 @@ NEEDS_REVIEW_THRESHOLD = 0.7
 # Cohen et al. "CLOSE(θ, A, B)" closeness bar on the inner JW
 JW_CLOSE_E4 = 9000
 _W_SCALE = 1_000_000
+MAX_TOKENS = 10    # token-set cap per record (see "Scale shape" above)
+JW_MAX_LEN = 16    # chars per token the JW/DL kernels compare
 
 
-def _capped_token_sets(docs: DataFrame, text_col: str, id_col: str, max_tokens: int) -> DataFrame:
-    """(id, token) pairs: first max_tokens of the sorted distinct lowercase
+def _capped_token_sets(docs: DataFrame) -> DataFrame:
+    """(doc_id, token) pairs: first MAX_TOKENS of the sorted distinct lowercase
     whitespace tokens per doc — a deterministic bounded token set."""
     toks = docs.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.explode(
             F.slice(
                 F.array_sort(
                     F.array_distinct(
                         F.filter(
-                            F.split(F.lower(F.trim(F.col(text_col))), r"\s+"),
+                            F.split(F.lower(F.trim(F.col("text"))), r"\s+"),
                             lambda t: F.length(t) > 0,
                         )
                     )
                 ),
                 1,
-                max_tokens,
+                MAX_TOKENS,
             )
         ).alias("token"),
     )
@@ -73,49 +75,45 @@ def _capped_token_sets(docs: DataFrame, text_col: str, id_col: str, max_tokens: 
 def _weighted_cand(
     docs: DataFrame,
     pairs: DataFrame | None,
-    text_col: str,
-    id_col: str,
-    max_tokens: int,
     toks: DataFrame | None = None,
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
     """Shared scaffolding for the Soft-TFIDF operators: default
     adjacent-id pairs, the exploded per-pair token-candidate product with
     tf-idf weights on both sides, and the per-doc integer weight norms.
-    Pass ``toks`` (a ``_capped_token_sets`` frame for the same docs/params)
+    Pass ``toks`` (a ``_capped_token_sets`` frame for the same docs)
     to share one tokenization across composed operators."""
-    ids = docs.select(F.col(id_col).cast("long").alias(id_col))
+    ids = docs.select(F.col("doc_id").cast("long").alias("doc_id"))
     if pairs is None:
-        a = ids.select(F.col(id_col).alias("doc_id1"))
-        b = ids.select((F.col(id_col) - 1).alias("doc_id1"),
-                       F.col(id_col).alias("doc_id2"))
+        a = ids.select(F.col("doc_id").alias("doc_id1"))
+        b = ids.select((F.col("doc_id") - 1).alias("doc_id1"),
+                       F.col("doc_id").alias("doc_id2"))
         pairs = a.join(b, "doc_id1").select("doc_id1", "doc_id2")
 
     if toks is None:
         toks = _capped_token_sets(
-            docs.withColumn(id_col, F.col(id_col).cast("long")),
-            text_col, id_col, max_tokens,
+            docs.withColumn("doc_id", F.col("doc_id").cast("long"))
         )
     # df over the capped universe; weights are a SMALL table (distinct
     # tokens) — broadcast into every consumer
     wtab = (
         toks.groupBy("token")
-        .agg(F.countDistinct(id_col).alias("df"))
+        .agg(F.countDistinct("doc_id").alias("df"))
         .withColumn("w", F.floor(F.lit(_W_SCALE) / F.col("df")).cast("long"))
         .select("token", "w")
     )
     wt = toks.join(F.broadcast(wtab), "token").select(
-        F.col(id_col), "token", "w"
+        F.col("doc_id"), "token", "w"
     )
     # per-side weight norms (integer Σ w²)
-    norms = wt.groupBy(id_col).agg(F.sum(F.col("w") * F.col("w")).alias("n2"))
+    norms = wt.groupBy("doc_id").agg(F.sum(F.col("w") * F.col("w")).alias("n2"))
 
     ta = wt.select(
-        F.col(id_col).alias("doc_id1"),
+        F.col("doc_id").alias("doc_id1"),
         F.col("token").alias("tok_a"),
         F.col("w").alias("w_a"),
     )
     tb = wt.select(
-        F.col(id_col).alias("doc_id2"),
+        F.col("doc_id").alias("doc_id2"),
         F.col("token").alias("tok_b"),
         F.col("w").alias("w_b"),
     )
@@ -131,10 +129,6 @@ ORDINAL_TOKEN_RE = r"^[0-9]+(st|nd|rd|th)$"
 def soft_tfidf_full_pairs(
     docs: DataFrame,
     pairs: DataFrame | None = None,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    max_tokens: int = 10,
-    jw_max_len: int = 16,
     affine_gap_abbreviations: bool = True,
     ordinal_suffixes: bool = True,
     with_no_abbrev_twin: bool = False,
@@ -188,10 +182,8 @@ def soft_tfidf_full_pairs(
             "with_no_abbrev_twin requires affine_gap_abbreviations=True"
         )
 
-    pairs, cand, norms = _weighted_cand(
-        docs, pairs, text_col, id_col, max_tokens
-    )
-    m = make_ladder_udf(jw_max_len)(F.col("tok_a"), F.col("tok_b"))
+    pairs, cand, norms = _weighted_cand(docs, pairs)
+    m = make_ladder_udf(JW_MAX_LEN)(F.col("tok_a"), F.col("tok_b"))
     ordm = (
         (
             F.col("tok_a").rlike(ORDINAL_TOKEN_RE)
@@ -316,12 +308,12 @@ def soft_tfidf_full_pairs(
     out = (
         pairs.join(agg, ["doc_id1", "doc_id2"], "left")
         .join(
-            norms.select(F.col(id_col).alias("doc_id1"),
+            norms.select(F.col("doc_id").alias("doc_id1"),
                          F.col("n2").alias("na2")),
             "doc_id1", "left",
         )
         .join(
-            norms.select(F.col(id_col).alias("doc_id2"),
+            norms.select(F.col("doc_id").alias("doc_id2"),
                          F.col("n2").alias("nb2")),
             "doc_id2", "left",
         )
@@ -409,10 +401,6 @@ def fuzzy_dup_status_pairs(
     docs: DataFrame,
     pairs: DataFrame | None = None,
     subset_status: str = "non_duplicate",
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    max_tokens: int = 10,
-    jw_max_len: int = 16,
 ) -> DataFrame:
     """The reference's full ``is_fuzzy_duplicate`` composition
     (/root/reference/src/dedupe.c:340-484) on top of Soft-TFIDF:
@@ -445,40 +433,36 @@ def fuzzy_dup_status_pairs(
     # lattice's token counts / single-letter sets below — both the plan
     # cost and the drift hazard of two call sites disappear
     toks = _capped_token_sets(
-        docs.withColumn(id_col, F.col(id_col).cast("long")),
-        text_col, id_col, max_tokens,
+        docs.withColumn("doc_id", F.col("doc_id").cast("long"))
     )
-    base = soft_tfidf_pairs(
-        docs, pairs, text_col=text_col, id_col=id_col,
-        max_tokens=max_tokens, jw_max_len=jw_max_len, _toks=toks,
-    )
-    ntok = toks.groupBy(id_col).agg(F.count("*").alias("nt"))
+    base = soft_tfidf_pairs(docs, pairs, _toks=toks)
+    ntok = toks.groupBy("doc_id").agg(F.count("*").alias("nt"))
     letters = (
         toks.filter(
             (F.length("token") == 1) & F.col("token").rlike(r"^\p{L}$")
         )
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(F.array_sort(F.collect_set("token")).alias("letters"))
     )
     empty = F.expr("cast(array() as array<string>)")
     out = (
         base.join(
-            ntok.select(F.col(id_col).alias("doc_id1"), F.col("nt").alias("nt1")),
+            ntok.select(F.col("doc_id").alias("doc_id1"), F.col("nt").alias("nt1")),
             "doc_id1", "left",
         )
         .join(
-            ntok.select(F.col(id_col).alias("doc_id2"), F.col("nt").alias("nt2")),
+            ntok.select(F.col("doc_id").alias("doc_id2"), F.col("nt").alias("nt2")),
             "doc_id2", "left",
         )
         .join(
             letters.select(
-                F.col(id_col).alias("doc_id1"), F.col("letters").alias("l1")
+                F.col("doc_id").alias("doc_id1"), F.col("letters").alias("l1")
             ),
             "doc_id1", "left",
         )
         .join(
             letters.select(
-                F.col(id_col).alias("doc_id2"), F.col("letters").alias("l2")
+                F.col("doc_id").alias("doc_id2"), F.col("letters").alias("l2")
             ),
             "doc_id2", "left",
         )
@@ -508,10 +492,6 @@ def fuzzy_dup_status_pairs(
 def soft_tfidf_pairs(
     docs: DataFrame,
     pairs: DataFrame | None = None,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    max_tokens: int = 10,
-    jw_max_len: int = 16,
     _toks: DataFrame | None = None,
 ) -> DataFrame:
     """Soft-TFIDF score per candidate pair.
@@ -527,14 +507,12 @@ def soft_tfidf_pairs(
     """
     from ..functions.udfs import make_strsim_udf
 
-    pairs, cand, norms = _weighted_cand(
-        docs, pairs, text_col, id_col, max_tokens, toks=_toks
-    )
+    pairs, cand, norms = _weighted_cand(docs, pairs, toks=_toks)
 
     # the reference's match ladder (soft_tfidf.c:240-465): exact/JW ≥ 0.9,
     # OR Damerau-Levenshtein ≤ 1 for tokens of length ≥ 4 (typo rung) —
     # a DL-rung match scores with its JW value like any other match
-    strsim = make_strsim_udf(jw_max_len)
+    strsim = make_strsim_udf(JW_MAX_LEN)
     m = strsim(F.col("tok_a"), F.col("tok_b"))
     scored = (
         cand.withColumn("jw_e4", F.floor(m["jw"] * 10000).cast("long"))
@@ -567,12 +545,12 @@ def soft_tfidf_pairs(
     out = (
         pairs.join(agg, ["doc_id1", "doc_id2"], "left")
         .join(
-            norms.select(F.col(id_col).alias("doc_id1"),
+            norms.select(F.col("doc_id").alias("doc_id1"),
                          F.col("n2").alias("na2")),
             "doc_id1", "left",
         )
         .join(
-            norms.select(F.col(id_col).alias("doc_id2"),
+            norms.select(F.col("doc_id").alias("doc_id2"),
                          F.col("n2").alias("nb2")),
             "doc_id2", "left",
         )

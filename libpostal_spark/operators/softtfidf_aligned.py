@@ -61,7 +61,7 @@ Scale shape: token/weight arrays are built distributively (pos-explode +
 broadcast weight join + re-agg — no driver collect); the numeric kernels
 (JW / DL / abbreviation flags) run ONCE per Arrow batch over the flattened
 candidate token pairs of every row in the batch; the remaining per-pair
-control flow is O(max_tokens²) comparisons on precomputed values. No
+control flow is O(_MAX_TOKENS²) comparisons on precomputed values. No
 shuffle beyond the pair join and the per-doc token agg.
 """
 
@@ -69,7 +69,7 @@ from __future__ import annotations
 
 import math
 import re
-from typing import Iterable, Iterator, Tuple
+from typing import Iterator, Tuple
 
 import numpy as np
 import pandas as pd
@@ -82,7 +82,8 @@ from .softtfidf import (
     _W_SCALE,
 )
 
-_DEF_MAX_TOKENS = 16
+_MAX_TOKENS = 16           # positional token cap per record
+_MAX_LEN = 32              # chars per token the string kernels compare
 _JW_MIN = 0.9
 _JW_MIN_LEN = 4            # jaro_winkler_min_length (soft_tfidf.c:11)
 _DL_MAX = 1                # damerau_levenshtein_max (:12)
@@ -96,20 +97,16 @@ _ORD_RE = re.compile(ORDINAL_TOKEN_RE)
 _NO_MATCH, _NEITHER, _SECOND, _FIRST, _BOTH = 0, 1, 2, 3, 4
 
 
-def build_phrase_lookup(
-    expansions: Iterable[tuple[str, str]] | None = None,
-) -> tuple[dict, int]:
+def build_phrase_lookup() -> tuple[dict, int]:
     """(phrase-token-tuple → (canonical, is_canonical_entry), max phrase
-    token length). Canonical values become implicit canonical-form
-    entries."""
-    if expansions is None:
-        from ..dictionaries import DEFAULT_CODE_EXPANSIONS
+    token length) over ``DEFAULT_CODE_EXPANSIONS``. Canonical values
+    become implicit canonical-form entries."""
+    from ..dictionaries import DEFAULT_CODE_EXPANSIONS
 
-        expansions = DEFAULT_CODE_EXPANSIONS
     lut: dict[tuple, tuple[str, bool]] = {}
-    for key, canon in expansions:
+    for key, canon in DEFAULT_CODE_EXPANSIONS:
         lut[tuple(key.split())] = (canon, key == canon)
-    for _, canon in expansions:
+    for _, canon in DEFAULT_CODE_EXPANSIONS:
         lut.setdefault(tuple(canon.split()), (canon, True))
     max_len = max((len(k) for k in lut), default=1)
     return lut, max_len
@@ -211,8 +208,6 @@ def score_pair(
     lut: dict,
     max_phrase_len: int,
     sim_of=None,
-    affine_gap_abbreviations: bool = True,
-    ordinal_suffixes: bool = True,
 ) -> tuple[float, int]:
     """One pair through the full integrated scorer; returns (sim,
     n_matched). ``sim_of(i, j) -> (jw, dl, abrv, strict)`` supplies the
@@ -260,7 +255,7 @@ def score_pair(
         use_jw = la >= _JW_MIN_LEN
         use_dl = la >= _DL_MIN_LEN
         use_strict = la >= _STRICT_MIN_LEN
-        a_ord = ordinal_suffixes and bool(_ORD_RE.match(a))
+        a_ord = bool(_ORD_RE.match(a))
 
         max_sim, argmax = 0.0, 0
         min_dist, argmin, argmin_sim = la, 0, 0.0
@@ -300,16 +295,15 @@ def score_pair(
                 max_sim, argmax = jw, j
             if use_dl and 0 <= dl < min_dist:
                 min_dist, argmin, argmin_sim = dl, j, jw
-            if affine_gap_abbreviations and abrv:
+            if abrv:
                 last_ab, last_ab_sim, have_ab = j, jw, True
                 if use_strict and strict and last_ab_sim < _STRICT_SIM:
                     last_ab_sim = _STRICT_SIM
-            if ordinal_suffixes:
-                if a_ord:
-                    if a.startswith(b):
-                        last_ord, have_ord = j, True
-                elif _ORD_RE.match(b) and b.startswith(a):
+            if a_ord:
+                if a.startswith(b):
                     last_ord, have_ord = j, True
+            elif _ORD_RE.match(b) and b.startswith(a):
+                last_ord, have_ord = j, True
 
         if not have_acr and not have_phrase and not have_mw:
             if have_eq or (use_jw and max_sim >= _JW_MIN):
@@ -332,7 +326,7 @@ def score_pair(
                     argmin_sim = max(last_ab_sim, argmin_sim)
                 total += argmin_sim * w1[i] * t2s
                 matched += 1
-            elif affine_gap_abbreviations and have_ab:
+            elif have_ab:
                 total += last_ab_sim * w1[i] * w2[last_ab]
                 matched += 1
             elif have_ord:
@@ -370,7 +364,7 @@ def score_pair(
     return (1.0 if sim > 1.0 else sim), matched
 
 
-def _scalar_sim_factory(t1: list, t2: list, max_len: int = 32):
+def _scalar_sim_factory(t1: list, t2: list):
     """Per-call batch-kernel wrapper for a single pair (test/fallback
     path; the Spark operator precomputes whole-Arrow-batch kernels)."""
     from ..core import strsim
@@ -382,10 +376,10 @@ def _scalar_sim_factory(t1: list, t2: list, max_len: int = 32):
             aa.append(a)
             bb.append(b)
     s1, s2 = pd.Series(aa, dtype=object), pd.Series(bb, dtype=object)
-    codes = strsim.encode_pair(s1, s2, max_len)
-    jw = strsim.jaro_winkler_batch(s1, s2, max_len, codes=codes)
-    dl = strsim.damerau_levenshtein_batch(s1, s2, max_len, codes=codes)
-    ab, st = strsim.abbrev_flags_batch(s1, s2, max_len, codes=codes)
+    codes = strsim.encode_pair(s1, s2, _MAX_LEN)
+    jw = strsim.jaro_winkler_batch(s1, s2, _MAX_LEN, codes=codes)
+    dl = strsim.damerau_levenshtein_batch(s1, s2, _MAX_LEN, codes=codes)
+    ab, st = strsim.abbrev_flags_batch(s1, s2, _MAX_LEN, codes=codes)
 
     def sim_of(i, j, _swapped=False):
         k = i * n2 + j
@@ -394,13 +388,7 @@ def _scalar_sim_factory(t1: list, t2: list, max_len: int = 32):
     return sim_of
 
 
-def _make_scorer_udf(
-    lut: dict,
-    max_phrase_len: int,
-    max_len: int,
-    affine_gap_abbreviations: bool,
-    ordinal_suffixes: bool,
-):
+def _make_scorer_udf(lut: dict, max_phrase_len: int):
     from ..core import strsim
 
     schema = T.StructType(
@@ -445,10 +433,10 @@ def _make_scorer_udf(
             if flat_a:
                 s1 = pd.Series(flat_a, dtype=object)
                 s2 = pd.Series(flat_b, dtype=object)
-                codes = strsim.encode_pair(s1, s2, max_len)
-                jw = strsim.jaro_winkler_batch(s1, s2, max_len, codes=codes)
-                dl = strsim.damerau_levenshtein_batch(s1, s2, max_len, codes=codes)
-                ab, stc = strsim.abbrev_flags_batch(s1, s2, max_len, codes=codes)
+                codes = strsim.encode_pair(s1, s2, _MAX_LEN)
+                jw = strsim.jaro_winkler_batch(s1, s2, _MAX_LEN, codes=codes)
+                dl = strsim.damerau_levenshtein_batch(s1, s2, _MAX_LEN, codes=codes)
+                ab, stc = strsim.abbrev_flags_batch(s1, s2, _MAX_LEN, codes=codes)
             sims = np.zeros(rows, dtype=np.float64)
             nm = np.zeros(rows, dtype=np.int64)
             for r in range(rows):
@@ -472,8 +460,6 @@ def _make_scorer_udf(
                     lut,
                     max_phrase_len,
                     sim_of=sim_of,
-                    affine_gap_abbreviations=affine_gap_abbreviations,
-                    ordinal_suffixes=ordinal_suffixes,
                 )
                 sims[r] = s
                 nm[r] = m
@@ -485,14 +471,7 @@ def _make_scorer_udf(
 def soft_tfidf_aligned_pairs(
     docs: DataFrame,
     pairs: DataFrame | None = None,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    max_tokens: int = _DEF_MAX_TOKENS,
     weight_mode: str = "df",
-    expansions: Iterable[tuple[str, str]] | None = None,
-    max_len: int = 32,
-    affine_gap_abbreviations: bool = True,
-    ordinal_suffixes: bool = True,
 ) -> DataFrame:
     """Integrated Soft-TFIDF over candidate pairs (module docstring for
     semantics). ``weight_mode``: 'df' = ⌊10⁶/df⌋ token weights from the
@@ -505,23 +484,23 @@ def soft_tfidf_aligned_pairs(
     """
     if weight_mode not in ("df", "unit"):
         raise ValueError(f"weight_mode must be df|unit, got {weight_mode!r}")
-    lut, max_phrase_len = build_phrase_lookup(expansions)
+    lut, max_phrase_len = build_phrase_lookup()
 
-    ids = docs.select(F.col(id_col).cast("long").alias(id_col))
+    ids = docs.select(F.col("doc_id").cast("long").alias("doc_id"))
     if pairs is None:
-        a = ids.select(F.col(id_col).alias("doc_id1"))
+        a = ids.select(F.col("doc_id").alias("doc_id1"))
         b = ids.select(
-            (F.col(id_col) - 1).alias("doc_id1"),
-            F.col(id_col).alias("doc_id2"),
+            (F.col("doc_id") - 1).alias("doc_id1"),
+            F.col("doc_id").alias("doc_id2"),
         )
         pairs = a.join(b, "doc_id1").select("doc_id1", "doc_id2")
 
     toks_expr = (
-        f"slice(filter(split(lower(trim({text_col})), '\\\\s+'),"
-        f" t -> length(t) > 0), 1, {max_tokens})"
+        "slice(filter(split(lower(trim(text)), '\\\\s+'),"
+        f" t -> length(t) > 0), 1, {_MAX_TOKENS})"
     )
     feat = docs.select(
-        F.col(id_col).cast("long").alias(id_col),
+        F.col("doc_id").cast("long").alias("doc_id"),
         F.expr(toks_expr).alias("toks"),
     )
     if weight_mode == "unit":
@@ -530,10 +509,10 @@ def soft_tfidf_aligned_pairs(
         )
     else:
         tok = feat.select(
-            id_col, F.posexplode("toks").alias("pos", "token")
+            "doc_id", F.posexplode("toks").alias("pos", "token")
         )
         wtab = (
-            tok.select(id_col, "token")
+            tok.select("doc_id", "token")
             .distinct()
             .groupBy("token")
             .agg(F.count("*").alias("df"))
@@ -545,37 +524,34 @@ def soft_tfidf_aligned_pairs(
         )
         warr = (
             tok.join(F.broadcast(wtab), "token")
-            .groupBy(id_col)
+            .groupBy("doc_id")
             .agg(
                 F.array_sort(
                     F.collect_list(F.struct("pos", "w"))
                 ).alias("pw")
             )
             .select(
-                id_col,
+                "doc_id",
                 F.expr("transform(pw, x -> x.w)").alias("ws"),
             )
         )
-        feat = feat.join(warr, id_col, "left").withColumn(
+        feat = feat.join(warr, "doc_id", "left").withColumn(
             "ws",
             F.coalesce(F.col("ws"), F.expr("cast(array() as array<double>)")),
         )
 
     fa = feat.select(
-        F.col(id_col).alias("doc_id1"),
+        F.col("doc_id").alias("doc_id1"),
         F.col("toks").alias("t1"),
         F.col("ws").alias("ww1"),
     )
     fb = feat.select(
-        F.col(id_col).alias("doc_id2"),
+        F.col("doc_id").alias("doc_id2"),
         F.col("toks").alias("t2"),
         F.col("ws").alias("ww2"),
     )
     joined = pairs.join(fa, "doc_id1").join(fb, "doc_id2")
-    udf = _make_scorer_udf(
-        lut, max_phrase_len, max_len,
-        affine_gap_abbreviations, ordinal_suffixes,
-    )
+    udf = _make_scorer_udf(lut, max_phrase_len)
     out = joined.withColumn(
         "m", udf(F.col("t1"), F.col("ww1"), F.col("t2"), F.col("ww2"))
     )
@@ -606,11 +582,7 @@ def fuzzy_dup_status_aligned_pairs(
     docs: DataFrame,
     pairs: DataFrame | None = None,
     subset_status: str = "non_duplicate",
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    max_tokens: int = _DEF_MAX_TOKENS,
     weight_mode: str = "df",
-    expansions: Iterable[tuple[str, str]] | None = None,
 ) -> DataFrame:
     """The reference's full ``is_fuzzy_duplicate`` composition
     (/root/reference/src/dedupe.c:340-484) over the INTEGRATED scorer —
@@ -621,7 +593,7 @@ def fuzzy_dup_status_aligned_pairs(
     demotion (``:427-441``), all in the integer e4 domain via the shared
     ``fuzzy_lattice_status`` used by the sorted-set variant.
 
-    Token counts here are POSITIONAL (first ``max_tokens`` whitespace
+    Token counts here are POSITIONAL (first ``_MAX_TOKENS`` whitespace
     tokens, duplicates counted) — the aligned scorer's token model, and
     the reference's (it passes the raw token arrays). Output:
     doc_id1/2, n_matched, n_tokens1/2, sim_e4, single_letter_mismatch,
@@ -629,20 +601,16 @@ def fuzzy_dup_status_aligned_pairs(
     """
     from .softtfidf import fuzzy_lattice_status
 
-    base = soft_tfidf_aligned_pairs(
-        docs, pairs, text_col=text_col, id_col=id_col,
-        max_tokens=max_tokens, weight_mode=weight_mode,
-        expansions=expansions,
-    )
+    base = soft_tfidf_aligned_pairs(docs, pairs, weight_mode=weight_mode)
     toks_expr = (
-        f"slice(filter(split(lower(trim({text_col})), '\\\\s+'),"
-        f" t -> length(t) > 0), 1, {max_tokens})"
+        "slice(filter(split(lower(trim(text)), '\\\\s+'),"
+        f" t -> length(t) > 0), 1, {_MAX_TOKENS})"
     )
     feat = docs.select(
-        F.col(id_col).cast("long").alias(id_col),
+        F.col("doc_id").cast("long").alias("doc_id"),
         F.expr(toks_expr).alias("toks"),
     ).select(
-        id_col,
+        "doc_id",
         F.size("toks").cast("long").alias("nt"),
         F.array_sort(
             F.array_distinct(
@@ -655,7 +623,7 @@ def fuzzy_dup_status_aligned_pairs(
     out = (
         base.join(
             feat.select(
-                F.col(id_col).alias("doc_id1"),
+                F.col("doc_id").alias("doc_id1"),
                 F.col("nt").alias("nt1"),
                 F.col("letters").alias("l1"),
             ),
@@ -663,7 +631,7 @@ def fuzzy_dup_status_aligned_pairs(
         )
         .join(
             feat.select(
-                F.col(id_col).alias("doc_id2"),
+                F.col("doc_id").alias("doc_id2"),
                 F.col("nt").alias("nt2"),
                 F.col("letters").alias("l2"),
             ),

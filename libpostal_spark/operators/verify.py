@@ -49,8 +49,12 @@ def verified_pairs(
     for every pair plus the exact substring verification for winnow-only
     rows. A winnow hit is ACCEPTED only when the verified common run really
     reaches the guarantee bar — the measured (not w.h.p.) form of the
-    long-clone rule. lcs_tokens = -1 marks rows where the run check was
-    skipped (jaccard already decided). A pair whose alignment budget was
+    long-clone rule. ``lcs_tokens`` is the length of a verified shared
+    token run, not necessarily the longest: ``pair_lcs_batch`` stops at
+    the first verified run that reaches the bar, so an accepted pair's
+    value is at least ``winnow_guarantee`` and at most the true LCS.
+    lcs_tokens = -1 marks rows where the run check was skipped (jaccard
+    already decided). A pair whose alignment budget was
     exhausted carries ``lcs_exhausted``; one whose under-reported run fell
     below the confirm bar is absent by construction.
     """

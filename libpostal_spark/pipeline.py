@@ -166,29 +166,11 @@ class DedupPipeline:
             lambda: verify.verified_pairs(pairs, rep_sigs, cfg),
             fp,
         )
-        n_confirmed = None
-        edge_rows = None
         if not resumable:
+            # the CC router's limit(max+1).collect() materializes this
+            # cache in the same action that fetches the edge list
             confirmed = confirmed.persist()
             persisted.append(confirmed)
-            # ONE action materializes the confirm cache AND fetches the edge
-            # list when it fits the driver-CC budget: limit(max+1).collect()
-            # replaces the former count + collect pair (two sequential
-            # driver waves — measured ~0.5-1 s of the per-run serial floor).
-            # When every partition is exhausted below the limit (the common
-            # case after exact contraction), the incremental take has
-            # scanned — and therefore cached — all of them; the oversized
-            # path falls back to a count, which completes materialization.
-            edge_rows = (
-                confirmed.select("fid1", "fid2")
-                .limit(cfg.cc_driver_max_edges + 1)
-                .collect()
-            )
-            if len(edge_rows) <= cfg.cc_driver_max_edges:
-                n_confirmed = len(edge_rows)
-            else:
-                edge_rows = None
-                n_confirmed = confirmed.count()  # materialize before CC fan-out
         bucket_stats = (
             [r.asDict() for r in bucket_stats_df.collect()]
             if collect_bucket_stats
@@ -201,13 +183,7 @@ class DedupPipeline:
         # rep's label with one join afterwards.
         rep_labels = self.store.stage(
             "components",
-            lambda: (
-                cluster.union_find_rows(edge_rows, self.spark, id_type="string")
-                if edge_rows is not None
-                else cluster.connected_components_auto(
-                    confirmed, n_confirmed, cfg.cc_driver_max_edges
-                )
-            ),
+            lambda: cluster.components(confirmed, cfg.cc_driver_max_edges),
             fp,
         )
         # Every row's component is its sha256-class representative's CC label

@@ -18,16 +18,12 @@ from pyspark.sql import functions as F
 from .config import PipelineConfig
 from .operators import blocking
 
+MAX_STATE_FIDS = 32   # member fids kept per non-empty LSH bucket
 
-def windowed_event_stats(
-    stream: DataFrame,
-    window: str = "1 hour",
-    watermark: str | None = "2 hours",
-    ts_col: str = "ts",
-    user_col: str = "user_id",
-    value_col: str = "value",
-) -> DataFrame:
-    """Generic event-stream windowed aggregation: per event-time window —
+
+def windowed_event_stats(stream: DataFrame) -> DataFrame:
+    """Event-stream windowed aggregation over (ts, user_id, value): per
+    1-hour event-time window with a 2-hour watermark —
     event count, EXACT distinct users (size(collect_set): streaming forbids
     count(DISTINCT); the set state is bounded by users-per-window — swap in
     approx_count_distinct at hyperscale), and an exact decimal value sum
@@ -41,13 +37,13 @@ def windowed_event_stats(
     the finalize-once incremental contract (a window is emitted once the
     watermark passes its end; later rows are dropped).
     """
-    src = stream.withWatermark(ts_col, watermark) if watermark else stream
     return (
-        src.groupBy(F.window(F.col(ts_col), window))
+        stream.withWatermark("ts", "2 hours")
+        .groupBy(F.window(F.col("ts"), "1 hour"))
         .agg(
             F.count("*").alias("n_events"),
-            F.size(F.collect_set(F.col(user_col))).alias("n_users"),
-            F.sum(F.col(value_col).cast("decimal(18,2)")).alias("sum_value"),
+            F.size(F.collect_set(F.col("user_id"))).alias("n_users"),
+            F.sum(F.col("value").cast("decimal(18,2)")).alias("sum_value"),
         )
         .select(
             F.col("window.start").alias("window_start"),
@@ -60,14 +56,14 @@ def windowed_event_stats(
 
 
 def stateful_near_dup_candidates(
-    stream: DataFrame, cfg: PipelineConfig, max_state_fids: int = 32,
+    stream: DataFrame, cfg: PipelineConfig,
     bands_limit: int | None = None, featurize_partitions: int | None = None,
 ) -> DataFrame:
     """Streaming NEAR-dup candidate alerts with cross-batch LSH state.
 
     files stream → featurize micro-batch (same UDF as batch) → explode the
     MinHash band keys → ``applyInPandasWithState`` keyed by (band, khash):
-    per bucket the state stores up to ``max_state_fids`` member fids; every
+    per bucket the state stores up to ``MAX_STATE_FIDS`` member fids; every
     new arrival that lands in a non-empty bucket emits candidate rows
     against the stored members. This upgrades the streaming contract from
     "exact alerts now" to "exact + LSH candidate alerts now, batch confirm
@@ -75,7 +71,7 @@ def stateful_near_dup_candidates(
     probability (P = 1-(1-t^r)^b across buckets), and the periodic batch
     pass remains the source of truth for verified clusters.
 
-    State is bounded: ≤ max_state_fids × 64 bytes per non-empty bucket
+    State is bounded: ≤ MAX_STATE_FIDS × 64 bytes per non-empty bucket
     (hot boilerplate buckets stop accumulating at the cap and keep alerting
     against the retained members — the streaming analog of star pairing;
     the batch pass covers the rest). Output (append mode):
@@ -143,7 +139,7 @@ def stateful_near_dup_candidates(
             for m in stored:
                 out_fid.append(fid)
                 out_match.append(m)
-            if len(stored) < max_state_fids:
+            if len(stored) < MAX_STATE_FIDS:
                 stored.append(fid)
         state.update((stored,))
         if out_fid:

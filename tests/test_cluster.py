@@ -5,8 +5,8 @@ import pytest
 from pyspark.sql import functions as F
 
 from libpostal_spark.operators.cluster import (
+    components,
     connected_components,
-    connected_components_driver,
     label_universe,
 )
 
@@ -61,20 +61,53 @@ def test_bridge_merges(spark):
 
 
 def test_encoded_and_string_paths_agree(spark):
-    """The distributed long-id loop (scale path) and driver union-find on
-    the raw fid strings must produce identical labels — min-fid component
-    contract included."""
+    """The router's two routes — the distributed long-id loop (scale path,
+    forced with a zero driver budget) and driver union-find — produce
+    identical labels on string ids AND on long ids, min-id component
+    contract included (numeric min for long ids: 9 < 10 < 100)."""
     import random
 
     rng = random.Random(3)
-    nodes = [f"fid{i:04d}" for i in range(120)]
-    edges = [tuple(rng.sample(nodes, 2)) for _ in range(90)]
-    df = spark.createDataFrame(edges, ["fid1", "fid2"])
-    enc = {r["fid"]: r["component"]
-           for r in connected_components(df).collect()}
-    raw = {r["fid"]: r["component"]
-           for r in connected_components_driver(df).collect()}
-    assert enc == raw
-    # labels are real min-fids
-    for f, c in enc.items():
-        assert c <= f
+    for nodes in ([f"fid{i:04d}" for i in range(120)], list(range(5, 125))):
+        edges = [tuple(rng.sample(nodes, 2)) for _ in range(90)]
+        df = spark.createDataFrame(edges, ["fid1", "fid2"])
+        dist = {r["fid"]: r["component"]
+                for r in components(df, 0).collect()}
+        driver = {r["fid"]: r["component"]
+                  for r in components(df).collect()}
+        assert dist == driver
+        # labels are real min-ids
+        for f, c in dist.items():
+            assert c <= f
+
+
+def test_components_empty_long_ids_keep_bigint(spark):
+    """A zero-edge long-id frame takes the driver route; its labels keep a
+    bigint fid (the edge schema's type), so they still join a bigint
+    universe."""
+    edges = spark.createDataFrame([], "fid1 bigint, fid2 bigint")
+    labels = components(edges)
+    assert labels.schema["fid"].dataType.simpleString() == "bigint"
+    assert labels.schema["component"].dataType.simpleString() == "bigint"
+    universe = spark.createDataFrame([(7,), (3,)], "fid bigint")
+    got = {r["fid"]: r["component"]
+           for r in label_universe(labels, universe).collect()}
+    assert got == {7: 7, 3: 3}
+
+
+def test_embedding_clusters_numeric_min_label(spark):
+    """vec_ids 9, 10 and 100 in one component are labeled 9, the numeric
+    min (string order would pick "10"); an unrelated vector stays a
+    singleton."""
+    from libpostal_spark.operators import similarity
+
+    df = spark.createDataFrame(
+        [(100, [1.0, 0.0]), (10, [1.0, 0.01]), (9, [1.0, 0.02]),
+         (50, [0.0, 1.0])],
+        "vec_id long, embedding array<float>",
+    )
+    pairs = similarity.cosine_pairs(df, 0.99)
+    got = {r["vec_id"]: (r["component"], r["is_canonical"])
+           for r in similarity.embedding_clusters(df, pairs).collect()}
+    assert got == {9: (9, True), 10: (9, False), 100: (9, False),
+                   50: (50, True)}

@@ -99,7 +99,7 @@ def test_dup_status_pairs_class_cap(spark):
         rows, "doc_id long, text string, lang string, source string"
     )
     pairs, ledger = dedup.dup_status_pairs_with_ledger(
-        spark, docs, PipelineConfig(), max_pairs_per_class=10_000
+        spark, docs, PipelineConfig()
     )
     got = pairs.collect()
     # star listing: exactly n-1 pairs, all anchored at the class rep (doc 0)
@@ -114,7 +114,7 @@ def test_dup_status_pairs_class_cap(spark):
     assert led[0]["pairs_suppressed"] == n * (n - 1) // 2 - (n - 1)
 
 
-def test_dup_status_pairs_near_cap(spark):
+def test_dup_status_pairs_near_cap(spark, monkeypatch):
     """Capped near-dup class products list star pairs through each rep and
     ledger the rest; uncapped output is unchanged (subset check)."""
     base = " ".join(f"tok{i} fill{i}" for i in range(30))
@@ -127,9 +127,8 @@ def test_dup_status_pairs_near_cap(spark):
     )
     cfg = PipelineConfig(jaccard_threshold=0.5)
     full = dedup.dup_status_pairs(spark, docs, cfg)  # cap not hit
-    capped, ledger = dedup.dup_status_pairs_with_ledger(
-        spark, docs, cfg, max_pairs_per_class=8
-    )
+    monkeypatch.setattr(dedup, "MAX_PAIRS_PER_CLASS", 8)
+    capped, ledger = dedup.dup_status_pairs_with_ledger(spark, docs, cfg)
     full_set = {(r["doc_id1"], r["doc_id2"]) for r in full.collect()}
     capped_rows = capped.collect()
     capped_set = {(r["doc_id1"], r["doc_id2"]) for r in capped_rows}

@@ -27,10 +27,10 @@ def decorated_pdf():
 
 
 def test_fit_spark_bit_equals_fit_local(spark, decorated_pdf):
-    """The distributed fit and the single-process twin fit produce
-    IDENTICAL int64 weights: integer gradient sums are partitioning-
-    independent and the per-doc float kernel is the same function. This is
-    the property the DuckDB oracle twin stands on."""
+    """fit_spark on a 7-partition Spark frame (the ordered sample collect
+    + fit_local) produces IDENTICAL int64 weights to fit_local on the
+    pandas table: the collected sample does not depend on partitioning.
+    This is the property the DuckDB oracle twin stands on."""
     local = LR.fit_local(decorated_pdf)
     sdf = E._langid_decorated(spark, SF).repartition(7)  # odd partitioning
     dist = LR.fit_spark(sdf)
@@ -56,7 +56,7 @@ def test_per_doc_kernel_deterministic(decorated_pdf):
     """Same (x, W, b) → same quantized error bits, independent of the
     surrounding batch (the property that lets executors and the twin
     builder agree)."""
-    m = LR.fit_local(decorated_pdf, iters=2)
+    m = LR.fit_local(decorated_pdf)
     vidx = {t: i for i, t in enumerate(m.vocab)}
     x = LR.normalize_features(
         LR.doc_features(decorated_pdf["text"].iloc[0], vidx, len(m.vocab))
@@ -75,7 +75,7 @@ def test_short_text_and_empty_vocab_paths(spark):
         columns=["doc_id", "text", "lang"],
     ).to_pandas()
     deco = E._langid_decorate_pdf(pdf)
-    m = LR.fit_local(deco, iters=2)
+    m = LR.fit_local(deco)
     sdf = spark.createDataFrame(
         [(1, "ab"), (2, "")], "doc_id long, text string"
     )
@@ -83,17 +83,3 @@ def test_short_text_and_empty_vocab_paths(spark):
     assert set(out["lang_pred"]) == {m.bias_pred}
     assert len(out) == 2
 
-
-def test_predict_spark_custom_text_col(spark):
-    """fit_spark and predict_spark pair on a non-default text column."""
-    from libpostal_spark.functions import logreg as LGR
-
-    df = spark.createDataFrame(
-        [(1, "the cat sat on the mat the cat", "en"),
-         (2, "der hund und der mann und der", "de")] * 3,
-        "doc_id long, body string, lang string",
-    )
-    m = LGR.fit_spark(df, text_col="body")
-    out = {r["doc_id"]: r["lang_pred"]
-           for r in LGR.predict_spark(df, m, text_col="body").collect()}
-    assert out[1] == "en" and out[2] == "de"

@@ -216,8 +216,8 @@ def test_bpe_token_count_matches_python(spark):
         assert got[i] == len(re.findall(BPE_PATTERN, t)), (t, got[i], re.findall(BPE_PATTERN, t))
 
 
-def test_cosine_pairs_bucketed_no_collect_and_recall(spark):
-    """The scale path (n > max_exact_rows) must route to the bucketed
+def test_cosine_pairs_bucketed_no_collect_and_recall(spark, monkeypatch):
+    """The scale path (n > MAX_EXACT_ROWS) must route to the bucketed
     LSH-candidate plan — zero driver-side collect, plain DataFrame lineage —
     and its surviving pairs must be a subset of the exact pairs with exact
     (re-ranked) scores; at a near-dup threshold recall should be high."""
@@ -234,10 +234,14 @@ def test_cosine_pairs_bucketed_no_collect_and_recall(spark):
         [(i, [float(x) for x in vecs[i]]) for i in range(len(vecs))],
         "vec_id long, embedding array<float>",
     )
+    # within the caps: the exact path, the reference for the checks below
+    exact = {
+        (r["vec_id1"], r["vec_id2"]): r["cos_sim"]
+        for r in similarity.cosine_pairs(df, threshold=0.9).collect()
+    }
     # force the bucketed route by setting the bound below n
-    out = similarity.cosine_pairs(
-        df, threshold=0.9, max_exact_rows=10, n_rows=len(vecs)
-    )
+    monkeypatch.setattr(similarity, "MAX_EXACT_ROWS", 10)
+    out = similarity.cosine_pairs(df, threshold=0.9)
     # plan must be distributed DataFrame ops end-to-end: no driver-side
     # broadcast-matrix kernel (the exact path's MapInPandas), no local
     # relation built from collected rows, and the candidate self-join
@@ -249,10 +253,6 @@ def test_cosine_pairs_bucketed_no_collect_and_recall(spark):
     assert "hashpartitioning(key" in plan
 
     got = {(r["vec_id1"], r["vec_id2"]): r["cos_sim"] for r in out.collect()}
-    exact = {
-        (r["vec_id1"], r["vec_id2"]): r["cos_sim"]
-        for r in similarity.cosine_pairs(df, threshold=0.9).collect()
-    }
     assert set(got) <= set(exact)
     for k, v in got.items():
         assert v == exact[k]          # re-rank is exact, not approximate
@@ -365,9 +365,10 @@ def test_embedding_clusters_transitive(spark):
         [(i, [float(x) for x in v]) for i, v in enumerate([a, b, c, d])],
         "vec_id long, embedding array<float>",
     )
+    pairs = similarity.cosine_pairs(df, threshold=0.93)
     got = {
         r["vec_id"]: (r["component"], r["is_canonical"])
-        for r in similarity.embedding_clusters(df, threshold=0.93).collect()
+        for r in similarity.embedding_clusters(df, pairs).collect()
     }
     assert got[0][0] == got[1][0] == got[2][0] == 0
     assert got[0][1] is True and got[1][1] is False
@@ -433,10 +434,10 @@ def test_multiword_fragment_empty_long_side(spark):
 
 
 def test_cosine_pairs_lsh_empty_frame(spark):
-    from libpostal_spark.operators.similarity import cosine_pairs
+    from libpostal_spark.operators.similarity import cosine_pairs_bucketed
 
     empty = spark.createDataFrame([], "vec_id long, embedding array<double>")
-    got = cosine_pairs(empty, 0.5, method="lsh")
+    got = cosine_pairs_bucketed(empty, 0.5)
     assert got.count() == 0
     assert set(got.columns) == {"vec_id1", "vec_id2", "cos_sim"}
 

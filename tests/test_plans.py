@@ -153,13 +153,12 @@ def test_blocking_keys_one_generate(spark, cfg):
     assert "Union" not in plan, plan
 
 
-def test_cosine_pairs_scale_route_plan(spark):
-    """Above max_exact_rows the auto route must produce the DISTRIBUTED
+def test_cosine_pairs_scale_route_plan(spark, monkeypatch):
+    """Above MAX_EXACT_ROWS the route must produce the DISTRIBUTED
     LSH-bucketed plan: a key self-join with no driver-collected relation
     (the exact path's broadcast matrix + MapInPandas must be absent), at
     most one logical LSH-key exchange pair, and the Arrow pair-cosine
-    re-rank present. Also pins the explicit-contract API: method='exact'
-    refuses instead of silently degrading recall."""
+    re-rank present. The switch to the approximate path warns."""
     import warnings
 
     import numpy as np
@@ -170,17 +169,13 @@ def test_cosine_pairs_scale_route_plan(spark):
         (i, [float((i * 7 + j) % 5 - 2) for j in range(8)]) for i in range(40)
     ]
     embs = spark.createDataFrame(rows, ["vec_id", "embedding"])
+    # within the caps: the exact path, the reference for the recall check
+    exact = similarity.cosine_pairs(embs, 0.9)
 
-    with pytest.raises(ValueError, match="exact"):
-        similarity.cosine_pairs(
-            embs, 0.9, max_exact_rows=10, n_rows=40, method="exact"
-        )
-
+    monkeypatch.setattr(similarity, "MAX_EXACT_ROWS", 10)
     with warnings.catch_warnings(record=True) as w:
         warnings.simplefilter("always")
-        pairs = similarity.cosine_pairs(
-            embs, 0.9, max_exact_rows=10, n_rows=40, dim=8
-        )
+        pairs = similarity.cosine_pairs(embs, 0.9)
         assert any("APPROXIMATE" in str(x.message) for x in w)
 
     plan = _plan(pairs)
@@ -193,27 +188,24 @@ def test_cosine_pairs_scale_route_plan(spark):
     }
     assert len(key_exchanges) <= 2, plan
 
-    # the clusters route shares the same pair plan above the cap
-    labels = similarity.embedding_clusters(
-        embs, 0.9, max_exact_rows=10, n_rows=40, dim=8
-    )
+    # the clusters route over those pairs keeps the bucketed pair plan
+    labels = similarity.embedding_clusters(embs, pairs)
     cplan = _plan(labels)
     assert "MapInPandas" not in cplan, cplan
 
     # both routes agree on the actual pairs at this scale (recall here is
     # exact because 8-dim vectors repeat across the LSH tables)
-    exact = similarity.cosine_pairs(embs, 0.9, n_rows=40, method="exact")
     got = {(r[0], r[1]) for r in pairs.collect()}
     want = {(r[0], r[1]) for r in exact.collect()}
     assert want, "fixture must produce at least one qualifying pair"
     assert got == want or np.mean([p in got for p in want]) >= 0.9
 
 
-def test_cosine_pairs_byte_gate_routes_high_dim(spark):
+def test_cosine_pairs_byte_gate_routes_high_dim(spark, monkeypatch):
     """The exact path's cost is rows × dim × 8 broadcast bytes, not rows:
     a HIGH-DIM corpus under the row cap must still route to the LSH path
-    when the byte estimate exceeds max_exact_bytes — and method='exact'
-    must refuse with the byte reason."""
+    when the byte estimate exceeds MAX_EXACT_BYTES, and the warning names
+    the byte reason."""
     import warnings
 
     from libpostal_spark.operators import similarity
@@ -225,16 +217,10 @@ def test_cosine_pairs_byte_gate_routes_high_dim(spark):
     ]
     embs = spark.createDataFrame(rows, ["vec_id", "embedding"])
     # 40 rows × 64 dim × 8 B = 20480 B > 10000 B cap; row cap NOT exceeded
-    with pytest.raises(ValueError, match="rows×dim×8"):
-        similarity.cosine_pairs(
-            embs, 0.9, n_rows=40, dim=dim, method="exact",
-            max_exact_bytes=10_000,
-        )
+    monkeypatch.setattr(similarity, "MAX_EXACT_BYTES", 10_000)
     with warnings.catch_warnings(record=True) as w:
         warnings.simplefilter("always")
-        pairs = similarity.cosine_pairs(
-            embs, 0.9, n_rows=40, dim=dim, max_exact_bytes=10_000
-        )
+        pairs = similarity.cosine_pairs(embs, 0.9)
         assert any("rows×dim×8" in str(x.message) for x in w)
     plan = _plan(pairs)
     assert "MapInPandas" not in plan, plan       # broadcast-matrix kernel absent

@@ -82,21 +82,6 @@ def test_multiword_alignments_scan():
     assert sa.multiword_alignments_py(["abc"], ["abc", "x"]) == []
 
 
-def test_mode_splits():
-    # abbreviation rung off drops the '21' match to the ordinal rung
-    on, _ = _score("21st main", "21 main")
-    off, m_off = _score(
-        "21st main", "21 main", affine_gap_abbreviations=False
-    )
-    assert m_off == 2
-    assert off >= on                 # ordinal sim 1.0 ≥ jw 13/15
-    both_off, m_both = _score(
-        "21st main", "21 main",
-        affine_gap_abbreviations=False, ordinal_suffixes=False,
-    )
-    assert m_both == 1               # only 'main'
-
-
 def test_spark_operator_matches_kernel(spark):
     rows = []
     for i, (s1, s2, _, _) in enumerate(GOLDENS):

@@ -25,7 +25,11 @@ from pyspark.sql import functions as F
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from libpostal_spark.config import PipelineConfig  # noqa: E402
+from libpostal_spark.config import (  # noqa: E402
+    LIKELY_THRESHOLD,
+    WINNOW_GUARANTEE,
+    PipelineConfig,
+)
 from libpostal_spark.corpus import cached_corpus_parquet  # noqa: E402
 from libpostal_spark.functions import textstats as TS  # noqa: E402
 from libpostal_spark.functions.udfs import make_canonicalize_udf  # noqa: E402
@@ -3198,7 +3202,7 @@ def _code_clusters_sql() -> str:
 
     path = cached_corpus_parquet(n_base=_CODE_N_BASE, seed=_CFG.seed)
     k = _CFG.k_shingle
-    wlen = _CFG.winnow_window + _CFG.winnow_select - 1
+    wlen = WINNOW_GUARANTEE
     split = "string_split(canon, ' ')"
     return f"""
         WITH RECURSIVE
@@ -3288,7 +3292,7 @@ def _pair_ctes() -> str:
     what the comparison proves (candidate recall 1.0 at this config).
     """
     k = _CFG.k_shingle
-    wlen = _CFG.winnow_window + _CFG.winnow_select - 1
+    wlen = WINNOW_GUARANTEE
     split = "string_split(canon, ' ')"
     return f"""
 canon AS (
@@ -3652,7 +3656,7 @@ def oracle_sql() -> dict[str, str]:
                    CASE WHEN fa < fb THEN db ELSE da END AS doc_id2,
                    round(j, 4) AS jaccard,
                    CASE WHEN sha_eq THEN 'exact_duplicate'
-                        WHEN j >= {_CFG.likely_threshold} THEN 'likely_duplicate'
+                        WHEN j >= {LIKELY_THRESHOLD} THEN 'likely_duplicate'
                         ELSE 'needs_review' END AS status
             FROM pairs
             WHERE sha_eq OR j >= {_CFG.jaccard_threshold}

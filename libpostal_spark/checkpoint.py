@@ -186,7 +186,7 @@ class CheckpointStore:
         """pts with a manifest row matching this config + input + pt domain.
 
         n_pt is part of the match: a committed partition from a run with a
-        different ``checkpoint_partitions`` lives in a different
+        different ``partitioned_stage(n_pt=)`` lives in a different
         ``pmod(fid, n)`` domain, and mixing domains would both duplicate and
         drop rows — a mismatch reads as nothing-completed, which wipes and
         recomputes exactly like a fingerprint change."""

@@ -1,19 +1,55 @@
 """Pipeline configuration.
 
 One flat dataclass, mirroring the reference's flat options structs
-(``libpostal_normalize_options_t``, /root/reference/src/libpostal.h:110-136;
-fuzzy-dedupe thresholds ``needs_review_threshold=0.7`` / ``likely_dupe_threshold=0.9``,
-/root/reference/src/libpostal.c:185-193).
+(``libpostal_normalize_options_t``, src/libpostal.h:110-136):
+like the reference, it holds only the values a caller picks. Values fixed
+in code are the module constants below.
 
 ``config_hash`` keys every checkpoint table so a changed config never silently
-reuses stale intermediate state (the resume ledger joins on it).
+reuses stale intermediate state (the resume ledger joins on it). It covers
+the semantic constants too, so editing one also invalidates checkpoints.
 """
 
 from __future__ import annotations
 
 import hashlib
 import json
-from dataclasses import asdict, dataclass, field
+from dataclasses import asdict, dataclass
+
+# fuzzy-dedupe grade thresholds: likely_dupe_threshold / needs_review_threshold
+# (the reference's src/libpostal.c:185-193)
+LIKELY_THRESHOLD = 0.9
+NEEDS_REVIEW_THRESHOLD = 0.7
+
+# --- SimHash pass (recall booster for near-exact files) ---
+SIMHASH_BITS = 64
+SIMHASH_TABLES = 4           # split signature into T chunks; pairs share a chunk
+# pigeonhole guarantee: hamming(simhash_a, simhash_b) <= SIMHASH_HAMMING_MAX
+# forces at least one shared chunk key, hence candidacy — requires
+# SIMHASH_BITS % SIMHASH_TABLES == 0 and SIMHASH_TABLES >= SIMHASH_HAMMING_MAX + 1
+# (both pinned in tests/test_hashing.py)
+SIMHASH_HAMMING_MAX = 3
+
+# --- winnowed substring pass (long exact clones; MOSS-style winnowing) ---
+# guarantees a shared fingerprint for any common token run of length
+# >= WINNOW_WINDOW + WINNOW_SELECT - 1  (96+64-1 = 159 < the 200-token
+# clone_embed floor in FIXTURES.md §2.8)
+WINNOW_WINDOW = 96           # tokens per rolling fingerprint window
+WINNOW_SELECT = 64           # winnowing selection window (over window hashes)
+# The run length at which a shared selected fingerprint is GUARANTEED. This
+# is also the verify accept bar: shorter shared runs are only
+# probabilistically winnow-visible, so accepting them would make cluster
+# membership depend on which fingerprints winnowing happened to select —
+# the bar keeps the engine's edge rule deterministic and equal to the
+# oracle's.
+WINNOW_GUARANTEE = WINNOW_WINDOW + WINNOW_SELECT - 1
+
+# buckets above max_bucket_size pair via salting up to this size; beyond it,
+# star+rep-clique only (O(n)); n^1.5 pair volume is the salting contract
+MAX_SALTED_BUCKET = 1_000_000
+# permutation cap analog (EXCESSIVE_PERMUTATIONS, src/expand.c:29) — bounds
+# per-row memory
+MAX_SHINGLES_PER_DOC = 20000
 
 
 @dataclass(frozen=True)
@@ -47,14 +83,10 @@ class PipelineConfig:
     # e.g. ("cfg","config") equates identifiers that differ only by the
     # abbreviation, exactly like "St" ≡ "Street" in the reference
     token_expansions: tuple = ()
-    fold_numbers: bool = False   # numeric literals → '0' (digits→D analog)
     # numex: spelled-out English numbers → numeric tokens with real
     # left-to-right composition ("three hundred twenty one" → 321; analog
-    # of src/numex.c:1260); Roman numerals are a separate opt-in because
-    # strict-syntax sequences can still be words ("mix"), the reference's
-    # documented ambiguity class
+    # of src/numex.c:1260)
     fold_spelled_numbers: bool = False
-    fold_roman_numerals: bool = False
     # numex rule-table language: "en" (core/numex.py), "fr"/"de"/"es"
     # (core/numex_ml.py), "it"/"pt"/"nl"/"ru" (core/numex_ml2.py), or
     # "zh"/"ja" (core/numex_cjk.py — Han numerals; run with
@@ -64,39 +96,10 @@ class PipelineConfig:
     numex_lang: str = "en"
 
     # --- verify (analog of is_dupe thresholds, src/libpostal.c:185-193) ---
-    jaccard_threshold: float = 0.7   # needs_review_threshold in the reference
-    likely_threshold: float = 0.9    # likely_dupe_threshold in the reference
-
-    # --- SimHash pass (recall booster for near-exact files) ---
-    simhash_bits: int = 64
-    simhash_tables: int = 4      # split signature into T chunks; pairs share a chunk
-    # pigeonhole guarantee: hamming(simhash_a, simhash_b) <= hamming_max
-    # forces at least one shared chunk key, hence candidacy — requires
-    # simhash_tables >= hamming_max + 1 (validated in __post_init__)
-    simhash_hamming_max: int = 3
-
-    # --- winnowed substring pass (long exact clones; MOSS-style winnowing) ---
-    # guarantees a shared fingerprint for any common token run of length
-    # >= winnow_window + winnow_select - 1  (96+64-1 = 159 < the 200-token
-    # clone_embed floor in FIXTURES.md §2.8)
-    winnow_window: int = 96      # tokens per rolling fingerprint window
-    winnow_select: int = 64      # winnowing selection window (over window hashes)
-
-    @property
-    def winnow_guarantee(self) -> int:
-        """The run length at which a shared selected fingerprint is
-        GUARANTEED (W + select - 1). This is also the verify accept bar:
-        shorter shared runs are only probabilistically winnow-visible, so
-        accepting them would make cluster membership depend on which
-        fingerprints winnowing happened to select — the bar keeps the
-        engine's edge rule deterministic and equal to the oracle's."""
-        return self.winnow_window + self.winnow_select - 1
+    jaccard_threshold: float = NEEDS_REVIEW_THRESHOLD
 
     # --- skew handling (boilerplate adversary, FIXTURES.md §2.9) ---
     max_bucket_size: int = 64        # buckets larger than this pair via salting
-    max_salted_bucket: int = 1_000_000  # beyond this, star+rep-clique only (O(n));
-                                        # n^1.5 pair volume is the salting contract
-    shuffle_partitions: int = 32
 
     # --- clustering ---
     # confirmed-pair sets at or below this size cluster via driver-side
@@ -106,33 +109,35 @@ class PipelineConfig:
     # ~10^8 input files.
     cc_driver_max_edges: int = 2_000_000
 
-    # --- misc ---
-    checkpoint_partitions: int = 32   # per-partition lineage granularity
     seed: int = 42
-    checkpoint_dir: str = "/tmp/libpostal_spark_ckpt"
-    max_shingles_per_doc: int = 20000  # permutation cap analog (EXCESSIVE_PERMUTATIONS,
-                                       # src/expand.c:29) — bounds per-row memory
 
     def __post_init__(self) -> None:
         if self.bands * self.rows_per_band != self.num_perm:
             raise ValueError(
                 f"bands*rows_per_band ({self.bands}*{self.rows_per_band}) != num_perm ({self.num_perm})"
             )
-        if self.simhash_bits % self.simhash_tables != 0:
-            raise ValueError("simhash_bits must divide evenly into simhash_tables")
-        if self.simhash_tables < self.simhash_hamming_max + 1:
-            raise ValueError(
-                "pigeonhole guarantee needs simhash_tables >= simhash_hamming_max + 1"
-            )
 
     @property
     def config_hash(self) -> str:
-        """16-hex digest over every semantics-affecting field (checkpoint key)."""
+        """16-hex digest over every semantics-affecting field and constant
+        (checkpoint key). The constants hash under the field names they
+        had when they were config fields, and the two number folds that
+        are no longer offered hash as off, so the digest of every config
+        is the same as before they left the dataclass."""
         d = asdict(self)
-        d.pop("checkpoint_dir")          # location is not semantics
-        d.pop("shuffle_partitions")      # parallelism must not change results
         d.pop("cc_driver_max_edges")     # CC routing must not change results
-        d.pop("checkpoint_partitions")   # lineage layout is not semantics
+        d.update(
+            likely_threshold=LIKELY_THRESHOLD,
+            simhash_bits=SIMHASH_BITS,
+            simhash_tables=SIMHASH_TABLES,
+            simhash_hamming_max=SIMHASH_HAMMING_MAX,
+            winnow_window=WINNOW_WINDOW,
+            winnow_select=WINNOW_SELECT,
+            max_salted_bucket=MAX_SALTED_BUCKET,
+            max_shingles_per_doc=MAX_SHINGLES_PER_DOC,
+            fold_numbers=False,
+            fold_roman_numerals=False,
+        )
         blob = json.dumps(d, sort_keys=True).encode()
         return hashlib.sha256(blob).hexdigest()[:16]
 

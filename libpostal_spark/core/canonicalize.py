@@ -200,7 +200,7 @@ _GREEK_FOLD = {
 # hamza/ʿayn drops are the standard lossy folds of practical romanizers —
 # deterministic is what dedup canonicalization needs, not reversible.
 # Arabic-Indic digits fold to ASCII digits (NFKC does NOT: they have no
-# compatibility decomposition) so they participate in fold_numbers.
+# compatibility decomposition).
 _ARABIC_FOLD = {
     "ا": "a", "أ": "a", "إ": "i", "آ": "a", "ء": "", "ؤ": "w", "ئ": "y",
     "ى": "a", "ة": "a", "ب": "b", "ت": "t", "ث": "th", "ج": "j", "ح": "h",
@@ -499,14 +499,9 @@ def _latin_ascii(series: pd.Series, lang: str | None = None) -> pd.Series:
     return series
 
 
-_RE_NUMBER = re.compile(r"^\d+(?:\.\d+)?$")
-
-
 def canonicalize_batch(
     content: pd.Series,
-    lang: pd.Series | None = None,
     expansions: dict[str, str] | None = None,
-    fold_numbers: bool = False,
     transliterate: bool = False,
     fold_spelled_numbers: bool = False,
     fold_roman: bool = False,
@@ -525,8 +520,6 @@ def canonicalize_batch(
          code analog of the reference's address-dictionary expansion,
          /root/reference/src/address_dictionary.c:286-311; shipped to
          executors inside the UDF closure, the broadcast-join pattern)
-      7. optional number folding: numeric literals → '0' (the analog of the
-         reference's digits→D normalization, /root/reference/src/normalize.c:393-506)
     """
     s = content.fillna("").astype(str)
     s = _nfkc(s)
@@ -536,13 +529,13 @@ def canonicalize_batch(
         s = _latin_ascii(s, translit_lang)
     joined = _canon_core(s)
     if fold_spelled_numbers:
-        # numex composition BEFORE the dictionary/number chain, so a folded
-        # "twenty three" -> "23" still hits fold_numbers' digits->0 collapse
+        # numex composition BEFORE the dictionary chain, so a folded
+        # "twenty three" -> "23" is a token the dictionary can rewrite
         from .numex import fold_spelled_numbers_batch
 
         joined = fold_spelled_numbers_batch(joined, fold_roman, numex_lang)
-    if expansions or fold_numbers:
-        joined, _ = rewrite_joined_batch(joined, expansions, fold_numbers)
+    if expansions:
+        joined, _ = rewrite_joined_batch(joined, expansions)
     return joined
 
 
@@ -553,8 +546,6 @@ def _doubled(tokens: str) -> str:
     return " " + tokens.replace(" ", "  ") + " "
 
 
-# a whole numeric token in the doubled-space form (fold_numbers target)
-_RE_NUMBER_TOKEN = re.compile(r" \d+(?:\.\d+)? ")
 _RE_MULTISPACE = re.compile(r" +")
 
 
@@ -586,7 +577,6 @@ def _doubled_stream_arrow(joined: pd.Series):
 def rewrite_joined_batch(
     joined: pd.Series,
     expansions: dict[str, str] | None,
-    fold_numbers: bool = False,
     count_matches: bool = False,
 ) -> tuple[pd.Series, pd.Series | None]:
     """Vectorized dictionary rewriter with multi-token PHRASE support.
@@ -603,9 +593,7 @@ def rewrite_joined_batch(
     doubled-space form — one pandas ``.str.replace`` (a C loop) per
     dictionary PATTERN, zero per-row Python — which is byte-for-byte the
     computation the DuckDB oracle twin performs (__spark_entry__,
-    _expanded_canon_sql). fold_numbers collapses whole numeric tokens to
-    '0' after all expansions (the analog of the reference's digits→D
-    normalization, /root/reference/src/normalize.c:393-506).
+    _expanded_canon_sql).
 
     Returns (rewritten, match_counts); match_counts (non-overlapping match
     count per row, summed over patterns on the evolving string — the
@@ -620,10 +608,8 @@ def rewrite_joined_batch(
         # pattern) instead of pandas object-dtype loops. Semantics are
         # identical — count_substring / replace_substring are
         # non-overlapping left-to-right literal ops, exactly str.count /
-        # str.replace (fuzz-pinned incl. unicode). The fold_numbers /
-        # multispace tail stays on the pandas ``re`` path: Python's \\d
-        # matches non-ASCII digits where RE2's does not, and those two
-        # passes are not the hot loop.
+        # str.replace (fuzz-pinned incl. unicode). The multispace tail
+        # stays on the pandas ``re`` path: one pass, not the hot loop.
         mv = np.zeros(len(joined), dtype=np.int64) if count_matches else None
         for k, v in ordered:
             pat, rep = _doubled(k), _doubled(v)
@@ -652,8 +638,6 @@ def rewrite_joined_batch(
             if count_matches:
                 m = m + s.str.count(re.escape(pat))
             s = s.str.replace(pat, rep, regex=False)
-    if fold_numbers:
-        s = s.str.replace(_RE_NUMBER_TOKEN, " 0 ", regex=True)
     s = s.str.replace(_RE_MULTISPACE, " ", regex=True).str.strip()
     return s, m
 

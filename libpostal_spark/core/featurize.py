@@ -19,7 +19,15 @@ from dataclasses import dataclass
 import numpy as np
 import pandas as pd
 
-from ..config import PipelineConfig
+from ..config import (
+    MAX_SHINGLES_PER_DOC,
+    SIMHASH_BITS,
+    SIMHASH_TABLES,
+    WINNOW_GUARANTEE,
+    WINNOW_SELECT,
+    WINNOW_WINDOW,
+    PipelineConfig,
+)
 from . import hashing as H
 
 
@@ -110,14 +118,14 @@ def featurize(canon: pd.Series, cfg: PipelineConfig) -> BatchFeatures:
     # previously computed up to 3x per batch in the hot featurize path
     prefix = H._prefix_sums(flat) if len(flat) else None
     sh_vals, sh_off = H.shingle_sets(
-        flat, lengths, cfg.k_shingle, cfg.max_shingles_per_doc, prefix=prefix
+        flat, lengths, cfg.k_shingle, MAX_SHINGLES_PER_DOC, prefix=prefix
     )
     sig = H.minhash_signatures(sh_vals, sh_off, cfg.num_perm, cfg.seed)
     bands = H.band_hashes(sig, cfg.bands, cfg.rows_per_band)
     simhash = H.simhash_values(sh_vals, sh_off)
-    sim_keys = H.simhash_table_keys(simhash, cfg.simhash_tables, cfg.simhash_bits)
+    sim_keys = H.simhash_table_keys(simhash, SIMHASH_TABLES, SIMHASH_BITS)
     wn_vals, wn_off = H.winnow_fingerprints(
-        flat, lengths, cfg.winnow_window, cfg.winnow_select, prefix=prefix
+        flat, lengths, WINNOW_WINDOW, WINNOW_SELECT, prefix=prefix
     )
     n = len(lengths)
     shingles = [sh_vals[sh_off[i] : sh_off[i + 1]] for i in range(n)]
@@ -148,7 +156,7 @@ def featurize_bands(
     """
     flat, lengths = tokenize_flat(canon, cfg.seed, cfg.hash_mode)
     sh_vals, sh_off = H.shingle_sets(
-        flat, lengths, cfg.k_shingle, cfg.max_shingles_per_doc
+        flat, lengths, cfg.k_shingle, MAX_SHINGLES_PER_DOC
     )
     sig = H.minhash_signatures(
         sh_vals, sh_off, cfg.num_perm, cfg.seed,
@@ -175,7 +183,7 @@ def pair_jaccard_batch(
         pd.Series(uniq, dtype=object), cfg.seed, cfg.hash_mode
     )
     vals, off = H.shingle_sets(
-        flat, lengths, cfg.k_shingle, cfg.max_shingles_per_doc
+        flat, lengths, cfg.k_shingle, MAX_SHINGLES_PER_DOC
     )
     sets = [vals[off[j] : off[j + 1]] for j in range(len(uniq))]
     out = np.empty(n, dtype=np.float64)
@@ -196,14 +204,14 @@ def pair_lcs_batch(
     """Verified shared-run length per aligned canon-string pair (vectorized).
 
     Returns, per pair, the length of a maximal common token run of at least
-    ``winnow_window`` tokens — 0 if none exists. Decision-exact: a run of
+    ``WINNOW_WINDOW`` tokens — 0 if none exists. Decision-exact: a run of
     >= W tokens exists iff some W-token window of one side equals a W-token
     window of the other, so we intersect rolling W-window hashes (computed
     ONCE per unique canon for the whole batch), then verify matched
     windows token-for-token (hash collisions rejected) and extend each run
     outward to its full length. ALL (pa, pb) alignments of equal window
     hashes are candidates (per-diagonal span pruning keeps this bounded),
-    so below the accept bar (``winnow_guarantee``) the reported length is
+    so below the accept bar (``WINNOW_GUARANTEE``) the reported length is
     the MAXIMUM verified run. The search stops at the first verified run
     that reaches the bar, so a pair with several runs at or above it
     reports one of them, not necessarily the longest; verify's accept
@@ -221,7 +229,7 @@ def pair_lcs_batch(
     from . import hashing as H
 
     n = len(c1)
-    W = cfg.winnow_window
+    W = WINNOW_WINDOW
     if n == 0:
         empty = pd.Series([], dtype="int32")
         if with_flags:
@@ -245,7 +253,7 @@ def pair_lcs_batch(
         orders.append(order)
         sorteds.append(arr[order])
 
-    target = cfg.winnow_guarantee
+    target = WINNOW_GUARANTEE
 
     def run_len(i1: int, i2: int) -> tuple[int, bool]:
         """(MAX verified common-run length, budget-exhausted flag); early

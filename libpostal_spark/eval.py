@@ -8,7 +8,7 @@ pair as duplicate when its expansion/shingle sets intersect enough
 
     dup(f1, f2) ⇔ sha256 equal
                ∨ jaccard(shingles) >= threshold
-               ∨ shared winnow fingerprint (common token run >= winnow_window)
+               ∨ shared winnow fingerprint (common token run >= WINNOW_WINDOW)
 
 Reference clusters = connected components of that relation, computed here by
 brute force (driver-side, small corpora only). LSH recall is then measured
@@ -32,7 +32,6 @@ def exact_features(pdf: pd.DataFrame, cfg: PipelineConfig):
     canon = canonicalize_batch(
         pdf["content"].reset_index(drop=True),
         expansions=dict(cfg.token_expansions) if cfg.token_expansions else None,
-        fold_numbers=cfg.fold_numbers,
     )
     f = featurize(canon, cfg)
     fids = list(pdf["fid"])

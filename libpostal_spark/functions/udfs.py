@@ -134,10 +134,8 @@ def make_featurize_udf(cfg: PipelineConfig, emit_minhash: bool = False):
             canon = canonicalize_batch(
                 content,
                 expansions=expansions,
-                fold_numbers=cfg.fold_numbers,
                 transliterate=cfg.transliterate,
                 fold_spelled_numbers=cfg.fold_spelled_numbers,
-                fold_roman=cfg.fold_roman_numerals,
                 numex_lang=cfg.numex_lang,
             )
             f = featurize(canon, cfg)
@@ -175,10 +173,8 @@ def make_band_keys_udf(cfg: PipelineConfig, n_bands: int):
             canon = canonicalize_batch(
                 content,
                 expansions=expansions,
-                fold_numbers=cfg.fold_numbers,
                 transliterate=cfg.transliterate,
                 fold_spelled_numbers=cfg.fold_spelled_numbers,
-                fold_roman=cfg.fold_roman_numerals,
                 numex_lang=cfg.numex_lang,
             )
             yield pd.Series(list(featurize_bands(canon, cfg, n_bands)))
@@ -324,7 +320,7 @@ def make_pair_confirm_udf(cfg: PipelineConfig):
     exact token verify + extension) for the rows that need it — winnow hits
     whose jaccard is below the confirm threshold. lcs_tokens is a verified
     shared run, not necessarily the longest: the verifier stops at the
-    first run that reaches ``winnow_guarantee``, so a pair accepted on it
+    first run that reaches ``WINNOW_GUARANTEE``, so a pair accepted on it
     reports at least that bar. lcs_tokens = -1 marks rows
     where the run check was skipped; lcs_exhausted marks rows whose
     alignment budget ran out (truncated verification is visible data — the

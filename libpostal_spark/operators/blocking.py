@@ -29,7 +29,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..config import PipelineConfig
+from ..config import MAX_SALTED_BUCKET, PipelineConfig
 from ..functions.udfs import make_featurize_udf
 
 KIND_BAND = 0
@@ -213,7 +213,7 @@ def candidate_pairs(
         salt group → direct pair; different groups → linked through the rep
         clique, which survives one adversarial (dissimilar) rep per group
         because the second rep still carries the edge. Buckets beyond
-        max_salted_bucket fall back to star+rep-clique only (O(n)), counted
+        MAX_SALTED_BUCKET fall back to star+rep-clique only (O(n)), counted
         in bucket_stats — never silently.
 
     Returns (pairs, bucket_stats, keyed). bucket_stats (lazily derived
@@ -312,7 +312,7 @@ def candidate_pairs(
 
     # salt into G=⌈√n⌉ groups; all pairs inside each group (O(n^1.5) total)
     salted = (
-        big.filter(F.col("cnt") <= cfg.max_salted_bucket)
+        big.filter(F.col("cnt") <= MAX_SALTED_BUCKET)
         .withColumn(
             "g", F.pmod(F.xxhash64("fid"), F.ceil(F.sqrt("cnt")).cast("long"))
         )

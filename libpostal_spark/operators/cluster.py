@@ -147,18 +147,16 @@ def connected_components(pairs: DataFrame) -> DataFrame:
     return decoded.join(comp_min, "cnid").select("fid", "component")
 
 
-def union_find_rows(rows, spark, id_type: str | None = None) -> DataFrame:
+def union_find_rows(rows, spark, id_type: str) -> DataFrame:
     """Driver union-find over already-collected (fid1, fid2) rows, for
     SMALL edge sets: after the exact-dedup contraction the confirmed-pair
     graph is orders of magnitude smaller than the input, and one collect +
     union-find beats ~10 distributed rounds of shuffle jobs. Same output
     contract as ``connected_components``.
 
-    ``id_type`` fixes the output schema explicitly ("string"/"bigint");
-    without it the type is inferred from the first node, which on an EMPTY
-    edge list can only guess string — ``components`` passes the edge
-    schema's type so a zero-edge long-id frame still joins against a
-    bigint universe."""
+    ``id_type`` fixes the output schema explicitly ("string"/"bigint"):
+    ``components`` passes the edge schema's type, so a zero-edge long-id
+    frame still joins against a bigint universe."""
     parent: dict[str, str] = {}
 
     def find(x: str) -> str:
@@ -189,10 +187,9 @@ def union_find_rows(rows, spark, id_type: str | None = None) -> DataFrame:
     # follows the caller's rows (string fids from the pipeline, long ids
     # from the geo/place callers) — a hardcoded string schema would throw
     # the Arrow path back to row reflection for integer ids.
-    idt = id_type or (
-        "string" if (not nodes or isinstance(next(iter(nodes)), str)) else "long"
+    return spark.createDataFrame(
+        out, schema=f"fid {id_type}, component {id_type}"
     )
-    return spark.createDataFrame(out, schema=f"fid {idt}, component {idt}")
 
 
 def components(

@@ -53,14 +53,14 @@ def _cos_expr(vec_col: str, qvec: list[float]) -> F.Column:
 
 
 def brute_force_topk(
-    embeddings: DataFrame, qvec: list[float], k: int = 10, id_col: str = "vec_id"
+    embeddings: DataFrame, qvec: list[float], k: int = 10
 ) -> DataFrame:
     """Exact cosine top-k: (vec_id, cos_sim rounded to 4dp), deterministic order."""
     scored = embeddings.select(
-        F.col(id_col).cast("long").alias(id_col),
+        F.col("vec_id").cast("long").alias("vec_id"),
         F.round(_cos_expr("embedding", qvec), 4).alias("cos_sim"),
     )
-    return scored.orderBy(F.desc("cos_sim"), F.asc(id_col)).limit(k)
+    return scored.orderBy(F.desc("cos_sim"), F.asc("vec_id")).limit(k)
 
 
 # broadcasts created by cosine_pairs' exact path, so a long session issuing
@@ -272,7 +272,6 @@ def ann_signatures(
     n_tables: int = 8,
     n_bits: int = 4,
     seed: int = 42,
-    id_col: str = "vec_id",
 ) -> DataFrame:
     """One (id, key) row per table per vector — the persistable ANN index.
 
@@ -282,7 +281,7 @@ def ann_signatures(
     """
     keys_udf = make_table_keys_udf(dim, n_tables, n_bits, seed)
     return embeddings.select(
-        F.col(id_col), F.explode(keys_udf(F.col("embedding"))).alias("key")
+        F.col("vec_id"), F.explode(keys_udf(F.col("embedding"))).alias("key")
     )
 
 
@@ -406,7 +405,6 @@ def lsh_topk(
     n_tables: int = 8,
     n_bits: int = 4,
     multiprobe: int = 1,
-    id_col: str = "vec_id",
     seed: int = 42,
     signatures: DataFrame | None = None,
 ) -> DataFrame:
@@ -418,7 +416,7 @@ def lsh_topk(
     """
     sigs = signatures
     if sigs is None:
-        sigs = ann_signatures(embeddings, len(qvec), n_tables, n_bits, seed, id_col)
+        sigs = ann_signatures(embeddings, len(qvec), n_tables, n_bits, seed)
     probes = probe_keys(qvec, n_tables, n_bits, seed, multiprobe)
-    cands = sigs.filter(F.col("key").isin(probes)).select(id_col).distinct()
-    return brute_force_topk(embeddings.join(cands, id_col), qvec, k, id_col)
+    cands = sigs.filter(F.col("key").isin(probes)).select("vec_id").distinct()
+    return brute_force_topk(embeddings.join(cands, "vec_id"), qvec, k)

@@ -39,9 +39,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-# reference thresholds: libpostal.c:185-193
-LIKELY_THRESHOLD = 0.9
-NEEDS_REVIEW_THRESHOLD = 0.7
+from ..config import LIKELY_THRESHOLD, NEEDS_REVIEW_THRESHOLD
+
 # Cohen et al. "CLOSE(θ, A, B)" closeness bar on the inner JW
 JW_CLOSE_E4 = 9000
 _W_SCALE = 1_000_000

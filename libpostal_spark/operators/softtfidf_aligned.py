@@ -75,12 +75,8 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F, types as T
 
-from .softtfidf import (
-    LIKELY_THRESHOLD,
-    NEEDS_REVIEW_THRESHOLD,
-    ORDINAL_TOKEN_RE,
-    _W_SCALE,
-)
+from ..config import LIKELY_THRESHOLD, NEEDS_REVIEW_THRESHOLD
+from .softtfidf import ORDINAL_TOKEN_RE, _W_SCALE
 
 _MAX_TOKENS = 16           # positional token cap per record
 _MAX_LEN = 32              # chars per token the string kernels compare

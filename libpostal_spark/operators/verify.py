@@ -12,13 +12,13 @@ JVM-side part (``arrays_overlap`` on the stored fingerprints).
 A pair is confirmed when either:
   * jaccard >= cfg.jaccard_threshold (near-duplicate whole files), or
   * the two files share a winnow fingerprint AND a token-for-token VERIFIED
-    common run of >= winnow_guarantee tokens (W + select - 1 = 159 at the
-    defaults; rolling-window match + exact verify + extension) — the
-    long-clone rule that Jaccard alone cannot express (a 200-token block
-    inside two otherwise-different files), measured rather than
-    hash-trusted. The bar sits at the GUARANTEE window, not the raw W:
-    runs in [W, W+select-1) are only probabilistically winnow-visible, so
-    accepting them would make edges depend on which fingerprints winnowing
+    common run of >= WINNOW_GUARANTEE tokens (W + select - 1 = 159;
+    rolling-window match + exact verify + extension) — the long-clone rule
+    that Jaccard alone cannot express (a 200-token block inside two
+    otherwise-different files), measured rather than hash-trusted. The
+    bar sits at the GUARANTEE window, not the raw W: runs in
+    [W, W+select-1) are only probabilistically winnow-visible, so accepting
+    them would make edges depend on which fingerprints winnowing
     selected — at the guarantee bar the edge rule is deterministic and
     coincides with the exhaustive oracle's shared-run rule.
 
@@ -31,7 +31,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..config import PipelineConfig
+from ..config import LIKELY_THRESHOLD, WINNOW_GUARANTEE, PipelineConfig
 
 
 def verified_pairs(
@@ -52,7 +52,7 @@ def verified_pairs(
     long-clone rule. ``lcs_tokens`` is the length of a verified shared
     token run, not necessarily the longest: ``pair_lcs_batch`` stops at
     the first verified run that reaches the bar, so an accepted pair's
-    value is at least ``winnow_guarantee`` and at most the true LCS.
+    value is at least ``WINNOW_GUARANTEE`` and at most the true LCS.
     lcs_tokens = -1 marks rows where the run check was skipped (jaccard
     already decided). A pair whose alignment budget was
     exhausted carries ``lcs_exhausted``; one whose under-reported run fell
@@ -89,7 +89,7 @@ def verified_pairs(
     )
     confirmed = graded.filter(
         (F.col("jaccard") >= F.lit(cfg.jaccard_threshold))
-        | (F.col("lcs_tokens") >= F.lit(cfg.winnow_guarantee))
+        | (F.col("lcs_tokens") >= F.lit(WINNOW_GUARANTEE))
     )
     # lcs_exhausted is carried on every confirmed row: a pair whose run
     # verification hit the alignment budget (and may therefore under-report
@@ -98,7 +98,7 @@ def verified_pairs(
     return confirmed.select(
         "fid1", "fid2", "jaccard", "source", "sources", "lcs_tokens",
         "lcs_exhausted",
-        status_expr(F.col("jaccard"), cfg).alias("status"),
+        status_expr(F.col("jaccard")).alias("status"),
     )
 
 
@@ -203,8 +203,8 @@ STATUS_NEEDS_REVIEW = "needs_review"
 STATUS_NON = "non_duplicate"
 
 
-def status_expr(jaccard: Column, cfg: PipelineConfig) -> Column:
+def status_expr(jaccard: Column) -> Column:
     """Grade a confirmed pair's Jaccard into the reference's status enum."""
     return F.when(
-        jaccard >= F.lit(cfg.likely_threshold), F.lit(STATUS_LIKELY)
+        jaccard >= F.lit(LIKELY_THRESHOLD), F.lit(STATUS_LIKELY)
     ).otherwise(F.lit(STATUS_NEEDS_REVIEW))

@@ -128,7 +128,6 @@ class DedupPipeline:
                         sub, cfg, ids_added=True
                     ).drop("rep_fid"),
                     fp,
-                    n_pt=cfg.checkpoint_partitions,
                 )
                 with_rep = blocking.exact_rep_frame(sigs, ided)
             else:

@@ -50,19 +50,17 @@ def _default_driver_mem(meminfo: str = "/proc/meminfo") -> str:
 def get_spark(
     app_name: str = "libpostal_spark",
     master: str | None = None,
-    shuffle_partitions: int | None = None,
     extra_conf: dict | None = None,
 ) -> SparkSession:
     _tune_malloc()
     _export_pythonpath()
     cores = os.environ.get("SPARK_GRAFT_CPUS", "32")
     master = master or f"local[{cores}]"
-    if shuffle_partitions is None:
-        n = master[master.find("[") + 1 : master.find("]")] if "[" in master else cores
-        # exactly one shuffle partition per core: at local[1]/local[2] the
-        # old floor of 8 meant 8 sequential tiny tasks per stage — pure
-        # scheduling + python-worker-roundtrip overhead with zero parallelism
-        shuffle_partitions = 32 if n == "*" else max(2, int(n))
+    n = master[master.find("[") + 1 : master.find("]")] if "[" in master else cores
+    # exactly one shuffle partition per core: at local[1]/local[2] the
+    # old floor of 8 meant 8 sequential tiny tasks per stage — pure
+    # scheduling + python-worker-roundtrip overhead with zero parallelism
+    shuffle_partitions = 32 if n == "*" else max(2, int(n))
     b = (
         SparkSession.builder.master(master)
         .appName(app_name)

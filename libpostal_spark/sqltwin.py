@@ -27,6 +27,8 @@ intermediate exceeds HUGEINT range:
 
 from __future__ import annotations
 
+from .config import SIMHASH_BITS, SIMHASH_TABLES, WINNOW_SELECT, WINNOW_WINDOW
+
 M64 = 1 << 64
 SIGN = 1 << 63
 P = 0x9E3779B97F4A7C15
@@ -125,7 +127,7 @@ th AS (SELECT doc_id, pos,
               ('0x' || substr(sha256('{cfg.seed}:' || l[pos]), 1, 16))
                 ::UBIGINT::HUGEINT AS h
        FROM tok),
-{_ladder(k, cfg.winnow_window)},
+{_ladder(k, WINNOW_WINDOW)},
 vkg AS (SELECT doc_id, w{k} AS raw FROM l96
         WHERE (n >= {k} AND pos <= n - {k} + 1) OR (n < {k} AND pos = 1)),
 {sm_ctes},
@@ -169,7 +171,7 @@ def _feature_ctes(canon_expr: str, cfg) -> tuple[str, str]:
       wv(doc_id, mn)      — distinct winnow fingerprints (unsigned)
       ntok / nsh          — token / shingle counts
     """
-    W, sel = cfg.winnow_window, cfg.winnow_select
+    W, sel = WINNOW_WINDOW, WINNOW_SELECT
     pw_rows = ", ".join(f"({j}, {1 << j}::HUGEINT)" for j in range(64))
     wsm_ctes, wsm_final = _splitmix_ctes("wsm", "vwg", "raw", "doc_id, pos, c")
     bsm_ctes, bsm_final = _splitmix_ctes("bsm", "bmix", "hh", "doc_id, band")
@@ -268,15 +270,11 @@ def candidate_pairs_sql(canon_expr: str, cfg) -> str:
     """
     ctes, band_final = _feature_ctes(canon_expr, cfg)
     # stride must track the engine's chunk width (simhash_table_keys shifts
-    # by t*(bits//tables)) — derive it from cfg like the mask, and keep the
-    # sibling generators' fail-fast discipline on the coupling
-    chunk_bits = cfg.simhash_bits // cfg.simhash_tables
-    assert chunk_bits * cfg.simhash_tables == cfg.simhash_bits, (
-        "simhash_bits must divide evenly into simhash_tables"
-    )
+    # by t*(bits//tables)) — derive it from the same constants as the mask
+    chunk_bits = SIMHASH_BITS // SIMHASH_TABLES
     t_rows = ", ".join(
         f"({t}, {1 << (chunk_bits * t)}::HUGEINT)"
-        for t in range(cfg.simhash_tables)
+        for t in range(SIMHASH_TABLES)
     )
     chunk_mask = (1 << chunk_bits) - 1
     ksm_ctes, ksm_final = _splitmix_ctes("ksm", "skraw", "kv", "doc_id, t")

@@ -3,7 +3,7 @@
 import pandas as pd
 from pyspark.sql import functions as F
 
-from libpostal_spark.config import PipelineConfig
+from libpostal_spark.config import SIMHASH_TABLES, PipelineConfig
 from libpostal_spark.operators import blocking
 
 
@@ -38,7 +38,7 @@ def test_key_family_counts(spark, cfg):
     keys = blocking.blocking_keys(sigs, cfg)
     by_kind = {r["kind"]: r["cnt"] for r in keys.groupBy("kind").agg(F.count("*").alias("cnt")).collect()}
     assert by_kind[blocking.KIND_BAND] == cfg.bands
-    assert by_kind[blocking.KIND_SIMHASH] == cfg.simhash_tables
+    assert by_kind[blocking.KIND_SIMHASH] == SIMHASH_TABLES
     assert by_kind.get(blocking.KIND_WINNOW, 0) >= 1  # 300 tokens > window
 
 

@@ -69,14 +69,6 @@ def test_token_expansion_dictionary():
     assert a == b == "load config ( implementation )"
 
 
-def test_fold_numbers():
-    a = canonicalize_one("x = 31 + 2.5", fold_numbers=True)
-    b = canonicalize_one("x = 7 + 99.1", fold_numbers=True)
-    assert a == b == "x = 0 + 0"
-    # default keeps literals distinct
-    assert canonicalize_one("x = 31") != canonicalize_one("x = 7")
-
-
 def test_latin_ascii_transliteration_goldens():
     """Golden expectations in the style of the reference's expand goldens
     (/root/reference/test/test_expand.c:126-333), for non-ASCII Latin

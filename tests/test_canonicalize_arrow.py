@@ -294,20 +294,15 @@ def test_rewrite_joined_batch_arrow_equals_pandas():
     rows = _phrase_rows(rng, 300) + ["", "a", "the the the", "1.5 2 x 007"]
     s = pd.Series(rows)
     exp = dict(_PHRASE_ORDERED)
-    for fold in (False, True):
-        got_s, got_m = rewrite_joined_batch(
-            s, exp, fold_numbers=fold, count_matches=True
-        )
-        orig = C._pa
-        try:
-            C._pa = None
-            ref_s, ref_m = rewrite_joined_batch(
-                s, exp, fold_numbers=fold, count_matches=True
-            )
-        finally:
-            C._pa = orig
-        assert got_s.tolist() == ref_s.tolist()
-        assert got_m.tolist() == ref_m.tolist()
+    got_s, got_m = rewrite_joined_batch(s, exp, count_matches=True)
+    orig = C._pa
+    try:
+        C._pa = None
+        ref_s, ref_m = rewrite_joined_batch(s, exp, count_matches=True)
+    finally:
+        C._pa = orig
+    assert got_s.tolist() == ref_s.tolist()
+    assert got_m.tolist() == ref_m.tolist()
 
 
 def test_rewrite_joined_batch_arrow_surrogate_fallback():

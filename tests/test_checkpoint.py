@@ -1,8 +1,11 @@
 """Resumability: kill-and-resume yields identical output (SURVEY.md §5 item 3)."""
 
+import dataclasses
+
 import pandas as pd
 import pytest
 
+from libpostal_spark import config
 from libpostal_spark.config import PipelineConfig
 from libpostal_spark.corpus import generate_corpus
 from libpostal_spark.pipeline import DedupPipeline
@@ -21,8 +24,26 @@ def test_config_hash_stability_and_sensitivity():
     c = PipelineConfig(k_shingle=7)
     assert a.config_hash != c.config_hash
     # non-semantic knobs don't invalidate checkpoints
-    d = PipelineConfig(checkpoint_dir="/elsewhere", shuffle_partitions=64)
+    d = PipelineConfig(cc_driver_max_edges=0)
     assert a.config_hash == d.config_hash
+
+
+def test_config_hash_pinned():
+    """The default config's and the entry's two sha-mode configs' digests:
+    a change to them orphans every existing checkpoint and bench record."""
+    a = PipelineConfig()
+    sha = dataclasses.replace(a, hash_mode="sha256")
+    assert a.config_hash == "fff712f7aa8c0049"
+    assert sha.config_hash == "3130e27ac183ed03"
+    assert (dataclasses.replace(sha, max_bucket_size=1 << 30).config_hash
+            == "144ca098b0aa27af")
+
+
+def test_config_hash_covers_constants(monkeypatch):
+    """Editing a semantic module constant invalidates checkpoints too."""
+    before = PipelineConfig().config_hash
+    monkeypatch.setattr(config, "WINNOW_WINDOW", config.WINNOW_WINDOW - 1)
+    assert PipelineConfig().config_hash != before
 
 
 def test_resume_identical_output(spark, small_pdf, tmp_path):

@@ -77,9 +77,8 @@ def test_exact_class_expands_to_all_member_pairs(spark):
 
 
 def test_status_expr_thresholds(spark):
-    cfg = PipelineConfig()
     df = spark.createDataFrame([(0.95,), (0.9,), (0.89,), (0.7,)], "j double")
-    got = [r["s"] for r in df.select(verify.status_expr(F.col("j"), cfg).alias("s")).collect()]
+    got = [r["s"] for r in df.select(verify.status_expr(F.col("j")).alias("s")).collect()]
     assert got == [
         verify.STATUS_LIKELY,
         verify.STATUS_LIKELY,

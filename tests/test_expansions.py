@@ -87,12 +87,6 @@ def test_phrases_at_boundaries():
     assert canon("up") == "up"
 
 
-def test_fold_numbers_composes_with_expansions():
-    got = canonicalize_one("cfg 123 v2", expansions=EXP, fold_numbers=True)
-    # 123 is a number literal (folded); v2 is one identifier token (kept)
-    assert got == "configuration 0 v2"
-
-
 def test_expand_alternatives_goldens():
     forms, m = expand_alternatives("initCfg", EXP)
     assert m == 2

@@ -6,7 +6,14 @@ import pandas as pd
 import pytest
 
 import libpostal_spark.core.hashing as H
-from libpostal_spark.config import PipelineConfig
+from libpostal_spark.config import (
+    SIMHASH_BITS,
+    SIMHASH_HAMMING_MAX,
+    SIMHASH_TABLES,
+    WINNOW_GUARANTEE,
+    WINNOW_WINDOW,
+    PipelineConfig,
+)
 from libpostal_spark.core.featurize import featurize, jaccard, tokenize_flat
 
 CFG = PipelineConfig()
@@ -108,10 +115,17 @@ def test_simhash_table_keys_pigeonhole():
     assert (k2[0] == k2[1]).sum() == 3
 
 
+def test_simhash_constants_keep_pigeonhole_guarantee():
+    """The table keys split the signature evenly, and a hamming distance
+    up to SIMHASH_HAMMING_MAX leaves at least one chunk unflipped."""
+    assert SIMHASH_BITS % SIMHASH_TABLES == 0
+    assert SIMHASH_TABLES >= SIMHASH_HAMMING_MAX + 1
+
+
 @pytest.mark.parametrize("run_len", [159, 200, 400])
 def test_winnow_guarantee(run_len):
     """Common run >= window+select-1 tokens ⇒ >=1 shared fingerprint."""
-    assert run_len >= CFG.winnow_window + CFG.winnow_select - 1
+    assert run_len >= WINNOW_GUARANTEE
     rng = np.random.default_rng(run_len)
     common = " ".join(f"c{int(i)}" for i in rng.integers(0, 10000, run_len))
     a = " ".join(f"a{int(i)}" for i in rng.integers(0, 10000, 300)) + " " + common
@@ -129,15 +143,17 @@ def test_winnow_no_fp_for_disjoint():
 
 
 def test_winnow_short_rows_empty():
-    f = _feat(["a b c", " ".join(f"t{i}" for i in range(CFG.winnow_window - 1))])
+    f = _feat(["a b c", " ".join(f"t{i}" for i in range(WINNOW_WINDOW - 1))])
     assert len(f.winnow[0]) == 0
     assert len(f.winnow[1]) == 0
 
 
 def test_max_shingles_cap():
-    cfg = PipelineConfig(max_shingles_per_doc=10)
-    f = featurize(pd.Series([" ".join(f"t{i}" for i in range(100))]), cfg)
-    assert len(f.shingles[0]) == 10
+    flat, lengths = tokenize_flat(
+        pd.Series([" ".join(f"t{i}" for i in range(100))]), CFG.seed, CFG.hash_mode
+    )
+    _, off = H.shingle_sets(flat, lengths, CFG.k_shingle, 10)
+    assert off[1] - off[0] == 10
 
 
 def test_minhash_limit_perm_is_prefix_stable():

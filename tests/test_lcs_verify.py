@@ -3,7 +3,7 @@
 The reference-design 'per-partition suffix-array substring check for long
 exact clones': a winnow fingerprint match flags a probable >=window-token
 shared run; verify measures the run exactly (lcs_tokens) and only accepts if
-it truly reaches winnow_window.
+it truly reaches WINNOW_WINDOW.
 """
 
 import random
@@ -11,7 +11,7 @@ import random
 import pandas as pd
 from pyspark.sql import functions as F
 
-from libpostal_spark.config import PipelineConfig
+from libpostal_spark.config import WINNOW_GUARANTEE, WINNOW_WINDOW, PipelineConfig
 from libpostal_spark.core.featurize import pair_lcs_batch
 from libpostal_spark.operators import blocking, verify
 
@@ -118,10 +118,10 @@ def test_jaccard_accepted_pairs_skip_lcs(spark):
 
 
 def test_short_shared_run_not_confirmed(spark):
-    """A shared run well below winnow_window with low jaccard must NOT
+    """A shared run well below WINNOW_WINDOW with low jaccard must NOT
     produce a confirmed pair (no winnow fingerprint can span it)."""
     cfg = PipelineConfig()
-    block = " ".join(f"shared{i}" for i in range(40))    # << winnow_window=96
+    block = " ".join(f"shared{i}" for i in range(40))    # << WINNOW_WINDOW=96
     a = " ".join(f"alpha{i}" for i in range(400)) + " " + block
     b = block + " " + " ".join(f"beta{i}" for i in range(400))
     rows = [("r1", "a", "c", "python", a), ("r2", "b", "c", "python", b)]
@@ -148,7 +148,7 @@ def test_guarantee_run_confirmed_with_exact_length(spark):
     """A shared run at exactly the guarantee window confirms, and the
     reported lcs_tokens is the full measured run length."""
     cfg = PipelineConfig()
-    n = cfg.winnow_guarantee                            # 159 at defaults
+    n = WINNOW_GUARANTEE                                # 159
     run = " ".join(f"shared{i}" for i in range(n))
     a = " ".join(f"alpha{i}" for i in range(400)) + " " + run
     b = run + " " + " ".join(f"beta{i}" for i in range(400))
@@ -225,8 +225,8 @@ def test_suffix_automaton_lcs_matches_brute_force():
 def test_pair_lcs_batch_matches_suffix_automaton():
     """Seeded differential test of the vectorized run measurer against the
     exact suffix-automaton LCS. Decision-exact contract, per pair that is
-    not budget-exhausted: no run below ``winnow_window`` is reported (0);
-    a longest run below the accept bar (``winnow_guarantee``) is reported
+    not budget-exhausted: no run below ``WINNOW_WINDOW`` is reported (0);
+    a longest run below the accept bar (``WINNOW_GUARANTEE``) is reported
     exactly; a longest run at or above the bar is reported as a real run
     that also clears the bar (the measurer stops at the first verified run
     that reaches it, so with several super-bar runs it may not be the
@@ -235,7 +235,7 @@ def test_pair_lcs_batch_matches_suffix_automaton():
     up to 400 tokens, and a block planted twice on one side whose longest
     run is only measured by aligning with the second copy."""
     cfg = PipelineConfig()
-    W, bar = cfg.winnow_window, cfg.winnow_guarantee
+    W, bar = WINNOW_WINDOW, WINNOW_GUARANTEE
     rng = random.Random(11)
 
     def draw(vocab, n):

@@ -18,12 +18,20 @@ excluded. There is no allowlist.
 
 The same holds one level down: a defaulted parameter that no non-test
 call sets is an option only tests select, and the branch it guards is a
-code path production never runs. A parameter counts as set when some
-non-test call to a function of that name (a class name calls
-``__init__``) passes it by keyword, positionally at or past its place
-(``self``/``cls`` not counted), or through ``*``/``**`` unpacking. A call
-through a local name bound to functions (``parse = mod.f if c else
-mod.g``) counts as a call of each of them. The
+code path production never runs. A defaulted field of a package
+``@dataclass`` is such a parameter of its class (``default_factory``
+fields included). A parameter counts as set when some non-test call to a
+function of that name (a class name calls ``__init__``, or builds the
+dataclass) passes it by keyword, positionally at or past its place
+(``self``/``cls`` not counted; a dataclass counts fields in order), or
+through unpacking. ``**X`` passes the keys of X when X is a dict display,
+a keyword-only ``dict(...)`` call, a module-level name bound to one of
+those, or a call of a function whose every ``return`` is one of those;
+any other ``*``/``**`` sets every parameter of the callee. A keyword
+passed to any non-test ``replace(...)`` call counts as set for every
+dataclass field of that name, since ``dataclasses.replace`` cannot be
+resolved statically. A call through a local name bound to functions
+(``parse = mod.f if c else mod.g``) counts as a call of each of them. The
 only exceptions are ``SEAMS``: parameters a test must drive and that
 production has no reason to, each with its reason.
 """
@@ -122,6 +130,8 @@ SEAMS = {
     "libpostal_spark.checkpoint:CheckpointStore.partitioned_stage"
     "(pts_per_commit=)":
         "the crash-window tests need commit groups of one partition",
+    "libpostal_spark.checkpoint:CheckpointStore.partitioned_stage(n_pt=)":
+        "the partition-resume and n_pt-change tests drive the pmod domain",
     "libpostal_spark.corpus:cached_corpus_parquet(cache_dir=)":
         "a path: tests write under their own tmp dir",
     "libpostal_spark.operators.softtfidf:soft_tfidf_full_pairs"
@@ -141,9 +151,19 @@ SEAMS = {
 }
 
 
+def _is_dataclass(node):
+    for d in node.decorator_list:
+        f = d.func if isinstance(d, ast.Call) else d
+        if (isinstance(f, ast.Name) and f.id == "dataclass") or (
+                isinstance(f, ast.Attribute) and f.attr == "dataclass"):
+            return True
+    return False
+
+
 def _defaulted_params():
-    """(qualified name, call name, param, position or None) for each
-    defaulted parameter of a package function or method."""
+    """(qualified name, call name, param, position or None, is a dataclass
+    field) for each defaulted parameter of a package function or method,
+    and each defaulted field of a package dataclass."""
     out = []
     for path in _py_files(PACKAGE):
         mod = os.path.relpath(path, ROOT)[:-3].replace(os.sep, ".")
@@ -151,6 +171,14 @@ def _defaulted_params():
         def visit(body, prefix, in_class):
             for node in body:
                 if isinstance(node, ast.ClassDef):
+                    if _is_dataclass(node):
+                        fields = [n for n in node.body
+                                  if isinstance(n, ast.AnnAssign)
+                                  and isinstance(n.target, ast.Name)]
+                        for i, n in enumerate(fields):
+                            if n.value is not None:
+                                out.append((f"{mod}:{prefix}{node.name}",
+                                            node.name, n.target.id, i, True))
                     visit(node.body, prefix + node.name + ".", True)
                     continue
                 if not isinstance(node, (ast.FunctionDef,
@@ -167,13 +195,57 @@ def _defaulted_params():
                 qual = f"{mod}:{prefix}{node.name}"
                 for i, arg in enumerate(pos[len(pos) - len(a.defaults):],
                                         start=len(pos) - len(a.defaults)):
-                    out.append((qual, call, arg.arg, i - skip))
+                    out.append((qual, call, arg.arg, i - skip, False))
                 for arg, d in zip(a.kwonlyargs, a.kw_defaults):
                     if d is not None:
-                        out.append((qual, call, arg.arg, None))
+                        out.append((qual, call, arg.arg, None, False))
 
         visit(_parse(path).body, "", False)
     return out
+
+
+def _returns(fn):
+    """The ``return`` statements of ``fn``, not of functions nested in it."""
+    stack = list(fn.body)
+    while stack:
+        node = stack.pop()
+        if isinstance(node, ast.Return):
+            yield node
+        elif not isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef,
+                                   ast.Lambda, ast.ClassDef)):
+            stack.extend(ast.iter_child_nodes(node))
+
+
+def _dict_keys(node, names, funcs, seen=frozenset()):
+    """The constant keys ``**node`` passes, per the module docstring's
+    rule, or None when they cannot be resolved."""
+    if isinstance(node, ast.Dict):
+        if all(isinstance(k, ast.Constant) and isinstance(k.value, str)
+               for k in node.keys):
+            return {k.value for k in node.keys}
+        return None
+    if not isinstance(node, (ast.Name, ast.Call)) or node in seen:
+        return None
+    seen = seen | {node}
+    if isinstance(node, ast.Name):
+        bound = names.get(node.id, [])
+        keys = [_dict_keys(v, names, funcs, seen) for v in bound]
+        if not keys or None in keys:
+            return None
+        return set().union(*keys)
+    f = node.func
+    if isinstance(f, ast.Name) and f.id == "dict":
+        if node.args or any(k.arg is None for k in node.keywords):
+            return None
+        return {k.arg for k in node.keywords}
+    name = (f.id if isinstance(f, ast.Name)
+            else f.attr if isinstance(f, ast.Attribute) else None)
+    rets = [r.value for fn in funcs.get(name, []) for r in _returns(fn)]
+    keys = [_dict_keys(v, names, funcs, seen) if v is not None else None
+            for v in rets]
+    if not keys or None in keys:
+        return None
+    return set().union(*keys)
 
 
 def unset_parameters():
@@ -186,15 +258,26 @@ def unset_parameters():
                                                    ast.Attribute)) else set()
 
     trees = [_parse(p) for rel in NON_TEST for p in _py_files(rel)]
-    aliases = {}
+    aliases, funcs = {}, {}
     for tree in trees:
         for node in ast.walk(tree):
             if (isinstance(node, ast.Assign) and len(node.targets) == 1
                     and isinstance(node.targets[0], ast.Name)):
                 aliases.setdefault(node.targets[0].id, set()).update(
                     bound(node.value))
+            elif isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                funcs.setdefault(node.name, []).append(node)
     keywords, n_pos, unpacked = {}, {}, set()
     for tree in trees:
+        # module-level bindings of this file, for ``**name``
+        names = {}
+        for node in tree.body:
+            if isinstance(node, (ast.Assign, ast.AnnAssign)):
+                targets = (node.targets if isinstance(node, ast.Assign)
+                           else [node.target])
+                for t in targets:
+                    if isinstance(t, ast.Name) and node.value is not None:
+                        names.setdefault(t.id, []).append(node.value)
         for node in ast.walk(tree):
             if not isinstance(node, ast.Call):
                 continue
@@ -203,18 +286,32 @@ def unset_parameters():
                     else f.attr if isinstance(f, ast.Attribute) else None)
             if name is None:
                 continue
+            passed = {k.arg for k in node.keywords if k.arg}
+            opaque = any(isinstance(x, ast.Starred) for x in node.args)
+            for k in node.keywords:
+                if k.arg is None:
+                    keys = _dict_keys(k.value, names, funcs)
+                    if keys is None:
+                        opaque = True
+                    else:
+                        passed |= keys
             for callee in {name} | aliases.get(name, set()):
-                if (any(isinstance(x, ast.Starred) for x in node.args)
-                        or any(k.arg is None for k in node.keywords)):
+                if opaque:
                     unpacked.add(callee)
                 n_pos[callee] = max(n_pos.get(callee, 0), len(node.args))
-                keywords.setdefault(callee, set()).update(
-                    k.arg for k in node.keywords if k.arg)
+                keywords.setdefault(callee, set()).update(passed)
+
+    def is_set(call, param, i, field):
+        if field and ("replace" in unpacked
+                      or param in keywords.get("replace", ())):
+            return True
+        return (call in unpacked or param in keywords.get(call, ())
+                or (i is not None and n_pos.get(call, 0) > i))
+
     return [
         f"{qual}({param}=)"
-        for qual, call, param, i in _defaulted_params()
-        if not (call in unpacked or param in keywords.get(call, ())
-                or (i is not None and n_pos.get(call, 0) > i))
+        for qual, call, param, i, field in _defaulted_params()
+        if not is_set(call, param, i, field)
     ]
 
 

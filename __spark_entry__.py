@@ -38,10 +38,11 @@ from libpostal_spark.pipeline import DedupPipeline  # noqa: E402
 
 _CFG = PipelineConfig()
 
-# per-session reuse: one featurize pass, one pipeline run and one ANN index
-# each serve several queries of a harness session. Every shared build goes
-# through _memo, keyed by (applicationId, sf_dir, name) — applicationId is
-# unique per SparkContext lifetime, so it cannot collide after a restart.
+# per-session reuse: one pipeline run, one sha-mode signature pass and one
+# ANN index each serve several queries of a harness session. Every shared
+# build goes through _memo, keyed by (applicationId, sf_dir, name) —
+# applicationId is unique per SparkContext lifetime, so it cannot collide
+# after a restart.
 # Entries of a dead session are dropped without a release (their JVM, and
 # with it every cached block, is already gone). Each name keeps at most
 # _CACHE_LIMIT sf_dirs per session and releases the oldest (insertion
@@ -108,46 +109,19 @@ def release_caches() -> None:
 atexit.register(release_caches)
 
 
-def _sigs(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, int]:
-    """Persisted signatures of one sf_dir's documents, plus the largest
-    sha256 class — the adaptive-plan gate dup_status_pairs needs. The
-    featurize pass is identical across the pipeline-backed queries, so it
-    runs once per session."""
-    from libpostal_spark.operators import blocking
-
-    def build():
-        files = _spread(dedup.docs_as_files(_docs(spark, sf_dir)))
-        sigs = blocking.signatures(files, _CFG).persist()
-        # ONE action both materializes the cache and computes the gate, so
-        # no downstream query ever runs a separate gating agg
-        row = (
-            sigs.groupBy("sha256")
-            .agg(F.count("*").alias("n"))
-            .agg(F.max("n").alias("m"))
-            .collect()
-        )
-        return sigs, int(row[0]["m"] or 0)
-
-    return _memo(
-        spark, sf_dir, "sigs", build, release=lambda v: v[0].unpersist()
-    )
-
-
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
 
 
 def _pipe_res(spark: SparkSession, sf_dir: str):
-    """Per-session pipeline result over one sf_dir's documents — the
-    ``_sigs`` reuse one level up: doc_near_dup_clusters and
-    dup_status_pairs consume the SAME DedupPipeline run (same config, same
-    cached signatures), so the second query reuses the first's persisted
-    confirm/cluster frames instead of re-running three driver actions."""
+    """Per-session pipeline result over one sf_dir's documents: the
+    shingle_stats, doc_near_dup_clusters and dup_status_pairs queries all
+    read the SAME DedupPipeline run (one featurize pass over one
+    representative per distinct text, one confirm, one clustering)."""
     return _memo(
         spark, sf_dir, "pipe_res",
         lambda: DedupPipeline(spark, _CFG).run(
-            dedup.docs_as_files(_docs(spark, sf_dir)),
-            signatures=_sigs(spark, sf_dir)[0],
+            _spread(dedup.docs_as_files(_docs(spark, sf_dir)))
         ),
         release=lambda res: res.release(),
     )
@@ -193,7 +167,9 @@ def _embs(spark: SparkSession, sf_dir: str) -> DataFrame:
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship: full near-dup pipeline over sf0.001 documents."""
     docs = _docs(spark, "/root/testdata/sf0.001")
-    return dedup.minhash_clusters(spark, docs, _CFG)
+    return dedup.minhash_clusters(
+        DedupPipeline(spark, _CFG).run(dedup.docs_as_files(docs))
+    )
 
 
 # --------------------------------------------------------------- queries
@@ -2450,9 +2426,9 @@ def _cfg_sha():
 
 def _sigs_sha(spark, sf_dir):
     """Signatures in the oracle-replayable sha256 token-hash mode — same
-    machinery as _sigs (rolling hashes, minhash perms, simhash, bands,
-    winnow), only the unique-token base hash differs, which is what lets
-    DuckDB rebuild every value (libpostal_spark.sqltwin)."""
+    machinery as the pipeline's S1 (rolling hashes, minhash perms, simhash,
+    bands, winnow), only the unique-token base hash differs, which is what
+    lets DuckDB rebuild every value (libpostal_spark.sqltwin)."""
     from libpostal_spark.operators import blocking
 
     return _memo(
@@ -2499,9 +2475,14 @@ def _q_signature_summary(spark, sf_dir):
 def _q_shingle_stats(spark, sf_dir):
     """SQL-verifiable slice of the signature table: token + distinct-shingle
     counts per doc (the simhash/band columns stay in minhash_signatures,
-    whose hashes SQL cannot replay)."""
-    sigs, _ = _sigs(spark, sf_dir)
-    return sigs.select(
+    whose hashes SQL cannot replay). The pipeline featurizes one
+    representative per distinct text; every other member takes its
+    representative's counts through ``rep_fid``."""
+    sigs = _pipe_res(spark, sf_dir).signatures
+    reps = sigs.filter(F.col("fid") == F.col("rep_fid")).select(
+        F.col("fid").alias("rep_fid"), "n_tokens", "n_shingles"
+    )
+    return sigs.select("rep_fid", "path").join(reps, "rep_fid").select(
         F.col("path").cast("long").alias("doc_id"),
         F.col("n_tokens").cast("long").alias("n_tokens"),
         F.col("n_shingles").cast("long").alias("n_shingles"),
@@ -2545,19 +2526,12 @@ def _q_lsh_candidates(spark, sf_dir):
 
 
 def _q_doc_clusters(spark, sf_dir):
-    return dedup.minhash_clusters(
-        spark, _docs(spark, sf_dir), _CFG, result=_pipe_res(spark, sf_dir)
-    )
+    return dedup.minhash_clusters(_pipe_res(spark, sf_dir))
 
 
 def _q_dup_status(spark, sf_dir):
-    return dedup.dup_status_pairs(
-        spark,
-        _docs(spark, sf_dir),
-        _CFG,
-        result=_pipe_res(spark, sf_dir),
-        max_class_size=_sigs(spark, sf_dir)[1],
-    )
+    pairs, _ = dedup.dup_status_pairs(_pipe_res(spark, sf_dir), _CFG)
+    return pairs
 
 
 _CODE_N_BASE = 100   # pinned: the oracle twin reads the same fixed corpus

@@ -29,6 +29,20 @@ from ..config import (
     PipelineConfig,
 )
 from . import hashing as H
+from .canonicalize import canonicalize_batch
+
+
+def canonicalize(content: pd.Series, cfg: PipelineConfig) -> pd.Series:
+    """Raw content → canon strings under ``cfg``: the one mapping from the
+    config's canonicalization options to ``canonicalize_batch``, shared by
+    the featurize and band-keys UDFs and the reference rule (eval)."""
+    return canonicalize_batch(
+        content,
+        expansions=dict(cfg.token_expansions) if cfg.token_expansions else None,
+        transliterate=cfg.transliterate,
+        fold_spelled_numbers=cfg.fold_spelled_numbers,
+        numex_lang=cfg.numex_lang,
+    )
 
 
 @dataclass

@@ -23,16 +23,13 @@ from __future__ import annotations
 import pandas as pd
 
 from .config import PipelineConfig
-from .core.canonicalize import canonicalize_batch
-from .core.featurize import featurize
+from .core.featurize import canonicalize, featurize
 
 
 def exact_features(pdf: pd.DataFrame, cfg: PipelineConfig):
-    """Driver-side featurize of a whole (small) corpus → dict fid→(set, set)."""
-    canon = canonicalize_batch(
-        pdf["content"].reset_index(drop=True),
-        expansions=dict(cfg.token_expansions) if cfg.token_expansions else None,
-    )
+    """Driver-side featurize of a whole (small) corpus → dict fid→(set, set),
+    canonicalized exactly as the pipeline's featurize UDF does under cfg."""
+    canon = canonicalize(pdf["content"].reset_index(drop=True), cfg)
     f = featurize(canon, cfg)
     fids = list(pdf["fid"])
     return {

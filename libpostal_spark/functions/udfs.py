@@ -27,7 +27,12 @@ from pyspark.sql import types as T
 
 from ..config import PipelineConfig
 from ..core.canonicalize import canonicalize_batch
-from ..core.featurize import featurize, pair_jaccard_batch, pair_lcs_batch
+from ..core.featurize import (
+    canonicalize,
+    featurize,
+    pair_jaccard_batch,
+    pair_lcs_batch,
+)
 
 
 def feature_schema(emit_minhash: bool = False) -> T.StructType:
@@ -129,15 +134,8 @@ def make_featurize_udf(cfg: PipelineConfig, emit_minhash: bool = False):
 
     @F.pandas_udf(feature_schema(emit_minhash))
     def featurize_udf(it: Iterator[pd.Series]) -> Iterator[pd.DataFrame]:
-        expansions = dict(cfg.token_expansions) if cfg.token_expansions else None
         for content in it:
-            canon = canonicalize_batch(
-                content,
-                expansions=expansions,
-                transliterate=cfg.transliterate,
-                fold_spelled_numbers=cfg.fold_spelled_numbers,
-                numex_lang=cfg.numex_lang,
-            )
+            canon = canonicalize(content, cfg)
             f = featurize(canon, cfg)
             out = {
                 "canon": canon,
@@ -168,15 +166,8 @@ def make_band_keys_udf(cfg: PipelineConfig, n_bands: int):
 
     @F.pandas_udf(T.ArrayType(T.LongType()))
     def band_keys_udf(it: Iterator[pd.Series]) -> Iterator[pd.Series]:
-        expansions = dict(cfg.token_expansions) if cfg.token_expansions else None
         for content in it:
-            canon = canonicalize_batch(
-                content,
-                expansions=expansions,
-                transliterate=cfg.transliterate,
-                fold_spelled_numbers=cfg.fold_spelled_numbers,
-                numex_lang=cfg.numex_lang,
-            )
+            canon = canonicalize(content, cfg)
             yield pd.Series(list(featurize_bands(canon, cfg, n_bands)))
 
     return band_keys_udf

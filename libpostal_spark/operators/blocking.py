@@ -105,8 +105,8 @@ def exact_rep_frame(sigs: DataFrame, ided: DataFrame) -> DataFrame:
     (``exact_rep_frame(ided, ided)``) BEFORE featurization, so
     ``signatures`` featurizes representatives only; the caller then
     persists+counts the signatures frame (featurize UDF + the sha256
-    contraction materialize together in one job), and rep_sigs,
-    exact_edges and the label universe are all cheap filters over the warm
+    contraction materialize together in one job), and rep_sigs, the label
+    universe and the result's readers are all cheap filters over the warm
     cache, so no later stage ever recomputes the UDF chain or re-shuffles
     on sha256.
 

@@ -4,18 +4,18 @@ The flagship code pipeline (pipeline.py) works on the
 (repo, path, commit, lang, content) schema; this module adapts any
 (id, text) table onto it and adds the SQL-expressible dedup primitives a
 training-data pipeline needs: exact dedup, n-gram Jaccard pairs, MinHash-LSH
-clustering, SimHash keys.
+clustering, SimHash keys. The clustering and duplicate-listing operators
+take a ``PipelineResult`` — ``DedupPipeline(spark, cfg).run(
+docs_as_files(documents))`` is the one way to reach S1–S7.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from pyspark.sql import Window
-
 from ..config import PipelineConfig
-from ..pipeline import DedupPipeline
+from ..pipeline import PipelineResult
 from . import verify
 
 
@@ -91,28 +91,11 @@ MAX_PAIRS_PER_CLASS = 10_000
 
 
 def dup_status_pairs(
-    spark,
-    documents: DataFrame,
-    cfg: PipelineConfig | None = None,
-    max_class_size: int | None = None,
-    result=None,
-) -> DataFrame:
-    """Graded duplicate pairs — see ``dup_status_pairs_with_ledger``."""
-    pairs, _ = dup_status_pairs_with_ledger(
-        spark, documents, cfg, max_class_size, result,
-    )
-    return pairs
-
-
-def dup_status_pairs_with_ledger(
-    spark,
-    documents: DataFrame,
-    cfg: PipelineConfig | None = None,
-    max_class_size: int | None = None,
-    result=None,
+    result: PipelineResult, cfg: PipelineConfig
 ) -> tuple[DataFrame, DataFrame]:
-    """Graded duplicate pairs: every pair with same sha256 or Jaccard >=
-    cfg.jaccard_threshold, with the reference's 4-level status
+    """Graded duplicate pairs of a ``DedupPipeline.run`` result: every pair
+    with same sha256 or Jaccard >= cfg.jaccard_threshold (``cfg`` is the
+    config the result was run with), with the reference's 4-level status
     (/root/reference/src/libpostal.h:218-224; is_dupe thresholds
     /root/reference/src/libpostal.c:185-193).
 
@@ -123,114 +106,67 @@ def dup_status_pairs_with_ledger(
 
     This is the pairs-LISTING api — its output is by definition quadratic in
     duplicate-class size (an exact class of n docs yields n(n-1)/2 exact
-    pairs), so the listing re-expands the pipeline's O(n) star/rep
-    representation. ``MAX_PAIRS_PER_CLASS`` bounds that re-expansion: a
-    class (or near-dup class product) whose full listing would exceed the
-    cap emits STAR pairs through its representative(s) instead — O(n) rows,
-    still covering every member — and books the suppressed count in the
-    ledger. A 10^6-copy boilerplate class therefore cannot detonate the
-    listing into 5×10^11 rows. At scale you consume `minhash_clusters`
-    (linear labels); this listing exists for the pairwise-API parity the
-    reference's test_dedupe suite asserts. Winnow-only confirms (jaccard
-    below the needs-review bar) are excluded — they are a long-clone
-    signal, not a whole-file duplicate grade.
+    pairs), so the listing re-expands the pipeline's O(n) rep
+    representation: each row's class is its ``rep_fid``.
+    ``MAX_PAIRS_PER_CLASS`` bounds that re-expansion: a class (or near-dup
+    class product) whose full listing would exceed the cap emits STAR pairs
+    through its representative(s) instead — O(n) rows, still covering every
+    member — and books the suppressed count in the ledger. A 10^6-copy
+    boilerplate class therefore cannot detonate the listing into 5×10^11
+    rows; below the cap every member pair is listed. At scale you consume
+    `minhash_clusters` (linear labels); this listing exists for the
+    pairwise-API parity the reference's test_dedupe suite asserts.
+    Winnow-only confirms (jaccard below the needs-review bar) are excluded
+    — they are a long-clone signal, not a whole-file duplicate grade.
     """
-    cfg = cfg or PipelineConfig()
-    if result is not None:
-        # reuse an already-run PipelineResult for the same (documents, cfg)
-        # — callers holding one (the harness's per-session pipeline cache)
-        # skip this function's three driver actions entirely
-        res = result
-    else:
-        files = docs_as_files(documents)
-        res = DedupPipeline(spark, cfg).run(files)
-    sigs = res.signatures
+    sigs = result.signatures
     ids = sigs.select("fid", F.col("path").cast("long").alias("doc_id"))
-    w = Window.partitionBy("sha256")
     members = (
-        sigs.select("fid", "sha256")
-        .withColumn("rep", F.min("fid").over(w))
-        .withColumn("csize", F.count("*").over(w))
+        sigs.select("fid", F.col("rep_fid").alias("rep"))
+        .withColumn("csize", F.count("*").over(Window.partitionBy("rep")))
+    )
+    # one row per class: the representative is a member of its own class
+    csizes = members.filter(F.col("fid") == F.col("rep")).select(
+        "rep", F.col("csize").alias("n")
     )
     cap = F.lit(MAX_PAIRS_PER_CLASS)
+    # the largest class bounds every expansion: n(n-1)/2 exact pairs and
+    # n1*n2 near pairs are both at most mx^2. One aggregate over the cached
+    # frame; when no class can reach the cap, the cap conditions below are
+    # the literal False and Catalyst prunes the star branches, the
+    # class-size joins and the window from the plan
+    mx = sigs.groupBy("rep_fid").count().agg(F.max("count")).first()[0] or 0
+    capping = mx * mx > MAX_PAIRS_PER_CLASS
 
     # near-dup pairs: rep<->rep confirms expanded to every member pair
     # (identical content => identical jaccard to any third file) — unless
     # the class product exceeds the cap, in which case only the star pairs
-    # through each side's representative are listed
-    near = res.confirmed.filter(
+    # through each side's representative are listed: a capped confirm
+    # keeps only its rep1 row for the second expansion (rep1 × class2) and
+    # lists its other class1 members against rep2, so no capped product is
+    # ever materialized
+    near = result.confirmed.filter(
         F.col("jaccard") >= F.lit(cfg.jaccard_threshold)
     ).select("fid1", "fid2", "jaccard", "status")
-
-    # adaptive plan pruning: the largest sha256 class decides the plan
-    # shape; if even the WORST pairing that class could produce fits the
-    # cap, the whole cap machinery — class-size joins, capped/star
-    # branches, ledger — is pruned from the plan and the simple
-    # full-expansion shape is built instead (Catalyst time + runtime).
-    # Callers that already materialized the signatures (the session
-    # signature cache) pass max_class_size to skip this gating action.
-    if max_class_size is not None:
-        mx = max_class_size
-    else:
-        mx = members.agg(F.max("csize").alias("m")).collect()[0]["m"] or 0
-    cap_possible = (
-        mx * (mx - 1) // 2 > MAX_PAIRS_PER_CLASS
-        or mx * mx > MAX_PAIRS_PER_CLASS
-    )
-    if not cap_possible:
-        m1 = members.select(F.col("rep").alias("fid1"), F.col("fid").alias("u"))
-        m2 = members.select(F.col("rep").alias("fid2"), F.col("fid").alias("v"))
-        near_exp = (
-            near.join(m1, "fid1")
-            .join(m2, "fid2")
-            .select(
-                F.least("u", "v").alias("fid_a"),
-                F.greatest("u", "v").alias("fid_b"),
-                "jaccard",
-                "status",
-            )
-        )
-        xa = members.select("sha256", F.col("fid").alias("fid_a"))
-        xb = members.select("sha256", F.col("fid").alias("fid_b"))
-        exact = (
-            xa.join(xb, "sha256")
-            .filter(F.col("fid_a") < F.col("fid_b"))
-            .select(
-                "fid_a",
-                "fid_b",
-                F.lit(1.0).alias("jaccard"),
-                F.lit(verify.STATUS_EXACT).alias("status"),
-            )
-        )
-        out = (
-            exact.unionByName(near_exp)
-            .join(ids.withColumnRenamed("fid", "fid_a"), "fid_a")
-            .withColumnRenamed("doc_id", "doc_id1")
-            .join(ids.withColumnRenamed("fid", "fid_b"), "fid_b")
-            .withColumnRenamed("doc_id", "doc_id2")
-            .select(
-                "doc_id1", "doc_id2",
-                F.round("jaccard", 4).alias("jaccard"), "status",
-            )
-        )
-        ledger = spark.createDataFrame(
-            [],
-            "kind string, n_members long, pairs_emitted long, "
-            "pairs_suppressed long",
-        )
-        return out, ledger
-    csizes = members.groupBy("rep").agg(F.first("csize").alias("n"))
-    near = (
+    sized = (
         near.join(csizes.select(F.col("rep").alias("fid1"), F.col("n").alias("n1")), "fid1")
         .join(csizes.select(F.col("rep").alias("fid2"), F.col("n").alias("n2")), "fid2")
         .withColumn("capped", F.col("n1") * F.col("n2") > cap)
     )
+    near = sized if capping else near.withColumn("capped", F.lit(False))
     m1 = members.select(F.col("rep").alias("fid1"), F.col("fid").alias("u"))
     m2 = members.select(F.col("rep").alias("fid2"), F.col("fid").alias("v"))
-    near_full = (
-        near.filter(~F.col("capped"))
-        .join(m1, "fid1")
+    side1 = near.join(m1, "fid1")
+    is_rep1 = F.col("u") == F.col("fid1")
+    near_pairs = (
+        side1.filter(~F.col("capped") | is_rep1)
         .join(m2, "fid2")
+        .select("u", "v", "jaccard", "status")
+        .unionByName(
+            side1.filter(F.col("capped") & ~is_rep1).select(
+                "u", F.col("fid2").alias("v"), "jaccard", "status"
+            )
+        )
         .select(
             F.least("u", "v").alias("fid_a"),
             F.greatest("u", "v").alias("fid_b"),
@@ -238,77 +174,47 @@ def dup_status_pairs_with_ledger(
             "status",
         )
     )
-    near_capped = near.filter(F.col("capped"))
-    near_star = (
-        near_capped.join(m2, "fid2")
-        .select("fid1", F.col("v").alias("other"), "jaccard", "status")
-        .unionByName(
-            near_capped.join(m1, "fid1").select(
-                F.col("fid2").alias("fid1"),
-                F.col("u").alias("other"),
-                "jaccard",
-                "status",
-            )
-        )
-        .select(
-            F.least("fid1", "other").alias("fid_a"),
-            F.greatest("fid1", "other").alias("fid_b"),
-            "jaccard",
-            "status",
-        )
-        .distinct()   # (rep1, rep2) arrives from both star fans
-    )
 
-    # exact pairs: all member pairs within each sha256 class; classes whose
-    # n(n-1)/2 exceeds the cap list only the n-1 star pairs to the rep
-    exact_small = members.filter(
-        F.col("csize") * (F.col("csize") - 1) / 2 <= cap
+    # exact pairs: all member pairs within each class; a class whose
+    # n(n-1)/2 exceeds the cap lists only the n-1 star pairs to its rep
+    # (min fid), so only its rep row enters the self-join's left side
+    exact_cap = (
+        F.col("csize") * (F.col("csize") - 1) / 2 > cap if capping
+        else F.lit(False)
     )
-    xa = exact_small.select("sha256", F.col("fid").alias("fid_a"))
-    xb = exact_small.select("sha256", F.col("fid").alias("fid_b"))
-    exact = (
-        xa.join(xb, "sha256")
+    xa = members.filter(~exact_cap | (F.col("fid") == F.col("rep")))
+    exact_pairs = (
+        xa.select("rep", F.col("fid").alias("fid_a"))
+        .join(members.select("rep", F.col("fid").alias("fid_b")), "rep")
         .filter(F.col("fid_a") < F.col("fid_b"))
-        .select("fid_a", "fid_b")
-    )
-    exact_star = (
-        members.filter(
-            (F.col("csize") * (F.col("csize") - 1) / 2 > cap)
-            & (F.col("fid") != F.col("rep"))
+        .select(
+            "fid_a",
+            "fid_b",
+            F.lit(1.0).alias("jaccard"),
+            F.lit(verify.STATUS_EXACT).alias("status"),
         )
-        .select(F.col("rep").alias("fid_a"), F.col("fid").alias("fid_b"))
-    )
-    exact_all = exact.unionByName(exact_star).select(
-        "fid_a",
-        "fid_b",
-        F.lit(1.0).alias("jaccard"),
-        F.lit(verify.STATUS_EXACT).alias("status"),
     )
 
-    pairs = exact_all.unionByName(near_full).unionByName(near_star)
     out = (
-        pairs.join(ids.withColumnRenamed("fid", "fid_a"), "fid_a")
+        exact_pairs.unionByName(near_pairs)
+        .join(ids.withColumnRenamed("fid", "fid_a"), "fid_a")
         .withColumnRenamed("doc_id", "doc_id1")
         .join(ids.withColumnRenamed("fid", "fid_b"), "fid_b")
         .withColumnRenamed("doc_id", "doc_id2")
     )
 
     full = F.col("n1") * F.col("n2")
+    n = F.col("n")
     ledger = (
-        members.filter(F.col("csize") * (F.col("csize") - 1) / 2 > cap)
-        .groupBy("sha256")
-        .agg(F.first("csize").alias("n_members"))
+        csizes.filter(n * (n - 1) / 2 > cap)
         .select(
             F.lit("exact").alias("kind"),
-            F.col("n_members").cast("long"),
-            (F.col("n_members") - 1).cast("long").alias("pairs_emitted"),
-            (
-                F.col("n_members") * (F.col("n_members") - 1) / 2
-                - (F.col("n_members") - 1)
-            ).cast("long").alias("pairs_suppressed"),
+            n.cast("long").alias("n_members"),
+            (n - 1).cast("long").alias("pairs_emitted"),
+            (n * (n - 1) / 2 - (n - 1)).cast("long").alias("pairs_suppressed"),
         )
         .unionByName(
-            near_capped.select(
+            sized.filter(F.col("capped")).select(
                 F.lit("near").alias("kind"),
                 (F.col("n1") + F.col("n2")).cast("long").alias("n_members"),
                 (F.col("n1") + F.col("n2") - 1).cast("long").alias("pairs_emitted"),
@@ -318,8 +224,6 @@ def dup_status_pairs_with_ledger(
             )
         )
     )
-    # res stays persisted until the caller collects `out` (lazy lineage);
-    # one-shot query wrappers let session teardown reclaim the cache
     return (
         out.select(
             "doc_id1", "doc_id2", F.round("jaccard", 4).alias("jaccard"), "status"
@@ -490,28 +394,16 @@ def multiword_alignments(
     return out.drop("mw_short", "mw_long")
 
 
-def minhash_clusters(
-    spark,
-    documents: DataFrame,
-    cfg: PipelineConfig | None = None,
-    result=None,
-) -> DataFrame:
-    """Full MinHash-LSH near-dup clustering of a documents table.
+def minhash_clusters(result: PipelineResult) -> DataFrame:
+    """MinHash-LSH near-dup clustering of a documents table, read off the
+    ``DedupPipeline.run`` result of its ``docs_as_files`` adapter.
 
     Output: doc_id, component (fid-space label), is_canonical.
-    Pass ``result`` (an already-run PipelineResult for the same documents
-    and config) to reuse its persisted stages instead of re-running.
     """
-    cfg = cfg or PipelineConfig()
-    if result is not None:
-        res = result
-    else:
-        files = docs_as_files(documents)
-        res = DedupPipeline(spark, cfg).run(files)
-    sig = res.signatures.select("fid", F.col("path").alias("doc_id"))
+    sig = result.signatures.select("fid", F.col("path").alias("doc_id"))
     # deliberately NOT sorted: a global orderBy here would be a full sort of
     # the production output; callers that need display order sort themselves
-    return res.clusters.join(sig, "fid").select(
+    return result.clusters.join(sig, "fid").select(
         F.col("doc_id").cast("long").alias("doc_id"),
         "component",
         "is_canonical",

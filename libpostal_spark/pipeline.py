@@ -4,7 +4,8 @@ files(repo, path, commit, lang, content)
   → S1 signatures   (canonicalize + featurize pandas UDF over one
                      representative per distinct content; checkpointed)
   → S2 exact groups (min-fid representative per sha256 from a 2-column
-                     aggregate, derived before S1; star edges for copies)
+                     aggregate, derived before S1; every row keeps its
+                     class's ``rep_fid``)
   → S3 band_buckets (one-pass key-family explosion; checkpointed)
   → S4 pairs        (bucket-disciplined candidate pairing)
   → S5 confirmed    (one fused Arrow Jaccard + verified-run confirm per
@@ -14,7 +15,9 @@ files(repo, path, commit, lang, content)
 
 This is the dataflow of SURVEY.md §7.1 — the Spark-first restatement of the
 reference's normalize → near_dupe_hashes → is_dupe → (caller-side) cluster
-chain.
+chain. ``DedupPipeline.run(files)`` is the one way into S1–S7: the
+clustering and pair-listing operators (operators/dedup.py) consume its
+``PipelineResult``.
 """
 
 from __future__ import annotations
@@ -31,11 +34,11 @@ from .operators import blocking, cluster, verify
 
 @dataclass
 class PipelineResult:
-    # one row per input file; feature columns are null for members of an
-    # exact-copy class (only its min-fid representative is featurized),
-    # except when the caller passed precomputed ``signatures``
+    # one row per input file, with its exact-copy class's representative
+    # (rep_fid = min fid per sha256); feature columns are null for members
+    # (only the representative is featurized), so a member's features are
+    # its representative's
     signatures: DataFrame
-    exact_edges: DataFrame
     pairs: DataFrame
     confirmed: DataFrame
     clusters: DataFrame          # fid, component, is_canonical
@@ -51,14 +54,6 @@ class PipelineResult:
             except Exception:
                 pass
         self.persisted.clear()
-
-    def predicted_dup_pairs(self) -> DataFrame:
-        """All (fid1 < fid2) pairs sharing a component — for recall checks."""
-        a = self.clusters.select(F.col("fid").alias("fid1"), "component")
-        b = self.clusters.select(F.col("fid").alias("fid2"), "component")
-        return a.join(b, "component").filter(F.col("fid1") < F.col("fid2")).select(
-            "fid1", "fid2"
-        )
 
 
 class DedupPipeline:
@@ -80,79 +75,52 @@ class DedupPipeline:
         self,
         files: DataFrame,
         collect_bucket_stats: bool = False,
-        signatures: DataFrame | None = None,
     ) -> PipelineResult:
-        """Pass `signatures` (an already-PERSISTED blocking.signatures frame
-        for the same files+config) to reuse the featurize pass across
-        multiple pipeline invocations in one session. The frame serves the
-        cheap (sha256, fid) rep aggregation itself — a 2-column scan of the
-        warm cache + AQE-broadcast join back — so an unpersisted frame would
-        run the featurize UDF twice and raises ValueError instead."""
-        if signatures is not None:
-            lvl = signatures.storageLevel
-            if not (lvl.useMemory or lvl.useDisk):
-                raise ValueError("run(signatures=...) needs a persisted frame")
         cfg = self.cfg
         persisted: list[DataFrame] = []
         m0 = len(self.store.metrics)   # result carries THIS run's rows only
         resumable = not isinstance(self.store, NullStore)
-        fp = None
+        fp = input_fingerprint(files) if resumable else None
+        # the rep map (min fid per sha256) comes from the cheap JVM sha2
+        # columns BEFORE featurization, so the featurize UDF sees only
+        # representatives' content; members' feature columns are null
+        # (signatures' rep_fid gate)
+        ided = blocking.with_ids(files)
+        gated = blocking.exact_rep_frame(ided, ided)
         if resumable:
-            # ALWAYS fingerprint the input when resuming — including the
-            # precomputed-signatures path, or downstream stages would match
-            # manifests written for a different dataset
-            fp = input_fingerprint(files)
-        if signatures is not None:
-            sigs = signatures
-            with_rep = blocking.exact_rep_frame(sigs, sigs)
+            # the fingerprint keys every stage to THIS input — a re-run
+            # against a different table invalidates the cache instead of
+            # silently serving the previous dataset's state. The expensive
+            # featurize stage resumes at PARTITION granularity
+            # (pt = xxhash64(fid) % n): only partitions missing from the
+            # manifest recompute after a mid-stage kill. rep_fid is not
+            # stored: the rep map is re-derived from the same cheap columns
+            # below, so partitions written by any version agree.
+            sigs = self.store.partitioned_stage(
+                "signatures",
+                gated,
+                lambda sub: blocking.signatures(
+                    sub, cfg, ids_added=True
+                ).drop("rep_fid"),
+                fp,
+            )
+            with_rep = blocking.exact_rep_frame(sigs, ided)
         else:
-            # the rep map (min fid per sha256) comes from the cheap JVM
-            # sha2 columns BEFORE featurization, so the featurize UDF sees
-            # only representatives' content; members' feature columns are
-            # null (signatures' rep_fid gate)
-            ided = blocking.with_ids(files)
-            gated = blocking.exact_rep_frame(ided, ided)
-            if resumable:
-                # the fingerprint keys every stage to THIS input — a re-run
-                # against a different table invalidates the cache instead
-                # of silently serving the previous dataset's state. The
-                # expensive featurize stage resumes at PARTITION granularity
-                # (pt = xxhash64(fid) % n): only partitions missing from the
-                # manifest recompute after a mid-stage kill. rep_fid is not
-                # stored: the rep map is re-derived from the same cheap
-                # columns below, so partitions written by any version agree.
-                sigs = self.store.partitioned_stage(
-                    "signatures",
-                    gated,
-                    lambda sub: blocking.signatures(
-                        sub, cfg, ids_added=True
-                    ).drop("rep_fid"),
-                    fp,
-                )
-                with_rep = blocking.exact_rep_frame(sigs, ided)
-            else:
-                with_rep = self.store.stage(
-                    "signatures",
-                    lambda: blocking.signatures(gated, cfg, ids_added=True),
-                )
-                sigs = with_rep.drop("rep_fid")
-
-        if not resumable:
             # ONE persist+count materializes the featurize UDF AND the sha256
             # contraction together (the whole serial prefix) in a single job.
-            # Downstream consumers — 3 key families, verify ×2, exact edges,
-            # label universe — are all filters over this warm cache, so AQE's
-            # concurrent subtree launch can never recompute the UDF chain
-            # (observed 8× duplicated featurize stages with a cold cache at
-            # fan-out) and no later stage re-shuffles on sha256. Fewer
-            # actions = fewer driver planning waves = lower serial floor.
-            # The rep map rides the cheap sha2-only branch (see
-            # exact_rep_frame), so the signature payload is never exchanged.
-            with_rep = with_rep.persist()
+            # Downstream consumers — 3 key families, verify ×2, the label
+            # universe and the result's readers — are all filters over this
+            # warm cache, so AQE's concurrent subtree launch can never
+            # recompute the UDF chain (observed 8× duplicated featurize
+            # stages with a cold cache at fan-out) and no later stage
+            # re-shuffles on sha256. Fewer actions = fewer driver planning
+            # waves = lower serial floor. The rep map rides the cheap
+            # sha2-only branch (see exact_rep_frame), so the signature
+            # payload is never exchanged.
+            with_rep = blocking.signatures(gated, cfg, ids_added=True).persist()
             persisted.append(with_rep)
             with_rep.count()
-            sigs = with_rep.drop("rep_fid")
-        rep_sigs, exact_edges = blocking.exact_groups(with_rep)
+        rep_sigs, _ = blocking.exact_groups(with_rep)
         keys = self.store.stage(
             "band_buckets", lambda: blocking.blocking_keys(rep_sigs, cfg), fp
         )
@@ -209,8 +177,7 @@ class DedupPipeline:
         )
         self.store.write_metrics()  # no-op for NullStore (no root)
         return PipelineResult(
-            signatures=sigs,
-            exact_edges=exact_edges,
+            signatures=with_rep,
             pairs=pairs,
             confirmed=confirmed,
             clusters=clusters,

@@ -12,6 +12,7 @@ from pyspark.sql import functions as F
 
 from libpostal_spark.config import PipelineConfig
 from libpostal_spark.operators import dedup, verify
+from libpostal_spark.pipeline import DedupPipeline
 
 BASE = " ".join(f"token{i} filler{i}" for i in range(30))          # 60 tokens
 NEAR = BASE + " extra trailing bit"                                # j >= 0.9
@@ -21,6 +22,12 @@ BORDER = " ".join(f"token{i} filler{i}" for i in range(26)) + " " + " ".join(
     f"other{i} words{i}" for i in range(4)
 )
 DIFFERENT = " ".join(f"unrelated{i} stuff{i}" for i in range(30))
+
+
+def _listing(spark, docs, cfg):
+    """(pairs, ledger) of one pipeline run over a documents table."""
+    res = DedupPipeline(spark, cfg).run(dedup.docs_as_files(docs))
+    return dedup.dup_status_pairs(res, cfg)
 
 
 @pytest.fixture(scope="module")
@@ -36,7 +43,7 @@ def status_pairs(spark):
         "doc_id long, text string, lang string, source string",
     )
     cfg = PipelineConfig(jaccard_threshold=0.5)
-    out = dedup.dup_status_pairs(spark, docs, cfg)
+    out, _ = _listing(spark, docs, cfg)
     return {
         frozenset((r["doc_id1"], r["doc_id2"])): (r["status"], r["jaccard"])
         for r in out.collect()
@@ -69,7 +76,7 @@ def test_exact_class_expands_to_all_member_pairs(spark):
         [(i, BASE, "en", "s") for i in range(4)] + [(9, NEAR, "en", "s")],
         "doc_id long, text string, lang string, source string",
     )
-    out = dedup.dup_status_pairs(spark, docs, PipelineConfig()).collect()
+    out = _listing(spark, docs, PipelineConfig())[0].collect()
     exact = {(r["doc_id1"], r["doc_id2"]) for r in out if r["status"] == verify.STATUS_EXACT}
     likely = [r for r in out if r["status"] == verify.STATUS_LIKELY]
     assert len(exact) == 6          # C(4,2) member pairs, not a 3-edge star
@@ -97,9 +104,7 @@ def test_dup_status_pairs_class_cap(spark):
     docs = spark.createDataFrame(
         rows, "doc_id long, text string, lang string, source string"
     )
-    pairs, ledger = dedup.dup_status_pairs_with_ledger(
-        spark, docs, PipelineConfig()
-    )
+    pairs, ledger = _listing(spark, docs, PipelineConfig())
     got = pairs.collect()
     # star listing: exactly n-1 pairs, all anchored at the class rep (doc 0)
     assert len(got) == n - 1
@@ -115,7 +120,8 @@ def test_dup_status_pairs_class_cap(spark):
 
 def test_dup_status_pairs_near_cap(spark, monkeypatch):
     """Capped near-dup class products list star pairs through each rep and
-    ledger the rest; uncapped output is unchanged (subset check)."""
+    ledger the rest (a subset of the full listing); with no class capped
+    the listing is every member pair and the ledger is empty."""
     base = " ".join(f"tok{i} fill{i}" for i in range(30))
     near = base + " extra tail"
     rows = [(i, base, "en", "s") for i in range(4)] + [
@@ -125,10 +131,22 @@ def test_dup_status_pairs_near_cap(spark, monkeypatch):
         rows, "doc_id long, text string, lang string, source string"
     )
     cfg = PipelineConfig(jaccard_threshold=0.5)
-    full = dedup.dup_status_pairs(spark, docs, cfg)  # cap not hit
-    monkeypatch.setattr(dedup, "MAX_PAIRS_PER_CLASS", 8)
-    capped, ledger = dedup.dup_status_pairs_with_ledger(spark, docs, cfg)
+    res = DedupPipeline(spark, cfg).run(dedup.docs_as_files(docs))
+    full, full_ledger = dedup.dup_status_pairs(res, cfg)  # cap not hit
     full_set = {(r["doc_id1"], r["doc_id2"]) for r in full.collect()}
+    ids = [r[0] for r in rows]
+    fid_order = {
+        int(r["path"]): r["fid"] for r in res.signatures.collect()
+    }
+    every_pair = {
+        tuple(sorted((a, b), key=fid_order.get))
+        for i, a in enumerate(ids) for b in ids[i + 1:]
+    }
+    assert full_set == every_pair          # C(8,2) = 28: 12 exact + 16 near
+    assert not full_ledger.collect()
+
+    monkeypatch.setattr(dedup, "MAX_PAIRS_PER_CLASS", 8)
+    capped, ledger = dedup.dup_status_pairs(res, cfg)
     capped_rows = capped.collect()
     capped_set = {(r["doc_id1"], r["doc_id2"]) for r in capped_rows}
     assert capped_set <= full_set
@@ -138,3 +156,4 @@ def test_dup_status_pairs_near_cap(spark, monkeypatch):
     assert led["near"]["pairs_suppressed"] == 16 - 7
     n_near = sum(1 for r in capped_rows if r["status"] != verify.STATUS_EXACT)
     assert n_near == 7
+    res.release()

@@ -1,6 +1,6 @@
 """Entry-point session memo (_memo): per-name LRU bound, dead-session
 sweep, hits never rebuild, and the session-end release — including the
-signatures entry, whose max-class gate lives and dies with its frame."""
+pipeline-result entry, whose cached frames are released on eviction."""
 
 from types import SimpleNamespace
 
@@ -99,18 +99,20 @@ def _write_docs(root, n_dirs: int) -> list[str]:
     return dirs
 
 
-def test_sig_eviction_cleans_its_gate(spark, tmp_path):
-    """The production _sigs entry carries (frame, max sha256 class): the
-    per-name bound that evicts the frame drops its gate with it."""
+def test_pipe_res_eviction_unpersists_its_frames(spark, tmp_path):
+    """The production _pipe_res entry holds a PipelineResult: the per-name
+    bound that evicts an sf dir's result unpersists every frame it cached."""
     E = _entry()
     dirs = _write_docs(tmp_path, 3)
-    first, gate = E._sigs(spark, dirs[0])
-    assert gate == 3 and first.storageLevel.useMemory
+    first = E._pipe_res(spark, dirs[0])
+    frames = list(first.persisted)
+    assert frames and all(df.storageLevel.useMemory for df in frames)
+    assert first.signatures.storageLevel.useMemory
     for d in dirs[1:]:
-        E._sigs(spark, d)
+        E._pipe_res(spark, d)
     app = spark.sparkContext.applicationId
-    assert (app, dirs[0], "sigs") not in E._MEMO
-    assert not first.storageLevel.useMemory
+    assert (app, dirs[0], "pipe_res") not in E._MEMO
+    assert not any(df.storageLevel.useMemory for df in frames)
     assert [k[1] for k in E._MEMO] == dirs[1:]
     E.release_caches()
 

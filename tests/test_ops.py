@@ -6,8 +6,10 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
+from libpostal_spark.config import PipelineConfig
 from libpostal_spark.functions import textstats as TS
 from libpostal_spark.operators import dedup, multimodal, similarity
+from libpostal_spark.pipeline import DedupPipeline
 
 
 @pytest.fixture(scope="module")
@@ -78,7 +80,9 @@ def test_ngram_jaccard_pairs(spark, docs):
 
 
 def test_minhash_clusters_docs(spark, docs):
-    got = {r["doc_id"]: r["component"] for r in dedup.minhash_clusters(spark, docs).collect()}
+    res = DedupPipeline(spark, PipelineConfig()).run(dedup.docs_as_files(docs))
+    got = {r["doc_id"]: r["component"] for r in dedup.minhash_clusters(res).collect()}
+    res.release()
     assert got[0] == got[1]          # exact dups share a component
     assert got[2] != got[3]
 

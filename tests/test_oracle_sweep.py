@@ -101,6 +101,63 @@ def test_trigram_twin_two_sf_dirs(spark, sf_dir):
     _compare(spark, sf_dir, "lang_id_trigram")
 
 
+def _copies_docs(path) -> None:
+    """~60 documents: exact-copy classes of 2-4, planted near-duplicates of
+    class members and of singles (one of them itself copied), and
+    unrelated singles, with copies spread over the doc_id range."""
+    import random
+
+    rng = random.Random(3)
+    vocab = [
+        "".join(rng.choice("bdfgklmnprstvz") + rng.choice("aeiou")
+                for _ in range(3))
+        for _ in range(400)
+    ]
+    base = [[rng.choice(vocab) for _ in range(60)] for _ in range(30)]
+    texts = [" ".join(b) for b in base]
+    for i, n in ((0, 3), (1, 2), (2, 1), (3, 1), (4, 2)):
+        texts += [texts[i]] * n                       # exact copies
+    for i in (0, 1, 5, 6, 7, 8):
+        texts.append(" ".join(base[i][:-1] + ["zzqx"]))     # last token swapped
+        texts.append(" ".join(base[i] + ["tail"]))          # one token appended
+    texts += [" ".join(base[0] + ["tail"])] * 2       # copies of a near-dup
+    texts += [" ".join(base[9][10:] + base[9][:10])]  # rotated: shared long run
+    order = list(range(len(texts)))
+    rng.shuffle(order)
+    pdf = pd.DataFrame({
+        "doc_id": range(len(texts)),
+        "text": [texts[i] for i in order],
+        "lang": "en",
+        "source": [f"src{i % 3}" for i in range(len(texts))],
+        "n_chars": [len(texts[i]) for i in order],
+    })
+    path.mkdir()
+    pdf.to_parquet(path / "documents.parquet")
+    # oracle_sql() builds every twin, and the IVF twin reads the compare
+    # dir's embeddings
+    pd.DataFrame({
+        "vec_id": range(64),
+        "embedding": [[rng.gauss(0, 1) for _ in range(8)] for _ in range(64)],
+    }).to_parquet(path / "embeddings.parquet")
+
+
+def test_pipeline_twins_on_exact_copies(spark, tmp_path, monkeypatch):
+    """The three pipeline-backed twins on a corpus with exact-copy classes:
+    members take their representative's counts (shingle_stats), copies
+    share their class's cluster, and the pair listing expands every class
+    and every near-dup confirm to all member pairs — also through the
+    capping plan, with a cap that the largest class (4 members) could
+    reach but no class or class product does."""
+    from libpostal_spark.operators import dedup
+
+    sf_dir = tmp_path / "copies"
+    _copies_docs(sf_dir)
+    for name in ("shingle_stats", "doc_near_dup_clusters", "dup_status_pairs"):
+        _compare(spark, str(sf_dir), name)
+    monkeypatch.setattr(dedup, "MAX_PAIRS_PER_CLASS", 15)
+    _compare(spark, str(sf_dir), "dup_status_pairs")
+
+
 @pytest.mark.slow
 def test_oracle_sweep_sf01(spark):
     """Every non-streaming twin, full hash compare, at sf0.1."""

@@ -31,6 +31,15 @@ def pair_metrics(
     )
 
 
+def predicted_dup_pairs(result):
+    """All (fid1 < fid2) pairs sharing a component of a pipeline result."""
+    a = result.clusters.select(F.col("fid").alias("fid1"), "component")
+    b = result.clusters.select(F.col("fid").alias("fid2"), "component")
+    return a.join(b, "component").filter(F.col("fid1") < F.col("fid2")).select(
+        "fid1", "fid2"
+    )
+
+
 def component_pairs(labels: dict[str, str]) -> set[tuple[str, str]]:
     """All intra-component (lo, hi) pairs from a fid→component mapping."""
     groups = defaultdict(list)
@@ -61,7 +70,7 @@ def truth(cfg, corpus_pdf):
 def test_recall_precision(result, truth):
     _, truth_pairs = truth
     predicted = {
-        (r["fid1"], r["fid2"]) for r in result.predicted_dup_pairs().collect()
+        (r["fid1"], r["fid2"]) for r in predicted_dup_pairs(result).collect()
     }
     m = pair_metrics(predicted, truth_pairs)
     assert m["recall"] >= 0.99, m
@@ -125,25 +134,6 @@ def test_partition_count_invariance(spark, cfg, corpus_pdf, result):
     a = {r["fid"]: r["component"] for r in result.clusters.collect()}
     b = {r["fid"]: r["component"] for r in res2.clusters.collect()}
     assert a == b
-
-
-def test_precomputed_signatures_must_be_persisted(spark, cfg, corpus_pdf, result):
-    """run(signatures=) scans the frame for the rep map, so it only accepts
-    a persisted one; a persisted frame yields the same labels."""
-    from libpostal_spark.operators import blocking
-
-    files = corpus_to_spark(spark, corpus_pdf, 8)
-    sigs = blocking.signatures(files, cfg)
-    with pytest.raises(ValueError, match="persisted"):
-        DedupPipeline(spark, cfg).run(files, signatures=sigs)
-    sigs = sigs.persist()
-    try:
-        res = DedupPipeline(spark, cfg).run(files, signatures=sigs)
-        got = {r["fid"]: r["component"] for r in res.clusters.collect()}
-        res.release()
-    finally:
-        sigs.unpersist()
-    assert got == {r["fid"]: r["component"] for r in result.clusters.collect()}
 
 
 def test_no_oversized_allpairs_blowup(result):
@@ -216,3 +206,38 @@ def test_exact_copies_featurized_once(spark, cfg, fork_files, tmp_path):
     finally:
         for df in cached:
             df.unpersist()
+
+
+def test_reference_rule_canonicalizes_like_the_pipeline(spark):
+    """The reference rule's shingles come from the canon the featurize UDF
+    emits, also for a config that sets every canonicalization option
+    (accented, spelled-number French text)."""
+    import pandas as pd
+
+    from libpostal_spark.config import PipelineConfig
+    from libpostal_spark.core.featurize import featurize
+    from libpostal_spark.functions.udfs import make_featurize_udf
+
+    cfg = PipelineConfig(
+        transliterate=True, fold_spelled_numbers=True, numex_lang="fr"
+    )
+    pdf = pd.DataFrame({
+        "fid": ["a", "b", "c"],
+        "content": [
+            "Le café coûte vingt-trois euros et la crème brûlée quarante deux",
+            "Élodie a acheté deux cent quarante pommes à Noël pour la fête",
+            "trois mille quatre cents élèves étudient à l'école de Besançon",
+        ],
+    })
+    udf = make_featurize_udf(cfg)
+    canon = {
+        r["fid"]: r["canon"]
+        for r in spark.createDataFrame(pdf)
+        .select("fid", udf("content")["canon"].alias("canon"))
+        .collect()
+    }
+    assert "cafe" in canon["a"].split() and "240" in canon["b"].split()
+    shingles = featurize(pd.Series([canon[f] for f in pdf.fid]), cfg).shingles
+    feats = EV.exact_features(pdf, cfg)
+    for fid, sh in zip(pdf.fid, shingles):
+        assert feats[fid][0] == frozenset(sh.tolist()), fid

@@ -294,3 +294,91 @@ def test_underlimit_take_fully_materializes_persist(spark):
         assert any(c == p and p >= 8 for c, p in cached), cached
     finally:
         df.unpersist()
+
+
+
+def _nodes(plan, cached=()):
+    """(simpleString, cached relations above) for every node of a JVM
+    physical plan, walking into AQE stages and cached relations."""
+    yield plan.simpleString(10_000), cached
+    cls = plan.getClass().getSimpleName()
+    if cls == "AdaptiveSparkPlanExec":
+        kids = [plan.executedPlan()]
+    elif cls.endswith("QueryStageExec"):
+        kids = [plan.plan()]
+    elif cls == "ReusedExchangeExec":
+        kids = [plan.child()]
+    elif cls == "InMemoryTableScanExec":
+        rel = plan.relation()
+        kids, cached = [rel.cacheBuilder().cachedPlan()], cached + (rel,)
+    else:
+        ch = plan.children()
+        kids = [ch.apply(i) for i in range(ch.size())]
+    for k in kids:
+        yield from _nodes(k, cached)
+
+
+def test_pipeline_run_plan_reads_one_cached_with_rep(spark, cfg):
+    """The in-memory ``DedupPipeline.run(files)`` plan on a corpus with
+    exact copies: ONE featurize UDF whose input is the rep-gated content,
+    ONE confirm UDF, S3 (pairs), S5 (confirmed) and S7 (clusters) all read
+    the single persisted ``with_rep`` frame (the result's ``signatures``),
+    and no stage after S2 exchanges on sha256."""
+    from libpostal_spark.corpus import generate_corpus
+    from libpostal_spark.pipeline import DedupPipeline
+
+    pdf = generate_corpus(
+        n_base=20, dup_fraction=0.6, n_boilerplate_copies=5,
+        n_clone_embed=2, seed=7,
+    )
+    assert pdf.content.duplicated().any()
+    files = spark.createDataFrame(
+        pdf[["repo", "path", "commit", "lang", "content"]]
+    ).repartition(4)
+    res = DedupPipeline(spark, cfg).run(files)
+
+    def with_rep(rel) -> bool:
+        out = rel.output().toString()
+        return all(c in out for c in ("rep_fid#", "canon#", "winnow#"))
+
+    try:
+        nodes = {
+            name: list(_nodes(
+                getattr(res, name)._jdf.queryExecution().executedPlan()
+            ))
+            for name in ("signatures", "pairs", "confirmed", "clusters")
+        }
+        feat = re.compile(r"featurize_udf\((.*?)\)#(\d+)\]")
+        calls = {
+            m for ns in nodes.values() for s, _ in ns for m in feat.findall(s)
+            if s.startswith("ArrowEvalPython")
+        }
+        assert len(calls) == 1, calls                 # one featurize UDF
+        (arg, _), = calls
+        assert re.fullmatch(
+            r"CASE WHEN \(fid#\d+ = rep_fid#\d+\) THEN content#\d+ END", arg
+        ), arg
+        confirm = {
+            s for s, _ in nodes["confirmed"]
+            if s.startswith("ArrowEvalPython") and "pair_confirm_udf" in s
+        }
+        assert len(confirm) == 1, confirm             # one confirm UDF
+
+        builders = set()
+        for name in ("pairs", "confirmed", "clusters"):
+            reads = False
+            for s, cached in nodes[name]:
+                reps = [r for r in cached if with_rep(r)]
+                reads = reads or bool(reps)
+                builders |= {
+                    spark._jvm.System.identityHashCode(r.cacheBuilder())
+                    for r in reps
+                }
+                if s.startswith("ArrowEvalPython") and "featurize_udf" in s:
+                    assert reps, (name, s)            # never re-featurized
+                if s.startswith("Exchange") and not reps:
+                    assert "sha" not in s, (name, s)  # no sha256 shuffle
+            assert reads, name                        # reads the cache
+        assert len(builders) == 1, builders           # ONE with_rep cache
+    finally:
+        res.release()

@@ -150,7 +150,11 @@ def _spread(df: DataFrame) -> DataFrame:
     Arrow kernels need a few hundred rows per batch to stay vectorized, and
     this substrate's DRAM bandwidth saturates near 8-16 concurrent Python
     workers (BASELINE.md); A/B at sf0.1: featurize 1.7 s single-task,
-    0.78 s at 8, 0.65 s at 16, 1.47 s at 32. Applied ONLY on paths whose
+    0.78 s at 8, 0.65 s at 16, 1.47 s at 32. That A/B predates
+    ``get_spark``'s worker daemon (``libpostal_spark/daemon.py``): every
+    Python task then also paid 0.13–0.28 s re-reading Spark's zip
+    directories, a per-task cost that penalized 32 tasks most, so the cap
+    wants re-measuring. Applied ONLY on paths whose
     UDF is actually executed by the harness action — a projection-pruned
     path would pay the exchange and gain nothing."""
     spark = df.sparkSession

@@ -382,3 +382,44 @@ def test_pipeline_run_plan_reads_one_cached_with_rep(spark, cfg):
         assert len(builders) == 1, builders           # ONE with_rep cache
     finally:
         res.release()
+
+
+def test_pipeline_run_job_count(spark, cfg):
+    """One warm in-memory ``DedupPipeline.run(files)`` plus its labels on
+    the driver runs a pinned number of Spark jobs. Every job is a fixed
+    cost of a run (scheduling, planning, a round trip to the Python
+    workers), so a new action must show up here and be argued for in
+    review; lower the pin when an action goes."""
+    from libpostal_spark.corpus import generate_corpus
+    from libpostal_spark.pipeline import DedupPipeline
+
+    pdf = generate_corpus(
+        n_base=20, dup_fraction=0.6, n_boilerplate_copies=5,
+        n_clone_embed=2, seed=7,
+    )
+    files = spark.createDataFrame(
+        pdf[["repo", "path", "commit", "lang", "content"]]
+    ).repartition(4).persist()
+    files.count()
+    sc = spark.sparkContext
+
+    def run_with_labels():
+        res = DedupPipeline(spark, cfg).run(files)
+        try:
+            return res.clusters.select("fid", "component").toArrow().num_rows
+        finally:
+            res.release()
+
+    try:
+        want_rows = run_with_labels()                   # warm-up
+        group = "test_pipeline_run_job_count"
+        sc.setJobGroup(group, group)
+        try:
+            assert run_with_labels() == want_rows
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        jobs = sc.statusTracker().getJobIdsForGroup(group)
+    finally:
+        files.unpersist()
+    assert len(jobs) == 17, sorted(jobs)

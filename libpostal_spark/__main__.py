@@ -163,7 +163,7 @@ def main(argv: list[str] | None = None) -> int:
         return 0
 
     pipe = DedupPipeline(spark, cfg, checkpoint_root=args.checkpoint)
-    res = pipe.run(files, collect_bucket_stats=True)
+    res = pipe.run(files)
     if args.format == "iceberg":
         res.clusters.writeTo(args.output).createOrReplace()
     elif args.format == "table":
@@ -175,7 +175,7 @@ def main(argv: list[str] | None = None) -> int:
         config_hash=cfg.config_hash,
         n_files=res.clusters.count(),
         n_components=res.clusters.select("component").distinct().count(),
-        bucket_stats=res.bucket_stats,
+        bucket_stats=[r.asDict() for r in res.bucket_stats.collect()],
         metrics=res.metrics,
     )
     print(json.dumps(summary, default=str))

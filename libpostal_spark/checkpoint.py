@@ -4,8 +4,10 @@ Every stage writes a parquet table under ``{root}/{stage}/config={hash}/data``
 plus manifest rows under ``.../manifest`` (a Spark-written JSON table — all
 I/O goes through the Hadoop filesystem layer, so the store works unchanged on
 HDFS/S3, not just the local FS). A manifest row records stage, config hash,
-INPUT FINGERPRINT, partition id (``pt``; -1 for whole-stage checkpoints), row
-count and wall time.
+INPUT FINGERPRINT, partition id (``pt``; -1 for whole-stage checkpoints),
+``LAYOUT``, row count and wall time. Bump ``LAYOUT`` whenever a stage's stored
+columns change: ``completed`` matches it, so data stored with other columns
+is recomputed, never misread (2: signatures keep ``rep_fid``).
 
 Resume semantics:
 
@@ -41,9 +43,11 @@ from pyspark.sql import functions as F
 # serial driver listing
 _META_MAX_FILES = 10_000
 
+LAYOUT = 2
+
 MANIFEST_SCHEMA = (
     "stage string, config_hash string, input_fingerprint string, pt long, "
-    "n_pt long, rows long, wall_ms long, written_at string"
+    "n_pt long, layout long, rows long, wall_ms long, written_at string"
 )
 
 
@@ -168,6 +172,7 @@ class CheckpointStore:
                     r.get("input_fingerprint"),
                     r.get("pt", -1),
                     r.get("n_pt", -1),
+                    LAYOUT,
                     r.get("rows"),
                     r.get("wall_ms"),
                     time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
@@ -181,7 +186,7 @@ class CheckpointStore:
         )
 
     def completed(
-        self, stage: str, input_fingerprint: str | None, n_pt: int = -1
+        self, stage: str, input_fingerprint: str, n_pt: int = -1
     ) -> list[int]:
         """pts with a manifest row matching this config + input + pt domain.
 
@@ -189,13 +194,13 @@ class CheckpointStore:
         different ``partitioned_stage(n_pt=)`` lives in a different
         ``pmod(fid, n)`` domain, and mixing domains would both duplicate and
         drop rows — a mismatch reads as nothing-completed, which wipes and
-        recomputes exactly like a fingerprint change."""
+        recomputes exactly like a fingerprint change. ``layout`` likewise."""
         m = self._read_manifest(stage).filter(
             (F.col("config_hash") == self.config_hash)
+            & (F.col("input_fingerprint") == input_fingerprint)
             & (F.coalesce(F.col("n_pt"), F.lit(-1)) == n_pt)
+            & (F.col("layout") == LAYOUT)
         )
-        if input_fingerprint is not None:
-            m = m.filter(F.col("input_fingerprint") == input_fingerprint)
         return [r["pt"] for r in m.select("pt").distinct().collect()]
 
     def load(self, stage: str) -> DataFrame:
@@ -220,12 +225,15 @@ class CheckpointStore:
         if fs.exists(path):
             fs.delete(path, True)
 
+    def fingerprint(self, files: DataFrame) -> str:
+        return input_fingerprint(files)
+
     # ------------------------------------------------------ whole stages
     def stage(
         self,
         name: str,
         fn: Callable[[], DataFrame],
-        input_fingerprint: str | None = None,
+        input_fingerprint: str,
     ) -> DataFrame:
         """Load `name` if checkpointed for this (config, input), else compute,
         persist, and read back — downstream stages consume a clean parquet
@@ -267,7 +275,7 @@ class CheckpointStore:
         name: str,
         input_df: DataFrame,
         fn: Callable[[DataFrame], DataFrame],
-        input_fingerprint: str | None,
+        input_fingerprint: str,
         n_pt: int = 32,
         pts_per_commit: int = 8,
     ) -> DataFrame:
@@ -282,12 +290,6 @@ class CheckpointStore:
         """
         expr = f"pmod(xxhash64(fid), {n_pt})"
         keyed = input_df.withColumn("pt", F.expr(expr))
-        # read-backs pass the output schema explicitly, so a commit group
-        # (or a whole stage) that wrote ZERO rows still reads back as an
-        # empty frame instead of dying on parquet schema inference over a
-        # dir with no part files. Taken from the first group's plan when
-        # work exists; from a plan-only empty application of fn otherwise.
-        out_schema = None
         done = set(self.completed(name, input_fingerprint, n_pt=n_pt))
         done.discard(-1)
         todo_pts = [p for p in range(n_pt) if p not in done]
@@ -307,16 +309,16 @@ class CheckpointStore:
                 group = todo_pts[i : i + pts_per_commit]
                 g0 = time.time()
                 todo = keyed.filter(F.col("pt").isin(group))
-                out = fn(todo.drop("pt")).withColumn("pt", F.expr(expr))
-                out_schema = out.schema
                 (
-                    out.write.mode("overwrite")
+                    fn(todo.drop("pt")).withColumn("pt", F.expr(expr))
+                    .write.mode("overwrite")
                     .option("partitionOverwriteMode", "dynamic")
                     .partitionBy("pt")
                     .parquet(self._data_dir(name))
                 )
+                # pt alone: a group that wrote no rows reads back empty
                 written = (
-                    self.spark.read.schema(out_schema)
+                    self.spark.read.schema("pt long")
                     .parquet(self._data_dir(name))
                     .filter(F.col("pt").isin(group))
                 )
@@ -347,30 +349,27 @@ class CheckpointStore:
                 wall_ms=int((time.time() - t0) * 1000),
             )
         )
-        if out_schema is None:                      # fully resumed stage
-            out_schema = (
-                fn(keyed.drop("pt").limit(0))
-                .withColumn("pt", F.expr(expr))
-                .schema
-            )
+        # explicit schema (plan-only, from an empty input): a stage that
+        # wrote ZERO rows reads back empty instead of failing inference
+        out_schema = (
+            fn(keyed.drop("pt").limit(0)).withColumn("pt", F.expr(expr)).schema
+        )
         return (
             self.spark.read.schema(out_schema)
             .parquet(self._data_dir(name))
             .drop("pt")
         )
 
-    def write_metrics(self) -> str | None:
+    def write_metrics(self) -> str:
         """Persist the accumulated per-stage metrics ledger (FIXTURES.md §4)
         as a Spark-written JSON table next to the checkpoint tables."""
-        if not self.root:
-            return None
         # append only the rows accumulated since the last write: a reused
         # store (session-reuse path: several pipeline runs on one instance)
         # must not re-append earlier runs' rows to the ledger
         fresh = self.metrics[self._metrics_written:]
-        if not fresh:
-            return f"{self.root}/metrics/config={self.config_hash}"
         path = f"{self.root}/metrics/config={self.config_hash}"
+        if not fresh:
+            return path
         df = self.spark.createDataFrame(
             [
                 (
@@ -389,13 +388,24 @@ class CheckpointStore:
         return path
 
 
-class NullStore(CheckpointStore):
-    """No-persistence store: every stage runs in place, nothing is recorded."""
+class NullStore:
+    """No-persistence store: every stage runs in place, nothing is recorded
+    (a wall time would time plan construction, not execution)."""
 
-    def __init__(self, spark: SparkSession, config_hash: str):
-        super().__init__(spark, root="", config_hash=config_hash)
+    def __init__(self):
+        self.metrics: list[dict] = []
 
-    def stage(self, name, fn, input_fingerprint=None):
-        # no metrics row: fn() only builds a lazy frame, so a wall time here
-        # would time plan construction, not execution
+    def fingerprint(self, files: DataFrame) -> None:
+        return None
+
+    def stage(self, name, fn, input_fingerprint):
         return fn()
+
+    def partitioned_stage(self, name, input_df, fn, input_fingerprint):
+        # one job materializes the frame every later stage fans out from
+        out = fn(input_df).persist()
+        out.count()
+        return out
+
+    def write_metrics(self) -> None:
+        return None

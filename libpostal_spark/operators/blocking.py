@@ -103,12 +103,13 @@ def exact_rep_frame(sigs: DataFrame, ided: DataFrame) -> DataFrame:
 
     ``DedupPipeline.run`` applies it to the with_ids rows themselves
     (``exact_rep_frame(ided, ided)``) BEFORE featurization, so
-    ``signatures`` featurizes representatives only; the caller then
-    persists+counts the signatures frame (featurize UDF + the sha256
-    contraction materialize together in one job), and rep_sigs, the label
-    universe and the result's readers are all cheap filters over the warm
-    cache, so no later stage ever recomputes the UDF chain or re-shuffles
-    on sha256.
+    ``signatures`` featurizes representatives only; the run's store then
+    materializes the signatures frame, ``rep_fid`` included, in its
+    ``partitioned_stage`` — ``NullStore`` persists+counts it in one job
+    (featurize UDF + the sha256 contraction together), ``CheckpointStore``
+    writes it and reads it back — and rep_sigs, the label universe and the
+    result's readers are all cheap filters over that one frame, so no later
+    stage ever recomputes the UDF chain or re-shuffles on sha256.
 
     ``ided`` is any cheap frame carrying the same (sha256, fid) rows — the
     with_ids frame the signatures were built from, or a PERSISTED sigs

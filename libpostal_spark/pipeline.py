@@ -17,7 +17,9 @@ This is the dataflow of SURVEY.md §7.1 — the Spark-first restatement of the
 reference's normalize → near_dupe_hashes → is_dupe → (caller-side) cluster
 chain. ``DedupPipeline.run(files)`` is the one way into S1–S7: the
 clustering and pair-listing operators (operators/dedup.py) consume its
-``PipelineResult``.
+``PipelineResult``. It has one body for both stores: ``NullStore`` runs
+every stage in place, ``CheckpointStore`` writes and resumes them (S1+S2
+stored together, ``rep_fid`` included).
 """
 
 from __future__ import annotations
@@ -27,7 +29,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .checkpoint import CheckpointStore, NullStore, input_fingerprint
+from .checkpoint import CheckpointStore, NullStore
 from .config import DEFAULT_CONFIG, PipelineConfig
 from .operators import blocking, cluster, verify
 
@@ -42,7 +44,9 @@ class PipelineResult:
     pairs: DataFrame
     confirmed: DataFrame
     clusters: DataFrame          # fid, component, is_canonical
-    bucket_stats: list = field(default_factory=list)
+    # per key family: kind, n_buckets, n_oversized, max_size — lazy, over
+    # the persisted bucket window
+    bucket_stats: DataFrame
     metrics: list = field(default_factory=list)
     persisted: list = field(default_factory=list)   # every DF this run cached
 
@@ -68,81 +72,53 @@ class DedupPipeline:
         self.store = (
             CheckpointStore(spark, checkpoint_root, cfg.config_hash)
             if checkpoint_root
-            else NullStore(spark, cfg.config_hash)
+            else NullStore()
         )
 
-    def run(
-        self,
-        files: DataFrame,
-        collect_bucket_stats: bool = False,
-    ) -> PipelineResult:
+    def run(self, files: DataFrame) -> PipelineResult:
         cfg = self.cfg
         persisted: list[DataFrame] = []
         m0 = len(self.store.metrics)   # result carries THIS run's rows only
-        resumable = not isinstance(self.store, NullStore)
-        fp = input_fingerprint(files) if resumable else None
+        fp = self.store.fingerprint(files)
         # the rep map (min fid per sha256) comes from the cheap JVM sha2
         # columns BEFORE featurization, so the featurize UDF sees only
         # representatives' content; members' feature columns are null
         # (signatures' rep_fid gate)
         ided = blocking.with_ids(files)
         gated = blocking.exact_rep_frame(ided, ided)
-        if resumable:
-            # the fingerprint keys every stage to THIS input — a re-run
-            # against a different table invalidates the cache instead of
-            # silently serving the previous dataset's state. The expensive
-            # featurize stage resumes at PARTITION granularity
-            # (pt = xxhash64(fid) % n): only partitions missing from the
-            # manifest recompute after a mid-stage kill. rep_fid is not
-            # stored: the rep map is re-derived from the same cheap columns
-            # below, so partitions written by any version agree.
-            sigs = self.store.partitioned_stage(
-                "signatures",
-                gated,
-                lambda sub: blocking.signatures(
-                    sub, cfg, ids_added=True
-                ).drop("rep_fid"),
-                fp,
-            )
-            with_rep = blocking.exact_rep_frame(sigs, ided)
-        else:
-            # ONE persist+count materializes the featurize UDF AND the sha256
-            # contraction together (the whole serial prefix) in a single job.
-            # Downstream consumers — 3 key families, verify ×2, the label
-            # universe and the result's readers — are all filters over this
-            # warm cache, so AQE's concurrent subtree launch can never
-            # recompute the UDF chain (observed 8× duplicated featurize
-            # stages with a cold cache at fan-out) and no later stage
-            # re-shuffles on sha256. Fewer actions = fewer driver planning
-            # waves = lower serial floor. The rep map rides the cheap
-            # sha2-only branch (see exact_rep_frame), so the signature
-            # payload is never exchanged.
-            with_rep = blocking.signatures(gated, cfg, ids_added=True).persist()
-            persisted.append(with_rep)
-            with_rep.count()
+        # S1+S2 materialize together, rep_fid included: the in-memory store
+        # persists+counts them in ONE job, the checkpoint store commits them
+        # partition group by partition group (a mid-stage kill recomputes
+        # only the missing partitions). Downstream consumers — 3 key
+        # families, verify ×2, the label universe and the result's readers —
+        # are all filters over this one frame, so AQE's concurrent subtree
+        # launch can never recompute the UDF chain (observed 8× duplicated
+        # featurize stages with a cold cache at fan-out) and no later stage
+        # re-shuffles on sha256. The rep map rides the cheap sha2-only
+        # branch (see exact_rep_frame), so the signature payload is never
+        # exchanged.
+        with_rep = self.store.partitioned_stage(
+            "signatures",
+            gated,
+            lambda sub: blocking.signatures(sub, cfg, ids_added=True),
+            fp,
+        )
+        persisted.append(with_rep)
         rep_sigs, _ = blocking.exact_groups(with_rep)
         keys = self.store.stage(
             "band_buckets", lambda: blocking.blocking_keys(rep_sigs, cfg), fp
         )
 
-        pairs, bucket_stats_df, keyed_cache = blocking.candidate_pairs(keys, cfg)
-        if keyed_cache is not None:
-            persisted.append(keyed_cache)
+        pairs, bucket_stats, keyed = blocking.candidate_pairs(keys, cfg)
+        persisted.append(keyed)
+        # the CC router's limit(max+1).collect() materializes this cache in
+        # the same action that fetches the edge list
         confirmed = self.store.stage(
             "confirmed_pairs",
             lambda: verify.verified_pairs(pairs, rep_sigs, cfg),
             fp,
-        )
-        if not resumable:
-            # the CC router's limit(max+1).collect() materializes this
-            # cache in the same action that fetches the edge list
-            confirmed = confirmed.persist()
-            persisted.append(confirmed)
-        bucket_stats = (
-            [r.asDict() for r in bucket_stats_df.collect()]
-            if collect_bucket_stats
-            else []
-        )
+        ).persist()
+        persisted.append(confirmed)
 
         # CC runs over REPRESENTATIVES only: confirmed pairs are rep↔rep by
         # construction, so identical-content members (incl. the boilerplate
@@ -175,7 +151,7 @@ class DedupPipeline:
             )
             .withColumn("is_canonical", F.col("fid") == F.col("component"))
         )
-        self.store.write_metrics()  # no-op for NullStore (no root)
+        self.store.write_metrics()
         return PipelineResult(
             signatures=with_rep,
             pairs=pairs,

@@ -405,3 +405,49 @@ def test_metrics_ledger_not_duplicated_on_reuse(spark, small_pdf, tmp_path):
         f"{tmp_path}/m_ckpt/metrics/config={pipe.cfg.config_hash}"
     )
     assert ledger.count() == len(pipe.store.metrics)
+
+
+# the manifest columns written before stored signatures kept rep_fid
+OLD_MANIFEST_SCHEMA = (
+    "stage string, config_hash string, input_fingerprint string, pt long, "
+    "n_pt long, rows long, wall_ms long, written_at string"
+)
+
+
+def test_old_layout_checkpoint_is_recomputed(spark, small_pdf, tmp_path):
+    """A checkpoint in the layout before signatures kept ``rep_fid`` (its
+    signatures data has no rep_fid, its manifest rows no ``layout``) is
+    recomputed stage by stage, never read back with a null rep_fid."""
+    import shutil
+
+    files = corpus_to_spark(spark, small_pdf, 4)
+    cfg = PipelineConfig()
+    fresh = DedupPipeline(spark, cfg).run(files)
+    want = sorted((r["fid"], r["component"]) for r in fresh.clusters.collect())
+    fresh.release()
+
+    root = str(tmp_path / "old_ckpt")
+    DedupPipeline(spark, cfg, checkpoint_root=root).run(files).release()
+    base = f"{root}/{{}}/config={cfg.config_hash}"
+    data, tmp = base.format("signatures") + "/data", str(tmp_path / "tmp")
+    spark.read.parquet(data).drop("rep_fid").write.partitionBy("pt").parquet(tmp)
+    shutil.rmtree(data)
+    shutil.move(tmp, data)
+    stages = ["signatures", "band_buckets", "confirmed_pairs", "components"]
+    for stage in stages:
+        manifest = base.format(stage) + "/manifest"
+        rows = spark.read.schema(OLD_MANIFEST_SCHEMA).json(manifest).collect()
+        assert rows, stage
+        shutil.rmtree(manifest)
+        spark.createDataFrame(rows, OLD_MANIFEST_SCHEMA).coalesce(1).write.json(
+            manifest
+        )
+
+    res = DedupPipeline(spark, cfg, checkpoint_root=root).run(files)
+    assert {m["stage"]: m["resumed"] for m in res.metrics} == dict.fromkeys(
+        stages, False
+    )
+    got = sorted((r["fid"], r["component"]) for r in res.clusters.collect())
+    assert all(c is not None for _, c in got)
+    assert got == want
+    res.release()

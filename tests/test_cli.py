@@ -56,6 +56,11 @@ def test_cli_run_resume_identical(tmp_path):
     b = duckdb.sql(q.format(out2)).fetchall()
     assert a == b
     assert s1["config_hash"] == s2["config_hash"]
+    # the bucket ledger, one row per key family, on a cold and a resumed run
+    for s in (s1, s2):
+        assert isinstance(s["bucket_stats"], list) and s["bucket_stats"]
+        for row in s["bucket_stats"]:
+            assert set(row) == {"kind", "n_buckets", "n_oversized", "max_size"}
 
 
 @pytest.mark.slow

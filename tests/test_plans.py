@@ -423,3 +423,93 @@ def test_pipeline_run_job_count(spark, cfg):
     finally:
         files.unpersist()
     assert len(jobs) == 17, sorted(jobs)
+
+
+def _tiny_files_parquet(spark, path):
+    """The pins' tiny exact-copy corpus as a parquet table, so the
+    checkpoint store fingerprints it from file metadata."""
+    from libpostal_spark.corpus import generate_corpus
+
+    pdf = generate_corpus(
+        n_base=20, dup_fraction=0.6, n_boilerplate_copies=5,
+        n_clone_embed=2, seed=7,
+    )
+    spark.createDataFrame(
+        pdf[["repo", "path", "commit", "lang", "content"]]
+    ).repartition(4).write.parquet(path)
+    return spark.read.parquet(path)
+
+
+def test_checkpointed_run_plan_stores_rep_fid(spark, cfg, tmp_path, monkeypatch):
+    """The checkpointed ``DedupPipeline.run``: a cold run featurizes the
+    rep-gated content, and a resumed run's ``signatures`` is a scan of the
+    stored stage — ``rep_fid`` is read back, not derived again from the
+    input (no featurize UDF, no aggregate, no exchange)."""
+    from libpostal_spark.pipeline import DedupPipeline
+
+    files = _tiny_files_parquet(spark, str(tmp_path / "files"))
+    root = str(tmp_path / "ckpt")
+    built = []
+    signatures = blocking.signatures
+
+    def spy(*args, **kw):
+        built.append(signatures(*args, **kw))
+        return built[-1]
+
+    monkeypatch.setattr(blocking, "signatures", spy)
+    DedupPipeline(spark, cfg, checkpoint_root=root).run(files).release()
+    feat = re.compile(r"featurize_udf\((.*?)\)#(\d+)\]")
+    args = {
+        arg
+        for df in built
+        for s, _ in _nodes(df._jdf.queryExecution().executedPlan())
+        if s.startswith("ArrowEvalPython")
+        for arg, _ in feat.findall(s)
+    }
+    assert args
+    for arg in args:
+        assert re.fullmatch(
+            r"CASE WHEN \(fid#\d+ = rep_fid#\d+\) THEN content#\d+ END", arg
+        ), arg
+
+    res = DedupPipeline(spark, cfg, checkpoint_root=root).run(files)
+    try:
+        assert all(m["resumed"] for m in res.metrics), res.metrics
+        plan = _plan(res.signatures)
+        assert re.search(r"Scan parquet", plan), plan
+        assert f"signatures/config={cfg.config_hash}/data" in plan, plan
+        assert re.search(r"ReadSchema: [^\n]*rep_fid", plan), plan
+        assert "featurize_udf" not in plan, plan
+        assert "Aggregate" not in plan and "Exchange" not in plan, plan
+    finally:
+        res.release()
+
+
+def test_resumed_checkpointed_run_job_count(spark, cfg, tmp_path):
+    """A fully resumed checkpointed ``DedupPipeline.run(files)`` plus its
+    labels on the driver runs a pinned number of Spark jobs (manifest
+    reads, the bucket gate, the CC edge fetch, the labels); lower the pin
+    when an action goes."""
+    from libpostal_spark.pipeline import DedupPipeline
+
+    files = _tiny_files_parquet(spark, str(tmp_path / "files"))
+    root = str(tmp_path / "ckpt")
+    sc = spark.sparkContext
+
+    def run_with_labels():
+        res = DedupPipeline(spark, cfg, checkpoint_root=root).run(files)
+        try:
+            return res.clusters.select("fid", "component").toArrow().num_rows
+        finally:
+            res.release()
+
+    want_rows = run_with_labels()                       # cold: writes
+    group = "test_resumed_checkpointed_run_job_count"
+    sc.setJobGroup(group, group)
+    try:
+        assert run_with_labels() == want_rows
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert len(jobs) == 18, sorted(jobs)
